@@ -23,4 +23,14 @@ awk -v outdir="$outdir" -v suffix="$suffix" '
   f { print > f }
 ' "$tmp"
 rm -f "$tmp"
-ls -la "$outdir" | grep "_$suffix.txt" | tail -n +1
+missing=0
+for q in "$@"; do
+  f="$outdir/${q}_${suffix}.txt"
+  if [ -s "$f" ]; then
+    ls -la "$f"
+  else
+    echo "dump_plans: no plan written for $q (expected $f)" >&2
+    missing=1
+  fi
+done
+exit "$missing"

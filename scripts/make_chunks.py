@@ -4,7 +4,7 @@
 Usage: make_chunks.py <oracle_sql.json> [chunk_dir]
 
 One chunk = one Bench JVM. Grouping follows build-sharing families
-(queries that ride the same memoized/BuildCache frames go to the same
+(queries that ride the same memoized frames go to the same
 JVM so shared builds are paid once per chunk, mirroring how a scheduled
 cluster job would co-locate them). The seven output-quadratic expanded
 pair reports (*_pairs_full / *_full) are contract opt-ins excluded from

@@ -6,9 +6,11 @@ import scala.collection.immutable.ListMap
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line. Failures are surfaced
   * per-query in an "errors" map (a crashing query must not masquerade as a
   * fast one). A single cheap warmup action runs first so the JVM/codegen
-  * startup cost is not billed to the first query. Extra args select a
-  * query subset (fail-loud on unknown names) for targeted stress points —
-  * the driver passes none and times the full registry. */
+  * startup cost is not billed to the first query. Shared builds are
+  * memoized per JVM only, so every run pays them: the total is the cold
+  * posture. Extra args select a query subset (fail-loud on unknown
+  * names) for targeted stress points — the driver passes none and times
+  * the full registry. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val only = args.toSet
@@ -17,17 +19,6 @@ object Bench {
       s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     Knobs.noteDir(sfDir)
-    // Bench runs with the write-once build-cache layout ON by default
-    // (GRAFT_BUILD_CACHE=off opts out; Verify never sets it, so the
-    // correctness gate always exercises the real compute path). First
-    // run over a corpus generation writes the bucketed layout; every
-    // later run re-reads it — the production posture, where shared
-    // index builds are a materialized artifact of the corpus snapshot,
-    // not per-job recompute. The artifact's "build_cache" field records
-    // which posture this run measured.
-    if (!sys.env.contains("GRAFT_BUILD_CACHE") &&
-        System.getProperty("graft.build.cache") == null)
-      System.setProperty("graft.build.cache", "/tmp/graft_build_cache")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -201,12 +192,6 @@ object Bench {
     val errs = errors.map { case (k, v) => s"${JsonUtil.q(k)}:${JsonUtil.q(v)}" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum + builds.map(_._2).sum
-    val cacheState =
-      if (BuildCache.root.isEmpty) "off"
-      else if (BuildCache.writes > 0 && BuildCache.hits > 0) "mixed"
-      else if (BuildCache.writes > 0) "cold"
-      else if (BuildCache.hits > 0) "warm"
-      else "unused"
     // n_runs: measurement passes per query (2 = the zero-wall re-measure
     // fired); only >1 entries are listed — absent means 1.
     val nr = nRuns.filter(_._2 > 1)
@@ -220,12 +205,16 @@ object Bench {
     // by >2x between the start and end shuffle probes (either
     // direction: a run can also start stalled and settle, as the r17
     // rj1000_uts run did at 8.93->1.20), per-query walls from this run
-    // must not be read as code changes.
-    val stallSuspected =
-      math.max(canaryShuffleStart, canaryShuffleEnd) >
-        2.0 * math.min(canaryShuffleStart, canaryShuffleEnd)
+    // must not be read as code changes. Like the regression rule, the
+    // ratio alone is not enough: a sub-second canary pair can double on
+    // scheduler jitter, so the move must also be >= 1 s absolute.
+    val stallSuspected = {
+      val hi = math.max(canaryShuffleStart, canaryShuffleEnd)
+      val lo = math.min(canaryShuffleStart, canaryShuffleEnd)
+      hi > 2.0 * lo && hi - lo >= 1.0
+    }
     val line =
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"builds":$bs,"errors":$errs,"regressions":$regs,"median_inflation":${f(medianInflation)},"regression_rule":"deflate by median inflation vs baseline, then delta>=1s AND ratio>=1.5x","n_runs":$nr,"canary_sec":{"start":${f(canaryStart)},"end":${f(canaryEnd)},"start_shuffle":${f(canaryShuffleStart)},"end_shuffle":${f(canaryShuffleEnd)}},"stall_suspected":$stallSuspected,"build_cache":"$cacheState","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"builds":$bs,"errors":$errs,"regressions":$regs,"median_inflation":${f(medianInflation)},"regression_rule":"deflate by median inflation vs baseline, then delta>=1s AND ratio>=1.5x","n_runs":$nr,"canary_sec":{"start":${f(canaryStart)},"end":${f(canaryEnd)},"start_shuffle":${f(canaryShuffleStart)},"end_shuffle":${f(canaryShuffleEnd)}},"stall_suspected":$stallSuspected,"sf":"$sfDir"}"""
     println(line)
     // Persist the full line too: the driver's artifact has repeatedly
     // truncated the stdout tail (BENCH_r7/r8 carried `parsed: null`), so
@@ -247,7 +236,7 @@ object Bench {
     val top = results.sortBy(-_._2).take(20)
       .map { case (k, v) => s""""$k":${f(v)}""" }.mkString("{", ",", "}")
     println(
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"n_regressions":${regressions.size},"build_sec":${f(builds.map(_._2).sum)},"stall_suspected":$stallSuspected,"build_cache":"$cacheState","queries":$top,"sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"n_regressions":${regressions.size},"build_sec":${f(builds.map(_._2).sum)},"stall_suspected":$stallSuspected,"queries":$top,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

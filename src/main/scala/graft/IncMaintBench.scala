@@ -27,12 +27,6 @@ object IncMaintBench {
     val fracs = sys.env.getOrElse("GRAFT_INC_FRACS", "0.10,0.01")
       .split(',').map(_.trim.toDouble).toSeq
     Knobs.noteDir(sfDir)
-    // same cache posture as Bench: decode memoization is the shared
-    // substrate, both paths profit identically, the DELTA-vs-FEED ratio
-    // is what this measures
-    if (!sys.env.contains("GRAFT_BUILD_CACHE") &&
-        System.getProperty("graft.build.cache") == null)
-      System.setProperty("graft.build.cache", "/tmp/graft_build_cache")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

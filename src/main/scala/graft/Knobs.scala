@@ -19,7 +19,7 @@ package graft
   * takes no directory, yet the generated SQL must embed the SAME derived
   * constants as the Spark plans it mirrors (the correctness gate hashes
   * both sides). Every `SparkEntry.queries` invocation and every main
-  * (Verify/Bench/Probe/...) records its directory here BEFORE building
+  * (Verify/Bench/...) records its directory here BEFORE building
   * plans, and `oracleSql` is evaluated afterwards in the same JVM, so
   * both sides read one value. The var is volatile, not thread-local:
   * concurrent use of DIFFERENT corpora in one JVM is out of contract for

@@ -31,14 +31,6 @@ object Tables {
     // non-UTC machine would shift every event instant unless UTC is
     // pinned here too (round-10 advice), not only in Bench/Verify.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // Bucketed reads must KEEP their hash partitioning even when the
-    // first action over a cached frame is a plain count (auto bucketed
-    // scan would drop bucketing for plans with no interesting
-    // distribution, and the in-memory cache then freezes THAT layout,
-    // re-introducing exchanges for every later join over the frame —
-    // see BuildCache). Parallelism is preserved: the cache writes
-    // >= 32 buckets.
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     spark
   }
 
@@ -213,16 +205,8 @@ object Tables {
       // bench report attribute it as its own line. The count is not
       // wasted work: the first consumer action would have materialized
       // the identical cached partitions anyway.
-      //
-      // When the on-disk build cache is enabled (see [[BuildCache]]),
-      // the frame routes through the persisted bucketed layout first:
-      // a warm layout turns the whole build into a parquet re-read
-      // (still memory-persisted here, so consumer behavior and the
-      // ledger semantics are unchanged — the `_build:` line then
-      // records the re-read cost, which IS the session's build cost).
       val t0 = System.nanoTime()
-      val df = BuildCache.throughCache(spark, key)(build)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.count()
       buildTimes.synchronized { buildTimes += key -> (System.nanoTime() - t0) / 1e9 }
       df

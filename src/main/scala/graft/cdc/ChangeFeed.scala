@@ -177,29 +177,6 @@ object ChangeFeed {
       decodedFrom(Tables.events(spark, dir))
     }
 
-  /** Partition-pruned view of the decoded feed for the per-table routed
-    * consumers: when the build cache holds the (tbl, kind)-partitioned
-    * layout, read it DIRECTLY — a static table/kind predicate then
-    * prunes at the FILE level (PartitionFilters on the scan; other
-    * tables' files are never opened), which is the scan the reference's
-    * route-before-filter order implies (src/forwarder/mod.rs:106-126).
-    * Cold cache: fall through to [[decoded]] (which writes the layout
-    * when the cache is enabled) and retry, so the first routed query of
-    * a cold session still ends on the pruned scan. Cache off (the
-    * Verify posture): the memoized in-memory frame — same rows, the
-    * predicate filters in memory. */
-  def decodedPruned(spark: SparkSession, dir: String): DataFrame = {
-    val key = s"cdc.decoded:$dir"
-    graft.BuildCache.layoutFor(spark, key).getOrElse {
-      val d = decoded(spark, dir)
-      graft.BuildCache.layoutFor(spark, key).getOrElse(d)
-    }
-  }
-
-  /** [[decodedPruned]] + the string-match column map. */
-  def decodedPrunedWithMap(spark: SparkSession, dir: String): DataFrame =
-    decodedPruned(spark, dir).withColumn("cmap", textValueMap)
-
   /** The name→value map the specific filters probe, built from TEXT-typed
     * entries only: the reference locates the column by walking
     * `columnnames`, then matches via `as_str`, so a JSON-number value

@@ -34,9 +34,8 @@ object HyperRemap {
   /** STATIC raw-table predicate for one remapped base table: the raw
     * name itself plus every chunk prefix whose hypertable index maps to
     * `base`. Literal at plan time (HyperLookup is catalog config, like
-    * the reference's in-memory hypertable map), so on the
-    * (tbl, kind)-partitioned decoded layout it becomes a partition
-    * PRUNE, not a scan-side filter — `startsWith("_hyper_<idx>_")` is
+    * the reference's in-memory hypertable map), so routed consumers
+    * filter before any remap join — `startsWith("_hyper_<idx>_")` is
     * exactly the membership the remap's regexp computes, per index. */
   def routesTo(base: String): org.apache.spark.sql.Column =
     HyperLookup.filter(_._2 == base).map(_._1)

@@ -34,15 +34,13 @@ object SpecificFilter {
     * has_table && has_flag before touching SpecificFilter
     * (src/api/query.rs:34-50, src/forwarder/mod.rs:106-126). The routed
     * base is 'cpustats', whose raw set is {cpustats, _hyper_1_*} via the
-    * hypertable remap — a STATIC predicate, so on the build cache's
-    * (tbl, kind)-partitioned decoded layout the route is a partition
-    * PRUNE: other tables' files are never opened (round-12 verdict ask
-    * #4; FilterPruningSpec pins PartitionFilters in the plan). Deletes
-    * would also fall out via the missing-column rule (empty columnnames,
+    * hypertable remap — a STATIC predicate over the in-memory decoded
+    * frame, so no remap join runs ahead of the filter. Deletes would
+    * also fall out via the missing-column rule (empty columnnames,
     * mirroring wal2json oldkeys); the explicit kind route is the
-    * reference's bit test, and it prunes the kind=delete dirs too. */
+    * reference's bit test. */
   def filterEq(spark: SparkSession, dir: String): DataFrame = {
-    val d = ChangeFeed.decodedPrunedWithMap(spark, dir)
+    val d = ChangeFeed.decodedWithMap(spark, dir)
     d.where(HyperRemap.routesTo("cpustats"))
       .where(col("kind").isin("insert", "update"))
       .where(eqFilter(col("cmap"), lit("user_id"), lit("7")))
@@ -52,12 +50,11 @@ object SpecificFilter {
 
   /** The subscription `insert|update:swapstats:k.in.10,20,30,42,77` —
     * same route-then-filter order as [[filterEq]], on a base with no
-    * hypertable chunks (one raw table ⇒ the prune keeps exactly one tbl
-    * dir). k exists only on event-row statements, so balance statements
-    * fall out via the missing-column rule (and via the route: they land
-    * on cpustats). */
+    * hypertable chunks (the route is one raw table name). k exists only
+    * on event-row statements, so balance statements fall out via the
+    * missing-column rule (and via the route: they land on cpustats). */
   def filterIn(spark: SparkSession, dir: String): DataFrame = {
-    val d = ChangeFeed.decodedPrunedWithMap(spark, dir)
+    val d = ChangeFeed.decodedWithMap(spark, dir)
     d.where(HyperRemap.routesTo("swapstats"))
       .where(col("kind").isin("insert", "update"))
       .where(inFilter(col("cmap"), lit("k"), lit("10,20,30,42,77")))

@@ -152,16 +152,16 @@ object Subscription {
       .join(broadcast(authAllowed(spark)), Seq("sub_id"))
     // The accepted subscriptions' table set is a pure function of the
     // static seed/owner/admin config — the same per-connect derivation
-    // the reference makes; it turns into a partition PRUNE of the
-    // (tbl, kind)-partitioned decoded layout via routesTo, the
-    // filter_eq/filter_in route-before-filter shape.
+    // the reference makes; it becomes a static routesTo predicate over
+    // the decoded frame, the filter_eq/filter_in route-before-filter
+    // shape.
     // bounded-collect: ≤ |SubsSeed| rows, N-independent of the change feed
     val bases = allowedSubs.select("tbl").distinct()
       .collect().map(_.getString(0)).sorted
-    val pruned = ChangeFeed.decodedPrunedWithMap(spark, dir)
+    val routed = ChangeFeed.decodedWithMap(spark, dir)
       .where(bases.map(HyperRemap.routesTo)
         .reduceOption(_ || _).getOrElse(lit(false)))
-    Forwarder.fanoutOver(spark, pruned, allowedSubs)
+    Forwarder.fanoutOver(spark, routed, allowedSubs)
       .select("sub_id", "lsn", "idx", "base", "kind")
       .orderBy("sub_id", "lsn", "idx")
   }

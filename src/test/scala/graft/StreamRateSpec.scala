@@ -80,6 +80,27 @@ class StreamRateSpec extends SparkSpec {
     assert(r.deliveredRows > 0)
   }
 
+  test("a malformed last document still drains the feed") {
+    // A truncated wal2json document decodes to no change rows, so the
+    // decoded high-water stops one lsn short of the feed's end; drain
+    // must follow the source's admitted offset instead of spinning to
+    // the deadline.
+    val whole = graft.cdc.ChangeFeed.messages(spark, Sf0001)
+      .orderBy("lsn").limit(600).collect()
+    val last = whole.last.getString(1)
+    val msgs = whole.init :+
+      org.apache.spark.sql.Row(whole.last.get(0), last.take(last.length / 2))
+    val r = StreamRateHarness.run(spark, msgs, ratePerSec = 1000L,
+      maxLsnPerTrigger = 500L, triggerMs = 250L, numPartitions = 2)
+    val n = msgs.length.toLong
+    assert(r.syncBatches.last.maxLsn == n - 1)
+    assert(r.syncBatches.map(_.lsns).sum == n - 1,
+      s"admitted ${r.syncBatches.map(_.lsns).sum} decodable lsns != ${n - 1}")
+    assert(r.stateRows == r.distinctEntities,
+      s"state ${r.stateRows} rows != ${r.distinctEntities} entities")
+    assert(r.deliveredRows > 0)
+  }
+
   test("multi-writer outbox: min-over-writers watermark loses nothing") {
     // Round-15 ingest sharding (the r14 knee was the single writer
     // connection): 3 striped writer connections publish per-writer
