@@ -120,13 +120,13 @@ object Tables {
       .orElse(Option(System.getProperty("graft.rank.pin.dir")))
       .map(_.trim).filter(_.nonEmpty)
 
-  /** Materialize a frame once and cut its lineage — the pin half of
-    * [[pinRankBuckets]] (currently its only caller; kept separate so a
-    * future multi-branch consumer can pin without also range-bucketing —
-    * note the incremental-maintenance rows deliberately do NOT pin:
-    * a lineage-cut there measured slower, see Forwarder). Local runs
-    * localCheckpoint; GRAFT_RANK_PIN_DIR deployments get a reliable
-    * checkpoint. */
+  /** Materialize a frame once and cut its lineage, so a frame with several
+    * consumers is computed once instead of once per consumer. Callers:
+    * [[pinRankBuckets]] and the SCD2 cursor in Forwarder.scd2Merged (the
+    * incremental-maintenance checkpoint split itself is not pinned: a
+    * lineage cut of the full keyed frame costs more than the per-branch
+    * cache reads it saves). Local runs localCheckpoint;
+    * GRAFT_RANK_PIN_DIR deployments get a reliable checkpoint. */
   def pinFrame(df: DataFrame): DataFrame = rankPinDir match {
     case Some(d) =>
       val sc = df.sparkSession.sparkContext

@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-subscriber fan-out: route every change to each subscription whose
@@ -122,12 +122,21 @@ object Forwarder {
        |ORDER BY base""".stripMargin
 
   /** Entity key over a decoded+cmap change row: insert/update expose it in
-    * the column map, deletes only in wal2json oldkeys. Shared by the batch
-    * snapshot and its streaming twin (CdcSnapshotStreamSpec). */
+    * the column map, deletes only in wal2json oldkeys. */
   val entityCol: org.apache.spark.sql.Column = coalesce(
     try_element_at(col("cmap"), lit("user_id")),
     try_element_at(map_from_arrays(col("keynames"), col("keyvalues")),
       lit("user_id"))).cast("long")
+
+  /** The keyed routed view every state consumer reads: one row per change,
+    * remapped to its base table and keyed on its entity, narrowed to
+    * (base, uid, lsn, idx, kind). A pure frame transform: the batch
+    * [[routedKeyed]] memo, the streaming twins and the feed harness's
+    * micro-batch all derive their keys here. */
+  def keyed(withMap: DataFrame): DataFrame =
+    HyperRemap.remap(withMap.sparkSession, withMap)
+      .select(col("base"), entityCol.as("uid"), col("lsn"), col("idx"),
+        col("kind"))
 
   /** Materialized snapshot from the change feed: per (base table, entity)
     * last-writer-wins by LSN, with deletes as tombstones — the "apply the
@@ -135,61 +144,63 @@ object Forwarder {
     * clients replay the stream into their own views; this is that replay
     * as one plan). The entity key comes from `columnvalues` for
     * insert/update and from wal2json `oldkeys` for deletes (which carry no
-    * column arrays). One shuffle on (base, entity); the window is a
-    * per-key top-1, i.e. max-LSN semantics, skew-bounded by per-entity
-    * change counts. */
+    * column arrays). One shuffle on (base, entity) over the 5 keyed
+    * columns, map-side combined. */
   def cdcSnapshot(spark: SparkSession, dir: String): DataFrame =
-    // rides the shared narrow keyed frame (same projection the former
-    // inline derivation produced — see [[routedKeyed]]); the LWW fold
-    // itself is unchanged
     stateToSnapshot(snapshotState(routedKeyed(spark, dir)))
 
   /** Same LWW materialization over an already decoded+cmap frame — the
     * batch reference the composed JDBC streaming pipeline's incremental
     * snapshot state must converge to (JdbcPipelineSpec). */
   def snapshotFromDecoded(spark: SparkSession, withMap: DataFrame): DataFrame =
-    // Narrow BEFORE the shuffle: the report needs only (base, uid, lsn,
-    // idx, kind), so the LWW fold runs as [[snapshotState]]'s map-side-
-    // combined groupBy over those 5 columns — max(struct(lsn, idx)) is
-    // the same tiebreak as the former row_number window (statements
-    // inside one transaction document share the commit LSN; array
-    // position idx is the write order). The window formulation shuffled
-    // EVERY decoded row with its full width (cmap map, keynames/
-    // keyvalues arrays) and reduced nothing map-side — the registry's
-    // steepest scale exponent (1.55/decade at the r16 1000× point,
-    // 353.5 s); the aggregate form ships 5 scalar columns and collapses
-    // per-entity duplicates before the exchange, the same plan shape
-    // that holds cdc_snapshot_inc at exp 1.15.
-    stateToSnapshot(snapshotState(
-      HyperRemap.remap(spark, withMap)
-        .withColumn("uid", entityCol)
-        .select("base", "uid", "lsn", "idx", "kind")))
+    stateToSnapshot(snapshotState(keyed(withMap)))
 
   // ---- cdc_snapshot_inc: incremental state maintenance ≡ full replay ------
 
-  /** Keyed routed view shared by the state/merge family: one row per
-    * change with its entity key, the minimal columns state needs.
-    * Public: IncMaintBench measures checkpoint/merge walls over the
-    * exact frame the registered query uses.
-    *
-    * Memoized+persisted as its OWN narrow build (round 17): every
-    * consumer used to re-project the wide persisted decode (cmap map +
-    * column arrays per row). One consumer per query is fine; the
-    * incremental-maintenance rows consume the keyed view THREE+ times
-    * (checkpoint aggregate + pre branch + delta branch), and at the
-    * 1000× point the wide decode no longer fits executor memory, so
-    * every extra consumption was a full-width disk re-read (or a JSON
-    * re-decode on eviction) — cdc_scd2_inc's 2005 s wall was ~3 such
-    * passes plus duplicated window subtrees (see [[scd2Merged]]). The
-    * 5-scalar-column frame is ~10× narrower than the decode, stays
-    * memory-resident at 1000×, and every re-consumption is a cheap
-    * cached-columnar scan. */
+  /** [[keyed]] over the session's decoded feed, memoized+persisted as its
+    * own build. The state/merge family consumes it several times per
+    * query (checkpoint aggregate, pre branch, delta branch); the 5 scalar
+    * columns are ~10× narrower than the decode (cmap map + column arrays
+    * per row), so each re-consumption is a cached-columnar scan rather
+    * than a full-width re-read. Public: IncMaintBench measures
+    * checkpoint/merge walls over the exact frame the registered query
+    * uses. */
   def routedKeyed(spark: SparkSession, dir: String): DataFrame =
     graft.Tables.memoPersist(spark, s"cdc.routedKeyed:$dir") {
-      HyperRemap.remap(spark, ChangeFeed.decodedWithMap(spark, dir))
-        .withColumn("uid", entityCol)
-        .select("base", "uid", "lsn", "idx", "kind")
+      keyed(ChangeFeed.decodedWithMap(spark, dir))
     }
+
+  /** The per-entity last-write fold every state shares: over keyed rows,
+    * per (base, uid) the greatest (lsn, idx) — statements of one
+    * transaction document share the commit LSN and idx is their write
+    * order — its kind, and `weight` (an aggregate, named `name`). Output:
+    * (base, uid, last_lsn, last_idx, last_kind, name). One shuffle on
+    * (base, uid), map-side combined. */
+  private def lastWrite(rows: DataFrame, name: String, weight: Column): DataFrame =
+    rows.groupBy("base", "uid")
+      .agg(max(struct(col("lsn"), col("idx"))).as("last"),
+        expr("max_by(kind, struct(lsn, idx))").as("last_kind"),
+        weight.as(name))
+      .select(col("base"), col("uid"), col("last.lsn").as("last_lsn"),
+        col("last.idx").as("last_idx"), col("last_kind"), col(name))
+
+  /** Re-enter a [[lastWrite]] state into the fold: each state row carries
+    * its last write's (lsn, idx, kind) and its accumulated `name` as
+    * weight, each delta row `deltaWeight`. The fold is associative, so
+    * merge(state(≤L), delta(L,L']) ≡ state(≤L') exactly — the reference's
+    * confirmed-LSN resume (src/cdc/replication.rs:95-282) applied to
+    * STATE rather than offsets. Cost: one shuffle over |state| + |delta|
+    * rows — it tracks the delta plus the entity count, never the feed
+    * length. */
+  private def mergeLastWrite(state: DataFrame, name: String,
+      delta: DataFrame, deltaWeight: Column): DataFrame =
+    lastWrite(
+      state.select(col("base"), col("uid"), col("last_lsn").as("lsn"),
+        col("last_idx").as("idx"), col("last_kind").as("kind"),
+        col(name).as("w"))
+        .unionByName(delta.select(col("base"), col("uid"), col("lsn"),
+          col("idx"), col("kind"), deltaWeight.as("w"))),
+      name, sum("w"))
 
   /** LWW state WITH tombstones over a keyed routed frame — the
     * checkpointable representation: unlike [[snapshotFromDecoded]]'s
@@ -197,36 +208,14 @@ object Forwarder {
     * delete so a later merge can distinguish "deleted at LSN d" from
     * "never existed" (wal2json oldkeys semantics survive the
     * checkpoint). Schema: (base, uid, last_lsn, last_idx, last_kind,
-    * n_changes). One shuffle on (base, uid). */
+    * n_changes). */
   def snapshotState(routed: DataFrame): DataFrame =
-    routed.groupBy("base", "uid")
-      .agg(max(struct(col("lsn"), col("idx"))).as("last"),
-        expr("max_by(kind, struct(lsn, idx))").as("last_kind"),
-        count(lit(1)).as("n_changes"))
-      .select(col("base"), col("uid"), col("last.lsn").as("last_lsn"),
-        col("last.idx").as("last_idx"), col("last_kind"), col("n_changes"))
+    lastWrite(routed, "n_changes", count(lit(1)))
 
-  /** Merge a checkpointed state (feed ≤ L) with the delta of changes in
-    * (L, L']: each state row re-enters the LWW fold carrying its last
-    * write's (lsn, idx) and its accumulated change count; delta rows
-    * carry weight 1. max_by over (lsn, idx) is associative, so
-    * merge(state(≤L), delta(L,L']) ≡ state(≤L') exactly — the
-    * reference's confirmed-LSN resume (src/cdc/replication.rs:95-282)
-    * applied to STATE rather than offsets. Cost: one shuffle keyed on
-    * (base, uid) over |state| + |delta| rows — at 100 TB this tracks the
-    * delta plus the entity count, never the feed length. */
+  /** Merge a checkpointed [[snapshotState]] (feed ≤ L) with the keyed
+    * changes in (L, L']: ≡ snapshotState(feed ≤ L'). */
   def mergeSnapshotState(state: DataFrame, deltaRouted: DataFrame): DataFrame =
-    state.select(col("base"), col("uid"), col("last_lsn").as("lsn"),
-        col("last_idx").as("idx"), col("last_kind").as("kind"),
-        col("n_changes").as("w"))
-      .unionByName(deltaRouted.select(col("base"), col("uid"), col("lsn"),
-        col("idx"), col("kind"), lit(1L).as("w")))
-      .groupBy("base", "uid")
-      .agg(max(struct(col("lsn"), col("idx"))).as("last"),
-        expr("max_by(kind, struct(lsn, idx))").as("last_kind"),
-        sum("w").as("n_changes"))
-      .select(col("base"), col("uid"), col("last.lsn").as("last_lsn"),
-        col("last.idx").as("last_idx"), col("last_kind"), col("n_changes"))
+    mergeLastWrite(state, "n_changes", deltaRouted, lit(1L))
 
   /** Drop tombstones and order — turns a state frame into the
     * [[cdcSnapshot]] report shape. */
@@ -235,29 +224,32 @@ object Forwarder {
       .select("base", "uid", "last_lsn", "last_kind", "n_changes")
       .orderBy("base", "uid")
 
+  /** The checkpoint split of a keyed feed: (changes ≤ L, changes > L) at
+    * L = 3/5 of its high-water LSN (integer floor — Spark `div` ≡ DuckDB
+    * `//`). A transaction's statements share one commit LSN, so an LSN
+    * split never cuts a transaction in half. Both branches re-read the
+    * keyed input (the persisted [[routedKeyed]] memo) — cheaper than
+    * pinning the split, whose lineage-cut materialization of the full
+    * keyed frame costs more than the per-branch cache reads it saves. */
+  private def checkpointSplit(keyedRows: DataFrame): (DataFrame, DataFrame) = {
+    val ckpt = keyedRows.agg(expr("max(lsn) * 3 div 5").as("ckpt_lsn"))
+    // bounded-cross: 1-row aggregate broadcast, N-independent
+    val withL = keyedRows.crossJoin(broadcast(ckpt))
+    (withL.where(col("lsn") <= col("ckpt_lsn")).drop("ckpt_lsn"),
+      withL.where(col("lsn") > col("ckpt_lsn")).drop("ckpt_lsn"))
+  }
+
   /** Incremental snapshot maintenance, proven against the full replay:
-    * checkpoint the state at L = 3/5 of the feed's high-water LSN
-    * (integer floor — Spark `div` ≡ DuckDB `//`), merge the (L, max]
-    * delta, and emit the snapshot report. The ORACLE for this key is
-    * [[cdcSnapshotSql]] — the full replay — so the oracle hash match IS
+    * checkpoint the state at the [[checkpointSplit]] point, merge the
+    * (L, max] delta, and emit the snapshot report. The ORACLE for this key
+    * is [[cdcSnapshotSql]] — the full replay — so the oracle hash match IS
     * the equivalence proof merge(state(≤L), delta) ≡ replay(≤max).
-    * A transaction's statements share one commit LSN, so an LSN split
-    * never cuts a transaction in half. IncrementalSnapshotSpec widens
-    * the proof to split points {0, 30, 60, 90, 100}% including both
-    * degenerate ends (empty state / empty delta). */
+    * IncrementalSnapshotSpec widens the proof to split points
+    * {0, 30, 60, 90, 100}% including both degenerate ends (empty state /
+    * empty delta). */
   def cdcSnapshotIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val routed = routedKeyed(spark, dir)
-    val ckpt = routed.agg(expr("max(lsn) * 3 div 5").as("ckpt_lsn"))
-    // bounded-cross: 1-row aggregate broadcast, N-independent. The
-    // branches re-derive remap+keying from the memory-persisted decode —
-    // measured CHEAPER than pinning the split (a lineage-cut
-    // materialization of the full keyed frame costs more than the
-    // per-branch cache reads it saves).
-    val keyed = routed.crossJoin(broadcast(ckpt))
-    val state = snapshotState(keyed.where(col("lsn") <= col("ckpt_lsn"))
-      .drop("ckpt_lsn"))
-    val delta = keyed.where(col("lsn") > col("ckpt_lsn")).drop("ckpt_lsn")
-    stateToSnapshot(mergeSnapshotState(state, delta))
+    val (pre, delta) = checkpointSplit(routedKeyed(spark, dir))
+    stateToSnapshot(mergeSnapshotState(snapshotState(pre), delta))
   }
 
   // ---- oracle -------------------------------------------------------------
@@ -341,35 +333,28 @@ object Forwarder {
     * none. Version numbers count non-delete changes in write order
     * (LSN, then statement index within the transaction document).
     *
-    * Scale shape: one shuffle on (base, entity) shared by both windows
-    * (lead over all changes, row_number over the surviving ones) — the
-    * same per-entity partitioning as the snapshot, history length per
-    * entity bounded by that entity's change count. */
-  def cdcScd2(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val perEnt = Window.partitionBy("base", "uid").orderBy("lsn", "idx")
-    // The former inline derivation carried the decode's FULL width (cmap
-    // map + column arrays) through the (base, uid) window exchange; the
-    // shared keyed frame ships the 5 scalar columns the report needs —
-    // the same narrowing that fixed cdc_snapshot's scale exponent.
+    * Scale shape: one shuffle on (base, entity) of the 5 keyed columns,
+    * shared by both windows (lead over all changes, row_number over the
+    * surviving ones); history length per entity is bounded by that
+    * entity's change count. */
+  def cdcScd2(spark: SparkSession, dir: String): DataFrame =
     routedKeyed(spark, dir)
       .where(col("uid").isNotNull)
-      .withColumn("nxt", lead(col("lsn"), 1).over(perEnt))
+      .withColumn("nxt", lead(col("lsn"), 1).over(perEntW))
       .where(col("kind") =!= "delete")
-      .withColumn("version", row_number().over(perEnt).cast("long"))
+      .withColumn("version", row_number().over(perEntW).cast("long"))
       .select(col("base"), col("uid"), col("version"),
         col("lsn").as("valid_from"),
         coalesce(col("nxt"), lit(-1L)).as("valid_to"),
         when(col("nxt").isNull, 1L).otherwise(0L).as("is_current"),
         col("kind"))
       .orderBy("base", "uid", "version")
-  }
 
   // ---- cdc_scd2_inc: incremental SCD2 maintenance ≡ full replay -----------
 
   /** Incremental SCD2 history maintenance, proven against the full
     * replay (the row-209 contract applied to the OTHER standard CDC
-    * consumer): split the feed at L = 3/5 of the high-water LSN, then
+    * consumer): split the feed at the [[checkpointSplit]] point L, then
     *
     *  - CLOSED versions from the pre-L history are IMMUTABLE — a version
     *    whose next change is also ≤ L can never be touched again
@@ -390,17 +375,8 @@ object Forwarder {
     * IncrementalSnapshotSpec's scd2 test widens the proof across split
     * points including both degenerate ends. */
   def cdcScd2Incremental(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val keyed = routedKeyed(spark, dir).where(col("uid").isNotNull)
-    val ckpt = keyed.agg(expr("max(lsn) * 3 div 5").as("ckpt_lsn"))
-    // bounded-cross: 1-row aggregate broadcast, N-independent. Four
-    // branches (closed/cursor over pre, firstDelta/deltaV over delta)
-    // re-derive keying from the memory-persisted decode — measured
-    // cheaper than a lineage-cut pin of the split (the materialization
-    // costs more than the per-branch cache reads it saves).
-    val withL = keyed.crossJoin(broadcast(ckpt))
-    val pre = withL.where(col("lsn") <= col("ckpt_lsn")).drop("ckpt_lsn")
-    val delta = withL.where(col("lsn") > col("ckpt_lsn")).drop("ckpt_lsn")
+    val (pre, delta) =
+      checkpointSplit(routedKeyed(spark, dir).where(col("uid").isNotNull))
     scd2Merged(pre, delta)
   }
 
@@ -408,6 +384,8 @@ object Forwarder {
     import org.apache.spark.sql.expressions.Window
     Window.partitionBy("base", "uid").orderBy("lsn", "idx")
   }
+
+  private val nonDelete: Column = when(col("kind") =!= "delete", 1L).otherwise(0L)
 
   /** Immutable closed versions of the pre-L history (next change exists
     * within pre): at 100 TB these ship with the checkpoint verbatim,
@@ -421,15 +399,17 @@ object Forwarder {
         col("lsn").as("valid_from"), col("nxt").as("valid_to"),
         lit(0L).as("is_current"), col("kind"))
 
-  /** 1 row per pre entity: non-delete version count + last change (the
-    * open version, if any, is derivable: open iff last_kind ≠ delete). */
+  /** 1 row per pre entity: its last change (the open version, if any, is
+    * derivable: open iff last_kind ≠ delete) and its non-delete version
+    * count. Schema: (base, uid, last_lsn, last_idx, last_kind,
+    * n_versions). */
   def scd2Cursor(pre: DataFrame): DataFrame =
-    pre.groupBy("base", "uid")
-      .agg(max(struct(col("lsn"), col("idx"))).as("last"),
-        expr("max_by(kind, struct(lsn, idx))").as("last_kind"),
-        sum(when(col("kind") =!= "delete", 1L).otherwise(0L)).as("n_versions"))
-      .select(col("base"), col("uid"), col("last.lsn").as("last_lsn"),
-        col("last_kind"), col("n_versions"))
+    lastWrite(pre, "n_versions", sum(nonDelete))
+
+  /** Advance a [[scd2Cursor]] over the keyed changes that follow it:
+    * ≡ scd2Cursor(pre ∪ delta). The streaming SCD2 twin's state. */
+  def mergeScd2Cursor(cursor: DataFrame, delta: DataFrame): DataFrame =
+    mergeLastWrite(cursor, "n_versions", delta, nonDelete)
 
   /** The rows the merge PRODUCES: pre-L open versions resolved against
     * the delta (closed at their entity's first delta change, or kept
@@ -462,64 +442,24 @@ object Forwarder {
   }
 
   /** The checkpoint+merge plan over explicit pre/delta frames (both in
-    * [[routedKeyed]] shape, uid non-null) — shared by the registered
-    * query and IncrementalSnapshotSpec's multi-split proof.
+    * [[keyed]] shape, uid non-null) — shared by the registered query and
+    * IncrementalSnapshotSpec's multi-split proof.
     *
-    * Plan shape (round 17): each heavy windowed pass runs ONCE. The
-    * round-15 "fused" form computed closed + cursor off one shared
-    * window chain — but a DataFrame with several consumers is not a
-    * shared computation in the physical plan: the union re-derived the
-    * pre window subtree per consumer (closed, openResolved→cursor,
-    * deltaV→cursor = THREE pre sorts) and the delta subtree twice,
-    * which at the 1000× point multiplied into the registry's worst wall
-    * (2005 s vs the 62.7 s full replay). Now: closed is the only
-    * pre-side WINDOW; the cursor is the [[scd2Cursor]] map-side-combined
-    * AGGREGATE (per-entity partials cross the exchange, not rows),
-    * pinned once ([[graft.Tables.pinFrame]] — it is entity-scale and has
-    * two join consumers); the first-delta row is likewise an aggregate;
-    * only deltaV pays the delta-side window sort. Both sides re-read
-    * the narrow memoized [[routedKeyed]] cache, never the wide decode.
-    * The semantic definitions stay in the three named helpers
-    * (IncMaintBench prices them separately); IncrementalSnapshotSpec's
-    * multi-split hash equality against the full replay pins the
-    * restructure. */
+    * Each heavy pass runs once: closed is the only pre-side WINDOW; the
+    * cursor is a map-side-combined AGGREGATE (per-entity partials cross
+    * the exchange, not rows), pinned once ([[graft.Tables.pinFrame]]) —
+    * it is entity-scale and has two join consumers in [[scd2New]], which
+    * a shared DataFrame would otherwise re-derive per consumer; the
+    * first-delta row is likewise an aggregate; only the delta versions
+    * pay a delta-side window sort. */
   def scd2Merged(pre: DataFrame, delta: DataFrame): DataFrame = {
     val closed = scd2Closed(pre)
     val cursor = graft.Tables.pinFrame(scd2Cursor(pre))
-    scd2NewFrom(cursor, delta)
+    scd2New(cursor, delta)
       .unionByName(closed, allowMissingColumns = false)
       .select("base", "uid", "version", "valid_from", "valid_to",
         "is_current", "kind")
       .orderBy("base", "uid", "version")
-  }
-
-  /** [[scd2New]] body over an already-materialized cursor — the merge
-    * rows without the final ordering (the union in [[scd2Merged]]
-    * re-orders globally anyway). */
-  private def scd2NewFrom(cursor: DataFrame, delta: DataFrame): DataFrame = {
-    val firstDelta = delta.groupBy("base", "uid")
-      .agg(min(struct(col("lsn"), col("idx"))).as("first"))
-      .select(col("base"), col("uid"), col("first.lsn").as("first_lsn"))
-    val openResolved = cursor.where(col("last_kind") =!= "delete")
-      .join(firstDelta, Seq("base", "uid"), "left")
-      .select(col("base"), col("uid"), col("n_versions").as("version"),
-        col("last_lsn").as("valid_from"),
-        coalesce(col("first_lsn"), lit(-1L)).as("valid_to"),
-        when(col("first_lsn").isNull, 1L).otherwise(0L).as("is_current"),
-        col("last_kind").as("kind"))
-    val deltaV = delta
-      .withColumn("nxt", lead(col("lsn"), 1).over(perEntW))
-      .where(col("kind") =!= "delete")
-      .withColumn("dver", row_number().over(perEntW).cast("long"))
-      .join(cursor.select(col("base"), col("uid"),
-        col("n_versions").as("base_ver")), Seq("base", "uid"), "left")
-      .select(col("base"), col("uid"),
-        (col("dver") + coalesce(col("base_ver"), lit(0L))).as("version"),
-        col("lsn").as("valid_from"),
-        coalesce(col("nxt"), lit(-1L)).as("valid_to"),
-        when(col("nxt").isNull, 1L).otherwise(0L).as("is_current"),
-        col("kind"))
-    openResolved.unionByName(deltaV)
   }
 
   val cdcScd2Sql: String =

@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** TimescaleDB hypertable remap.
@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * hypertable via a catalog lookup keyed on the hypertable index, falling
   * back to the raw name when the table is not a chunk (reference
   * src/forwarder/mod.rs:15-41, src/cdc/mod.rs:12-18,49-73). The lookup is
-  * tiny (one row per hypertable), so it is a broadcast join: at 100 TB the
-  * change feed is never shuffled to be renamed.
+  * a map literal probed per row, like the reference's in-memory map: no
+  * join, no exchange, so the change feed is never shuffled or broadcast
+  * against to be renamed.
   */
 object HyperRemap {
 
@@ -20,28 +21,17 @@ object HyperRemap {
 
   private val ChunkIdxPattern = "^_hyper_([0-9]+)_"
 
-  /** Adds `base` = remapped table to a decoded change feed. */
-  def remap(spark: SparkSession, changes: DataFrame): DataFrame = {
-    import spark.implicits._
-    val lookup = HyperLookup.toDF("hyper_idx", "hyper_base")
-    changes
-      .withColumn("chunk_idx", regexp_extract(col("tbl"), ChunkIdxPattern, 1))
-      .join(broadcast(lookup), col("chunk_idx") === col("hyper_idx"), "left")
-      .withColumn("base", coalesce(col("hyper_base"), col("tbl")))
-      .drop("chunk_idx", "hyper_idx", "hyper_base")
-  }
+  /** The remapped base table of `tbl`: the catalog entry of a chunk's
+    * hypertable index, else the raw name (NULL for a NULL `tbl`). Routed
+    * consumers filter on it directly (`base === b`), before any fan-out. */
+  val base: Column = coalesce(
+    try_element_at(map(HyperLookup.flatMap { case (i, b) => Seq(lit(i), lit(b)) }: _*),
+      regexp_extract(col("tbl"), ChunkIdxPattern, 1)),
+    col("tbl"))
 
-  /** STATIC raw-table predicate for one remapped base table: the raw
-    * name itself plus every chunk prefix whose hypertable index maps to
-    * `base`. Literal at plan time (HyperLookup is catalog config, like
-    * the reference's in-memory hypertable map), so routed consumers
-    * filter before any remap join — `startsWith("_hyper_<idx>_")` is
-    * exactly the membership the remap's regexp computes, per index. */
-  def routesTo(base: String): org.apache.spark.sql.Column =
-    HyperLookup.filter(_._2 == base).map(_._1)
-      .foldLeft(col("tbl") === base) { (p, idx) =>
-        p || col("tbl").startsWith(s"_hyper_${idx}_")
-      }
+  /** Adds `base` = remapped table to a decoded change feed. */
+  def remap(spark: SparkSession, changes: DataFrame): DataFrame =
+    changes.withColumn("base", base)
 
   // ---- queries ------------------------------------------------------------
 

@@ -34,14 +34,13 @@ object SpecificFilter {
     * has_table && has_flag before touching SpecificFilter
     * (src/api/query.rs:34-50, src/forwarder/mod.rs:106-126). The routed
     * base is 'cpustats', whose raw set is {cpustats, _hyper_1_*} via the
-    * hypertable remap — a STATIC predicate over the in-memory decoded
-    * frame, so no remap join runs ahead of the filter. Deletes would
-    * also fall out via the missing-column rule (empty columnnames,
-    * mirroring wal2json oldkeys); the explicit kind route is the
-    * reference's bit test. */
+    * hypertable remap column — a per-row map lookup over the in-memory
+    * decoded frame. Deletes would also fall out via the missing-column
+    * rule (empty columnnames, mirroring wal2json oldkeys); the explicit
+    * kind route is the reference's bit test. */
   def filterEq(spark: SparkSession, dir: String): DataFrame = {
     val d = ChangeFeed.decodedWithMap(spark, dir)
-    d.where(HyperRemap.routesTo("cpustats"))
+    d.where(HyperRemap.base === "cpustats")
       .where(col("kind").isin("insert", "update"))
       .where(eqFilter(col("cmap"), lit("user_id"), lit("7")))
       .select(col("lsn"), col("idx"), col("kind"), col("tbl"))
@@ -55,7 +54,7 @@ object SpecificFilter {
     * missing-column rule (and via the route: they land on cpustats). */
   def filterIn(spark: SparkSession, dir: String): DataFrame = {
     val d = ChangeFeed.decodedWithMap(spark, dir)
-    d.where(HyperRemap.routesTo("swapstats"))
+    d.where(HyperRemap.base === "swapstats")
       .where(col("kind").isin("insert", "update"))
       .where(inFilter(col("cmap"), lit("k"), lit("10,20,30,42,77")))
       .select(col("lsn"), col("idx"), try_element_at(col("cmap"), lit("k")).as("k"))

@@ -141,26 +141,21 @@ object Subscription {
     * exactly the reference's model, where the gate runs once per connect
     * and the specific filter does the per-message work. */
   def authRestrict(spark: SparkSession, dir: String): DataFrame = {
-    // Connect-time gate ORDER (round-13 scale fix): the reference's auth
-    // check runs once per socket, BEFORE the forwarder ever sees a change
-    // (src/api/auth.rs:126-224) — so the engine restricts the
-    // subscription side first and fans out only the accepted subset,
-    // instead of materializing the full fan-out and discarding
-    // unauthorized legs afterwards (74.6 s vs fanout's 46.9 s at the
-    // 1000× stress point came from exactly that discarded work).
+    // Connect-time gate order: the reference's auth check runs once per
+    // socket, BEFORE the forwarder sees a change (src/api/auth.rs:126-224),
+    // so the subscription side is restricted first and only the accepted
+    // subset fans out — unauthorized legs are never materialized.
     val allowedSubs = validated(spark).where(col("routable"))
       .join(broadcast(authAllowed(spark)), Seq("sub_id"))
     // The accepted subscriptions' table set is a pure function of the
     // static seed/owner/admin config — the same per-connect derivation
-    // the reference makes; it becomes a static routesTo predicate over
-    // the decoded frame, the filter_eq/filter_in route-before-filter
-    // shape.
+    // the reference makes; it routes the decoded frame on the remapped
+    // base before the fan-out (the filter_eq/filter_in shape).
     // bounded-collect: ≤ |SubsSeed| rows, N-independent of the change feed
     val bases = allowedSubs.select("tbl").distinct()
       .collect().map(_.getString(0)).sorted
     val routed = ChangeFeed.decodedWithMap(spark, dir)
-      .where(bases.map(HyperRemap.routesTo)
-        .reduceOption(_ || _).getOrElse(lit(false)))
+      .where(HyperRemap.base.isin(bases.toSeq: _*))
     Forwarder.fanoutOver(spark, routed, allowedSubs)
       .select("sub_id", "lsn", "idx", "base", "kind")
       .orderBy("sub_id", "lsn", "idx")

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import graft.cdc.{ChangeFeed, Forwarder, HyperRemap}
+import graft.cdc.{ChangeFeed, Forwarder}
 
 /** Streaming twin of the batch SCD2 history (Forwarder.cdcScd2,
   * SURVEY.md §2 row 90): the reference's consumers replay the change feed
@@ -13,114 +11,43 @@ import graft.cdc.{ChangeFeed, Forwarder, HyperRemap}
   * intervals as later changes arrive, never recomputing history for
   * entities a micro-batch doesn't touch.
   *
-  * State per entity is O(1): the count of already-closed versions plus the
-  * single open version (if any). Each merge touches only the entities
-  * present in the batch: their open versions are re-injected as synthetic
-  * rows ahead of the new changes (the feed is LSN-ordered across batches —
-  * replication streams replay in commit order, the same contract
-  * dedupedChanges documents), the batch's closures are appended to the
-  * immutable closed-version log, and the state row is replaced. Closed
-  * versions are write-once — the history sink can be an append-only file
-  * sink at scale, with only the tiny open-tail state living in the merge.
+  * The state is the batch checkpoint cursor ([[Forwarder.scd2Cursor]]):
+  * one row per entity, its last change and its version count, from which
+  * the open version is derivable. Each micro-batch runs the batch merge
+  * against it — [[Forwarder.scd2New]]'s closed rows append to the
+  * immutable closed-version log, and [[Forwarder.mergeScd2Cursor]]
+  * advances the cursor — so the streaming and batch histories share one
+  * definition. The feed is LSN-ordered across batches (replication
+  * streams replay in commit order), which is the merge's contract.
   *
   * Scd2StreamSpec pins the equivalence contract: after draining any
-  * batch-boundary split of the feed, history(state, closed) equals the
+  * batch-boundary split of the feed, history(cursor, closed) equals the
   * batch cdcScd2 output row-for-row (open tails included, as the batch
   * operator also emits them with valid_to = −1). */
 object Scd2Stream {
 
-  /** Per-entity open-tail state: n_closed counts fully-closed versions;
-    * (version, valid_from, vidx, kind) describe the open version, all
-    * null when the entity's history is closed out (delete tail). */
-  val StateSchema: StructType = StructType(Seq(
-    StructField("base", StringType),
-    StructField("uid", LongType),
-    StructField("n_closed", LongType),
-    StructField("version", LongType),
-    StructField("valid_from", LongType),
-    StructField("vidx", LongType),
-    StructField("kind", StringType)))
-
-  /** Closed-version log rows (immutable once emitted). */
-  val ClosedSchema: StructType = StructType(Seq(
-    StructField("base", StringType),
-    StructField("uid", LongType),
-    StructField("version", LongType),
-    StructField("valid_from", LongType),
-    StructField("valid_to", LongType),
-    StructField("kind", StringType)))
-
-  def emptyState(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StateSchema)
-
-  def emptyClosed(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ClosedSchema)
-
   /** Decode a raw events micro-batch to keyed changes — the same decode
-    * chain as every batch CDC query (messagesFrom takes any frame). */
-  def changesFrom(spark: SparkSession, events: DataFrame): DataFrame =
-    HyperRemap.remap(spark, ChangeFeed.decodedWithMapFrom(events))
-      .withColumn("uid", Forwarder.entityCol)
+    * and key chain as every batch CDC query. */
+  def changesFrom(events: DataFrame): DataFrame =
+    Forwarder.keyed(ChangeFeed.decodedWithMapFrom(events))
       .where(col("uid").isNotNull)
-      .select(col("base"), col("uid"), col("lsn"), col("idx"), col("kind"))
 
-  /** Merge one micro-batch of keyed changes into (state, closed-log):
-    * returns (new state, newly closed versions). Only entities present in
-    * `ch` are re-derived; everything else passes through untouched. */
-  def mergeBatch(state: DataFrame, ch: DataFrame): (DataFrame, DataFrame) = {
-    val keys = ch.select("base", "uid").distinct()
-    val hit = state.join(keys, Seq("base", "uid"))
-    val miss = state.join(keys, Seq("base", "uid"), "left_anti")
-
-    // re-inject each touched entity's open version ahead of the new
-    // changes; vidx preserves the original statement-index tiebreak
-    val synth = hit.where(col("version").isNotNull)
-      .select(col("base"), col("uid"), col("valid_from").as("lsn"),
-        col("vidx").as("idx"), col("kind"))
-    val rows = synth.unionByName(ch)
-
-    val w = Window.partitionBy("base", "uid").orderBy("lsn", "idx")
-    val led = rows.withColumn("nxt", lead(col("lsn"), 1).over(w))
-
-    // versions number only non-delete changes, continuing each entity's
-    // counter; the synthetic open row re-takes its original number
-    // because n_closed excludes it
-    val nd = led.where(col("kind") =!= "delete")
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .join(hit.select(col("base"), col("uid"), col("n_closed")),
-        Seq("base", "uid"), "left")
-      .withColumn("version", coalesce(col("n_closed"), lit(0L)) + col("rn"))
-
-    val closedNew = nd.where(col("nxt").isNotNull)
-      .select(col("base"), col("uid"), col("version"),
-        col("lsn").as("valid_from"), col("nxt").as("valid_to"), col("kind"))
-
-    val openNew = nd.where(col("nxt").isNull)
-      .select(col("base"), col("uid"), col("version"),
-        col("lsn").as("valid_from"), col("idx").as("vidx"), col("kind"))
-
-    // replaced state rows: one per entity that produced any non-delete
-    // version row this merge; entities whose batch rows were all deletes
-    // against an already-closed history keep their old state row
-    val cnts = nd.groupBy("base", "uid").agg(max(col("version")).as("maxv"))
-    val stateUpd = cnts.join(openNew, Seq("base", "uid"), "left")
-      .select(col("base"), col("uid"),
-        (col("maxv") - when(col("version").isNotNull, 1L).otherwise(0L)).as("n_closed"),
-        col("version"), col("valid_from"), col("vidx"), col("kind"))
-    val stateKeep = hit.join(cnts.select("base", "uid"), Seq("base", "uid"), "left_anti")
-
-    (miss.unionByName(stateKeep).unionByName(stateUpd), closedNew)
+  /** Apply one micro-batch of keyed changes to the cursor (None before the
+    * first batch): returns (advanced cursor, versions the batch closed).
+    * Only entities present in `ch` produce closed rows. */
+  def step(cursor: Option[DataFrame], ch: DataFrame): (DataFrame, DataFrame) = {
+    val c = cursor.getOrElse(Forwarder.scd2Cursor(ch.where(lit(false))))
+    (Forwarder.mergeScd2Cursor(c, ch),
+      Forwarder.scd2New(c, ch).where(col("is_current") === 0))
   }
 
-  /** Assembled history: the closed-version log plus the open tails, in
-    * the batch cdcScd2 output shape (valid_to = −1, is_current = 1 for
-    * open versions). */
-  def history(state: DataFrame, closed: DataFrame): DataFrame =
-    closed
-      .select(col("base"), col("uid"), col("version"), col("valid_from"),
-        col("valid_to"), lit(0L).as("is_current"), col("kind"))
-      .unionByName(state.where(col("version").isNotNull)
-        .select(col("base"), col("uid"), col("version"), col("valid_from"),
-          lit(-1L).as("valid_to"), lit(1L).as("is_current"), col("kind")))
+  /** Assembled history in the batch cdcScd2 output shape: the closed log
+    * plus the cursor's open versions (valid_to = −1, is_current = 1). */
+  def history(cursor: DataFrame, closed: DataFrame): DataFrame = {
+    val noChanges = cursor.select(col("base"), col("uid"),
+      col("last_lsn").as("lsn"), col("last_idx").as("idx"),
+      col("last_kind").as("kind")).where(lit(false))
+    closed.unionByName(Forwarder.scd2New(cursor, noChanges))
       .orderBy("base", "uid", "version")
+  }
 }

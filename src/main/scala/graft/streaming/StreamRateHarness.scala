@@ -7,10 +7,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
-import graft.cdc.{ChangeFeed, Forwarder, HyperRemap}
+import graft.cdc.{ChangeFeed, Forwarder}
 
 /** Sustained-rate measurement harness for the COMPOSED change-data
-  * pipeline (round-12 verdict ask #5): a generator thread commits
+  * pipeline: a generator thread commits
   * wal2json documents into the JDBC change table at a target rate while
   * the row-175 polling source drives
   *
@@ -24,10 +24,8 @@ import graft.cdc.{ChangeFeed, Forwarder, HyperRemap}
   * the missing evidence class: does the pipeline KEEP UP, at what rate,
   * with what latency, and does a backlog drain in bounded batches.
   *
-  * The per-batch apply is the JdbcPipelineSpec exactly-once pattern
-  * verbatim: deliveries land in an overwrite-mode per-batch dir and the
-  * snapshot is a chain of cumulative per-batch versions, so a replayed
-  * batch overwrites its own output instead of double-applying. */
+  * The per-batch apply is [[applyFeedBatch]], the same function
+  * JdbcPipelineSpec drives through a kill/restart. */
 object StreamRateHarness {
 
   case class BatchStat(batchId: Long, rows: Long, wallMs: Long,
@@ -36,12 +34,11 @@ object StreamRateHarness {
   /** Per-batch facts recorded SYNCHRONOUSLY inside foreachBatch (the
     * batch's own execution path), unlike [[BatchStat]] which rides the
     * async StreamingQueryListener bus. Listener events are delivered
-    * best-effort and can still be in flight when the query stops — under
-    * full-suite load StreamRateSpec observed 2 recorded events for a run
-    * that provably executed ≥4 batches (round-13 verdict #1). Correctness
-    * assertions (admission bound, batch count, drain) must read THESE;
-    * the listener stats remain for latency/backlog reporting only. */
-  /** `rows` counts DECODED change rows (one wal2json message can carry
+    * best-effort and can still be in flight when the query stops, so
+    * correctness assertions (admission bound, batch count, drain) must
+    * read THESE; the listener stats serve latency/backlog reporting only.
+    *
+    * `rows` counts DECODED change rows (one wal2json message can carry
     * several changes); `lsns` counts DISTINCT admitted lsns — the
     * exactly-once unit. Window tiling plus sum(lsns) == feed length pins
     * per-lsn exactly-once delivery including loss INSIDE a window. */
@@ -69,28 +66,52 @@ object StreamRateHarness {
     try { c.createStatement().execute(sql) } finally c.close()
   }
 
+  /** Newest cumulative snapshot version under `work` below `before`. */
+  def latestStateId(work: String, before: Long = Long.MaxValue): Option[Long] =
+    Option(new java.io.File(s"$work/snapshot").list()).toSeq.flatten
+      .filter(_.startsWith("state_")).map(_.stripPrefix("state_").toLong)
+      .filter(_ < before).sorted.lastOption
+
+  /** The composed feed's exactly-once per-batch apply over a decoded+cmap
+    * micro-batch: fan-out deliveries to `work/deliveries/batch_<id>`, then
+    * the cumulative LWW state `work/snapshot/state_<id>` = the newest
+    * earlier state merged with the batch's keyed changes (the batch's own
+    * fold when there is none). Every side effect is keyed by batchId in
+    * overwrite mode, so a replayed batch rewrites its own output instead
+    * of double-applying (Spark replays a batch only with identical
+    * content). One shuffle per batch for the state merge. */
+  def applyFeedBatch(spark: SparkSession, work: String, batch: DataFrame,
+      batchId: Long): Unit = {
+    Forwarder.fanoutFromDecoded(spark, batch)
+      .write.mode("overwrite").parquet(s"$work/deliveries/batch_$batchId")
+    val delta = Forwarder.keyed(batch)
+    latestStateId(work, batchId)
+      .map(id => spark.read.parquet(s"$work/snapshot/state_$id"))
+      .fold(Forwarder.snapshotState(delta))(Forwarder.mergeSnapshotState(_, delta))
+      .write.mode("overwrite").parquet(s"$work/snapshot/state_$batchId")
+  }
+
   /** Drive the pipeline: insert `msgs` (ordered by lsn) at `ratePerSec`
     * while the stream consumes with `maxLsnPerTrigger` admission and a
     * `triggerMs` processing-time trigger; return the measured report.
     * The caller supplies messages (bounded — this is a bench driver, not
-    * a query path). */
-  /** `preload = true` measures CONSUMER drain capacity instead of the
+    * a query path).
+    *
+    * `preload = true` measures CONSUMER drain capacity instead of the
     * composed end-to-end rate: the generator inserts the whole message
     * set unpaced BEFORE the stream starts (ratePerSec only sizes its
     * commit slices), so streamWallMs/sustainedRowsPerSec price the
-    * poll → decode → remap → fan-out + snapshot path alone. Used to
-    * attribute the saturation knee to a stage: if the composed run's
-    * achieved generator rate is below this, the ingest write path is
-    * the bottleneck, not the stream. */
-  /** `writers` > 1 shards the ingest across N writer connections (the
-    * round-14 knee attribution: ONE Derby connection saturates at ~48k
-    * rows/s while the consumer drains 82k — so a composed measurement
-    * can never reach the consumer's knee through one writer). Slices are
-    * striped round-robin; each writer publishes its committed position
-    * transactionally with its slice commit, and the source's high-water
-    * becomes MIN over writers (progressTable option) — the safe
-    * multi-writer outbox watermark. writers = 1 keeps the r13/r14
-    * single-writer posture bit-for-bit. */
+    * poll → decode → remap → fan-out + snapshot path alone. If the
+    * composed run's achieved generator rate is below this, the ingest
+    * write path is the bottleneck, not the stream.
+    *
+    * `writers` > 1 shards the ingest across N writer connections, since
+    * one Derby connection saturates below the consumer's drain rate.
+    * Slices are striped round-robin; each writer publishes its committed
+    * position transactionally with its slice commit, and the source's
+    * high-water becomes MIN over writers (progressTable option) — the
+    * safe multi-writer outbox watermark. writers = 1 uses no progress
+    * table and the source's max(lsn) high-water. */
   def run(spark: SparkSession, msgsIn: Array[Row], ratePerSec: Long,
       maxLsnPerTrigger: Long, triggerMs: Long,
       numPartitions: Int = 4, preload: Boolean = false,
@@ -136,14 +157,13 @@ object StreamRateHarness {
     // and its published position is monotone). Each slice's rows and the
     // writer's progress row commit in ONE transaction — the atomicity
     // the min-over-writers watermark needs. writers == 1 degenerates to
-    // the r13/r14 single-generator loop (no progress table, max(lsn)
-    // high-water).
+    // a single paced generator (no progress table, max(lsn) high-water).
     def writerThread(k: Int): Thread = new Thread(() => {
       // getConnection INSIDE the try: a connect-time failure (Derby
       // lock/boot contention between concurrent writers — exactly the
       // class the fail-fast targets) must set writerError and count the
       // writer done, not skip both and die minutes later on the generic
-      // drain deadline with no exception attributed (round-16 advice).
+      // drain deadline with no exception attributed.
       var c: java.sql.Connection = null
       try {
         c = DriverManager.getConnection(url)
@@ -157,8 +177,8 @@ object StreamRateHarness {
           // genT0 + s·100 ms on the GLOBAL schedule whichever writer owns
           // it) — waiting at the top of the loop means writer k's first
           // slice lands at its k·100 ms slot instead of every writer
-          // bursting its first slice at t≈0, and keeps writers = 1
-          // behavior identical to the r13/r14 single-generator loop. A
+          // bursting its first slice at t≈0; writers = 1 paces one slice
+          // per 100 ms. A
           // slow DB naturally degrades the achieved rate, which the
           // report exposes via generatorWallMs; preload mode never
           // sleeps — it fills the table at the DB's own max rate.
@@ -228,14 +248,6 @@ object StreamRateHarness {
     }
     spark.streams.addListener(listener)
 
-    val dlv = s"$work/deliveries"
-    val snap = s"$work/snapshot"
-    def latestStateId(): Option[Long] = {
-      val d = new java.io.File(snap)
-      Option(d.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-        .map(_.getName).filter(_.startsWith("state_"))
-        .map(_.stripPrefix("state_").toLong).sorted.lastOption
-    }
     // batchId → synchronous facts; keyed so an exactly-once replay of a
     // batch overwrites its own record instead of double-counting
     val syncStats = new ConcurrentSkipListMap[Long, SyncBatch]()
@@ -247,28 +259,7 @@ object StreamRateHarness {
         syncStats.put(batchId,
           SyncBatch(batchId, agg.getLong(0), agg.getLong(1),
             agg.getLong(2), agg.getLong(3)))
-      Forwarder.fanoutFromDecoded(spark, batch)
-        .write.mode("overwrite").parquet(s"$dlv/batch_$batchId")
-      val delta = HyperRemap.remap(spark, batch)
-        .withColumn("uid", Forwarder.entityCol)
-        .groupBy("base", "uid")
-        .agg(max(struct(col("lsn"), col("idx"))).as("last"),
-          expr("max_by(kind, struct(lsn, idx))").as("last_kind"),
-          count(lit(1)).as("n_changes"))
-        .select(col("base"), col("uid"), col("last.lsn").as("last_lsn"),
-          col("last.idx").as("last_idx"), col("last_kind"), col("n_changes"))
-      val prior = latestStateId().filter(_ < batchId)
-        .map(id => spark.read.parquet(s"$snap/state_$id"))
-      val merged = prior.fold(delta)(p =>
-        p.unionByName(delta)
-          .groupBy("base", "uid")
-          .agg(max(struct(col("last_lsn"), col("last_idx"))).as("last"),
-            expr("max_by(last_kind, struct(last_lsn, last_idx))").as("last_kind"),
-            sum("n_changes").as("n_changes"))
-          .select(col("base"), col("uid"), col("last.last_lsn").as("last_lsn"),
-            col("last.last_idx").as("last_idx"), col("last_kind"),
-            col("n_changes")))
-      merged.write.mode("overwrite").parquet(s"$snap/state_$batchId")
+      applyFeedBatch(spark, work, batch, batchId)
     }
 
     // preload mode: the whole backlog is in the table before the stream
@@ -294,7 +285,7 @@ object StreamRateHarness {
     // run until the generator finished AND the stream drained the feed.
     // Drain is judged first on the SYNCHRONOUS per-batch records: the
     // listener `confirmed` watermark rides an async event bus and can lag
-    // the actual execution under load (the round-13 flake class). A
+    // the actual execution under load. A
     // malformed last document decodes to no rows, so the synchronous
     // high-water never reaches it; the source's admitted end offset
     // (`confirmed`) does, once that batch completes.
@@ -326,19 +317,17 @@ object StreamRateHarness {
       import scala.jdk.CollectionConverters._
       syncStats.values().asScala.toSeq.sortBy(_.batchId)
     }
-    val delivered = spark.read.parquet(s"$dlv/batch_*").count()
-    val stateDf = spark.read.parquet(s"$snap/state_${latestStateId().get}")
+    val delivered = spark.read.parquet(s"$work/deliveries/batch_*").count()
+    val stateDf = spark.read.parquet(s"$work/snapshot/state_${latestStateId(work).get}")
     val stateRows = stateDf.count()
     // bounded-state proof: the cumulative snapshot is keyed (base, uid)
     // — including tombstoned entities, whose last_kind records the
     // delete — so its row count must equal the feed's distinct entity
     // count recomputed in batch over the full change table
-    val entities = HyperRemap.remap(spark,
-      ChangeFeed.decodedWithMapFromRaw(
+    val entities = Forwarder.keyed(ChangeFeed.decodedWithMapFromRaw(
         spark.read.format("jdbc").option("url", url)
           .option("dbtable", "changes").load()
           .select(col("lsn").cast("long").as("lsn"), col("payload"))))
-      .withColumn("uid", Forwarder.entityCol)
       .select("base", "uid").distinct().count()
     val genWallMs = (generatorDoneAt - genT0) / 1000000L
     // composed mode: wall from the first insert (gen + stream overlap);

@@ -1,6 +1,6 @@
 package graft
 
-import graft.cdc.{ChangeFeed, Forwarder, HyperRemap}
+import graft.cdc.{ChangeFeed, Forwarder}
 import graft.streaming.ChangeFeedStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -15,14 +15,8 @@ class CdcSnapshotStreamSpec extends SparkSpec {
   test("streaming snapshot state equals the batch snapshot") {
     val work = stageEventsDir()
     val stream = ChangeFeedStream.readEvents(spark, work)
-    val snapState = HyperRemap.remap(spark, ChangeFeed.decodedWithMapFrom(stream))
-      .withColumn("uid", Forwarder.entityCol)
-      .groupBy("base", "uid")
-      .agg(max("lsn").as("last_lsn"),
-        // (lsn, idx) is the write order: statements of one transaction
-        // document share the LSN (same tiebreak as batch cdcSnapshot)
-        expr("max_by(kind, struct(lsn, idx))").as("last_kind"),
-        count(lit(1)).as("n_changes"))
+    val snapState = Forwarder.snapshotState(
+      Forwarder.keyed(ChangeFeed.decodedWithMapFrom(stream)))
     val q = snapState.writeStream
       .outputMode("complete")
       .format("memory")

@@ -2,15 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.cdc.{ChangeFeed, Forwarder, HyperRemap, Subscription}
+import graft.cdc.{Forwarder, Subscription}
 
 /** The routed CDC filter family's route-before-filter order (the reference
   * routes every change per (table, change-kind) before SpecificFilter,
-  * src/forwarder/mod.rs:106-126): the static base-table predicate
-  * (HyperRemap.routesTo) must select exactly the remap's membership, and
-  * auth_restrict's connect-time gate ahead of the fan-out must emit the
-  * same rows as fanning out first and gating afterwards. filter_eq and
-  * filter_in rows are oracle-checked under their own keys. */
+  * src/forwarder/mod.rs:106-126): auth_restrict's connect-time gate ahead
+  * of the fan-out must emit the same rows as fanning out first and gating
+  * afterwards. filter_eq and filter_in rows are oracle-checked under
+  * their own keys. */
 class FilterPruningSpec extends SparkSpec {
 
   private def tempCorpus(): String = {
@@ -34,17 +33,5 @@ class FilterPruningSpec extends SparkSpec {
     val got = Subscription.authRestrict(spark, corpus)
       .collect().map(_.toSeq).toSeq
     assert(got == expected, "gate-then-fanout must equal fanout-then-gate")
-  }
-
-  test("routesTo matches exactly the remap's raw-table membership") {
-    val corpus = tempCorpus()
-    val d = ChangeFeed.decoded(spark, corpus)
-    val viaPredicate = d.where(HyperRemap.routesTo("cpustats"))
-      .select("lsn", "idx").collect().map(_.toSeq).toSet
-    val viaRemap = HyperRemap.remap(spark, d)
-      .where(col("base") === "cpustats")
-      .select("lsn", "idx").collect().map(_.toSeq).toSet
-    assert(viaPredicate == viaRemap,
-      "static route predicate must equal the broadcast remap's base membership")
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.cdc.{ChangeFeed, Forwarder, HyperRemap}
+import graft.cdc.{ChangeFeed, Forwarder}
 
 /** Incremental state maintenance ≡ full replay (round-13 verdict ask #3).
   *
@@ -24,10 +24,7 @@ import graft.cdc.{ChangeFeed, Forwarder, HyperRemap}
   * deleted after a merge that brings no new rows for it. */
 class IncrementalSnapshotSpec extends SparkSpec {
 
-  private def routed() =
-    HyperRemap.remap(spark, ChangeFeed.decodedWithMap(spark, Sf0001))
-      .withColumn("uid", Forwarder.entityCol)
-      .select("base", "uid", "lsn", "idx", "kind")
+  private def routed() = Forwarder.keyed(ChangeFeed.decodedWithMap(spark, Sf0001))
 
   test("merge(state(<=L), delta(L, max]) equals full replay at every split") {
     val r = routed().cache()

@@ -2,7 +2,8 @@ package graft
 
 import java.sql.DriverManager
 
-import graft.cdc.{ChangeFeed, Forwarder, HyperRemap}
+import graft.cdc.{ChangeFeed, Forwarder}
+import graft.streaming.StreamRateHarness
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -20,13 +21,12 @@ import org.apache.spark.sql.streaming.Trigger
   * deliveries match Forwarder.fanoutFromDecoded, snapshot state matches
   * Forwarder.snapshotFromDecoded (the cdc_snapshot logic).
   *
-  * Exactly-once posture: foreachBatch keys every side effect by batchId —
+  * The per-batch apply is StreamRateHarness.applyFeedBatch, the function
+  * the live feed runs: foreachBatch keys every side effect by batchId —
   * deliveries land in an overwrite-mode per-batch dir, and the snapshot
   * state is a chain of cumulative per-batch versions (state_N = merge of
   * state_{N-1} and batch N), so a replayed batch overwrites its own
-  * output instead of double-applying (the production pattern for
-  * multi-sink CDC apply; Spark replays a batch only with identical
-  * content). */
+  * output instead of double-applying. */
 class JdbcPipelineSpec extends SparkSpec {
 
   private def exec(url: String, sql: String): Unit = {
@@ -62,41 +62,6 @@ class JdbcPipelineSpec extends SparkSpec {
     val (phase1, phase2) = msgs.splitAt(400)
     insertMsgs(url, phase1)
 
-    def latestStateId(): Option[Long] = {
-      val d = new java.io.File(snap)
-      Option(d.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-        .map(_.getName).filter(_.startsWith("state_"))
-        .map(_.stripPrefix("state_").toLong).sorted.lastOption
-    }
-
-    def applyBatch(batch: DataFrame, batchId: Long): Unit = {
-      // fan-out deliveries, idempotent per batch
-      Forwarder.fanoutFromDecoded(spark, batch)
-        .write.mode("overwrite").parquet(s"$dlv/batch_$batchId")
-      // incremental snapshot: merge this batch's per-entity LWW delta
-      // into the previous cumulative state (max-(lsn,idx) + count sum)
-      val delta = HyperRemap.remap(spark, batch)
-        .withColumn("uid", Forwarder.entityCol)
-        .groupBy("base", "uid")
-        .agg(max(struct(col("lsn"), col("idx"))).as("last"),
-          expr("max_by(kind, struct(lsn, idx))").as("last_kind"),
-          count(lit(1)).as("n_changes"))
-        .select(col("base"), col("uid"), col("last.lsn").as("last_lsn"),
-          col("last.idx").as("last_idx"), col("last_kind"), col("n_changes"))
-      val prior = latestStateId().filter(_ < batchId)
-        .map(id => spark.read.parquet(s"$snap/state_$id"))
-      val merged = prior.fold(delta)(p =>
-        p.unionByName(delta)
-          .groupBy("base", "uid")
-          .agg(max(struct(col("last_lsn"), col("last_idx"))).as("last"),
-            expr("max_by(last_kind, struct(last_lsn, last_idx))").as("last_kind"),
-            sum("n_changes").as("n_changes"))
-          .select(col("base"), col("uid"), col("last.last_lsn").as("last_lsn"),
-            col("last.last_idx").as("last_idx"), col("last_kind"),
-            col("n_changes")))
-      merged.write.mode("overwrite").parquet(s"$snap/state_$batchId")
-    }
-
     def runOnce(): Unit = {
       val raw = spark.readStream
         .format("graft.sources.JdbcChangeFeed")
@@ -108,7 +73,9 @@ class JdbcPipelineSpec extends SparkSpec {
       val q = ChangeFeed.decodedWithMapFromRaw(raw).writeStream
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
-        .foreachBatch(applyBatch _)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          StreamRateHarness.applyFeedBatch(spark, work, batch, batchId)
+        }
         .start()
       q.awaitTermination()
     }
@@ -142,13 +109,27 @@ class JdbcPipelineSpec extends SparkSpec {
     def skey(r: Row) = (r.getAs[String]("base"), r.getAs[Long]("uid"),
       r.getAs[Long]("last_lsn"), r.getAs[String]("last_kind"),
       r.getAs[Long]("n_changes"))
-    val sid = latestStateId().getOrElse(fail("no snapshot state written"))
-    val streamedSnap = spark.read.parquet(s"$snap/state_$sid")
+    val sid = StreamRateHarness.latestStateId(work)
+      .getOrElse(fail("no snapshot state written"))
+    val streamedState = spark.read.parquet(s"$snap/state_$sid")
+    val streamedSnap = streamedState
       .where(col("last_kind") =!= "delete")
       .collect().map(skey).sorted
     val batchSnap = Forwarder.snapshotFromDecoded(spark, withMapAll)
       .collect().map(skey).sorted
     assert(streamedSnap.nonEmpty)
     assert(streamedSnap === batchSnap)
+
+    // the whole cumulative state — tombstones, last_idx and n_changes
+    // included — equals the batch fold over the full feed
+    val cols = Seq("base", "uid", "last_lsn", "last_idx", "last_kind", "n_changes")
+    val batchState = Forwarder.snapshotState(Forwarder.keyed(withMapAll))
+      .select(cols.map(col): _*)
+    val st = streamedState.select(cols.map(col): _*)
+    assert(st.where(col("last_kind") === "delete").count() > 0,
+      "fixture must leave tombstones in the state")
+    assert(st.exceptAll(batchState).count() == 0 &&
+      batchState.exceptAll(st).count() == 0,
+      "cumulative streamed state must equal the batch LWW fold")
   }
 }

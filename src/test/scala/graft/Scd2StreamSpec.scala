@@ -31,8 +31,8 @@ class Scd2StreamSpec extends SparkSpec {
     val mid = ids(ids.length / 2)
     ev.where(col("event_id") < mid).coalesce(1)
       .write.parquet(s"$srcDir/half1")
-    var state = Scd2Stream.emptyState(spark)
-    var closed = Scd2Stream.emptyClosed(spark)
+    var cursor: Option[org.apache.spark.sql.DataFrame] = None
+    var closed: Option[org.apache.spark.sql.DataFrame] = None
 
     def drain(): Unit = {
       val q = ChangeFeedStream.readEvents(spark, s"$srcDir/half1")
@@ -41,10 +41,11 @@ class Scd2StreamSpec extends SparkSpec {
         .option("checkpointLocation", s"$work/ckpt")
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val (ns, nc) = Scd2Stream.mergeBatch(state,
-            Scd2Stream.changesFrom(spark, batch).localCheckpoint(eager = true))
-          state = ns.localCheckpoint(eager = true)
-          closed = closed.unionByName(nc).localCheckpoint(eager = true)
+          val (nc, newlyClosed) = Scd2Stream.step(cursor,
+            Scd2Stream.changesFrom(batch).localCheckpoint(eager = true))
+          cursor = Some(nc.localCheckpoint(eager = true))
+          closed = Some(closed.fold(newlyClosed)(_.unionByName(newlyClosed))
+            .localCheckpoint(eager = true))
           ()
         }
         .start()
@@ -52,14 +53,16 @@ class Scd2StreamSpec extends SparkSpec {
     }
 
     drain()
-    val openAfter1 = state.where(col("version").isNotNull).count()
+    val openAfter1 = Scd2Stream.history(cursor.get, closed.get)
+      .where(col("is_current") === 1).count()
     assert(openAfter1 > 0, "batch 1 must leave open versions to close")
 
     ev.where(col("event_id") >= mid).coalesce(1)
       .write.mode("append").parquet(s"$srcDir/half1")
     drain()
 
-    val streamed = Scd2Stream.history(state, closed).collect().map(key).sorted
+    val streamed = Scd2Stream.history(cursor.get, closed.get)
+      .collect().map(key).sorted
     val batch = Forwarder.cdcScd2(spark, Sf0001).collect().map(key).sorted
     assert(streamed.length === batch.length,
       s"row count: streamed ${streamed.length} vs batch ${batch.length}")
@@ -67,7 +70,7 @@ class Scd2StreamSpec extends SparkSpec {
 
     // cross-batch closure really happened: some version closed by batch 2
     // opened in batch 1
-    val crossClosed = closed
+    val crossClosed = closed.get
       .where(col("valid_from") < mid && col("valid_to") >= mid).count()
     assert(crossClosed > 0, "no version opened in batch 1 was closed by batch 2")
   }
