@@ -517,7 +517,7 @@ object Ngrams {
   // ---- bpe_merges: byte-pair-encoding merge-rule induction ----------------
 
   /** Number of merge rounds induced (each round = one vocabulary pass) —
-    * env-dialed like GRAFT_IVF_ITERS/GRAFT_PQ_ITERS; the oracle CTE chain
+    * env-dialed by GRAFT_BPE_ROUNDS; the oracle CTE chain
     * is generated from the same value, so Spark and DuckDB always train
     * the same number of rounds. A def (not an init-time val) so a
     * re-configured JVM cannot pin a stale count. */

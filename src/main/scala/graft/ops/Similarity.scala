@@ -157,71 +157,117 @@ object Similarity {
     * value bit-for-bit — never substitute a 1.0 literal. */
   private def selfCos(n2: Column): Column = cosine(n2, n2, n2)
 
-  // ---- ann_topk: brute-force cosine top-k for a bounded query set ---------
+  // ---- the ranked-list core ------------------------------------------------
+  //
+  // Every ANN retrieval is a candidate generator emitting (qid, cid, score)
+  // rows plus ONE top-k cut, so only candidate generation varies between
+  // the index families: the brute scan (cosine or exact L2), LSH, the IVF
+  // probe scan, the ADC scan (unrouted, IVF-routed or residual), the exact
+  // re-score of a shortlist, and the NN graph. A score is a similarity
+  // (cosine, ranked descending) or a distance (exact L2 or ADC, ranked
+  // ascending); ties go to the smaller cid. The recall, MRR, agreement and
+  // nprobe-sweep evaluators read the cut lists.
 
   val NumQueries = 5
   val TopK = 5
 
-  /** Shared brute-force neighbor scan: every vector scored against the
-    * broadcast query set, ranked per query by (cos desc, vec_id), cut at
-    * k. Both ann_topk and knn_classify derive from this one definition so
-    * the scoring/tie-break rule cannot silently diverge between them. */
-  private def scoredNeighbors(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    val v = vectors(spark, dir)
-    val q = v.where(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("qid"), col("qv").as("qa"), col("n2").as("qn2"))
-    // bounded-cross: broadcast query table, <= NumQueries rows (N-independent seed set)
-    v.crossJoin(broadcast(q))
-      .where(col("qid") =!= col("vec_id"))
-      .withColumn("cos", cosine(dot(col("qa"), col("qv")), col("qn2"), col("n2")))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))))
+  /** The one top-k cut: rnk = row_number() per `by` over (score, cid),
+    * kept while rnk <= k. rnk is an int; keys that publish a bigint rank
+    * cast it. Graph frames name their columns (src, dst, cos). */
+  private def topK(cands: DataFrame, k: Int, ascending: Boolean = false,
+      by: Seq[String] = Seq("qid"), score: String = "score", id: String = "cid"): DataFrame =
+    cands.withColumn("rnk", row_number().over(Window.partitionBy(by.map(col): _*)
+        .orderBy(if (ascending) col(score) else col(score).desc, col(id))))
       .where(col("rnk") <= k)
+
+  /** The bounded query set of a (cid, payload…) frame — its ids below
+    * NumQueries — as (qid, qcid = the query's own cid, q_<payload>…). */
+  private def firstQueries(base: DataFrame): DataFrame =
+    base.where(col("cid") < NumQueries).select(
+      col("cid").as("qid") +: col("cid").as("qcid") +:
+        base.columns.filter(_ != "cid").map(c => col(c).as(s"q_$c")): _*)
+
+  /** Brute-scan candidates: every row of `base` against the broadcast
+    * query set `q` (≤ NumQueries rows), the query's own row excluded — a
+    * queries × N scan that never shuffles the base side. */
+  private def bruteScan(base: DataFrame, q: DataFrame, score: Column): DataFrame =
+    // bounded-cross: broadcast query table, <= NumQueries rows
+    base.crossJoin(broadcast(q)).where(col("qcid") =!= col("cid"))
+      .withColumn("score", score)
+
+  /** Exact re-score of a (qid, cid) shortlist against `base`: shortlist
+    * and query rows are broadcast, so only shortlisted payloads are read
+    * and the corpus never shuffles. Cost: queries × shortlist width. */
+  private def rescore(shortlist: DataFrame, base: DataFrame, score: Column): DataFrame =
+    base.join(broadcast(shortlist), "cid").join(broadcast(firstQueries(base)), "qid")
+      .withColumn("score", score)
+
+  /** Query-to-candidate scores over (q_qv, q_n2) × (qv, n2) payloads. */
+  private def cosScore: Column = cosine(dot(col("q_qv"), col("qv")), col("q_n2"), col("n2"))
+  private def l2Score: Column = l2sq(col("qv"), col("q_qv"))
+
+  /** The one recall evaluator over (qid, cid) lists: per truth query,
+    * n_exact = |truth|, n_hits = |truth ∩ list|, recall_e4 = n_hits ·
+    * 10000 div n_exact. A query the list misses entirely still reads
+    * n_hits = 0, and retrieved ids outside the truth never count. */
+  private[graft] def recall(truth: DataFrame, list: DataFrame): DataFrame =
+    truth.select("qid", "cid")
+      .join(list.select(col("qid").as("r_qid"), col("cid").as("r_cid")),
+        col("qid") === col("r_qid") && col("cid") === col("r_cid"), "left")
+      .groupBy("qid")
+      .agg(count(lit(1)).as("n_exact"),
+        sum(when(col("r_cid").isNotNull, 1L).otherwise(0L)).as("n_hits"))
+      .withColumn("recall_e4", expr("n_hits * 10000 div n_exact"))
+      .orderBy("qid")
+
+  // ---- ann_topk: brute-force cosine top-k for a bounded query set ---------
+
+  /** Every vector as a brute-scan row (cid, label, qv, n2). */
+  private def vecRows(spark: SparkSession, dir: String): DataFrame =
+    vectors(spark, dir).select(col("vec_id").as("cid"), col("label"), col("qv"), col("n2"))
+
+  private def cosineScan(spark: SparkSession, dir: String): DataFrame = {
+    val v = vecRows(spark, dir)
+    bruteScan(v, firstQueries(v), cosScore)
   }
 
-  /** Test probe into the shared neighbor scan (Dedup.shingleSetsProbe
-    * pattern): specs recompute the vote from this exact frame. */
-  def scoredNeighborsProbe(spark: SparkSession, dir: String, k: Int): DataFrame =
-    scoredNeighbors(spark, dir, k)
+  /** The exact-cosine truth: each query's top-k vectors by cosine, label
+    * kept for the kNN vote. ann_topk, knn_classify and the cosine recall,
+    * MRR and sweep evaluators all read this one cut. */
+  private[graft] def cosineTruth(spark: SparkSession, dir: String, k: Int): DataFrame =
+    topK(cosineScan(spark, dir), k)
 
-  /** The brute-force ranked list as a shared memoized frame (round 12):
-    * ann_topk serves it, and ann_agreement re-reads it instead of
-    * re-running the scan — on a cluster the serving lists are a shared
-    * query-time artifact exactly like the index frames below them.
-    * NumQueries×TopK rows; the persist is bookkeeping, not storage. */
+  /** The brute-force list, memoized: ann_topk serves it and ann_agreement
+    * re-reads it. NumQueries×TopK rows. */
   private def listExact(spark: SparkSession, dir: String): DataFrame =
     Tables.memoPersist(spark, s"sim.listExact:$dir") {
-      scoredNeighbors(spark, dir, TopK)
-        .select(col("qid"), col("rnk"), col("vec_id").as("cid"), cosE6(col("cos")).as("cos_e6"))
+      cosineTruth(spark, dir, TopK).select("qid", "cid", "score", "rnk")
     }
 
-  def annTopk(spark: SparkSession, dir: String): DataFrame =
-    listExact(spark, dir).orderBy("qid", "rnk")
+  /** A cosine list published as (qid, rnk, cid, [cols…,] cos_e6). */
+  private def cosOut(list: DataFrame, cols: String*): DataFrame =
+    list.select(Seq(col("qid"), col("rnk"), col("cid")) ++ cols.map(col) :+
+        cosE6(col("score")).as("cos_e6"): _*)
+      .orderBy("qid", "rnk")
+
+  def annTopk(spark: SparkSession, dir: String): DataFrame = cosOut(listExact(spark, dir))
 
   // ---- banded LSH candidate generation (shared by ann_lsh, cosine dup,
   //      ann_recall) ---------------------------------------------------------
 
   val LshK = 3
 
-  /** Scored undirected candidate pairs, the heart of the LSH index.
-    * Three deliberate moves for the 100 TB shape:
-    *   1. the self-join runs over the NARROW (vec_id, tbl, bucket)
-    *      signature frame — the 64-dim payload never rides the
-    *      candidate shuffle;
-    *   2. pairs are deduped (groupBy aid, bid) BEFORE scoring, so a
-    *      pair colliding in k tables is scored once, not k times —
-    *      n_tbl keeps the collision count as an audit column;
-    *   3. the payload is fetched by two hash joins against the
-    *      persisted vectors frame only for pairs that survived dedup.
-    * Persisted: annLsh ranks it directed, embedCosineDup thresholds it,
-    * annRecall re-reads it through annLsh. */
-  /** DISTINCT-vector scored candidate pairs (ga < gb): the same three
-    * moves as ever — narrow signature self-join, dedup before scoring,
-    * packed payload fetch — but over [[vecGroups]], so the bucket join
-    * is flat in duplicate multiplicity. Within-group "pairs" are
-    * implicit (identical buckets collide in every table: n_tbl =
-    * NumTables, cos = [[selfCos]]) and are re-attached arithmetically
-    * by the consumers that need member-level rows. */
+  /** DISTINCT-vector scored LSH candidate pairs (ga < gb), the heart of
+    * the LSH index, over [[vecGroups]] so the bucket join is flat in
+    * duplicate multiplicity:
+    *   1. the self-join runs over the NARROW (gid, tbl, bucket) signature
+    *      frame — the 64-dim payload never rides the candidate shuffle;
+    *   2. pairs are deduped BEFORE scoring, so a pair colliding in k
+    *      tables is scored once — n_tbl keeps the collision count;
+    *   3. the packed payload is fetched only for surviving pairs.
+    * Within-group "pairs" are implicit (identical buckets collide in every
+    * table: n_tbl = NumTables, cos = [[selfCos]]) and are re-attached
+    * arithmetically by the consumers that need member-level rows. */
   private def repScoredPairs(spark: SparkSession, dir: String): DataFrame =
     Tables.memoPersist(spark, s"sim.repScored:$PlanesPerTable:$NumTables:$dir") {
       val g = vecGroups(spark, dir)
@@ -274,50 +320,43 @@ object Similarity {
   // ---- ann_lsh: banded-LSH top-k for every vector --------------------------
 
   def annLsh(spark: SparkSession, dir: String): DataFrame =
-    listLsh(spark, dir).orderBy("aid", "rnk")
+    listLsh(spark, dir)
+      .select(col("qid").as("aid"), col("rnk"), col("cid").as("bid"), col("n_tbl"),
+        cosE6(col("score")).as("cos_e6"))
+      .orderBy("aid", "rnk")
 
-  /** The full directed LSH top-k list, memoized ([[listExact]] note):
-    * ann_lsh serves it; ann_recall and ann_agreement re-read it. N×k
-    * rows — the size of the query's own output, already paid once. */
+  /** The full directed LSH top-k list (qid, cid, n_tbl, score, rnk) for
+    * every vector, memoized: ann_lsh serves it; mutual_knn and the
+    * recall, MRR and agreement evaluators re-read it. N×k rows.
+    *
+    * Collapsed top-k: every member of a group has the SAME ranked list
+    * except for the exclusion of itself (cos and n_tbl are functions of
+    * the group pair, ties rank by cid). So a member's top-k is its
+    * group's top-(k+1) prefix — over directed rep pairs plus the group
+    * itself at the self-cosine, each target group contributing only its
+    * k+1 smallest member ids — with the member dropped and the list cut
+    * at k. Every join is prefix- or output-sized. */
   private def listLsh(spark: SparkSession, dir: String): DataFrame =
    Tables.memoPersist(spark, s"sim.listLsh:$PlanesPerTable:$NumTables:$dir") {
-    // Collapsed top-k (round 11): every member of a group has the SAME
-    // ranked neighbor list except for the exclusion of itself — cos and
-    // n_tbl are functions of the group pair, and ties rank by bid. So
-    // the per-member top-k is the group's top-(k+1) entry prefix (built
-    // over directed rep pairs + the group's own members at the
-    // self-cosine, each target group contributing only its k+1 smallest
-    // member ids — any group puts at most k+1 entries in the prefix,
-    // and they are its smallest ids) with the member itself dropped and
-    // the list cut at k. Every join is prefix- or output-sized; nothing
-    // scales with duplicate multiplicity squared.
     val kp = LshK + 1
     val m = vecMembers(spark, dir)
     val prefix = m
       .withColumn("pos", row_number().over(
         Window.partitionBy("gid").orderBy("vec_id")))
       .where(col("pos") <= kp)
-      .select(col("gid").as("dst"), col("vec_id").as("bid"))
+      .select(col("gid").as("dst"), col("vec_id").as("cid"))
     val rp = repScoredPairs(spark, dir)
     val directed = rp
-      .select(col("ga").as("src"), col("gb").as("dst"), col("n_tbl"), col("cos"))
+      .select(col("ga").as("qid"), col("gb").as("dst"), col("n_tbl"), col("cos").as("score"))
       .unionByName(rp
-        .select(col("gb").as("src"), col("ga").as("dst"), col("n_tbl"), col("cos")))
+        .select(col("gb").as("qid"), col("ga").as("dst"), col("n_tbl"), col("cos").as("score")))
       .unionByName(vecGroups(spark, dir)
-        .select(col("gid").as("src"), col("gid").as("dst"),
-          lit(NumTables.toLong).as("n_tbl"), selfCos(col("n2")).as("cos")))
-    val groupPrefix = directed.join(prefix, "dst")
-      .withColumn("gr", row_number().over(
-        Window.partitionBy("src").orderBy(col("cos").desc, col("bid"))))
-      .where(col("gr") <= kp)
-      .select(col("src").as("gid"), col("bid"), col("n_tbl"), col("cos"))
-    m.join(groupPrefix, "gid")
-      .where(col("bid") =!= col("vec_id"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("cos").desc, col("bid"))))
-      .where(col("rnk") <= LshK)
-      .select(col("vec_id").as("aid"), col("rnk"), col("bid"), col("n_tbl"),
-        cosE6(col("cos")).as("cos_e6"))
+        .select(col("gid").as("qid"), col("gid").as("dst"),
+          lit(NumTables.toLong).as("n_tbl"), selfCos(col("n2")).as("score")))
+    val groupPrefix = topK(directed.join(prefix, "dst"), kp)
+      .select(col("qid").as("gid"), col("cid"), col("n_tbl"), col("score"))
+    topK(m.join(groupPrefix, "gid").where(col("cid") =!= col("vec_id"))
+      .select(col("vec_id").as("qid"), col("cid"), col("n_tbl"), col("score")), LshK)
   }
 
   // ---- mutual_knn: reciprocity audit of the LSH neighbor graph ------------
@@ -334,7 +373,7 @@ object Similarity {
     * key, one output-sized degree aggregate, one |k|+1-row histogram;
     * nothing touches the 64-dim payload. */
   def mutualKnn(spark: SparkSession, dir: String): DataFrame = {
-    val l = listLsh(spark, dir).select(col("aid"), col("bid"))
+    val l = listLsh(spark, dir).select(col("qid").as("aid"), col("cid").as("bid"))
     val rev = l.select(col("bid").as("aid"), col("aid").as("bid"))
     val mutual = l.join(rev, Seq("aid", "bid")).where(col("aid") < col("bid"))
     val deg = mutual.select(col("aid").as("vid"))
@@ -587,43 +626,21 @@ object Similarity {
   def NumCells: Int = graft.Knobs.ivfCells
   val NProbe = 2
 
-  /** Lloyd iteration count for the IVF coarse quantizer (and GRAFT_PQ_ITERS
-    * for the PQ codebooks below). One iteration is the engine's historical
-    * convention; more iterations tighten the cells/codebooks at the price
-    * of one extra broadcast-assign + map-side-combined mean pass each —
-    * per-iteration cost is flat in N, so the knob is a pure quality dial
-    * at 100 TB. LloydSpec pins the k-means objective monotone in this knob
-    * on the test corpus; both the Spark plans and the generated oracle SQL
-    * read it, so the mirror never splits. */
-  def IvfIters: Int = sys.env.getOrElse("GRAFT_IVF_ITERS", "1").toInt
+  /** Lloyd iteration count for the IVF coarse quantizer: one step, the
+    * engine's convention, read by both the Spark plans and the generated
+    * oracle SQL. [[trainedCentroidsIter]] keeps the count as a parameter
+    * so LloydSpec can pin the k-means objective monotone over 1..3 steps;
+    * each extra step costs one assign + map-side-combined mean pass, flat
+    * in N. */
+  val IvfIters = 1
 
-  /** One Lloyd step: assign every vector to its nearest (by cosine) seed,
-    * then rebuild each cell's centroid as the per-dim floor-quantized mean.
-    * The per-dim mean is rebuilt into a vector with collect_list of
-    * (pos, mean) structs sorted by pos — per-cell rows are exactly Dim
-    * wide, so the rebuild never concentrates more than cells×Dim rows
-    * regardless of corpus size. A cell whose trained centroid quantizes to
-    * the zero vector is dropped (no direction — same guard as the vectors
-    * frame). */
-  /** Nearest-centroid id per vector — (avid, seed_id) with the
-    * (cos desc, seed_id asc) tie-break — via map-side-combined argmax
-    * (max of struct(cos, −seed_id)) instead of a row_number window: the
-    * window form shuffles and sorts the full N×cells scored frame
-    * (156M rows at the 100× point's derived 782 cells), while the argmax
-    * reduces per partition and shuffles one partial row per vector. Same
-    * rank-1 choice by construction: struct max is lexicographic, so the
-    * largest cos wins and a cos tie falls to the smallest seed_id. */
-  /** Nearest-centroid assignment as ONE fused codegen argmax
-    * (NearestCellExpr): the centroid table — a bounded, plan-time frame
-    * (≤ ⌈4√N⌉ rows by the ivfCells cap) — is collected once and embedded
-    * as a reference object, and each vector row emits only its winning
-    * seed id. The former crossJoin(broadcast)+max-struct form
-    * materialized N×cells joined rows (156M at the 100× point) for what
-    * is one loop per vector; the expression computes the IDENTICAL
-    * IEEE cosine chain and smaller-id tie-break, so assignments —
-    * including rounding-created ties — are bit-identical to the join
-    * form and to the oracle. The collect here is the same data movement
-    * the broadcast already did, one hop earlier. */
+  /** Nearest-centroid assignment (avid, seed_id) as ONE fused codegen
+    * argmax (NearestCellExpr): the centroid table — ≤ ⌈4√N⌉ rows by the
+    * ivfCells cap — is collected once and embedded, and each vector row
+    * emits only its winning seed id: one loop per vector instead of N×cells
+    * joined rows. The expression computes the IDENTICAL IEEE cosine chain
+    * and (cos desc, seed_id asc) tie-break as the oracle, so assignments
+    * are bit-identical, rounding-created ties included. */
   private def nearestCell(v: DataFrame, seeds: DataFrame): DataFrame = {
     // bounded-collect: ≤ ⌈4√N⌉ centroid rows (ivfCells cap) — the same
     // data movement broadcast() did, one hop earlier; also serves the
@@ -650,6 +667,11 @@ object Similarity {
         .as("seed_id"))
   }
 
+  /** One Lloyd step: assign every vector to its nearest (by cosine) seed,
+    * then rebuild each cell's centroid as the per-dim floor-quantized mean
+    * from (pos, mean) structs sorted by pos — never more than cells×Dim
+    * rows regardless of corpus size. A centroid that quantizes to the zero
+    * vector is dropped (no direction — the vectors-frame guard). */
   private def lloydStep(v: DataFrame, seeds: DataFrame): DataFrame = {
     val members = nearestCell(v, seeds)
       .select(col("avid"), col("seed_id").as("cell"))
@@ -715,10 +737,16 @@ object Similarity {
     * test corpus and the gate proves the hier mode end-to-end under
     * GRAFT_IVF_ROUTE_CELLS override. */
   private def cellAssignments(spark: SparkSession, dir: String): DataFrame =
-    if (graft.Knobs.ivfRouteHier)
-      hierAssignments(spark, dir)
-        .select(col("avid"), col("cell").as("seed_id"), col("rnk"))
-    else flatCellAssignments(spark, dir)
+    if (graft.Knobs.ivfRouteHier) hierRoute(spark, dir) else flatCellAssignments(spark, dir)
+
+  /** The two-level router's assignments in the [[cellAssignments]] shape. */
+  private def hierRoute(spark: SparkSession, dir: String): DataFrame =
+    hierAssignments(spark, dir).select(col("avid"), col("cell").as("seed_id"), col("rnk"))
+
+  /** Each query's cells of assignment rank <= nprobe: (qid, cell, prnk). */
+  private def probes(assign: DataFrame, nprobe: Int): DataFrame =
+    assign.where(col("avid") < NumQueries && col("rnk") <= nprobe)
+      .select(col("avid").as("qid"), col("seed_id").as("cell"), col("rnk").cast("long").as("prnk"))
 
   private def flatCellAssignments(spark: SparkSession, dir: String): DataFrame =
     // referenced by both the cells and the probes branch — materialize
@@ -759,26 +787,26 @@ object Similarity {
   private[graft] def hierAssignmentsProbe(spark: SparkSession, dir: String): DataFrame =
     hierAssignments(spark, dir)
 
-  def annIvf(spark: SparkSession, dir: String): DataFrame = {
+  /** IVF probe-scan candidates (qid, cid, cell, prnk, score): every
+    * member of each query's cells of probe rank <= nprobe, by exact
+    * cosine. Cells partition the index, so a query scans nprobe cells
+    * instead of the corpus; the member side shuffles once on cell. */
+  private def probeScan(spark: SparkSession, dir: String, assign: DataFrame,
+      nprobe: Int): DataFrame = {
     val v = vectors(spark, dir)
-    val assign = cellAssignments(spark, dir)
     val cells = assign.where(col("rnk") === 1)
       .select(col("avid").as("cid"), col("seed_id").as("cell"))
       .join(v, col("cid") === col("vec_id"))
       .select(col("cid"), col("cell"), col("qv").as("cv"), col("n2").as("cn2"))
-    val probes = assign.where(col("avid") < NumQueries && col("rnk") <= NProbe)
-      .select(col("avid").as("qid"), col("seed_id").as("pcell"))
-    val q = vectors(spark, dir).where(col("vec_id") < NumQueries)
+    val q = v.where(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qvid"), col("qv").as("qqv"), col("n2").as("qn2"))
-    probes.join(q, col("qid") === col("qvid"))
-      .join(cells, col("pcell") === col("cell") && col("cid") =!= col("qid"))
-      .withColumn("cos", cosine(dot(col("qqv"), col("cv")), col("qn2"), col("cn2")))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))))
-      .where(col("rnk") <= TopK)
-      .select(col("qid"), col("rnk"), col("cid"), col("cell"), cosE6(col("cos")).as("cos_e6"))
-      .orderBy("qid", "rnk")
+    probes(assign, nprobe).join(q, col("qid") === col("qvid"))
+      .join(cells, "cell").where(col("cid") =!= col("qid"))
+      .withColumn("score", cosine(dot(col("qqv"), col("cv")), col("qn2"), col("cn2")))
   }
+
+  def annIvf(spark: SparkSession, dir: String): DataFrame =
+    cosOut(topK(probeScan(spark, dir, cellAssignments(spark, dir), NProbe), TopK), "cell")
 
   // ---- knn_classify: label vote over brute-force neighbors ----------------
 
@@ -791,7 +819,7 @@ object Similarity {
 
   def knnClassify(spark: SparkSession, dir: String): DataFrame = {
     val v = vectors(spark, dir)
-    val pred = scoredNeighbors(spark, dir, KnnK).groupBy("qid", "label")
+    val pred = cosineTruth(spark, dir, KnnK).groupBy("qid", "label")
       .agg(count(lit(1)).as("votes"))
       .withColumn("vr", row_number().over(
         Window.partitionBy("qid").orderBy(col("votes").desc, col("label"))))
@@ -840,24 +868,15 @@ object Similarity {
     * IVFADC shortlist instead of the full scan; the exact pass is the
     * acceptance baseline. */
   def annHardNegatives(spark: SparkSession, dir: String): DataFrame = {
-    val v = vectors(spark, dir)
-    val q = v.where(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-        col("qv").as("qa"), col("n2").as("qn2"))
-    // bounded-cross: broadcast query table, <= NumQueries rows
-    v.crossJoin(broadcast(q))
-      .where(col("qid") =!= col("vec_id"))
-      .withColumn("cos", cosine(dot(col("qa"), col("qv")), col("qn2"), col("n2")))
-      .withColumn("same", (col("label") === col("qlabel")).cast("int"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid", "same").orderBy(col("cos").desc, col("vec_id"))))
-      .where(col("rnk") === 1)
+    val cands = cosineScan(spark, dir)
+      .withColumn("same", (col("label") === col("q_label")).cast("int"))
+    topK(cands, 1, by = Seq("qid", "same"))
       .groupBy("qid")
-      .agg(max("qlabel").as("label"),
-        max(when(col("same") === 1, col("vec_id"))).as("pos_id"),
-        max(when(col("same") === 1, cosE6(col("cos")))).as("pos_cos_e6"),
-        max(when(col("same") === 0, col("vec_id"))).as("neg_id"),
-        max(when(col("same") === 0, cosE6(col("cos")))).as("neg_cos_e6"))
+      .agg(max("q_label").as("label"),
+        max(when(col("same") === 1, col("cid"))).as("pos_id"),
+        max(when(col("same") === 1, cosE6(col("score")))).as("pos_cos_e6"),
+        max(when(col("same") === 0, col("cid"))).as("neg_id"),
+        max(when(col("same") === 0, cosE6(col("score")))).as("neg_cos_e6"))
       .withColumn("margin_e6", col("pos_cos_e6") - col("neg_cos_e6"))
       .orderBy("qid")
   }
@@ -867,14 +886,10 @@ object Similarity {
        |hn AS (
        |  SELECT a.vec_id AS qid, a.label AS qlabel, b.vec_id AS cid,
        |         CASE WHEN b.label = a.label THEN 1 ELSE 0 END AS same,
-       |         $CosSql AS cos
+       |         $CosAB AS cos
        |  FROM vecs a JOIN vecs b
        |    ON a.vec_id < $NumQueries AND a.vec_id <> b.vec_id),
-       |hr AS (
-       |  SELECT qid, qlabel, cid, same, cos,
-       |         row_number() OVER (PARTITION BY qid, same
-       |                            ORDER BY cos DESC, cid) AS rnk
-       |  FROM hn)
+       |${rankSql("hr", "qid, qlabel, cid, same, cos", "hn", "cos DESC, cid", 1, "qid, same")}
        |SELECT qid, CAST(max(qlabel) AS BIGINT) AS label,
        |  CAST(max(CASE WHEN same = 1 THEN cid END) AS BIGINT) AS pos_id,
        |  max(CASE WHEN same = 1
@@ -885,7 +900,7 @@ object Similarity {
        |  max(CASE WHEN same = 1 THEN CAST(floor(cos * 1000000.0) AS BIGINT) END)
        |    - max(CASE WHEN same = 0 THEN CAST(floor(cos * 1000000.0) AS BIGINT) END)
        |    AS margin_e6
-       |FROM hr WHERE rnk = 1
+       |FROM hr
        |GROUP BY qid ORDER BY qid""".stripMargin
 
   // ---- embed_drift: per-label centroid shift between corpus halves --------
@@ -965,8 +980,9 @@ object Similarity {
       |           x -> CAST(floor(CAST(x AS DOUBLE) * 10000.0 + 0.5) AS BIGINT)) AS qv
       |  FROM embeddings)""".stripMargin
 
-  private val N2Sql: String =
-    "list_reduce(list_transform(qv, x -> x * x), (x, y) -> x + y)"
+  /** The oracle squared norm of an int list. */
+  private def n2Sql(v: String): String = s"list_reduce(list_transform($v, x -> x * x), (x, y) -> x + y)"
+  private val N2Sql: String = n2Sql("qv")
 
   /** Shared CTE: quantized vectors + norms + one hyperplane signature
     * column per LSH table (bucket0..bucket{L-1}), mirroring the Spark
@@ -1008,73 +1024,100 @@ object Similarity {
        |  GROUP BY 1, 2),
        |spaired AS (
        |  SELECT c.aid, c.bid, c.n_tbl,
-       |         $CosSql AS cos
+       |         $CosAB AS cos
        |  FROM cand c
        |  JOIN vecs a ON c.aid = a.vec_id
        |  JOIN vecs b ON c.bid = b.vec_id)""".stripMargin
 
-  private val DotSql =
-    s"list_reduce(list_transform(range(1, ${Dim + 1}), i -> a.qv[i] * b.qv[i]), (x, y) -> x + y)"
+  /** The oracle dot product of two Dim-long int lists, and the exact
+    * squared L2 over their first `n` components. */
+  private def dotSql(a: String, b: String): String =
+    s"list_reduce(list_transform(range(1, ${Dim + 1}), i -> $a[i] * $b[i]), (x, y) -> x + y)"
+  private def l2Sql(a: String, b: String, n: Int = Dim): String =
+    s"list_reduce(list_transform(range(1, ${n + 1}), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])), (x, y) -> x + y)"
 
-  /** ONE definition of the oracle cosine over joined vecs aliases a/b —
-    * every scored CTE interpolates this, so the scoring rule cannot
-    * silently diverge between the production queries and the recall
-    * evaluation (mirrors the Spark-side shared `cosine`/`dot`). */
-  private val CosSql =
-    s"""CAST($DotSql AS DOUBLE)
-       |           / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE)))""".stripMargin
+  /** ONE oracle cosine — dot / (sqrt(n2_a) · sqrt(n2_b)), the IEEE
+    * expression tree of the Spark `cosine` — interpolated by every scored
+    * CTE, so the scoring rule cannot diverge between a production query
+    * and its recall evaluation. */
+  private def cosSql(dot: String, an2: String, bn2: String): String =
+    s"CAST($dot AS DOUBLE) / (sqrt(CAST($an2 AS DOUBLE)) * sqrt(CAST($bn2 AS DOUBLE)))"
+
+  /** The cosine between joined `vecs` aliases a and b. */
+  private def CosAB: String = cosSql(dotSql("a.qv", "b.qv"), "a.n2", "b.n2")
+
+  private def e6Sql(x: String): String = s"CAST(floor($x * 1000000.0) AS BIGINT)"
+
+  /** The one oracle rank cut: CTE `name` = `cols` of `from` plus rnk =
+    * row_number() per `by` in `order`, kept while rnk <= k (k = 0 keeps
+    * the whole ranking; an empty `by` ranks globally). */
+  private def rankSql(name: String, cols: String, from: String, order: String,
+      k: Int = 0, by: String = "qid"): String = {
+    val part = if (by.isEmpty) "" else s"PARTITION BY $by "
+    val cut = if (k > 0) s" WHERE rnk <= $k" else ""
+    s"""$name AS (
+       |  SELECT * FROM (
+       |    SELECT $cols, row_number() OVER (${part}ORDER BY $order) AS rnk
+       |    FROM $from) r$cut)""".stripMargin
+  }
+
+  /** The one oracle recall SELECT: truth (qid, cid) LEFT JOIN a retrieved
+    * (qid, cid) list — the Spark [[recall]] arithmetic. */
+  private def recallSql(truth: String, ret: String): String =
+    s"""SELECT e.qid, count(*) AS n_exact,
+       |       CAST(sum(CASE WHEN r.cid IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
+       |       CAST(sum(CASE WHEN r.cid IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+       |         * 10000 // count(*) AS recall_e4
+       |FROM $truth e
+       |LEFT JOIN $ret r ON e.qid = r.qid AND e.cid = r.cid
+       |GROUP BY e.qid ORDER BY e.qid""".stripMargin
 
   /** Shared brute-force truth CTE (`bscored`): query set × all vectors. */
   private[ops] def BruteScoredCte =
     s"""bscored AS (
        |  SELECT a.vec_id AS qid, b.vec_id AS cid,
-       |         $CosSql AS cos
+       |         $CosAB AS cos
        |  FROM vecs a JOIN vecs b ON a.vec_id < $NumQueries AND a.vec_id <> b.vec_id)""".stripMargin
+
+  /** The exact-cosine truth `name` (qid, cid, cos, rnk): bscored's top-k. */
+  private def cosTruthSql(name: String, k: Int): String =
+    rankSql(name, "qid, cid, cos", "bscored", "cos DESC, cid", k)
+
+  /** The directed LSH list `lsh` (qid, cid, n_tbl, cos, rnk): both
+    * directions of each scored pair, cut at LshK — for every vector, or
+    * for the query set alone when `queries` (the filter then also prunes
+    * the pair scoring). */
+  private def lshListSql(queries: Boolean): String =
+    s"""lscored AS (
+       |  SELECT aid AS qid, bid AS cid, n_tbl, cos FROM spaired
+       |  UNION ALL
+       |  SELECT bid AS qid, aid AS cid, n_tbl, cos FROM spaired),
+       |${rankSql("lsh", "qid, cid, n_tbl, cos",
+           if (queries) s"lscored WHERE qid < $NumQueries" else "lscored", "cos DESC, cid", LshK)}""".stripMargin
 
   def annTopkSql: String =
     s"""WITH $VecCte,
        |$BruteScoredCte,
-       |ranked AS (
-       |  SELECT qid, cid, cos,
-       |         row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rnk
-       |  FROM bscored)
-       |SELECT qid, rnk, cid, CAST(floor(cos * 1000000.0) AS BIGINT) AS cos_e6
-       |FROM ranked WHERE rnk <= $TopK
-       |ORDER BY qid, rnk""".stripMargin
+       |${cosTruthSql("ranked", TopK)}
+       |SELECT qid, rnk, cid, ${e6Sql("cos")} AS cos_e6
+       |FROM ranked ORDER BY qid, rnk""".stripMargin
 
   def annLshSql: String =
     s"""WITH $VecCte,
        |$ScoredPairsCte,
-       |directed AS (
-       |  SELECT aid, bid, n_tbl, cos FROM spaired
-       |  UNION ALL
-       |  SELECT bid AS aid, aid AS bid, n_tbl, cos FROM spaired),
-       |ranked AS (
-       |  SELECT aid, bid, n_tbl, cos,
-       |         row_number() OVER (PARTITION BY aid ORDER BY cos DESC, bid) AS rnk
-       |  FROM directed)
-       |SELECT aid, rnk, bid, CAST(n_tbl AS BIGINT) AS n_tbl,
-       |       CAST(floor(cos * 1000000.0) AS BIGINT) AS cos_e6
-       |FROM ranked WHERE rnk <= $LshK
-       |ORDER BY aid, rnk""".stripMargin
+       |${lshListSql(queries = false)}
+       |SELECT qid AS aid, rnk, cid AS bid, CAST(n_tbl AS BIGINT) AS n_tbl,
+       |       ${e6Sql("cos")} AS cos_e6
+       |FROM lsh ORDER BY aid, rnk""".stripMargin
 
   def mutualKnnSql: String =
     s"""WITH $VecCte,
        |$ScoredPairsCte,
-       |directed AS (
-       |  SELECT aid, bid, cos FROM spaired
-       |  UNION ALL
-       |  SELECT bid AS aid, aid AS bid, cos FROM spaired),
-       |l AS (
-       |  SELECT aid, bid FROM (
-       |    SELECT aid, bid,
-       |           row_number() OVER (PARTITION BY aid ORDER BY cos DESC, bid) AS rnk
-       |    FROM directed)
-       |  WHERE rnk <= $LshK),
+       |${lshListSql(queries = false)},
        |m AS (
-       |  SELECT x.aid, x.bid FROM l x
-       |  JOIN l y ON x.aid = y.bid AND x.bid = y.aid
-       |  WHERE x.aid < x.bid),
+       |  SELECT x.qid AS aid, x.cid AS bid FROM lsh x
+       |  JOIN lsh y ON x.qid = y.cid AND x.cid = y.qid
+       |  WHERE x.qid < x.cid),
        |d AS (
        |  SELECT vid, CAST(count(*) AS BIGINT) AS deg FROM (
        |    SELECT aid AS vid FROM m UNION ALL SELECT bid AS vid FROM m)
@@ -1089,27 +1132,16 @@ object Similarity {
        |       (10000 * n_vecs) // CAST(sum(n_vecs) OVER () AS BIGINT) AS share_e4
        |FROM h ORDER BY mutual_degree""".stripMargin
 
-  /** Oracle cosine between `vecs` alias `$a` (qv, n2) and a seeds alias
-    * `$s` (sv, sn2) — one definition for every training/assignment CTE. */
-  private def cosToSeedSql(a: String, s: String): String =
-    s"""CAST(list_reduce(list_transform(range(1, ${Dim + 1}), i -> $a.qv[i] * $s.sv[i]), (x, y) -> x + y) AS DOUBLE)
-       |             / (sqrt(CAST($a.n2 AS DOUBLE)) * sqrt(CAST($s.sn2 AS DOUBLE)))""".stripMargin
-
   /** Oracle twin of [[trainedCentroidsIter]]: iv_seeds0 (deterministic
-    * init) → IvfIters × (rank-1 assign → floor-quantized mean) →
-    * `seeds`. Generated per-iteration so the knob and the SQL cannot
-    * drift.
+    * init) → IvfIters × (rank-1 assign → floor-quantized mean) → `seeds`.
     *
-    * REP-LEVEL (round 15): the member-level form ranked vecs × seeds
-    * rows per iteration — ~1.6B cos evaluations at the 100× stress
-    * point, which OOM'd DuckDB after 4 CPU-hours (the r14 oracle
-    * blocker). Every training statistic is a pure function of the
+    * Rep-level: every training statistic is a pure function of the
     * quantized vector, so the Lloyd recurrence collapses EXACTLY to the
-    * distinct-qv frame with integer count weights: the rank-1 cell of a
-    * member equals the rank-1 cell of its rep (same qv ⇒ same cos ⇒
-    * same argmax), member count(*) = Σ gcnt, and member Σ qv[dim] =
-    * Σ gcnt·qv[dim] — the engine's round-11 collapse applied to the
-    * oracle's own CTEs, bit-identical output by construction. */
+    * distinct-qv frame with integer count weights — the rank-1 cell of a
+    * member is its rep's (same qv ⇒ same cos ⇒ same argmax), member
+    * count(*) = Σ gcnt and member Σ qv[dim] = Σ gcnt·qv[dim]. The
+    * member-level form ranked vecs × seeds per iteration (~1.6B cosines
+    * at the 100× stress point, past DuckDB's memory). */
   private def IvfTrainCtes: String = {
     val gw =
       s"""iv_gw AS (
@@ -1119,36 +1151,31 @@ object Similarity {
       s"""iv_seeds0 AS (
          |  SELECT vec_id AS seed_id, qv AS sv, n2 AS sn2 FROM vecs WHERE vec_id < $NumCells)""".stripMargin
     val steps = (1 to IvfIters).map { it =>
-      s"""iv_mem$it AS (
-         |  SELECT gid, gcnt, seed_id AS cell FROM (
-         |    SELECT a.gid, a.gcnt, s.seed_id,
-         |           row_number() OVER (PARTITION BY a.gid ORDER BY
-         |             ${cosToSeedSql("a", "s")} DESC,
-         |             s.seed_id) AS rnk
-         |    FROM iv_gw a CROSS JOIN iv_seeds${it - 1} s) r WHERE rnk = 1),
+      s"""${rankSql(s"iv_mem$it", "a.gid, a.gcnt, s.seed_id AS cell",
+             s"iv_gw a CROSS JOIN iv_seeds${it - 1} s",
+             s"${cosSql(dotSql("a.qv", "s.sv"), "a.n2", "s.sn2")} DESC, s.seed_id", 1, "a.gid")},
          |iv_upd$it AS (
          |  SELECT m.cell, d.dim, sum(m.gcnt) AS n, sum(m.gcnt * v.qv[d.dim]) AS sum_q
          |  FROM iv_mem$it m JOIN iv_gw v ON m.gid = v.gid
          |  CROSS JOIN (SELECT unnest(range(1, ${Dim + 1})) AS dim) d
          |  GROUP BY m.cell, d.dim),
          |iv_seeds$it AS (
-         |  SELECT seed_id, sv,
-         |         list_reduce(list_transform(sv, x -> x * x), (x, y) -> x + y) AS sn2
+         |  SELECT seed_id, sv, ${n2Sql("sv")} AS sn2
          |  FROM (
          |    SELECT cell AS seed_id,
          |           array_agg(CAST(floor(CAST(sum_q AS DOUBLE) / n) AS BIGINT) ORDER BY dim) AS sv
          |    FROM iv_upd$it GROUP BY cell) c
-         |  WHERE list_reduce(list_transform(sv, x -> x * x), (x, y) -> x + y) > 0)""".stripMargin
+         |  WHERE ${n2Sql("sv")} > 0)""".stripMargin
     }
     val fin = s"seeds AS (SELECT * FROM iv_seeds$IvfIters)"
     (gw +: init +: steps :+ fin).mkString(",\n")
   }
 
   /** Oracle twin of [[cellAssignments]] + the cells / probes split —
-    * shared by ann_ivf and the IVFADC pair. Mirrors the flat→hier route
-    * switch: in hier mode the assign/cells/probes names are aliases over
-    * the two-level router's CTEs (safe: no registry SQL composes this
-    * with [[HierCtes]] — only the always-hier row-162 pair uses those
+    * shared by every IVF consumer. Mirrors the flat→hier route switch: in
+    * hier mode the assign/cells/probes names are aliases over the
+    * two-level router's CTEs (no registry SQL composes this with
+    * [[HierCtes]] — only the always-hier row-162 pair uses those
     * directly). */
   private def IvfAssignCtes: String =
     if (graft.Knobs.ivfRouteHier)
@@ -1158,25 +1185,18 @@ object Similarity {
          |probes AS (SELECT qid, pcell FROM hprobes)""".stripMargin
     else FlatAssignCtes
 
-  /** Rep-level flat assignment (round 15, same collapse as the train
-    * CTEs): the vecs × seeds ranking — 156M rows at the 100× point —
-    * runs once per DISTINCT quantized vector (iv_gasgn), then fans back
-    * to members by the qv-equality map (iv_vgrp). cells/probes derive
-    * from the group ranking directly so neither forces a full
-    * member × seeds materialization; `assign` keeps the member-level
-    * contract for the two consumers that filter it (embed_prune rnk=1,
-    * nprobe sweep's bounded query set) — the filters push into the
-    * joins, and the per-member cos is never re-evaluated. */
+  /** Rep-level flat assignment (the train CTEs' collapse): the vecs ×
+    * seeds ranking runs once per DISTINCT quantized vector (iv_gasgn),
+    * then fans back to members by the qv-equality map (iv_vgrp). cells
+    * and probes derive from the group ranking directly; `assign` keeps the
+    * member-level contract for the consumers that filter it (embed_prune
+    * rnk = 1, the nprobe sweep's bounded query set). */
   private def FlatAssignCtes: String =
     s"""iv_vgrp AS (
        |  SELECT v.vec_id, v.qv, v.n2, g.gid
        |  FROM vecs v JOIN iv_gw g ON v.qv = g.qv),
-       |iv_gasgn AS (
-       |  SELECT g.gid, s.seed_id,
-       |         row_number() OVER (PARTITION BY g.gid ORDER BY
-       |           ${cosToSeedSql("g", "s")} DESC,
-       |           s.seed_id) AS rnk
-       |  FROM iv_gw g CROSS JOIN seeds s),
+       |${rankSql("iv_gasgn", "g.gid, s.seed_id", "iv_gw g CROSS JOIN seeds s",
+           s"${cosSql(dotSql("g.qv", "s.sv"), "g.n2", "s.sn2")} DESC, s.seed_id", 0, "g.gid")},
        |assign AS (
        |  SELECT v.vec_id AS avid, a.seed_id, a.rnk
        |  FROM iv_vgrp v JOIN iv_gasgn a ON v.gid = a.gid),
@@ -1188,24 +1208,28 @@ object Similarity {
        |  FROM iv_vgrp v JOIN iv_gasgn a ON v.gid = a.gid
        |  WHERE v.vec_id < $NumQueries AND a.rnk <= $NProbe)""".stripMargin
 
+  /** Oracle IVF probe scan `name`: every member of each probed cell (the
+    * `probes` columns kept), scored by exact cosine against its query. */
+  private def probeScanSql(name: String, probes: String, cells: String): String =
+    s"""$name AS (
+       |  SELECT p.*, c.cid, c.cell,
+       |         ${cosSql(dotSql("q.qv", "c.cv"), "q.n2", "c.cn2")} AS cos
+       |  FROM $probes p
+       |  JOIN vecs q ON p.qid = q.vec_id
+       |  JOIN $cells c ON p.pcell = c.cell AND c.cid <> p.qid)""".stripMargin
+
+  /** The IVF list `name` (qid, cid, cell, cos, rnk): probe scan + top-TopK. */
+  private def ivfListSql(name: String, probes: String, cells: String): String =
+    s"""${probeScanSql(s"${name}_s", probes, cells)},
+       |${rankSql(name, "qid, cid, cell, cos", s"${name}_s", "cos DESC, cid", TopK)}""".stripMargin
+
   def annIvfSql: String =
     s"""WITH $VecCte,
        |$IvfTrainCtes,
        |$IvfAssignCtes,
-       |scored AS (
-       |  SELECT p.qid, c.cid, c.cell,
-       |         CAST(list_reduce(list_transform(range(1, ${Dim + 1}), i -> q.qv[i] * c.cv[i]), (x, y) -> x + y) AS DOUBLE)
-       |           / (sqrt(CAST(q.n2 AS DOUBLE)) * sqrt(CAST(c.cn2 AS DOUBLE))) AS cos
-       |  FROM probes p
-       |  JOIN vecs q ON p.qid = q.vec_id
-       |  JOIN cells c ON p.pcell = c.cell AND c.cid <> p.qid),
-       |ranked AS (
-       |  SELECT qid, cid, cell, cos,
-       |         row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rnk
-       |  FROM scored)
-       |SELECT qid, rnk, cid, cell, CAST(floor(cos * 1000000.0) AS BIGINT) AS cos_e6
-       |FROM ranked WHERE rnk <= $TopK
-       |ORDER BY qid, rnk""".stripMargin
+       |${ivfListSql("ranked", "probes", "cells")}
+       |SELECT qid, rnk, cid, cell, ${e6Sql("cos")} AS cos_e6
+       |FROM ranked ORDER BY qid, rnk""".stripMargin
 
   // ---- ann_ivf_hier: hierarchical (two-level) coarse quantizer ------------
 
@@ -1287,116 +1311,61 @@ object Similarity {
         top1.where(col("avid") >= NumQueries).select("avid", "cell", "rnk"))
     }
 
-  /** IVF search through the two-level quantizer — identical output
-    * contract to [[annIvf]] (qid, rnk, cid, cell, cos_e6), differing
-    * only in HOW cells/probes were chosen: member cells come from the
-    * super-routed assignment, and a query's nprobe cells are ranked
-    * within its routed super only (a super owning fewer than nprobe
-    * cells probes them all — the documented edge of single-super
-    * routing). */
-  def annIvfHier(spark: SparkSession, dir: String): DataFrame = {
-    val v = vectors(spark, dir)
-    val assign = hierAssignments(spark, dir)
-    val cells = assign.where(col("rnk") === 1)
-      .select(col("avid").as("cid"), col("cell"))
-      .join(v, col("cid") === col("vec_id"))
-      .select(col("cid"), col("cell"), col("qv").as("cv"), col("n2").as("cn2"))
-    val probes = assign.where(col("avid") < NumQueries && col("rnk") <= NProbe)
-      .select(col("avid").as("qid"), col("cell").as("pcell"))
-    val q = v.where(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("qvid"), col("qv").as("qqv"), col("n2").as("qn2"))
-    probes.join(q, col("qid") === col("qvid"))
-      .join(cells, col("pcell") === col("cell") && col("cid") =!= col("qid"))
-      .withColumn("cos", cosine(dot(col("qqv"), col("cv")), col("qn2"), col("cn2")))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))))
-      .where(col("rnk") <= TopK)
-      .select(col("qid"), col("rnk"), col("cid"), col("cell"), cosE6(col("cos")).as("cos_e6"))
-      .orderBy("qid", "rnk")
-  }
+  /** The two-level quantizer's IVF list: the probe scan through the
+    * super-routed assignment — member cells come from the routed
+    * assignment, and a query's nprobe cells are ranked within its routed
+    * super only (a super owning fewer than nprobe cells probes them all,
+    * the documented edge of single-super routing). */
+  private def hierList(spark: SparkSession, dir: String): DataFrame =
+    topK(probeScan(spark, dir, hierRoute(spark, dir), NProbe), TopK)
 
-  /** Recall@TopK of the hierarchical route against the same exact-cosine
-    * truth the LSH recall uses — read next to ann_ivf's own retrieval to
-    * price the single-super routing approximation. */
-  def annIvfHierRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = scoredNeighbors(spark, dir, TopK)
-      .select(col("qid"), col("vec_id").as("cid"))
-    val retrieved = annIvfHier(spark, dir).select(col("qid"), col("cid"))
-    exact.join(
-        retrieved.select(col("qid").as("r_qid"), col("cid").as("r_cid")),
-        col("qid") === col("r_qid") && col("cid") === col("r_cid"), "left")
-      .groupBy("qid")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(when(col("r_cid").isNotNull, 1L).otherwise(0L)).as("n_hits"))
-      .withColumn("recall_e4", expr("n_hits * 10000 div n_exact"))
-      .orderBy("qid")
-  }
+  /** IVF search through the two-level quantizer, in [[annIvf]]'s output
+    * contract (qid, rnk, cid, cell, cos_e6). */
+  def annIvfHier(spark: SparkSession, dir: String): DataFrame =
+    cosOut(hierList(spark, dir), "cell")
 
-  /** Generalized cosine SQL (same expression tree as [[cosToSeedSql]],
-    * free column names) for the hierarchical CTEs. */
-  private def cosSqlGen(av: String, an2: String, bv: String, bn2: String): String =
-    s"""CAST(list_reduce(list_transform(range(1, ${Dim + 1}), i -> $av[i] * $bv[i]), (x, y) -> x + y) AS DOUBLE)
-       |             / (sqrt(CAST($an2 AS DOUBLE)) * sqrt(CAST($bn2 AS DOUBLE)))""".stripMargin
+  /** Recall@TopK of the hierarchical route against the exact-cosine
+    * truth — read next to ann_ivf's own retrieval to price the
+    * single-super routing approximation. */
+  def annIvfHierRecall(spark: SparkSession, dir: String): DataFrame =
+    recall(cosineTruth(spark, dir, TopK), hierList(spark, dir))
 
   /** Oracle twin of the two-level quantizer: supers (one Lloyd step over
     * `seeds`, init = first K₂ by seed id), cell→super map, eligible
     * supers, vector routing, within-super assignment + query ranking —
     * mirrors superCentroids / cellSuper / hierAssignments. */
   private def HierCtes: String =
-    s"""hs_init AS (
-       |  SELECT seed_id AS super_id, sv AS hv, sn2 AS hn2 FROM (
-       |    SELECT seed_id, sv, sn2, row_number() OVER (ORDER BY seed_id) AS r
-       |    FROM seeds) i
-       |  WHERE r <= $NumSupers),
-       |hs_mem AS (
-       |  SELECT cell, super_id FROM (
-       |    SELECT c.seed_id AS cell, s.super_id,
-       |           row_number() OVER (PARTITION BY c.seed_id ORDER BY
-       |             ${cosSqlGen("c.sv", "c.sn2", "s.hv", "s.hn2")} DESC,
-       |             s.super_id) AS rnk
-       |    FROM seeds c CROSS JOIN hs_init s) r WHERE rnk = 1),
+    s"""${rankSql("hs_init", "seed_id AS super_id, sv AS hv, sn2 AS hn2", "seeds", "seed_id",
+           NumSupers, "")},
+       |${rankSql("hs_mem", "c.seed_id AS cell, s.super_id", "seeds c CROSS JOIN hs_init s",
+           s"${cosSql(dotSql("c.sv", "s.hv"), "c.sn2", "s.hn2")} DESC, s.super_id", 1, "c.seed_id")},
        |hs_upd AS (
        |  SELECT m.super_id, d.dim, count(*) AS n, sum(c.sv[d.dim]) AS sum_q
        |  FROM hs_mem m JOIN seeds c ON m.cell = c.seed_id
        |  CROSS JOIN (SELECT unnest(range(1, ${Dim + 1})) AS dim) d
        |  GROUP BY m.super_id, d.dim),
        |supers AS (
-       |  SELECT super_id, hv,
-       |         list_reduce(list_transform(hv, x -> x * x), (x, y) -> x + y) AS hn2
+       |  SELECT super_id, hv, ${n2Sql("hv")} AS hn2
        |  FROM (
        |    SELECT super_id,
        |           array_agg(CAST(floor(CAST(sum_q AS DOUBLE) / n) AS BIGINT) ORDER BY dim) AS hv
        |    FROM hs_upd GROUP BY super_id) u
-       |  WHERE list_reduce(list_transform(hv, x -> x * x), (x, y) -> x + y) > 0),
-       |csup AS (
-       |  SELECT cell, super_id FROM (
-       |    SELECT c.seed_id AS cell, s.super_id,
-       |           row_number() OVER (PARTITION BY c.seed_id ORDER BY
-       |             ${cosSqlGen("c.sv", "c.sn2", "s.hv", "s.hn2")} DESC,
-       |             s.super_id) AS rnk
-       |    FROM seeds c CROSS JOIN supers s) r WHERE rnk = 1),
+       |  WHERE ${n2Sql("hv")} > 0),
+       |${rankSql("csup", "c.seed_id AS cell, s.super_id", "seeds c CROSS JOIN supers s",
+           s"${cosSql(dotSql("c.sv", "s.hv"), "c.sn2", "s.hn2")} DESC, s.super_id", 1, "c.seed_id")},
        |esup AS (SELECT DISTINCT super_id FROM csup),
-       |vsup AS (
-       |  SELECT avid, super_id FROM (
-       |    SELECT a.vec_id AS avid, s.super_id,
-       |           row_number() OVER (PARTITION BY a.vec_id ORDER BY
-       |             ${cosSqlGen("a.qv", "a.n2", "s.hv", "s.hn2")} DESC,
-       |             s.super_id) AS rnk
-       |    FROM vecs a CROSS JOIN (
-       |      SELECT s.super_id, s.hv, s.hn2 FROM supers s
-       |      JOIN esup e ON s.super_id = e.super_id) s) r
-       |  WHERE rnk = 1),
+       |${rankSql("vsup", "a.vec_id AS avid, s.super_id",
+           "vecs a CROSS JOIN (\n      SELECT s.super_id, s.hv, s.hn2 FROM supers s\n" +
+             "      JOIN esup e ON s.super_id = e.super_id) s",
+           s"${cosSql(dotSql("a.qv", "s.hv"), "a.n2", "s.hn2")} DESC, s.super_id", 1, "a.vec_id")},
        |hscored AS (
        |  SELECT w.avid, c2.seed_id AS cell,
-       |         ${cosSqlGen("a.qv", "a.n2", "c2.sv", "c2.sn2")} AS cos
+       |         ${cosSql(dotSql("a.qv", "c2.sv"), "a.n2", "c2.sn2")} AS cos
        |  FROM vsup w
        |  JOIN vecs a ON w.avid = a.vec_id
        |  JOIN csup x ON w.super_id = x.super_id
        |  JOIN seeds c2 ON x.cell = c2.seed_id),
-       |hassign AS (
-       |  SELECT avid, cell,
-       |         row_number() OVER (PARTITION BY avid ORDER BY cos DESC, cell) AS rnk
-       |  FROM hscored),
+       |${rankSql("hassign", "avid, cell", "hscored", "cos DESC, cell", 0, "avid")},
        |hcells AS (
        |  SELECT v.vec_id AS cid, h.cell, v.qv AS cv, v.n2 AS cn2
        |  FROM hassign h JOIN vecs v ON h.avid = v.vec_id WHERE h.rnk = 1),
@@ -1408,70 +1377,29 @@ object Similarity {
     s"""WITH $VecCte,
        |$IvfTrainCtes,
        |$HierCtes,
-       |hsearch AS (
-       |  SELECT p.qid, c.cid, c.cell,
-       |         ${cosSqlGen("q.qv", "q.n2", "c.cv", "c.cn2")} AS cos
-       |  FROM hprobes p
-       |  JOIN vecs q ON p.qid = q.vec_id
-       |  JOIN hcells c ON p.pcell = c.cell AND c.cid <> p.qid),
-       |hranked AS (
-       |  SELECT qid, cid, cell, cos,
-       |         row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rnk
-       |  FROM hsearch)
-       |SELECT qid, rnk, cid, cell, CAST(floor(cos * 1000000.0) AS BIGINT) AS cos_e6
-       |FROM hranked WHERE rnk <= $TopK
-       |ORDER BY qid, rnk""".stripMargin
+       |${ivfListSql("hranked", "hprobes", "hcells")}
+       |SELECT qid, rnk, cid, cell, ${e6Sql("cos")} AS cos_e6
+       |FROM hranked ORDER BY qid, rnk""".stripMargin
 
   def annIvfHierRecallSql: String =
     s"""WITH $VecCte,
        |$BruteScoredCte,
        |$IvfTrainCtes,
        |$HierCtes,
-       |ex AS (
-       |  SELECT qid, cid FROM (
-       |    SELECT qid, cid,
-       |           row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rnk
-       |    FROM bscored) r WHERE rnk <= $TopK),
-       |hsearch AS (
-       |  SELECT p.qid, c.cid,
-       |         ${cosSqlGen("q.qv", "q.n2", "c.cv", "c.cn2")} AS cos
-       |  FROM hprobes p
-       |  JOIN vecs q ON p.qid = q.vec_id
-       |  JOIN hcells c ON p.pcell = c.cell AND c.cid <> p.qid),
-       |ret AS (
-       |  SELECT qid, cid FROM (
-       |    SELECT qid, cid,
-       |           row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rnk
-       |    FROM hsearch) r WHERE rnk <= $TopK)
-       |SELECT e.qid, count(*) AS n_exact,
-       |       CAST(sum(CASE WHEN r.cid IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       |       CAST(sum(CASE WHEN r.cid IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-       |         * 10000 // count(*) AS recall_e4
-       |FROM ex e
-       |LEFT JOIN ret r ON e.qid = r.qid AND e.cid = r.cid
-       |GROUP BY e.qid ORDER BY e.qid""".stripMargin
+       |${cosTruthSql("ex", TopK)},
+       |${ivfListSql("hranked", "hprobes", "hcells")}
+       |${recallSql("ex", "hranked")}""".stripMargin
 
   def knnClassifySql: String =
     s"""WITH $VecCte,
-       |scored AS (
-       |  SELECT a.vec_id AS qid, b.vec_id AS cid, b.label AS label,
-       |         $CosSql AS cos
-       |  FROM vecs a JOIN vecs b ON a.vec_id < $NumQueries AND a.vec_id <> b.vec_id),
-       |ranked AS (
-       |  SELECT qid, cid, label,
-       |         row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rnk
-       |  FROM scored),
-       |votes AS (
-       |  SELECT qid, label, count(*) AS votes
-       |  FROM ranked WHERE rnk <= $KnnK GROUP BY qid, label),
-       |pred AS (
-       |  SELECT qid, label, votes,
-       |         row_number() OVER (PARTITION BY qid ORDER BY votes DESC, label) AS vr
-       |  FROM votes)
+       |${rankSql("ranked", "a.vec_id AS qid, b.vec_id AS cid, b.label AS label",
+           s"vecs a JOIN vecs b ON a.vec_id < $NumQueries AND a.vec_id <> b.vec_id",
+           s"$CosAB DESC, b.vec_id", KnnK, "a.vec_id")},
+       |votes AS (SELECT qid, label, count(*) AS votes FROM ranked GROUP BY qid, label),
+       |${rankSql("pred", "qid, label, votes", "votes", "votes DESC, label", 1)}
        |SELECT p.qid, p.label AS pred_label, CAST(p.votes AS BIGINT) AS votes,
        |       q.label AS true_label
        |FROM pred p JOIN vecs q ON p.qid = q.vec_id
-       |WHERE p.vr = 1
        |ORDER BY p.qid""".stripMargin
 
   def embedCentroidsSql: String =
@@ -1489,8 +1417,7 @@ object Similarity {
     * carry the SAME IEEE self-cosine expression the member pair would
     * produce (n2/(sqrt(n2)·sqrt(n2)) — not a 1.0 literal). */
   def embedCosineDupSql: String = {
-    val selfCosSql =
-      "CAST(n2 AS DOUBLE) / (sqrt(CAST(n2 AS DOUBLE)) * sqrt(CAST(n2 AS DOUBLE)))"
+    val selfCosSql = cosSql("n2", "n2", "n2")
     s"""WITH $VecCte,
        |$ScoredPairsCte,
        |egroups AS (
@@ -1531,71 +1458,34 @@ object Similarity {
     * set: per query, how many of the exact top-LshK neighbors the banded
     * multi-table retrieval also returns — the index-quality report that
     * certifies a (PlanesPerTable, NumTables) setting before the index
-    * serves 100 TB (completing the evaluation family with lang_confusion
-    * and minhash_est). BOTH sides reuse the production operators unchanged:
-    * the truth is the shared scoredNeighbors scan, the retrieval is
-    * annLsh filtered to the query ids (Catalyst pushes the filter into
-    * the bucket join). recall_e4 is exact integer arithmetic. */
-  def annRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = scoredNeighbors(spark, dir, LshK)
-      .select(col("qid"), col("vec_id").as("cid"))
-    val retrieved = annLsh(spark, dir)
-      .where(col("aid") < NumQueries)
-      .select(col("aid").as("r_qid"), col("bid").as("r_cid"))
-    exact.join(retrieved,
-        col("qid") === col("r_qid") && col("cid") === col("r_cid"), "left")
-      .groupBy("qid")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(when(col("r_cid").isNotNull, 1L).otherwise(0L)).as("n_hits"))
-      .withColumn("recall_e4", expr("n_hits * 10000 div n_exact"))
-      .orderBy("qid")
-  }
+    * serves 100 TB. Both sides are the production lists unchanged: the
+    * exact-cosine truth and the memoized LSH list filtered to the query
+    * ids. */
+  def annRecall(spark: SparkSession, dir: String): DataFrame =
+    recall(cosineTruth(spark, dir, LshK), listLsh(spark, dir).where(col("qid") < NumQueries))
 
   def annRecallSql: String =
     s"""WITH $VecCte,
        |$BruteScoredCte,
        |$ScoredPairsCte,
-       |ex AS (
-       |  SELECT qid, cid FROM (
-       |    SELECT qid, cid,
-       |           row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rnk
-       |    FROM bscored) r WHERE rnk <= $LshK),
-       |lscored AS (
-       |  SELECT aid AS qid, bid AS cid, cos FROM spaired
-       |  UNION ALL
-       |  SELECT bid AS qid, aid AS cid, cos FROM spaired),
-       |ret AS (
-       |  SELECT qid, cid FROM (
-       |    SELECT qid, cid,
-       |           row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rnk
-       |    FROM lscored WHERE qid < $NumQueries) r
-       |  WHERE rnk <= $LshK)
-       |SELECT e.qid, count(*) AS n_exact,
-       |       CAST(sum(CASE WHEN l.cid IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       |       CAST(sum(CASE WHEN l.cid IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-       |         * 10000 // count(*) AS recall_e4
-       |FROM ex e
-       |LEFT JOIN ret l ON e.qid = l.qid AND e.cid = l.cid
-       |GROUP BY e.qid ORDER BY e.qid""".stripMargin
+       |${cosTruthSql("ex", LshK)},
+       |${lshListSql(queries = true)}
+       |${recallSql("ex", "lsh")}""".stripMargin
 
   // ---- ann_mrr ------------------------------------------------------------
 
   /** Mean-reciprocal-rank probe of the LSH index: for each query, WHERE in
-    * the banded retrieval's ranked list the true nearest neighbor lands
-    * (recall says whether the truth set is covered; MRR says whether the
-    * single answer a serving path would return is the right one, and how
-    * far down it sits when it isn't). rank 0 = the true NN was not
-    * retrieved at all. Reuses the production operators unchanged — truth
-    * from the shared scoredNeighbors scan at k=1, retrieval from annLsh
-    * with its own ranking — so the metric certifies the exact frames the
-    * serving queries run, and the reciprocal rank is pure integer
-    * division (1e6 div rank), exact on both engines. */
+    * the LSH list the true nearest neighbor lands (recall says whether the
+    * truth set is covered; MRR says whether the single answer a serving
+    * path would return is the right one, and how far down it sits when it
+    * isn't). rank 0 = the true NN was not retrieved at all. Truth is the
+    * exact-cosine cut at k=1, retrieval the memoized LSH list; the
+    * reciprocal rank is pure integer division (1e6 div rank). */
   def annMrr(spark: SparkSession, dir: String): DataFrame = {
-    val truth = scoredNeighbors(spark, dir, 1)
-      .select(col("qid"), col("vec_id").as("nn"))
-    val retrieved = annLsh(spark, dir)
-      .where(col("aid") < NumQueries)
-      .select(col("aid").as("r_qid"), col("bid").as("r_cid"),
+    val truth = cosineTruth(spark, dir, 1).select(col("qid"), col("cid").as("nn"))
+    val retrieved = listLsh(spark, dir)
+      .where(col("qid") < NumQueries)
+      .select(col("qid").as("r_qid"), col("cid").as("r_cid"),
         col("rnk").cast("long").as("lsh_rnk"))
     truth.join(retrieved,
         col("qid") === col("r_qid") && col("nn") === col("r_cid"), "left")
@@ -1610,27 +1500,14 @@ object Similarity {
     s"""WITH $VecCte,
        |$BruteScoredCte,
        |$ScoredPairsCte,
-       |truth AS (
-       |  SELECT qid, cid AS nn FROM (
-       |    SELECT qid, cid,
-       |           row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rnk
-       |    FROM bscored) r WHERE rnk = 1),
-       |lscored AS (
-       |  SELECT aid AS qid, bid AS cid, cos FROM spaired
-       |  UNION ALL
-       |  SELECT bid AS qid, aid AS cid, cos FROM spaired),
-       |ret AS (
-       |  SELECT qid, cid, rnk FROM (
-       |    SELECT qid, cid,
-       |           row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rnk
-       |    FROM lscored WHERE qid < $NumQueries) r
-       |  WHERE rnk <= $LshK)
-       |SELECT t.qid, t.nn,
+       |${cosTruthSql("truth", 1)},
+       |${lshListSql(queries = true)}
+       |SELECT t.qid, t.cid AS nn,
        |       CAST(coalesce(l.rnk, 0) AS BIGINT) AS lsh_rank,
        |       CAST(CASE WHEN l.rnk IS NOT NULL THEN 1000000 // l.rnk
        |                 ELSE 0 END AS BIGINT) AS rr_e6
        |FROM truth t
-       |LEFT JOIN ret l ON t.qid = l.qid AND t.nn = l.cid
+       |LEFT JOIN lsh l ON t.qid = l.qid AND t.cid = l.cid
        |ORDER BY t.qid""".stripMargin
 
   // ---- embed_norm_audit ---------------------------------------------------
@@ -1740,11 +1617,11 @@ object Similarity {
     * ADC distances at scale.
     *
     * Codebooks are TRAINED per subspace with the engine's deterministic
-    * one-Lloyd-iteration recipe (the ann_ivf convention): init from the
-    * first PqK vectors' subvectors, assign every subvector by EXACT
-    * int64 squared-L2 on e4 ticks (no float anywhere in assignment —
-    * ties break to the smaller code), update by per-component
-    * floor-quantized mean, then re-assign against the trained books.
+    * Lloyd recipe (the ann_ivf convention): init from the first PqK
+    * vectors' subvectors, assign every subvector by EXACT int64
+    * squared-L2 on e4 ticks (no float anywhere in assignment — ties break
+    * to the smaller code), update by per-component floor-quantized mean,
+    * then re-assign against the trained books.
     *
     * Scale shape: both assignment passes join against a BROADCAST
     * codebook (PqM·PqK = 64 rows); the per-(vector, subspace) argmin is
@@ -1756,8 +1633,10 @@ object Similarity {
   val PqSubDim = 8
   val PqK = 8
 
-  /** Lloyd iteration count for the PQ codebooks — see [[IvfIters]]. */
-  def PqIters: Int = sys.env.getOrElse("GRAFT_PQ_ITERS", "1").toInt
+  /** Lloyd iteration count for the PQ codebooks — one step, as
+    * [[IvfIters]]; [[pqBooksIter]] keeps the count as a parameter for
+    * LloydSpec. */
+  val PqIters = 1
 
   /** Exact integer squared L2 between two equal-length int64 arrays —
     * the codegen'd expression (HashExprs.LongL2Expr), not the interpreted
@@ -1767,18 +1646,21 @@ object Similarity {
   private def l2sq(a: Column, b: Column): Column =
     graft.functions.HashExprs.longL2(a, b)
 
-  /** Per-(vector, subspace) rows: subspace id, code-packing multiplier,
-    * and the 8-dim tick subvector. */
-  private def pqSubs(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddings(spark, dir).select(col("vec_id"), quant.as("qv"))
-    val subStructs = array((0 until PqM).map { m =>
+  /** One row per (row of `df`, subspace): the `keep` columns, subspace id
+    * m, code-packing multiplier mult = 8^m and the SubDim-long slice sv
+    * of the tick vector `v`. */
+  private def subspaces(df: DataFrame, v: Column, keep: String*): DataFrame = {
+    val subs = array((0 until PqM).map { m =>
       struct(lit(m.toLong).as("m"), lit(1L << (3 * m)).as("mult"),
-        slice(col("qv"), m * PqSubDim + 1, PqSubDim).as("sv"))
+        slice(v, m * PqSubDim + 1, PqSubDim).as("sv"))
     }: _*)
-    base.select(col("vec_id"), explode(subStructs).as("s"))
-      .select(col("vec_id"), col("s.m").as("m"), col("s.mult").as("mult"),
-        col("s.sv").as("sv"))
+    df.select(keep.map(col) :+ explode(subs).as("s"): _*)
+      .select(keep.map(col) ++ Seq("m", "mult", "sv").map(c => col(s"s.$c").as(c)): _*)
   }
+
+  private def pqSubs(spark: SparkSession, dir: String): DataFrame =
+    subspaces(Tables.embeddings(spark, dir).select(col("vec_id"), quant.as("qv")),
+      col("qv"), "vec_id")
 
   private def pqNearest(subs: DataFrame, books: DataFrame): DataFrame =
     subs.join(broadcast(books), "m")
@@ -1801,15 +1683,20 @@ object Similarity {
       .agg(array_sort(collect_list(struct(col("pos"), col("cq")))).as("pc"))
       .select(col("m"), col("j"), transform(col("pc"), x => x("cq")).as("cv"))
 
-  /** Codebooks after `iters` Lloyd steps (m, j, cv), memoized: shared by
-    * the code assignment and both ADC search paths. */
+  /** Codebooks (m, j, cv) after `iters` Lloyd steps over the subvector
+    * rows `subs`, initialized from the first PqK vectors' subvectors. */
+  private def trainBooks(subs: DataFrame, iters: Int): DataFrame = {
+    var books = subs.where(col("vec_id") < PqK)
+      .select(col("m"), col("vec_id").as("j"), col("sv").as("cv"))
+    for (_ <- 1 to iters) books = pqLloydStep(subs, books)
+    books
+  }
+
+  /** Raw-vector codebooks, memoized: shared by the code assignment and
+    * both raw-code ADC paths. */
   private def pqBooksIter(spark: SparkSession, dir: String, iters: Int): DataFrame =
     Tables.memoPersist(spark, s"sim.pqBooks:$iters:$dir") {
-      val subs = pqSubs(spark, dir)
-      var books = subs.where(col("vec_id") < PqK)
-        .select(col("m"), col("vec_id").as("j"), col("sv").as("cv"))
-      for (_ <- 1 to iters) books = pqLloydStep(subs, books)
-      books
+      trainBooks(pqSubs(spark, dir), iters)
     }
 
   private def pqBooks(spark: SparkSession, dir: String): DataFrame =
@@ -1836,30 +1723,21 @@ object Similarity {
       .agg(sum(col("j") * col("mult")).as("pq_code"), sum("d").as("sq_err"))
       .orderBy("vec_id")
 
-  private def pqL2Sql(a: String, b: String): String =
-    s"list_reduce(list_transform(range(1, ${PqSubDim + 1}), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])), (x, y) -> x + y)"
-
   /** Generated oracle CTE chain for PQ codebook training + final code
     * assignment over any subvector CTE `sub` (vec_id, m, mult, sv, …):
     * init from the first PqK vectors → PqIters Lloyd rounds → books CTE
     * `${p}tc` → final assignment CTE `${p}r2` (vec_id, m, mult, j, d,
-    * plus `extraCols` carried through from `sub`). Generated
-    * per-iteration so the GRAFT_PQ_ITERS knob and the SQL cannot drift;
-    * `p` prefixes every CTE name so two trainings (raw + residual)
-    * compose in one query. */
+    * plus `extraCols` carried through from `sub`). `p` prefixes every CTE
+    * name so two trainings (raw + residual) compose in one query. */
   private def pqTrainSql(sub: String, p: String, extraCols: Seq[String] = Nil): String = {
     val extraSel = extraCols.map(c => s", s.$c").mkString
     val extraOut = extraCols.map(c => s", $c").mkString
-    val head =
-      s"""${p}bk0 AS (SELECT m, vec_id AS j, sv AS cv FROM $sub WHERE vec_id < $PqK)""".stripMargin
+    val head = s"${p}bk0 AS (SELECT m, vec_id AS j, sv AS cv FROM $sub WHERE vec_id < $PqK)"
     val steps = (1 to PqIters).map { it =>
       s"""${p}a$it AS (
-         |  SELECT s.vec_id, s.m, s.sv, b.j, ${pqL2Sql("s.sv", "b.cv")} AS d
+         |  SELECT s.vec_id, s.m, s.sv, b.j, ${l2Sql("s.sv", "b.cv", PqSubDim)} AS d
          |  FROM $sub s JOIN ${p}bk${it - 1} b ON s.m = b.m),
-         |${p}r$it AS (
-         |  SELECT vec_id, m, sv, j FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY d, j) AS rn
-         |    FROM ${p}a$it) t WHERE rn = 1),
+         |${rankSql(s"${p}r$it", "vec_id, m, sv, j", s"${p}a$it", "d, j", 1, "vec_id, m")},
          |${p}u$it AS (
          |  SELECT m, j, p.pos AS pos,
          |         CAST(floor(CAST(sum(sv[p.pos]) AS DOUBLE) / count(*)) AS BIGINT) AS cq
@@ -1870,12 +1748,10 @@ object Similarity {
     val fin =
       s"""${p}tc AS (SELECT * FROM ${p}bk$PqIters),
          |${p}af AS (
-         |  SELECT s.vec_id, s.m, s.mult$extraSel, t.j, ${pqL2Sql("s.sv", "t.cv")} AS d
+         |  SELECT s.vec_id, s.m, s.mult$extraSel, t.j, ${l2Sql("s.sv", "t.cv", PqSubDim)} AS d
          |  FROM $sub s JOIN ${p}tc t ON s.m = t.m),
-         |${p}r2 AS (
-         |  SELECT vec_id, m, mult$extraOut, j, d FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY d, j) AS rn
-         |    FROM ${p}af) t WHERE rn = 1)""".stripMargin
+         |${rankSql(s"${p}r2", s"vec_id, m, mult$extraOut, j, d", s"${p}af", "d, j", 1,
+             "vec_id, m")}""".stripMargin
     (head +: steps :+ fin).mkString(",\n")
   }
 
@@ -1908,238 +1784,167 @@ object Similarity {
     * represented ONLY by its 8 codes, so a query-vector distance is the
     * sum over subspaces of ‖q_m − centroid(code_m)‖² — 8 lookups into a
     * per-query table of PqM·PqK = 64 precomputed partial distances, the
-    * constant-time-per-vector scan that makes PQ indexes fast. Here the
-    * lookup table is the broadcast (books ⋈ query-subvectors) product and
-    * the scan is one co-partitioned join on (m, j) against the memoized
-    * code assignment — no vector data moves, only codes. Top-k per query
-    * by (ADC distance, vec_id), self-match excluded. Exact int64
+    * constant-time-per-vector scan that makes PQ indexes fast. Exact int64
     * arithmetic end to end. */
   val PqTopK = 5
 
-  def annPqSearch(spark: SparkSession, dir: String): DataFrame =
-    listPq(spark, dir).orderBy("qid", "rnk")
+  /** The ADC lookup table: per (query[, probed cell], subspace, code) the
+    * exact partial distance ‖q_m − codeword‖² — queries × PqM·PqK rows, ×
+    * nprobe when routed. `qsubs` carries (qid[, cell], m, sv). */
+  private def adcLut(qsubs: DataFrame, books: DataFrame): DataFrame =
+    qsubs.join(broadcast(books), "m")
+      .withColumn("pd", l2sq(col("sv"), col("cv")))
+      .drop("mult", "sv", "cv")
 
-  /** The ADC ranked list, memoized ([[listExact]] note): ann_pq_search
-    * serves it; ann_agreement re-reads it. NumQueries×PqTopK rows. */
-  private def listPq(spark: SparkSession, dir: String): DataFrame =
-   Tables.memoPersist(spark, s"sim.listPq:$PqIters:$dir") {
-    val qsubs = pqSubs(spark, dir).where(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("qid"), col("m"), col("sv").as("qsv"))
-    // per-(query, subspace, code) partial distances: the ADC lookup table
-    val lut = qsubs.join(broadcast(pqBooks(spark, dir)), "m")
-      .withColumn("pd", l2sq(col("qsv"), col("cv")))
-      .select("qid", "m", "j", "pd")
-    pqCodes(spark, dir)
-      .join(broadcast(lut), Seq("m", "j"))
-      .groupBy("qid", "vec_id")
-      .agg(sum("pd").as("adc_d"))
+  /** ADC-scan candidates (qid, cid[, cell], score = Σ partial distances):
+    * the code index against the broadcast LUT, on the probed cell too
+    * when the codes carry one (IVF routing). Only codes are read — no
+    * vector data moves, and the code side never shuffles for the join. */
+  private def adcScan(codes: DataFrame, lut: DataFrame): DataFrame = {
+    val cell = Seq("cell").filter(codes.columns.contains)
+    codes.join(broadcast(lut), cell ++ Seq("m", "j"))
       .where(col("qid") =!= col("vec_id"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("adc_d"), col("vec_id"))))
-      .where(col("rnk") <= PqTopK)
-      .select(col("qid"), col("rnk").cast("long").as("rnk"), col("vec_id"), col("adc_d"))
-   }
+      .groupBy((Seq("qid", "vec_id") ++ cell).map(col): _*)
+      .agg(sum("pd").as("score"))
+      .withColumnRenamed("vec_id", "cid")
+  }
 
-  /** Shared ADC-retrieval CTEs on top of [[PqCtes]] (`qsub` → `lut` →
-    * `adc` → `ranked`), consumed by both the search and its recall
-    * evaluation. */
+  /** The queries' raw tick subvectors (qid, m, mult, sv). */
+  private def pqQuerySubs(spark: SparkSession, dir: String): DataFrame =
+    pqSubs(spark, dir).where(col("vec_id") < NumQueries).withColumnRenamed("vec_id", "qid")
+
+  /** A distance list published as (qid, rnk bigint, vec_id[, cell], `dist`). */
+  private def distOut(list: DataFrame, dist: String): DataFrame =
+    list.select(Seq(col("qid"), col("rnk").cast("long").as("rnk"), col("cid").as("vec_id")) ++
+        Seq("cell").filter(list.columns.contains).map(col) :+ col("score").as(dist): _*)
+      .orderBy("qid", "rnk")
+
+  def annPqSearch(spark: SparkSession, dir: String): DataFrame =
+    distOut(listPq(spark, dir), "adc_d")
+
+  /** The exhaustive ADC list, memoized: ann_pq_search serves it;
+    * ann_agreement re-reads it. NumQueries×PqTopK rows. */
+  private def listPq(spark: SparkSession, dir: String): DataFrame =
+    Tables.memoPersist(spark, s"sim.listPq:$PqIters:$dir") {
+      val lut = adcLut(pqQuerySubs(spark, dir), pqBooks(spark, dir))
+      topK(adcScan(pqCodes(spark, dir), lut), PqTopK, ascending = true)
+    }
+
+  /** Oracle ADC lookup table `name` over query subvectors `qsub` (qid[,
+    * pcell], m, qsv) and books `books` (m, j, cv). */
+  private def lutSql(name: String, qsub: String, books: String): String =
+    s"""$name AS (
+       |  SELECT q.*, t.j, ${l2Sql("q.qsv", "t.cv", PqSubDim)} AS pd
+       |  FROM $qsub q JOIN $books t ON q.m = t.m)""".stripMargin
+
+  /** Oracle ADC list `name` (qid, cid[, cell], adc_d, rnk ≤ k): the code
+    * CTE `codes` (vec_id, m, j[, cell]) summed over the LUT `lut` — on
+    * the probed cell too when `routed` — ranked by (adc_d, cid). */
+  private def adcSql(name: String, codes: String, lut: String, routed: Boolean, k: Int): String = {
+    val cell = if (routed) ", cell" else ""
+    s"""${name}_d AS (
+       |  SELECT l.qid, c.vec_id AS cid$cell, CAST(sum(l.pd) AS BIGINT) AS adc_d
+       |  FROM $codes c
+       |  JOIN $lut l ON c.m = l.m AND c.j = l.j${if (routed) " AND c.cell = l.pcell" else ""}
+       |  WHERE l.qid <> c.vec_id
+       |  GROUP BY l.qid, c.vec_id$cell),
+       |${rankSql(name, s"qid, cid$cell, adc_d", s"${name}_d", "adc_d, cid", k)}""".stripMargin
+  }
+
+  /** The raw-code oracle ADC list `ranked`, over [[PqCtesBody]]. */
   private def PqSearchCtes: String =
-    s"""qsub AS (
-       |  SELECT vec_id AS qid, m, sv AS qsv FROM sub WHERE vec_id < $NumQueries),
-       |lut AS (
-       |  SELECT q.qid, q.m, t.j, ${pqL2Sql("q.qsv", "t.cv")} AS pd
-       |  FROM qsub q JOIN tc t ON q.m = t.m),
-       |adc AS (
-       |  SELECT l.qid, c.vec_id, CAST(sum(l.pd) AS BIGINT) AS adc_d
-       |  FROM r2 c JOIN lut l ON c.m = l.m AND c.j = l.j
-       |  GROUP BY l.qid, c.vec_id),
-       |ranked AS (
-       |  SELECT qid, vec_id, adc_d,
-       |         CAST(row_number() OVER (PARTITION BY qid ORDER BY adc_d, vec_id) AS BIGINT) AS rnk
-       |  FROM adc WHERE qid <> vec_id)""".stripMargin
+    s"""${lutSql("lut", s"(SELECT vec_id AS qid, m, sv AS qsv FROM sub WHERE vec_id < $NumQueries)", "tc")},
+       |${adcSql("ranked", "r2", "lut", routed = false, PqTopK)}""".stripMargin
 
   def annPqSearchSql: String =
     s"""WITH $PqCtes,
        |$PqSearchCtes
-       |SELECT qid, rnk, vec_id, adc_d
-       |FROM ranked WHERE rnk <= $PqTopK
-       |ORDER BY qid, rnk""".stripMargin
+       |SELECT qid, rnk, cid AS vec_id, adc_d
+       |FROM ranked ORDER BY qid, rnk""".stripMargin
 
   // ---- ann_pq_recall: ADC retrieval vs exact-L2 truth ---------------------
 
-  /** Recall@k of the PQ index against the EXACT full-vector squared-L2
-    * truth — the ann_recall twin for the PQ family, certifying how much
-    * ranking fidelity the 24-bit compression costs before a deployment
-    * trusts ADC ordering at scale. Truth is a bounded broadcast-query
-    * scan (5 × N int64 distance evaluations, the scoredNeighbors shape
-    * with L2 instead of cosine); retrieval is the production
-    * annPqSearch, unchanged. recall_e4 is exact integer arithmetic. */
-  /** Shared exact-L2 truth set for the PQ recall family: per query the
-    * PqTopK nearest vectors by exact full-vector int64 squared L2 (the
-    * scoredNeighbors shape with L2 instead of cosine) — ONE definition so
-    * ann_pq_recall and ann_ivfpq_recall certify against the same truth
-    * and their recall delta isolates the IVF cell-miss loss. */
-  private def exactL2TopK(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddings(spark, dir).select(col("vec_id"), quant.as("qv"))
-    val qs = base.where(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("qid"), col("qv").as("qqv"))
-    // bounded-cross: broadcast query table, <= NumQueries rows
-    base.crossJoin(broadcast(qs))
-      .where(col("vec_id") =!= col("qid"))
-      .withColumn("d", l2sq(col("qv"), col("qqv")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("d"), col("vec_id"))))
-      .where(col("rn") <= PqTopK)
-      .select(col("qid"), col("vec_id").as("cid"))
+  /** Exact-L2 brute-scan rows (cid, qv): every embedding, zero-norm
+    * vectors included, as the PQ codes are. */
+  private def l2Rows(spark: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(spark, dir).select(col("vec_id").as("cid"), quant.as("qv"))
+
+  /** The exact-L2 truth of the PQ recall family: each query's PqTopK
+    * nearest vectors by exact full-vector int64 squared L2 — ONE
+    * definition, so the PQ, IVFADC, residual and re-rank recalls certify
+    * against the same truth and their deltas isolate each stage's loss. */
+  private[graft] def l2Truth(spark: SparkSession, dir: String): DataFrame = {
+    val b = l2Rows(spark, dir)
+    topK(bruteScan(b, firstQueries(b), l2Score), PqTopK, ascending = true)
   }
 
-  /** Recall@k join shared by the PQ recall family: exact truth set LEFT
-    * JOIN a (qid, cid) retrieval, integer recall_e4 per query. */
-  private def recallAgainstTruth(truth: DataFrame, retrieved: DataFrame): DataFrame =
-    truth.join(
-        retrieved.select(col("qid").as("r_qid"), col("cid").as("r_cid")),
-        col("qid") === col("r_qid") && col("cid") === col("r_cid"), "left")
-      .groupBy("qid")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(when(col("r_cid").isNotNull, 1L).otherwise(0L)).as("n_hits"))
-      .withColumn("recall_e4", expr("n_hits * 10000 div n_exact"))
-      .orderBy("qid")
-
+  /** Recall@k of the exhaustive ADC list against the exact-L2 truth: how
+    * much ranking fidelity the 24-bit compression costs before a
+    * deployment trusts ADC ordering at scale. */
   def annPqRecall(spark: SparkSession, dir: String): DataFrame =
-    recallAgainstTruth(exactL2TopK(spark, dir),
-      annPqSearch(spark, dir).select(col("qid"), col("vec_id").as("cid")))
+    recall(l2Truth(spark, dir), listPq(spark, dir))
 
-  /** Oracle twin of [[exactL2TopK]] (`truth` → `ex`), plus the recall
-    * SELECT over an already-defined `ret(qid, cid)` CTE. */
-  private def PqTruthCtes: String =
-    s"""truth AS (
-       |  SELECT q.vec_id AS qid, a.vec_id AS cid,
-       |         row_number() OVER (
-       |           PARTITION BY q.vec_id
-       |           ORDER BY list_reduce(list_transform(range(1, ${Dim + 1}),
-       |                     i -> (a.qv[i] - q.qv[i]) * (a.qv[i] - q.qv[i])),
-       |                   (x, y) -> x + y), a.vec_id) AS rn
-       |  FROM qvecs a
-       |  CROSS JOIN (SELECT vec_id, qv FROM qvecs WHERE vec_id < $NumQueries) q
-       |  WHERE a.vec_id <> q.vec_id),
-       |ex AS (SELECT qid, cid FROM truth WHERE rn <= $PqTopK)""".stripMargin
-
-  private def RecallSelectSql: String =
-    s"""SELECT e.qid, count(*) AS n_exact,
-       |       CAST(sum(CASE WHEN r.cid IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       |       CAST(sum(CASE WHEN r.cid IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-       |         * 10000 // count(*) AS recall_e4
-       |FROM ex e
-       |LEFT JOIN ret r ON e.qid = r.qid AND e.cid = r.cid
-       |GROUP BY e.qid ORDER BY e.qid""".stripMargin
+  /** Oracle twin of [[l2Truth]] (`ex`). */
+  private def L2TruthCte: String =
+    rankSql("ex", "q.vec_id AS qid, a.vec_id AS cid",
+      s"qvecs a JOIN (SELECT vec_id, qv FROM qvecs WHERE vec_id < $NumQueries) q ON a.vec_id <> q.vec_id",
+      s"${l2Sql("a.qv", "q.qv")}, a.vec_id", PqTopK, "q.vec_id")
 
   def annPqRecallSql: String =
     s"""WITH $PqCtes,
        |$PqSearchCtes,
-       |$PqTruthCtes,
-       |ret AS (SELECT qid, vec_id AS cid FROM ranked WHERE rnk <= $PqTopK)
-       |$RecallSelectSql""".stripMargin
+       |$L2TruthCte
+       |${recallSql("ex", "ranked")}""".stripMargin
 
   // ---- ann_ivfpq_search: IVF-routed ADC (IVFADC) ---------------------------
 
   /** IVFADC composition (Jégou/Douze/Schmid PAMI'11 §IV-B): the IVF coarse
     * quantizer routes each query to its NProbe nearest cells, and the ADC
     * scan runs ONLY over the PQ codes of vectors assigned to those cells —
-    * the standard composition that turns the exhaustive ann_pq_search scan
-    * (every code row, per query) into an N·NProbe/NumCells-row scan. This
-    * is the residual-free variant: codes are the GLOBAL PQ codes (no
-    * per-cell re-encoding), so the memoized code index is shared verbatim
-    * with ann_pq / ann_pq_search and the recall delta between
-    * ann_pq_recall and ann_ivfpq_recall isolates pure cell-miss loss.
-    *
-    * Scale shape: the routed lookup table (query × probed cell ×
-    * PqM·PqK partial distances) is a bounded broadcast build — queries ×
-    * NProbe·64 rows; the scan side is ONE broadcast hash join against the
-    * memoized (vector, cell) + code index, so codes never shuffle and
-    * full vectors never move. At 1e9 vectors with √N cells and nprobe=2
-    * the per-query candidate set is ~2√N ≈ 64k code rows vs 1e9 — the
-    * 100 TB gap VERDICT r7 flagged against the exhaustive ADC scan. */
-  /** Full IVFADC ranking (no top-k cut): shared by the production cut
-    * (annIvfPqSearch) and the exact re-rank's wider shortlist. */
-  private def ivfPqRankedAll(spark: SparkSession, dir: String): DataFrame = {
-    val assign = cellAssignments(spark, dir)
-    val members = assign.where(col("rnk") === 1)
-      .select(col("avid").as("vec_id"), col("seed_id").as("cell"))
-    val probes = assign.where(col("avid") < NumQueries && col("rnk") <= NProbe)
-      .select(col("avid").as("qid"), col("seed_id").as("pcell"))
-    val qsubs = pqSubs(spark, dir).where(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("qid"), col("m"), col("sv").as("qsv"))
-    // per-(query, subspace, code) ADC partial distances, routed to the
-    // query's probed cells — the broadcast side of the scan join
-    val lut = qsubs.join(pqBooks(spark, dir), "m")
-      .withColumn("pd", l2sq(col("qsv"), col("cv")))
-      .select(col("qid"), col("m"), col("j"), col("pd"))
-    val routedLut = probes.join(lut, "qid")
-      .select(col("qid"), col("pcell"), col("m").as("lm"), col("j").as("lj"), col("pd"))
-    pqCodes(spark, dir)
-      .join(members, "vec_id")
-      .join(broadcast(routedLut),
-        col("cell") === col("pcell") && col("m") === col("lm") && col("j") === col("lj"))
-      .where(col("qid") =!= col("vec_id"))
-      .groupBy("qid", "vec_id", "cell")
-      .agg(sum("pd").as("adc_d"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("adc_d"), col("vec_id"))))
-  }
-
+    * an N·NProbe/NumCells-row scan instead of every code row per query.
+    * Residual-free: codes are the GLOBAL PQ codes, shared verbatim with
+    * ann_pq / ann_pq_search, so the recall delta between ann_pq_recall and
+    * ann_ivfpq_recall isolates pure cell-miss loss. The routed LUT
+    * (queries × NProbe × 64 partial distances) is the broadcast side, so
+    * codes never shuffle and full vectors never move. */
   def annIvfPqSearch(spark: SparkSession, dir: String): DataFrame =
-    listIvfPq(spark, dir).orderBy("qid", "rnk")
+    distOut(listIvfPq(spark, dir), "adc_d")
 
-  /** The IVFADC shortlist (rnk ≤ PqShortR), memoized: the widest slice of
-    * [[ivfPqRankedAll]] any consumer reads. Before round 17 only the
-    * top-PqTopK search list was memoized, so the exact re-rank
-    * (ann_ivfpq_rerank, + its recall cert) and the shortlist
-    * hard-negative miner (ann_hard_neg_shortlist) each re-derived the
-    * whole ADC ranking chain — codes⋈members⋈broadcast-LUT, partial-sum
-    * aggregate, per-query window — per query (guide §2.4: two operations
-    * keyed the same way share one exchange; here they share the whole
-    * subtree). NumQueries×PqShortR rows; every consumer is a filter of
-    * this frame, so results are unchanged by construction. */
+  /** Shortlist width for the exact re-rank stage (R in Jégou §VII's
+    * "re-ranking with source coding" recipe): the ADC pass keeps R ≫ k
+    * candidates, the exact pass re-scores only those R. */
+  val PqShortR = 20
+
+  /** The IVFADC shortlist (qid, cid, cell, score, rnk ≤ PqShortR),
+    * memoized: the widest IVFADC cut any consumer reads — the search, the
+    * exact re-rank and the shortlist hard-negative miner are all filters
+    * of it, so the routed ADC chain runs once. NumQueries×PqShortR rows. */
   private def ivfPqShortlist(spark: SparkSession, dir: String): DataFrame =
     Tables.memoPersist(spark,
         s"sim.ivfpqShort:$NumCells:$IvfIters:$PqIters:$PqShortR:$dir") {
-      ivfPqRankedAll(spark, dir)
-        .where(col("rnk") <= PqShortR)
-        .select(col("qid"), col("rnk"), col("vec_id"), col("cell"), col("adc_d"))
+      val assign = cellAssignments(spark, dir)
+      val members = assign.where(col("rnk") === 1)
+        .select(col("avid").as("vec_id"), col("seed_id").as("cell"))
+      val lut = adcLut(pqQuerySubs(spark, dir), pqBooks(spark, dir))
+      topK(adcScan(pqCodes(spark, dir).join(members, "vec_id"),
+        probes(assign, NProbe).drop("prnk").join(lut, "qid")), PqShortR, ascending = true)
     }
 
-  /** The IVFADC ranked list, memoized ([[listExact]] note): the search
-    * serves it; ann_agreement re-reads it. NumQueries×PqTopK rows — a
-    * prefix filter of the memoized [[ivfPqShortlist]] (PqTopK ≤ PqShortR). */
+  /** The IVFADC list, memoized: the search serves it; ann_agreement
+    * re-reads it. A prefix of [[ivfPqShortlist]] (PqTopK ≤ PqShortR). */
   private def listIvfPq(spark: SparkSession, dir: String): DataFrame =
     Tables.memoPersist(spark, s"sim.listIvfPq:$NumCells:$IvfIters:$PqIters:$dir") {
-      ivfPqShortlist(spark, dir)
-        .where(col("rnk") <= PqTopK)
-        .select(col("qid"), col("rnk").cast("long").as("rnk"), col("vec_id"),
-          col("cell"), col("adc_d"))
+      ivfPqShortlist(spark, dir).where(col("rnk") <= PqTopK)
     }
 
-  /** Shared IVFADC retrieval CTEs: requires [[VecCte]] + [[IvfTrainCtes]]
-    * + [[IvfAssignCtes]] + [[PqCtesBody]] in scope; defines `ivranked`
-    * (qid, vec_id, cell, adc_d, rnk) over the probed cells only. */
+  /** The IVFADC oracle list `ivranked` (qid, cid, cell, adc_d, rnk ≤
+    * PqShortR): requires [[VecCte]] + [[IvfTrainCtes]] + [[IvfAssignCtes]]
+    * + [[PqCtesBody]] in scope. */
   private def IvfPqRetrievalCtes: String =
-    s"""ivqsub AS (
-       |  SELECT vec_id AS qid, m, sv AS qsv FROM sub WHERE vec_id < $NumQueries),
-       |ivlut AS (
-       |  SELECT q.qid, q.m, t.j, ${pqL2Sql("q.qsv", "t.cv")} AS pd
-       |  FROM ivqsub q JOIN tc t ON q.m = t.m),
-       |ivadc AS (
-       |  SELECT l.qid, c.vec_id, cl.cell, CAST(sum(l.pd) AS BIGINT) AS adc_d
-       |  FROM r2 c
-       |  JOIN cells cl ON c.vec_id = cl.cid
-       |  JOIN probes p ON cl.cell = p.pcell
-       |  JOIN ivlut l ON l.qid = p.qid AND c.m = l.m AND c.j = l.j
-       |  WHERE p.qid <> c.vec_id
-       |  GROUP BY 1, 2, 3),
-       |ivranked AS (
-       |  SELECT qid, vec_id, cell, adc_d,
-       |         CAST(row_number() OVER (PARTITION BY qid ORDER BY adc_d, vec_id) AS BIGINT) AS rnk
-       |  FROM ivadc)""".stripMargin
+    s"""${lutSql("ivlut", "(SELECT p.qid, p.pcell, s.m, s.sv AS qsv\n" +
+           "    FROM probes p JOIN sub s ON s.vec_id = p.qid)", "tc")},
+       |ivcodes AS (SELECT r.vec_id, r.m, r.j, cl.cell FROM r2 r JOIN cells cl ON r.vec_id = cl.cid),
+       |${adcSql("ivranked", "ivcodes", "ivlut", routed = true, PqShortR)}""".stripMargin
 
   def annIvfPqSearchSql: String =
     s"""WITH $VecCte,
@@ -2147,65 +1952,37 @@ object Similarity {
        |$IvfAssignCtes,
        |$PqCtesBody,
        |$IvfPqRetrievalCtes
-       |SELECT qid, rnk, vec_id, cell, adc_d
+       |SELECT qid, rnk, cid AS vec_id, cell, adc_d
        |FROM ivranked WHERE rnk <= $PqTopK
        |ORDER BY qid, rnk""".stripMargin
 
   // ---- ann_ivfpq_rerank: IVFADC shortlist + exact re-rank ------------------
-
-  /** Shortlist width for the exact re-rank stage (R in Jégou §VII's
-    * "re-ranking with source coding" recipe): the ADC pass keeps R ≫ k
-    * candidates, the exact pass re-scores only those R. */
-  val PqShortR = 20
 
   /** The composition a production deployment actually ships: IVFADC
     * produces a cheap R-candidate shortlist from codes alone, then the
     * exact full-vector distance re-ranks just those R rows — ADC
     * quantization error can reorder or drop true neighbors near the cut,
     * and the re-rank recovers every case where the true neighbor made the
-    * shortlist (certified by ann_ivfpq_rerank_recall vs the same exact-L2
-    * truth the whole recall family shares; the residual gap vs 10000 is
-    * pure shortlist miss — tune PqShortR/NProbe against it).
-    *
-    * Scale shape: the shortlist (queries × R ids) is an explicit
-    * `broadcast()` against the vector table, so fetching candidate
-    * payloads is a broadcast hash join touching R·queries full vectors —
-    * the corpus never shuffles and the exhaustive-scan cost the ADC stage
-    * avoided is not reintroduced. The re-rank itself is queries × R
-    * arithmetic. */
-  def annIvfPqRerank(spark: SparkSession, dir: String): DataFrame = {
-    val shortlist = ivfPqShortlist(spark, dir)
-      .select(col("qid"), col("vec_id"))
-    val base = Tables.embeddings(spark, dir).select(col("vec_id"), quant.as("qv"))
-    val qs = base.where(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("qid"), col("qv").as("qqv"))
-    base.join(broadcast(shortlist), "vec_id")
-      .join(broadcast(qs), "qid")
-      .withColumn("l2_d", l2sq(col("qv"), col("qqv")))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("l2_d"), col("vec_id"))))
-      .where(col("rnk") <= PqTopK)
-      .select(col("qid"), col("rnk").cast("long").as("rnk"), col("vec_id"),
-        col("l2_d"))
-      .orderBy("qid", "rnk")
-  }
+    * shortlist (certified by ann_ivfpq_rerank_recall; the residual gap vs
+    * 10000 is pure shortlist miss — tune PqShortR/NProbe against it).
+    * The re-score is queries × R arithmetic on broadcast-fetched payloads
+    * ([[rescore]]), so the corpus never shuffles. */
+  private def rerankList(spark: SparkSession, dir: String): DataFrame =
+    topK(rescore(ivfPqShortlist(spark, dir).select("qid", "cid"), l2Rows(spark, dir), l2Score),
+      PqTopK, ascending = true)
 
-  /** Oracle re-rank CTEs over an in-scope `ivranked` + `qvecs`; defines
-    * `ivrranked` (qid, vec_id, l2_d, rnk). */
+  def annIvfPqRerank(spark: SparkSession, dir: String): DataFrame =
+    distOut(rerankList(spark, dir), "l2_d")
+
+  /** Oracle exact re-rank `ivrranked` (qid, cid, l2_d, rnk ≤ PqTopK) of
+    * the in-scope `ivranked` shortlist. */
   private def IvfPqRerankCtes: String =
-    s"""ivshort AS (SELECT qid, vec_id FROM ivranked WHERE rnk <= $PqShortR),
-       |ivrr AS (
-       |  SELECT s.qid, s.vec_id,
-       |         CAST(list_reduce(list_transform(range(1, ${Dim + 1}),
-       |                i -> (b.qv[i] - q.qv[i]) * (b.qv[i] - q.qv[i])),
-       |              (x, y) -> x + y) AS BIGINT) AS l2_d
-       |  FROM ivshort s
-       |  JOIN qvecs b ON b.vec_id = s.vec_id
+    s"""ivrr AS (
+       |  SELECT s.qid, s.cid, CAST(${l2Sql("b.qv", "q.qv")} AS BIGINT) AS l2_d
+       |  FROM ivranked s
+       |  JOIN qvecs b ON b.vec_id = s.cid
        |  JOIN qvecs q ON q.vec_id = s.qid),
-       |ivrranked AS (
-       |  SELECT qid, vec_id, l2_d,
-       |         CAST(row_number() OVER (PARTITION BY qid ORDER BY l2_d, vec_id) AS BIGINT) AS rnk
-       |  FROM ivrr)""".stripMargin
+       |${rankSql("ivrranked", "qid, cid, l2_d", "ivrr", "l2_d, cid", PqTopK)}""".stripMargin
 
   def annIvfPqRerankSql: String =
     s"""WITH $VecCte,
@@ -2214,16 +1991,14 @@ object Similarity {
        |$PqCtesBody,
        |$IvfPqRetrievalCtes,
        |$IvfPqRerankCtes
-       |SELECT qid, rnk, vec_id, l2_d
-       |FROM ivrranked WHERE rnk <= $PqTopK
-       |ORDER BY qid, rnk""".stripMargin
+       |SELECT qid, rnk, cid AS vec_id, l2_d
+       |FROM ivrranked ORDER BY qid, rnk""".stripMargin
 
-  /** Recall@k of the re-ranked retrieval vs the shared exact-L2 truth:
-    * read against ann_ivfpq_recall, the delta is what exact re-ranking
-    * buys back at the same NProbe/NumCells routing. */
+  /** Recall@k of the re-ranked retrieval vs the exact-L2 truth: read
+    * against ann_ivfpq_recall, the delta is what exact re-ranking buys
+    * back at the same NProbe/NumCells routing. */
   def annIvfPqRerankRecall(spark: SparkSession, dir: String): DataFrame =
-    recallAgainstTruth(exactL2TopK(spark, dir),
-      annIvfPqRerank(spark, dir).select(col("qid"), col("vec_id").as("cid")))
+    recall(l2Truth(spark, dir), rerankList(spark, dir))
 
   def annIvfPqRerankRecallSql: String =
     s"""WITH $VecCte,
@@ -2232,20 +2007,17 @@ object Similarity {
        |$PqCtesBody,
        |$IvfPqRetrievalCtes,
        |$IvfPqRerankCtes,
-       |$PqTruthCtes,
-       |ret AS (SELECT qid, vec_id AS cid FROM ivrranked WHERE rnk <= $PqTopK)
-       |$RecallSelectSql""".stripMargin
+       |$L2TruthCte
+       |${recallSql("ex", "ivrranked")}""".stripMargin
 
   // ---- ann_ivfpq_recall: IVFADC retrieval vs exact-L2 truth ----------------
 
-  /** Recall@k of the composed IVFADC retrieval against the same exact-L2
-    * truth ann_pq_recall certifies against — the acceptance gate for the
+  /** Recall@k of the composed IVFADC retrieval against the exact-L2 truth
+    * ann_pq_recall certifies against — the acceptance gate for the
     * nprobe/NumCells setting: recall here < recall there is pure coarse-
-    * quantizer miss (the true neighbor's cell was not probed), the cost a
-    * deployment tunes NProbe against before shipping the routed index. */
+    * quantizer miss (the true neighbor's cell was not probed). */
   def annIvfPqRecall(spark: SparkSession, dir: String): DataFrame =
-    recallAgainstTruth(exactL2TopK(spark, dir),
-      annIvfPqSearch(spark, dir).select(col("qid"), col("vec_id").as("cid")))
+    recall(l2Truth(spark, dir), listIvfPq(spark, dir))
 
   def annIvfPqRecallSql: String =
     s"""WITH $VecCte,
@@ -2253,11 +2025,12 @@ object Similarity {
        |$IvfAssignCtes,
        |$PqCtesBody,
        |$IvfPqRetrievalCtes,
-       |$PqTruthCtes,
-       |ret AS (SELECT qid, vec_id AS cid FROM ivranked WHERE rnk <= $PqTopK)
-       |$RecallSelectSql""".stripMargin
+       |$L2TruthCte
+       |${recallSql("ex", s"(SELECT * FROM ivranked WHERE rnk <= $PqTopK)")}""".stripMargin
 
   // ---- ann_ivfpq_res_search: residual-encoding IVFADC ----------------------
+
+  private def residual(v: Column, c: Column): Column = zip_with(v, c, (x, y) => x - y)
 
   /** Residual per-(vector, subspace) rows: each indexed vector's offset
     * from its OWN cell centroid, split into PQ subspaces — the encoding
@@ -2267,38 +2040,24 @@ object Similarity {
     * same 3-bit-per-subspace budget buys strictly more precision; the
     * ADC estimate ‖(q−c) − (v−c)‖² cancels the cell centroid and
     * approximates the TRUE inter-vector distance, not distance-to-code.
-    * All arithmetic stays int64 tick-exact (residual = qv − sv,
-    * component-wise). Restricted to vectors with a cell (n2 > 0), like
-    * every IVF path. */
+    * All arithmetic stays int64 tick-exact. Restricted to vectors with a
+    * cell (n2 > 0), like every IVF path. */
   private def residualSubs(spark: SparkSession, dir: String): DataFrame =
     Tables.memoPersist(spark, s"sim.resSubs:$NumCells:$IvfIters:$dir") {
-      val v = vectors(spark, dir)
       val cells1 = cellAssignments(spark, dir).where(col("rnk") === 1)
         .select(col("avid"), col("seed_id"))
       val seeds = trainedCentroids(spark, dir)
         .select(col("seed_id"), col("sv").as("csv"))
-      val res = v.join(cells1, col("vec_id") === col("avid"))
+      val res = vectors(spark, dir).join(cells1, col("vec_id") === col("avid"))
         .join(broadcast(seeds), "seed_id")
-        .select(col("vec_id"), col("seed_id").as("cell"),
-          zip_with(col("qv"), col("csv"), (x, y) => x - y).as("rv"))
-      val subStructs = array((0 until PqM).map { m =>
-        struct(lit(m.toLong).as("m"), lit(1L << (3 * m)).as("mult"),
-          slice(col("rv"), m * PqSubDim + 1, PqSubDim).as("sv"))
-      }: _*)
-      res.select(col("vec_id"), col("cell"), explode(subStructs).as("s"))
-        .select(col("vec_id"), col("cell"), col("s.m").as("m"),
-          col("s.mult").as("mult"), col("s.sv").as("sv"))
+        .select(col("vec_id"), col("seed_id").as("cell"), residual(col("qv"), col("csv")).as("rv"))
+      subspaces(res, col("rv"), "vec_id", "cell")
     }
 
-  /** Residual codebooks: the same deterministic init + Lloyd convention
-    * as [[pqBooksIter]], trained on residual subvectors. */
+  /** Residual codebooks: [[trainBooks]] over residual subvectors. */
   private def resBooks(spark: SparkSession, dir: String): DataFrame =
     Tables.memoPersist(spark, s"sim.resBooks:$NumCells:$IvfIters:$PqIters:$dir") {
-      val subs = residualSubs(spark, dir)
-      var books = subs.where(col("vec_id") < PqK)
-        .select(col("m"), col("vec_id").as("j"), col("sv").as("cv"))
-      for (_ <- 1 to PqIters) books = pqLloydStep(subs, books)
-      books
+      trainBooks(residualSubs(spark, dir), PqIters)
     }
 
   /** Residual code index (vec_id, cell, m, mult, j, d), memoized. */
@@ -2308,59 +2067,34 @@ object Similarity {
         .select("vec_id", "cell", "m", "mult", "j", "d")
     }
 
-  /** Canonical (residual-encoding) IVFADC search: identical routing to
-    * [[annIvfPqSearch]], but the query's lookup table is built per
-    * PROBED CELL from the query's own residual against that cell —
-    * ‖(q−c)_m − codeword‖² — so the broadcast stays queries × nprobe ×
-    * PqM·PqK rows and the scan side is still one broadcast hash join
-    * against the memoized code index. */
-  def annIvfPqResSearch(spark: SparkSession, dir: String): DataFrame = {
-    val assign = cellAssignments(spark, dir)
-    val probes = assign.where(col("avid") < NumQueries && col("rnk") <= NProbe)
-      .select(col("avid").as("qid"), col("seed_id").as("pcell"))
+  /** The canonical (residual-encoding) IVFADC list: identical routing to
+    * the IVFADC list, but each query's LUT is built per PROBED CELL from
+    * the query's own residual against that cell — ‖(q−c)_m − codeword‖² —
+    * so the broadcast stays queries × nprobe × PqM·PqK rows. */
+  private def resList(spark: SparkSession, dir: String): DataFrame = {
     val seeds = trainedCentroids(spark, dir)
-      .select(col("seed_id"), col("sv").as("csv"))
+      .select(col("seed_id").as("cell"), col("sv").as("csv"))
     val q = vectors(spark, dir).where(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("qv"))
-    // per-(query, probed cell) residual, split into subspaces
-    val qres = probes.join(q, "qid")
-      .join(broadcast(seeds), col("pcell") === col("seed_id"))
-      .select(col("qid"), col("pcell"),
-        zip_with(col("qv"), col("csv"), (x, y) => x - y).as("rv"))
-    val qsubStructs = array((0 until PqM).map { m =>
-      struct(lit(m.toLong).as("m"), slice(col("rv"), m * PqSubDim + 1, PqSubDim).as("qsv"))
-    }: _*)
-    val lut = qres.select(col("qid"), col("pcell"), explode(qsubStructs).as("s"))
-      .select(col("qid"), col("pcell"), col("s.m").as("m"), col("s.qsv").as("qsv"))
-      .join(resBooks(spark, dir), "m")
-      .withColumn("pd", l2sq(col("qsv"), col("cv")))
-      .select(col("qid"), col("pcell"), col("m").as("lm"), col("j").as("lj"), col("pd"))
-    resCodes(spark, dir)
-      .join(broadcast(lut),
-        col("cell") === col("pcell") && col("m") === col("lm") && col("j") === col("lj"))
-      .where(col("qid") =!= col("vec_id"))
-      .groupBy("qid", "vec_id", "cell")
-      .agg(sum("pd").as("adc_d"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("adc_d"), col("vec_id"))))
-      .where(col("rnk") <= PqTopK)
-      .select(col("qid"), col("rnk").cast("long").as("rnk"), col("vec_id"),
-        col("cell"), col("adc_d"))
-      .orderBy("qid", "rnk")
+    val qres = probes(cellAssignments(spark, dir), NProbe).join(q, "qid")
+      .join(broadcast(seeds), "cell")
+      .select(col("qid"), col("cell"), residual(col("qv"), col("csv")).as("rv"))
+    val lut = adcLut(subspaces(qres, col("rv"), "qid", "cell"), resBooks(spark, dir))
+    topK(adcScan(resCodes(spark, dir), lut), PqTopK, ascending = true)
   }
 
-  /** Recall@k of the residual IVFADC retrieval against the shared
-    * exact-L2 truth: with identical routing, recall here minus
-    * ann_ivfpq_recall isolates what residual encoding buys back of the
-    * quantization loss — the acceptance comparison a deployment runs
-    * before choosing which code layout to build at 1e9 vectors. */
-  def annIvfPqResRecall(spark: SparkSession, dir: String): DataFrame =
-    recallAgainstTruth(exactL2TopK(spark, dir),
-      annIvfPqResSearch(spark, dir).select(col("qid"), col("vec_id").as("cid")))
+  def annIvfPqResSearch(spark: SparkSession, dir: String): DataFrame =
+    distOut(resList(spark, dir), "adc_d")
 
-  /** Shared residual-IVFADC oracle CTEs: residual subvectors off the
+  /** Recall@k of the residual IVFADC list against the exact-L2 truth:
+    * with identical routing, recall here minus ann_ivfpq_recall isolates
+    * what residual encoding buys back of the quantization loss. */
+  def annIvfPqResRecall(spark: SparkSession, dir: String): DataFrame =
+    recall(l2Truth(spark, dir), resList(spark, dir))
+
+  /** Residual-IVFADC oracle CTEs: residual subvectors off the
     * `cells`/`seeds` chain, PQ training over them (prefix `rq_`), the
-    * per-(query, probed-cell) residual LUT, and the ranked retrieval. */
+    * per-(query, probed-cell) residual LUT, and the ADC list `rranked`. */
   private def IvfPqResRetrievalCtes: String =
     s"""rsub AS (
        |  SELECT cl.cid AS vec_id, cl.cell AS cell, mm.m AS m,
@@ -2378,37 +2112,24 @@ object Similarity {
        |  JOIN vecs q ON p.qid = q.vec_id
        |  JOIN seeds s ON p.pcell = s.seed_id
        |  CROSS JOIN (SELECT unnest(range(0, $PqM)) AS m) mm),
-       |rlut AS (
-       |  SELECT r.qid, r.pcell, r.m, t.j, ${pqL2Sql("r.qsv", "t.cv")} AS pd
-       |  FROM rqres r JOIN rq_tc t ON r.m = t.m),
-       |radc AS (
-       |  SELECT l.qid, c.vec_id, c.cell, CAST(sum(l.pd) AS BIGINT) AS adc_d
-       |  FROM rq_r2 c
-       |  JOIN rlut l ON c.cell = l.pcell AND c.m = l.m AND c.j = l.j
-       |  WHERE l.qid <> c.vec_id
-       |  GROUP BY 1, 2, 3),
-       |rranked AS (
-       |  SELECT qid, vec_id, cell, adc_d,
-       |         CAST(row_number() OVER (PARTITION BY qid ORDER BY adc_d, vec_id) AS BIGINT) AS rnk
-       |  FROM radc)""".stripMargin
+       |${lutSql("rlut", "rqres", "rq_tc")},
+       |${adcSql("rranked", "rq_r2", "rlut", routed = true, PqTopK)}""".stripMargin
 
   def annIvfPqResSearchSql: String =
     s"""WITH $VecCte,
        |$IvfTrainCtes,
        |$IvfAssignCtes,
        |$IvfPqResRetrievalCtes
-       |SELECT qid, rnk, vec_id, cell, adc_d
-       |FROM rranked WHERE rnk <= $PqTopK
-       |ORDER BY qid, rnk""".stripMargin
+       |SELECT qid, rnk, cid AS vec_id, cell, adc_d
+       |FROM rranked ORDER BY qid, rnk""".stripMargin
 
   def annIvfPqResRecallSql: String =
     s"""WITH $VecCte,
        |$IvfTrainCtes,
        |$IvfAssignCtes,
        |$IvfPqResRetrievalCtes,
-       |$PqTruthCtes,
-       |ret AS (SELECT qid, vec_id AS cid FROM rranked WHERE rnk <= $PqTopK)
-       |$RecallSelectSql""".stripMargin
+       |$L2TruthCte
+       |${recallSql("ex", "rranked")}""".stripMargin
 
   // ---- ann_agreement: retrieval method-agreement matrix --------------------
 
@@ -2420,37 +2141,24 @@ object Similarity {
     * this scores every pair of paths against each other, which also
     * exposes when two approximations agree with each other but not with
     * the truth — correlated error that recall alone can't separate).
-    * All four lists reuse the production operators unchanged at a common
-    * k = LshK; n_common/n_a/n_b are exact integers and the overlap is
-    * integer fixed-point against the smaller list. Each source frame is
-    * queries×k rows, so every join here is broadcast-trivial however big
-    * the corpus — the cost is building the four retrievals, each already
-    * audited. */
+    * All four lists are the memoized production lists at a common k =
+    * LshK; n_common/n_a/n_b are exact integers and the overlap is integer
+    * fixed-point against the smaller list. */
   def annAgreement(spark: SparkSession, dir: String): DataFrame = {
     val k = LshK
-    // Each leg is a retrieval list of at most NumQueries×k rows (5×3 = 15
-    // here) — bounded by knobs, N-independent, so the union (≤ 60 rows)
-    // falls under SURVEY §5's bounded-collect rule. The four retrieval
-    // jobs still run sequentially (one index family in flight at a time,
-    // the round-11 peak-memory bound), but the overlap matrix over those
-    // ≤ 60 rows is computed on the driver: the previous shape paid four
-    // eager localCheckpoints plus a shuffled self-join + two aggregations
-    // to intersect 60 rows, which is why ann_agreement cost 5.4 s at
-    // sf0.1 while its four legs cost ~2.0 s run standalone (the round-11
-    // verdict's one real perf residual).
-    def leg(name: String, df: DataFrame): Array[(String, Long, Long)] =
+    // Each leg is at most NumQueries×k rows (5×3 = 15 here) — bounded by
+    // knobs, N-independent, so the union (≤ 60 rows) falls under SURVEY
+    // §5's bounded-collect rule, and the overlap matrix is computed on the
+    // driver instead of a shuffled self-join over 60 rows.
+    def leg(name: String, list: DataFrame): Array[(String, Long, Long)] =
       // bounded-collect: ≤ NumQueries×k rows per leg (knob product,
       // N-independent). CollectGateSpec-audited.
-      df.collect().map(r => (name, r.getLong(0), r.getLong(1)))
-    val lists =
-      leg("exact", listExact(spark, dir).where(col("rnk") <= k)
-        .select(col("qid"), col("cid"))) ++
-      leg("lsh", listLsh(spark, dir).where(col("aid") < NumQueries && col("rnk") <= k)
-        .select(col("aid"), col("bid"))) ++
-      leg("pq_adc", listPq(spark, dir).where(col("rnk") <= k)
-        .select(col("qid"), col("vec_id"))) ++
-      leg("ivfpq", listIvfPq(spark, dir).where(col("rnk") <= k)
-        .select(col("qid"), col("vec_id")))
+      list.where(col("rnk") <= k).select("qid", "cid").collect()
+        .map(r => (name, r.getLong(0), r.getLong(1)))
+    val lists = leg("exact", listExact(spark, dir)) ++
+      leg("lsh", listLsh(spark, dir).where(col("qid") < NumQueries)) ++
+      leg("pq_adc", listPq(spark, dir)) ++
+      leg("ivfpq", listIvfPq(spark, dir))
     val byMethod = lists.groupBy(_._1)
     val sets = byMethod.map { case (m, rs) => m -> rs.map(t => (t._2, t._3)).toSet }
     // every ordered method pair appears even at zero overlap; a top-k
@@ -2476,26 +2184,13 @@ object Similarity {
        |$PqCtesBody,
        |$PqSearchCtes,
        |$IvfPqRetrievalCtes,
-       |exact_l AS (
-       |  SELECT 'exact' AS method, qid, cid FROM (
-       |    SELECT qid, cid,
-       |           row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rnk
-       |    FROM bscored) r WHERE rnk <= $LshK),
-       |lsh_l AS (
-       |  SELECT 'lsh' AS method, qid, cid FROM (
-       |    SELECT aid AS qid, bid AS cid,
-       |           row_number() OVER (PARTITION BY aid ORDER BY cos DESC, bid) AS rnk
-       |    FROM (SELECT aid, bid, cos FROM spaired
-       |          UNION ALL
-       |          SELECT bid, aid, cos FROM spaired) d
-       |    WHERE aid < $NumQueries) r WHERE rnk <= $LshK),
-       |pq_l AS (
-       |  SELECT 'pq_adc' AS method, qid, vec_id AS cid FROM ranked WHERE rnk <= $LshK),
-       |ivf_l AS (
-       |  SELECT 'ivfpq' AS method, qid, vec_id AS cid FROM ivranked WHERE rnk <= $LshK),
+       |${cosTruthSql("exact_r", LshK)},
+       |${lshListSql(queries = true)},
        |lists AS (
-       |  SELECT * FROM exact_l UNION ALL SELECT * FROM lsh_l
-       |  UNION ALL SELECT * FROM pq_l UNION ALL SELECT * FROM ivf_l),
+       |  SELECT 'exact' AS method, qid, cid FROM exact_r
+       |  UNION ALL SELECT 'lsh', qid, cid FROM lsh
+       |  UNION ALL SELECT 'pq_adc', qid, cid FROM ranked WHERE rnk <= $LshK
+       |  UNION ALL SELECT 'ivfpq', qid, cid FROM ivranked WHERE rnk <= $LshK),
        |sizes AS (SELECT method, count(*) AS n FROM lists GROUP BY method),
        |common AS (
        |  SELECT a.method AS method_a, b.method AS method_b, count(*) AS n_common
@@ -2512,6 +2207,44 @@ object Similarity {
        |ORDER BY method_a, method_b""".stripMargin
 
   // ---- dedup_semantic: cluster-scoped semantic dedup (SemDeDup) ------------
+
+  /** (cell, gid, qv, n2): every distinct vector with its rank-1 cell. */
+  private def cellGroups(spark: SparkSession, dir: String): DataFrame = {
+    val cellOf = cellAssignments(spark, dir).where(col("rnk") === 1)
+      .select(col("avid").as("gid"), col("seed_id").as("cell"))
+    vecGroups(spark, dir).join(cellOf, "gid")
+      .select(col("cell"), col("gid"), col("qv"), col("n2"))
+  }
+
+  /** Directed within-cell group-pair exact cosines (cell, src, dst, cos),
+    * memoized: the cell-cohort pair scan is the shared kernel of the
+    * cell-scoped family — SemDeDup (dedup_semantic), the kNN label vote
+    * (label_noise) and the NN-Descent seed graph (ann_nn_graph's build)
+    * each re-derived the identical cohort join + cosine subtree per query
+    * before round 17 (guide §2.4: share the subtree, §5: recompute vs
+    * reuse). Self-pairs stay per-consumer: they are LINEAR in groups and
+    * each consumer wants a different projection of them.
+    *
+    * Footprint (r17 advice): rows = Σ_c g_c·(g_c−1) over cells (g_c =
+    * DISTINCT-vector groups in cell c, both directions), 4 narrow columns
+    * — quadratic in cell cohort size but group-level, never member-level.
+    * At the SemDeDup operating point NumCells tracks N/k (fixed target
+    * cell size k), so rows/cell stay ~k² and the frame scales LINEARLY
+    * with groups; MEMORY_AND_DISK spills rather than evicting other
+    * memos. If a stress point ever shows this frame dominating the store,
+    * persist only the union of consumer slices (threshold-filtered +
+    * per-src top-max(NndL, LnK+1)) instead of the full directed frame. */
+  private def cellPairCos(spark: SparkSession, dir: String): DataFrame =
+    Tables.memoPersist(spark, s"sim.cellPairCos:$NumCells:$IvfIters:$dir") {
+      val cg = cellGroups(spark, dir)
+      val a = cg.select(col("cell"), col("gid").as("src"),
+        col("qv").as("qa"), col("n2").as("na2"))
+      val b = cg.select(col("cell").as("cell_b"), col("gid").as("dst"),
+        col("qv").as("qb"), col("n2").as("nb2"))
+      a.join(b, col("cell") === col("cell_b") && col("src") =!= col("dst"))
+        .select(col("cell"), col("src"), col("dst"),
+          cosine(dot(col("qa"), col("qb")), col("na2"), col("nb2")).as("cos"))
+    }
 
   /** Semantic deduplication in embedding space, cluster-then-dedup shape
     * (SemDeDup, Abbas et al. 2023, arXiv:2303.09540 — public): vectors are
@@ -2536,39 +2269,6 @@ object Similarity {
     * pairs flat while the cells themselves stay an embarrassingly parallel
     * scan. The keeper window partitions by the dropped id, whose candidate
     * rows are bounded by its own cell population. */
-  /** Directed within-cell group-pair exact cosines (cell, src, dst, cos),
-    * memoized: the cell-cohort pair scan is the shared kernel of the
-    * cell-scoped family — SemDeDup (dedup_semantic), the kNN label vote
-    * (label_noise) and the NN-Descent seed graph (ann_nn_graph's build)
-    * each re-derived the identical cohort join + cosine subtree per query
-    * before round 17 (guide §2.4: share the subtree, §5: recompute vs
-    * reuse). Self-pairs stay per-consumer: they are LINEAR in groups and
-    * each consumer wants a different projection of them.
-    *
-    * Footprint (r17 advice): rows = Σ_c g_c·(g_c−1) over cells (g_c =
-    * DISTINCT-vector groups in cell c, both directions), 4 narrow columns
-    * — quadratic in cell cohort size but group-level, never member-level.
-    * At the SemDeDup operating point NumCells tracks N/k (fixed target
-    * cell size k), so rows/cell stay ~k² and the frame scales LINEARLY
-    * with groups; MEMORY_AND_DISK spills rather than evicting other
-    * memos. If a stress point ever shows this frame dominating the store,
-    * persist only the union of consumer slices (threshold-filtered +
-    * per-src top-max(NndL, LnK+1)) instead of the full directed frame. */
-  private def cellPairCos(spark: SparkSession, dir: String): DataFrame =
-    Tables.memoPersist(spark, s"sim.cellPairCos:$NumCells:$IvfIters:$dir") {
-      val cellOf = cellAssignments(spark, dir).where(col("rnk") === 1)
-        .select(col("avid").as("gid"), col("seed_id").as("cell"))
-      val cg = vecGroups(spark, dir).join(cellOf, "gid")
-        .select(col("cell"), col("gid"), col("qv"), col("n2"))
-      val a = cg.select(col("cell"), col("gid").as("src"),
-        col("qv").as("qa"), col("n2").as("na2"))
-      val b = cg.select(col("cell").as("cell_b"), col("gid").as("dst"),
-        col("qv").as("qb"), col("n2").as("nb2"))
-      a.join(b, col("cell") === col("cell_b") && col("src") =!= col("dst"))
-        .select(col("cell"), col("src"), col("dst"),
-          cosine(dot(col("qa"), col("qb")), col("na2"), col("nb2")).as("cos"))
-    }
-
   def dedupSemantic(spark: SparkSession, dir: String): DataFrame = {
     // Collapsed SemDeDup (round 11): the naive within-cell member join is
     // quadratic in duplicate multiplicity (identical vectors share a
@@ -2581,10 +2281,7 @@ object Similarity {
     // group's own gid standing in for the within-group candidates. The
     // group-pair join is flat in multiplicity; the expansion is
     // members × (few qualifying groups) — output-sized.
-    val cellOf = cellAssignments(spark, dir).where(col("rnk") === 1)
-      .select(col("avid").as("gid"), col("seed_id").as("cell"))
-    val cg = vecGroups(spark, dir).join(cellOf, "gid")
-      .select(col("cell"), col("gid"), col("qv"), col("n2"))
+    val cg = cellGroups(spark, dir)
     val cross = cellPairCos(spark, dir)
       .select(col("cell"), col("src"), col("dst"), cosE6(col("cos")).as("cos_e6"))
     val self = cg.select(col("cell"), col("gid").as("src"), col("gid").as("dst"),
@@ -2627,18 +2324,12 @@ object Similarity {
        |$IvfAssignCtes,
        |sdp AS (
        |  SELECT a.cell, a.cid AS aid, b.cid AS bid,
-       |         CAST(floor(
-       |           CAST(list_reduce(list_transform(range(1, ${Dim + 1}), i -> a.cv[i] * b.cv[i]), (x, y) -> x + y) AS DOUBLE)
-       |             / (sqrt(CAST(a.cn2 AS DOUBLE)) * sqrt(CAST(b.cn2 AS DOUBLE)))
-       |           * 1000000.0) AS BIGINT) AS cos_e6
+       |         ${e6Sql(cosSql(dotSql("a.cv", "b.cv"), "a.cn2", "b.cn2"))} AS cos_e6
        |  FROM cells a JOIN cells b ON a.cell = b.cell AND a.cid < b.cid),
-       |sdr AS (
-       |  SELECT cell, aid, bid, cos_e6,
-       |         row_number() OVER (PARTITION BY bid ORDER BY cos_e6 DESC, aid) AS rnk
-       |  FROM sdp WHERE cos_e6 >= $DupThresholdE6)
+       |${rankSql("sdr", "cell, aid, bid, cos_e6", s"sdp WHERE cos_e6 >= $DupThresholdE6",
+           "cos_e6 DESC, aid", 1, "bid")}
        |SELECT cell, bid AS vec_id, aid AS dup_of, cos_e6
-       |FROM sdr WHERE rnk = 1
-       |ORDER BY vec_id""".stripMargin
+       |FROM sdr ORDER BY vec_id""".stripMargin
 
   // ---- embed_prune: prototypicality-ranked data pruning --------------------
 
@@ -2686,7 +2377,7 @@ object Similarity {
        |$IvfAssignCtes,
        |epr AS (
        |  SELECT a.seed_id AS cell, v.vec_id,
-       |         CAST(floor(${cosToSeedSql("v", "s")} * 1000000.0) AS BIGINT) AS cos_e6
+       |         ${e6Sql(cosSql(dotSql("v.qv", "s.sv"), "v.n2", "s.sn2"))} AS cos_e6
        |  FROM assign a
        |  JOIN vecs v ON a.avid = v.vec_id
        |  JOIN seeds s ON a.seed_id = s.seed_id
@@ -2797,90 +2488,50 @@ object Similarity {
   // ---- ann_nprobe_sweep: recall-vs-routing tuning curve --------------------
 
   /** Recall@k as a function of nprobe (1..NProbeSweepMax) against the
-    * shared brute-force cosine truth — the tuning curve behind the IVF
-    * routing knob, the ANN analogue of dedup_threshold_sweep: a
-    * deployment reads where the curve plateaus before paying more
-    * probed cells per query. Reuses the memoized assignment frame for
-    * every sweep point (the per-point delta is WHICH ranked cells count
-    * as probes, not new scans), scores candidates with the family's one
-    * cosine definition, and reports per (nprobe, query) hits so query-
-    * level routing misses stay visible next to the mean.
+    * exact-cosine truth — the tuning curve behind the IVF routing knob,
+    * the ANN analogue of dedup_threshold_sweep: a deployment reads where
+    * the curve plateaus before paying more probed cells per query.
+    * Reports per (nprobe, query) hits so query-level routing misses stay
+    * visible next to the mean; the output is always NProbeSweepMax ×
+    * queries rows.
     *
-    * Scale shape: per sweep point the scan touches only the probed
-    * cells' members (the annIvf shape); the truth side is the bounded
-    * brute-force query scan every recall cert already shares; output is
-    * NProbeSweepMax × queries rows. */
+    * One probe scan serves every sweep point: a vector belongs to exactly
+    * ONE cell, so a (qid, cid) candidate comes from exactly one probe, and
+    * the nprobe-point list is the candidates of probe rank ≤ nprobe — each
+    * candidate explodes to the points it takes part in (prnk..MAX) and one
+    * (nprobe, qid) top-k cut + truth join + aggregate serves the curve. */
   val NProbeSweepMax = 4
 
   def annNprobeSweep(spark: SparkSession, dir: String): DataFrame = {
-    val v = vectors(spark, dir)
-    val assign = cellAssignments(spark, dir)
-    val cells = assign.where(col("rnk") === 1)
-      .select(col("avid").as("cid"), col("seed_id").as("cell"))
-      .join(v, col("cid") === col("vec_id"))
-      .select(col("cid"), col("cell"), col("qv").as("cv"), col("n2").as("cn2"))
-    val q = v.where(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("qvid"), col("qv").as("qqv"), col("n2").as("qn2"))
-    val truth = scoredNeighbors(spark, dir, TopK)
-      .select(col("qid").as("tqid"), col("vec_id").as("tcid"))
-    // One candidate pass for every sweep point (round 17): a base vector
-    // belongs to exactly ONE cell, so a (qid, cid) candidate is produced
-    // by exactly one probe — the one whose cell holds cid — and the
-    // np-point shortlist is just "candidates whose probe rank ≤ np".
-    // The former per-np loop re-ran the probes→query→cells join chain,
-    // the scoring, and the truth join once per sweep point (4× the
-    // joins for identical candidate work); now the chain runs once at
-    // rnk ≤ NProbeSweepMax carrying the probe rank, each candidate
-    // explodes to the sweep points it participates in (prnk..MAX), and
-    // ONE (nprobe, qid) window + truth join + aggregate serves the whole
-    // curve. Per-point shortlists, ranks, and counts are unchanged.
-    val perNpAll = {
-      val probes = assign.where(col("avid") < NumQueries &&
-          col("rnk") <= NProbeSweepMax)
-        .select(col("avid").as("qid"), col("seed_id").as("pcell"),
-          col("rnk").cast("long").as("prnk"))
-      probes.join(q, col("qid") === col("qvid"))
-        .join(cells, col("pcell") === col("cell") && col("cid") =!= col("qid"))
-        .withColumn("cos", cosine(dot(col("qqv"), col("cv")), col("qn2"), col("cn2")))
-        .select(col("qid"), col("cid"), col("cos"),
-          explode(sequence(col("prnk"), lit(NProbeSweepMax.toLong))).as("nprobe"))
-        .withColumn("rrnk", row_number().over(
-          Window.partitionBy("nprobe", "qid").orderBy(col("cos").desc, col("cid"))))
-        .where(col("rrnk") <= TopK)
-        .join(truth, col("qid") === col("tqid") && col("cid") === col("tcid"))
-        .groupBy("nprobe", "qid").agg(count(lit(1)).as("n_hits"))
-    }
-    // Left-join from the full probes × queries domain: a (nprobe, qid)
-    // point whose shortlist hits NOTHING in the truth set must appear as
-    // an explicit n_hits = 0 row — dropping it would leave silent gaps
-    // in the tuning curve exactly where routing fails hardest (the
-    // output contract is NProbeSweepMax × queries rows, always).
-    val domain = (1 to NProbeSweepMax).map { np =>
-      q.select(col("qvid").as("qid")).withColumn("nprobe", lit(np.toLong))
-    }.reduce(_.unionByName(_))
-    domain.join(perNpAll, Seq("nprobe", "qid"), "left")
+    val truth = cosineTruth(spark, dir, TopK)
+      .select(col("qid").as("tqid"), col("cid").as("tcid"))
+    val cands = probeScan(spark, dir, cellAssignments(spark, dir), NProbeSweepMax)
+      .select(col("qid"), col("cid"), col("score"),
+        explode(sequence(col("prnk"), lit(NProbeSweepMax.toLong))).as("nprobe"))
+    val perNp = topK(cands, TopK, by = Seq("nprobe", "qid"))
+      .join(truth, col("qid") === col("tqid") && col("cid") === col("tcid"))
+      .groupBy("nprobe", "qid").agg(count(lit(1)).as("n_hits"))
+    // a (nprobe, qid) point whose list hits nothing in the truth is an
+    // explicit n_hits = 0 row, not a gap in the curve
+    val qids = vectors(spark, dir).where(col("vec_id") < NumQueries).select(col("vec_id").as("qid"))
+    val domain = (1 to NProbeSweepMax).map(np => qids.withColumn("nprobe", lit(np.toLong)))
+      .reduce(_.unionByName(_))
+    domain.join(perNp, Seq("nprobe", "qid"), "left")
       .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
       .withColumn("recall_e4", expr(s"(10000 * n_hits) div $TopK"))
       .select("nprobe", "qid", "n_hits", "recall_e4")
       .orderBy("nprobe", "qid")
   }
 
+  /** Oracle twin: one independent probe scan + top-k cut per sweep point. */
   def annNprobeSweepSql: String = {
     val points = (1 to NProbeSweepMax).map { np =>
-      s"""swp$np AS (
-         |  SELECT p.qid, c.cid,
-         |         row_number() OVER (PARTITION BY p.qid ORDER BY
-         |           CAST(list_reduce(list_transform(range(1, ${Dim + 1}), i -> q.qv[i] * c.cv[i]), (x, y) -> x + y) AS DOUBLE)
-         |             / (sqrt(CAST(q.n2 AS DOUBLE)) * sqrt(CAST(c.cn2 AS DOUBLE))) DESC,
-         |           c.cid) AS rrnk
-         |  FROM (SELECT avid AS qid, seed_id AS pcell FROM assign
-         |        WHERE avid < $NumQueries AND rnk <= $np) p
-         |  JOIN vecs q ON p.qid = q.vec_id
-         |  JOIN cells c ON p.pcell = c.cell AND c.cid <> p.qid),
+      s"""${probeScanSql(s"sws$np", "(SELECT avid AS qid, seed_id AS pcell FROM assign\n" +
+             s"        WHERE avid < $NumQueries AND rnk <= $np)", "cells")},
+         |${rankSql(s"swp$np", "qid, cid", s"sws$np", "cos DESC, cid", TopK)},
          |swh$np AS (
          |  SELECT $np AS nprobe, s.qid, CAST(count(*) AS BIGINT) AS n_hits
          |  FROM swp$np s JOIN struth t ON s.qid = t.qid AND s.cid = t.cid
-         |  WHERE s.rrnk <= $TopK
          |  GROUP BY s.qid)""".stripMargin
     }.mkString(",\n")
     val unions = (1 to NProbeSweepMax).map(np => s"SELECT * FROM swh$np")
@@ -2889,11 +2540,7 @@ object Similarity {
        |$IvfTrainCtes,
        |$IvfAssignCtes,
        |$BruteScoredCte,
-       |struth AS (
-       |  SELECT qid, cid FROM (
-       |    SELECT qid, cid,
-       |           row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rnk
-       |    FROM bscored) r WHERE rnk <= $TopK),
+       |${cosTruthSql("struth", TopK)},
        |$points,
        |swall AS (
        |  $unions),
@@ -3267,10 +2914,7 @@ object Similarity {
     val kp = LnK + 1
     val v = vectors(spark, dir)
     val m = vecMembers(spark, dir)
-    val cellOf = cellAssignments(spark, dir).where(col("rnk") === 1)
-      .select(col("avid").as("gid"), col("seed_id").as("cell"))
-    val cg = vecGroups(spark, dir).join(cellOf, "gid")
-      .select(col("cell"), col("gid"), col("qv"), col("n2"))
+    val cg = cellGroups(spark, dir)
     val directed = cellPairCos(spark, dir)
       .select(col("src"), col("dst"), col("cos"))
       .unionByName(cg.select(col("gid").as("src"), col("gid").as("dst"),
@@ -3339,24 +2983,16 @@ object Similarity {
        |  FROM cells c JOIN vecs v ON c.cid = v.vec_id),
        |lnp AS (
        |  SELECT a.vec_id, a.label, b.label AS blabel, b.vec_id AS bid,
-       |         CAST(list_reduce(list_transform(range(1, ${Dim + 1}), i -> a.cv[i] * b.cv[i]), (x, y) -> x + y) AS DOUBLE)
-       |           / (sqrt(CAST(a.cn2 AS DOUBLE)) * sqrt(CAST(b.cn2 AS DOUBLE))) AS cos
+       |         ${cosSql(dotSql("a.cv", "b.cv"), "a.cn2", "b.cn2")} AS cos
        |  FROM lnm a JOIN lnm b ON a.cell = b.cell AND a.vec_id <> b.vec_id),
-       |lnn AS (
-       |  SELECT vec_id, label, blabel,
-       |         row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, bid) AS nrnk
-       |  FROM lnp),
+       |${rankSql("lnn", "vec_id, label, blabel", "lnp", "cos DESC, bid", LnK, "vec_id")},
        |lnv AS (
        |  SELECT vec_id, label, blabel, count(*) AS votes
-       |  FROM lnn WHERE nrnk <= $LnK GROUP BY vec_id, label, blabel),
-       |lnw AS (
-       |  SELECT vec_id, label, blabel,
-       |         row_number() OVER (PARTITION BY vec_id ORDER BY votes DESC, blabel) AS vrnk
-       |  FROM lnv)
+       |  FROM lnn GROUP BY vec_id, label, blabel),
+       |${rankSql("lnw", "vec_id, label, blabel", "lnv", "votes DESC, blabel", 1, "vec_id")}
        |SELECT label AS true_label, blabel AS voted_label,
        |       CAST(count(*) AS BIGINT) AS n_vecs
-       |FROM lnw WHERE vrnk = 1
-       |GROUP BY label, blabel
+       |FROM lnw GROUP BY label, blabel
        |ORDER BY true_label, voted_label""".stripMargin
 
   // ---- ann_hard_neg_shortlist: shortlist-mined hard negatives --------------
@@ -3377,29 +3013,13 @@ object Similarity {
     * the acceptance baseline, priced only at certification time (same
     * contract as the recall certs). */
   def annHardNegShortlist(spark: SparkSession, dir: String): DataFrame = {
-    val v = vectors(spark, dir)
-    val q = v.where(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-        col("qv").as("qa"), col("n2").as("qn2"))
-    val mined = ivfPqShortlist(spark, dir)
-      .select(col("qid").as("sqid"), col("vec_id"))
-      .join(v, "vec_id")
-      .join(broadcast(q), col("sqid") === col("qid"))
-      .where(col("label") =!= col("qlabel"))
-      .withColumn("cos", cosine(dot(col("qa"), col("qv")), col("qn2"), col("n2")))
-      .withColumn("mrnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))))
-      .where(col("mrnk") === 1)
-      .select(col("qid"), col("vec_id").as("neg_id"), cosE6(col("cos")).as("neg_cos_e6"))
-    // bounded-cross: broadcast query table, <= NumQueries rows
-    val exact = v.crossJoin(broadcast(q))
-      .where(col("qid") =!= col("vec_id") && col("label") =!= col("qlabel"))
-      .withColumn("cos", cosine(dot(col("qa"), col("qv")), col("qn2"), col("n2")))
-      .withColumn("ernk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))))
-      .where(col("ernk") === 1)
-      .select(col("qid"), col("qlabel").as("label"),
-        col("vec_id").as("exact_neg_id"), cosE6(col("cos")).as("exact_neg_cos_e6"))
+    val wrongLabel = col("label") =!= col("q_label")
+    val shortlist = ivfPqShortlist(spark, dir).select("qid", "cid")
+    val mined = topK(rescore(shortlist, vecRows(spark, dir), cosScore).where(wrongLabel), 1)
+      .select(col("qid"), col("cid").as("neg_id"), cosE6(col("score")).as("neg_cos_e6"))
+    val exact = topK(cosineScan(spark, dir).where(wrongLabel), 1)
+      .select(col("qid"), col("q_label").as("label"),
+        col("cid").as("exact_neg_id"), cosE6(col("score")).as("exact_neg_cos_e6"))
     exact.join(mined, Seq("qid"), "left")
       .withColumn("agree",
         when(col("neg_id") === col("exact_neg_id"), 1L).otherwise(0L))
@@ -3414,38 +3034,21 @@ object Similarity {
        |$IvfAssignCtes,
        |$PqCtesBody,
        |$IvfPqRetrievalCtes,
-       |hsl AS (SELECT qid, vec_id FROM ivranked WHERE rnk <= $PqShortR),
        |hm0 AS (
-       |  SELECT s.qid, b.vec_id AS cid,
-       |         $CosSql AS cos
-       |  FROM hsl s
-       |  JOIN vecs b ON s.vec_id = b.vec_id
+       |  SELECT s.qid, b.vec_id AS cid, $CosAB AS cos
+       |  FROM ivranked s
+       |  JOIN vecs b ON s.cid = b.vec_id
        |  JOIN vecs a ON s.qid = a.vec_id
        |  WHERE b.label <> a.label),
-       |hmr AS (
-       |  SELECT qid, cid, cos,
-       |         row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS mrnk
-       |  FROM hm0),
-       |hm AS (
-       |  SELECT qid, cid AS neg_id,
-       |         CAST(floor(cos * 1000000.0) AS BIGINT) AS neg_cos_e6
-       |  FROM hmr WHERE mrnk = 1),
+       |${rankSql("hm", "qid, cid, cos", "hm0", "cos DESC, cid", 1)},
        |he0 AS (
-       |  SELECT a.vec_id AS qid, a.label AS qlabel, b.vec_id AS cid,
-       |         $CosSql AS cos
+       |  SELECT a.vec_id AS qid, a.label AS qlabel, b.vec_id AS cid, $CosAB AS cos
        |  FROM vecs a JOIN vecs b
        |    ON a.vec_id < $NumQueries AND a.vec_id <> b.vec_id AND b.label <> a.label),
-       |her AS (
-       |  SELECT qid, qlabel, cid, cos,
-       |         row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS ernk
-       |  FROM he0),
-       |he AS (
-       |  SELECT qid, qlabel, cid AS exact_neg_id,
-       |         CAST(floor(cos * 1000000.0) AS BIGINT) AS exact_neg_cos_e6
-       |  FROM her WHERE ernk = 1)
-       |SELECT e.qid, e.qlabel AS label, m.neg_id, m.neg_cos_e6,
-       |       e.exact_neg_id, e.exact_neg_cos_e6,
-       |       CASE WHEN m.neg_id = e.exact_neg_id THEN 1 ELSE 0 END AS agree
+       |${rankSql("he", "qid, qlabel, cid, cos", "he0", "cos DESC, cid", 1)}
+       |SELECT e.qid, e.qlabel AS label, m.cid AS neg_id, ${e6Sql("m.cos")} AS neg_cos_e6,
+       |       e.cid AS exact_neg_id, ${e6Sql("e.cos")} AS exact_neg_cos_e6,
+       |       CASE WHEN m.cid = e.cid THEN 1 ELSE 0 END AS agree
        |FROM he e LEFT JOIN hm m ON e.qid = m.qid
        |ORDER BY e.qid""".stripMargin
 
@@ -3486,15 +3089,8 @@ object Similarity {
     * seed edges). The memoized graph is nodes × L edges. */
   private def nndGraph(spark: SparkSession, dir: String): DataFrame =
     Tables.memoPersist(spark, s"sim.nndGraph:$NndL:$NumCells:$IvfIters:$dir") {
-      val cellOf = cellAssignments(spark, dir).where(col("rnk") === 1)
-        .select(col("avid").as("gid"), col("seed_id").as("cell"))
-      val cg = vecGroups(spark, dir).join(cellOf, "gid")
-        .select(col("cell"), col("gid"), col("qv"), col("n2"))
-      val seed = cellPairCos(spark, dir)
-        .withColumn("srnk", row_number().over(
-          Window.partitionBy("src").orderBy(col("cos").desc, col("dst"))))
-        .where(col("srnk") <= NndL)
-        .select("src", "dst")
+      val cg = cellGroups(spark, dir)
+      val seed = nndSeed(spark, dir).select("src", "dst")
       val ring = nndRing(cg)
       val trav = seed.unionByName(ring).distinct()
       val sym = trav.unionByName(
@@ -3506,17 +3102,19 @@ object Similarity {
         .unionByName(trav)
         .distinct()
       val gv = cg.select(col("gid"), col("qv"), col("n2"))
-      cand
+      val scored = cand
         .join(gv.select(col("gid").as("src"),
           col("qv").as("qa"), col("n2").as("na2")), Seq("src"))
         .join(gv.select(col("gid").as("dst"),
           col("qv").as("qb"), col("n2").as("nb2")), Seq("dst"))
         .withColumn("cos", cosine(dot(col("qa"), col("qb")), col("na2"), col("nb2")))
-        .withColumn("grnk", row_number().over(
-          Window.partitionBy("src").orderBy(col("cos").desc, col("dst"))))
-        .where(col("grnk") <= NndL)
-        .select("src", "dst", "cos")
+      topK(scored, NndL, by = Seq("src"), score = "cos", id = "dst").select("src", "dst", "cos")
     }
+
+  /** The seed graph (src, dst, cos, rnk): each node's top-NndL cell-mates
+    * by exact cosine. */
+  private def nndSeed(spark: SparkSession, dir: String): DataFrame =
+    topK(cellPairCos(spark, dir), NndL, by = Seq("src"), score = "cos", id = "dst")
 
   /** Two deterministic ring edges per node: successors in the
     * (hash, gid)-ordered ring, windowed within hash buckets — bounded
@@ -3539,71 +3137,42 @@ object Similarity {
 
   /** Structural probes for NndSpec: the seed graph (scored) and the
     * refined graph, both rep-level (src, dst, cos). */
-  private[graft] def nndSeedProbe(spark: SparkSession, dir: String): DataFrame = {
-    val cellOf = cellAssignments(spark, dir).where(col("rnk") === 1)
-      .select(col("avid").as("gid"), col("seed_id").as("cell"))
-    val cg = vecGroups(spark, dir).join(cellOf, "gid")
-      .select(col("cell"), col("gid"), col("qv"), col("n2"))
-    val a = cg.select(col("cell"), col("gid").as("src"),
-      col("qv").as("qa"), col("n2").as("na2"))
-    val b = cg.select(col("cell").as("cell_b"), col("gid").as("dst"),
-      col("qv").as("qb"), col("n2").as("nb2"))
-    a.join(b, col("cell") === col("cell_b") && col("src") =!= col("dst"))
-      .withColumn("cos", cosine(dot(col("qa"), col("qb")), col("na2"), col("nb2")))
-      .withColumn("srnk", row_number().over(
-        Window.partitionBy("src").orderBy(col("cos").desc, col("dst"))))
-      .where(col("srnk") <= NndL)
-      .select("src", "dst", "cos")
-  }
+  private[graft] def nndSeedProbe(spark: SparkSession, dir: String): DataFrame =
+    nndSeed(spark, dir).select("src", "dst", "cos")
   private[graft] def nndGraphProbe(spark: SparkSession, dir: String): DataFrame =
     nndGraph(spark, dir)
 
-  /** Per-query readout of the refined graph: the query's group node, its
-    * top-TopK refined neighbors by exact cosine. */
-  def annNnGraph(spark: SparkSession, dir: String): DataFrame = {
+  /** The refined graph's per-query list: the query's group node and its
+    * top-TopK refined neighbors by exact cosine (cid = neighbor gid). */
+  private def nnList(spark: SparkSession, dir: String): DataFrame = {
     val qg = vecMembers(spark, dir).where(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("gid"))
-    qg.join(nndGraph(spark, dir), col("gid") === col("src"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("dst"))))
-      .where(col("rnk") <= TopK)
-      .select(col("qid"), col("rnk"), col("dst").as("nbr_gid"),
-        cosE6(col("cos")).as("cos_e6"))
-      .orderBy("qid", "rnk")
+    topK(qg.join(nndGraph(spark, dir), col("gid") === col("src"))
+      .select(col("qid"), col("dst").as("cid"), col("cos").as("score")), TopK)
   }
 
-  /** Recall@TopK of the refined graph's neighbor lists against the exact
-    * rep-level cosine truth for the query set — the certification row
-    * that makes the graph build a measured index, not a hopeful one
-    * (the ann_recall pattern applied to the graph family). Both sides
-    * are group-level: exact truth ranks ALL distinct vectors for each
-    * query group (bounded broadcast: ≤ NumQueries rows fan the group
-    * frame), retrieval reads the memoized graph. */
-  def annNnGraphRecall(spark: SparkSession, dir: String): DataFrame = {
-    val qg = vecMembers(spark, dir).where(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("qid"), col("gid"))
-    val gv = vecGroups(spark, dir).select(col("gid"), col("qv"), col("n2"))
-    // bounded non-equi side: ≤ NumQueries query groups broadcast
-    val truth = qg
-      .join(gv.select(col("gid"), col("qv").as("qqv"), col("n2").as("qn2")), "gid")
-      .join(gv.select(col("gid").as("cgid"),
-        col("qv").as("cv"), col("n2").as("cn2")), col("cgid") =!= col("gid"))
-      .withColumn("cos", cosine(dot(col("qqv"), col("cv")), col("qn2"), col("cn2")))
-      .withColumn("ernk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("cgid"))))
-      .where(col("ernk") <= TopK)
-      .select(col("qid"), col("cgid"))
-    val got = annNnGraph(spark, dir)
-      .select(col("qid").as("g_qid"), col("nbr_gid"))
-    truth
-      .join(got, col("qid") === col("g_qid") && col("cgid") === col("nbr_gid"),
-        "left")
-      .groupBy("qid")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(when(col("nbr_gid").isNotNull, 1L).otherwise(0L)).as("n_hits"))
-      .withColumn("recall_e4", expr("(n_hits * 10000) div n_exact"))
-      .orderBy("qid")
+  def annNnGraph(spark: SparkSession, dir: String): DataFrame =
+    nnList(spark, dir)
+      .select(col("qid"), col("rnk"), col("cid").as("nbr_gid"), cosE6(col("score")).as("cos_e6"))
+      .orderBy("qid", "rnk")
+
+  /** The group-level exact-cosine truth: for each query, the TopK
+    * DISTINCT vectors nearest its group, its own group excluded — the
+    * brute scan over the group frame, with the ≤ NumQueries query groups
+    * broadcast. */
+  private[graft] def groupTruth(spark: SparkSession, dir: String): DataFrame = {
+    val g = vecGroups(spark, dir).select(col("gid").as("cid"), col("qv"), col("n2"))
+    val q = vecMembers(spark, dir).where(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("qid"), col("gid").as("qcid"))
+      .join(g.select(col("cid").as("qcid"), col("qv").as("q_qv"), col("n2").as("q_n2")), "qcid")
+    topK(bruteScan(g, q, cosScore), TopK)
   }
+
+  /** Recall@TopK of the refined graph's lists against the group-level
+    * truth — the certification that makes the graph build a measured
+    * index (the ann_recall pattern applied to the graph family). */
+  def annNnGraphRecall(spark: SparkSession, dir: String): DataFrame =
+    recall(groupTruth(spark, dir), nnList(spark, dir))
 
   // ---- embed_jl_audit: Johnson-Lindenstrauss projection distortion --------
 
@@ -3716,13 +3285,9 @@ object Similarity {
        |    ON c.avid = g.gid
        |  JOIN vecs v ON v.vec_id = g.gid),
        |sd0 AS (
-       |  SELECT a.gid AS src, b.gid AS dst, $CosSql AS cos
+       |  SELECT a.gid AS src, b.gid AS dst, $CosAB AS cos
        |  FROM cg a JOIN cg b ON a.cell = b.cell AND a.gid <> b.gid),
-       |seed AS (
-       |  SELECT src, dst FROM (
-       |    SELECT src, dst,
-       |           row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS rnk
-       |    FROM sd0) r WHERE rnk <= $NndL),
+       |${rankSql("seed", "src, dst", "sd0", "cos DESC, dst", NndL, "src")},
        |ring0 AS (
        |  SELECT gid,
        |         gid % ${TextStats.FpMod} * ${graft.functions.HashExprs.Mix1}
@@ -3747,52 +3312,30 @@ object Similarity {
        |    JOIN sym e2 ON e1.dst = e2.src AND e1.src <> e2.dst
        |    UNION ALL SELECT src, dst FROM trav) u),
        |sc AS (
-       |  SELECT c.src, c.dst, $CosSql AS cos
+       |  SELECT c.src, c.dst, $CosAB AS cos
        |  FROM cand c JOIN gv a ON c.src = a.gid JOIN gv b ON c.dst = b.gid),
-       |graph AS (
-       |  SELECT src, dst, cos FROM (
-       |    SELECT src, dst, cos,
-       |           row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS rnk
-       |    FROM sc) r WHERE rnk <= $NndL),
+       |${rankSql("graph", "src, dst, cos", "sc", "cos DESC, dst", NndL, "src")},
        |qm AS (
        |  SELECT v.vec_id AS qid, e.gid FROM vecs v
        |  JOIN egroups e ON v.qv = e.qv
-       |  WHERE v.vec_id < $NumQueries)""".stripMargin
+       |  WHERE v.vec_id < $NumQueries),
+       |${rankSql("got", "q.qid, g.dst AS cid, g.cos", "qm q JOIN graph g ON g.src = q.gid",
+           "g.cos DESC, g.dst", TopK, "q.qid")}""".stripMargin
 
   def annNnGraphSql: String =
     s"""WITH $VecCte,
        |$IvfTrainCtes,
        |$IvfAssignCtes,
        |$NndCtes
-       |SELECT qid, rnk, dst AS nbr_gid,
-       |       CAST(floor(cos * 1000000.0) AS BIGINT) AS cos_e6
-       |FROM (
-       |  SELECT q.qid, g.dst, g.cos,
-       |         row_number() OVER (PARTITION BY q.qid ORDER BY g.cos DESC, g.dst) AS rnk
-       |  FROM qm q JOIN graph g ON g.src = q.gid) r
-       |WHERE rnk <= $TopK
-       |ORDER BY qid, rnk""".stripMargin
+       |SELECT qid, rnk, cid AS nbr_gid, ${e6Sql("cos")} AS cos_e6
+       |FROM got ORDER BY qid, rnk""".stripMargin
 
   def annNnGraphRecallSql: String =
     s"""WITH $VecCte,
        |$IvfTrainCtes,
        |$IvfAssignCtes,
        |$NndCtes,
-       |truth AS (
-       |  SELECT qid, cgid FROM (
-       |    SELECT q.qid, b.gid AS cgid,
-       |           row_number() OVER (PARTITION BY q.qid ORDER BY ($CosSql) DESC, b.gid) AS ernk
-       |    FROM qm q JOIN gv a ON a.gid = q.gid
-       |    JOIN gv b ON b.gid <> q.gid) r WHERE ernk <= $TopK),
-       |got AS (
-       |  SELECT qid, dst FROM (
-       |    SELECT q.qid, g.dst,
-       |           row_number() OVER (PARTITION BY q.qid ORDER BY g.cos DESC, g.dst) AS rnk
-       |    FROM qm q JOIN graph g ON g.src = q.gid) r WHERE rnk <= $TopK)
-       |SELECT t.qid, count(*) AS n_exact,
-       |       CAST(sum(CASE WHEN g.dst IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       |       (CAST(sum(CASE WHEN g.dst IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-       |         * 10000) // count(*) AS recall_e4
-       |FROM truth t LEFT JOIN got g ON t.qid = g.qid AND t.cgid = g.dst
-       |GROUP BY t.qid ORDER BY t.qid""".stripMargin
+       |${rankSql("truth", "q.qid, b.gid AS cid", "qm q JOIN gv a ON a.gid = q.gid JOIN gv b ON b.gid <> q.gid",
+           s"$CosAB DESC, b.gid", TopK, "q.qid")}
+       |${recallSql("truth", "got")}""".stripMargin
 }

@@ -185,7 +185,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("knn_classify prediction is exactly the majority vote of the shared neighbor scan") {
-    val neighbors = Similarity.scoredNeighborsProbe(spark, Sf0001, Similarity.KnnK)
+    val neighbors = Similarity.cosineTruth(spark, Sf0001, Similarity.KnnK)
       .select(col("qid"), col("rnk"), col("label")).collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Int]("rnk"), r.getAs[Long]("label")))
     // recompute the vote in plain Scala: (votes desc, label asc) winner

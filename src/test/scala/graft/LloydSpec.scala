@@ -2,7 +2,8 @@ package graft
 
 import graft.ops.Similarity
 
-/** Pins the multi-iteration Lloyd knob (GRAFT_IVF_ITERS / GRAFT_PQ_ITERS):
+/** Pins Lloyd training over 1..3 iterations (the iteration parameter of
+  * the IVF centroid and PQ codebook trainers; the engine trains one):
   * the k-means objective must be monotone in the iteration count on the
   * deterministic test corpus, i.e. extra training passes only ever tighten
   * the IVF cells and PQ codebooks — through the engine's floor-quantized

@@ -25,6 +25,23 @@ class SweepCompositionSpec extends SparkSpec {
     }
   }
 
+  test("nprobe sweep at NProbe counts ann_ivf's hits in the exact top-k") {
+    val exact = Similarity.annTopk(spark, Sf0001).select("qid", "cid").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val hits = Similarity.annIvf(spark, Sf0001).select("qid", "cid").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).filter(exact)
+      .groupBy(_._1).map { case (qid, rs) => qid -> rs.length.toLong }
+    val sweep = Similarity.annNprobeSweep(spark, Sf0001)
+      .where(col("nprobe") === Similarity.NProbe).collect()
+      .map(r => r.getAs[Long]("qid") -> r.getAs[Long]("n_hits")).toMap
+    assert(sweep.nonEmpty)
+    assert(hits.keySet.subsetOf(sweep.keySet), "ann_ivf answered a query the sweep lacks")
+    sweep.foreach { case (qid, n) =>
+      assert(n === hits.getOrElse(qid, 0L),
+        s"query $qid: sweep n_hits at nprobe=${Similarity.NProbe} disagrees with ann_ivf")
+    }
+  }
+
   test("curation_e2e totals equal the segment_keep_k ledger") {
     val e2e = Clean.curationE2e(spark, Sf0001)
       .agg(sum("segs_total"), sum("segs_kept"), sum("tokens_kept")).head
