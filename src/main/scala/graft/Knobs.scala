@@ -8,8 +8,8 @@ package graft
   * 10× data growth (round-8 verdict, "What's wrong" #1-2).
   *
   * Resolution order per knob: explicit env override (GRAFT_IVF_CELLS,
-  * GRAFT_LSH_PLANES, GRAFT_LSH_TABLES, GRAFT_SIMHASH_BUCKET_BITS) wins;
-  * otherwise the value is derived from the row count of the governing
+  * GRAFT_LSH_PLANES, GRAFT_LSH_TABLES, GRAFT_IVF_ROUTE_CELLS) wins where
+  * one exists; otherwise the value is derived from the row count of the governing
   * table in the CURRENT corpus directory; if no directory is known yet
   * (no query has run) the derivation falls back to the small-corpus
   * floor, which equals the historical fixed default.
@@ -45,22 +45,19 @@ object Knobs {
     * value is identical under both (the test suites' corpora all sit
     * below the derivation knees, where floors make this true; Verify and
     * Bench are single-directory) — otherwise fail loud instead of
-    * letting the race corrupt a plan/oracle pair. Deliberate sequential
-    * multi-corpus use can opt out via GRAFT_ALLOW_DIR_FLIP=1. */
+    * letting the race corrupt a plan/oracle pair. */
   def noteDir(dir: String): Unit =
     if (dir != null && dir.nonEmpty && dir != currentDir) {
       val prev = currentDir
-      if (prev.nonEmpty && derivedKnobs(prev) != derivedKnobs(dir) &&
-          !sys.env.get("GRAFT_ALLOW_DIR_FLIP").contains("1"))
+      if (prev.nonEmpty && derivedKnobs(prev) != derivedKnobs(dir))
         throw new IllegalStateException(
           s"Knobs.noteDir: corpus flip $prev -> $dir changes derived knob " +
             s"values (${derivedKnobs(prev)} -> ${derivedKnobs(dir)}); one " +
-            "corpus per JVM is the contract. Set GRAFT_ALLOW_DIR_FLIP=1 " +
-            "for deliberate sequential multi-corpus use.")
+            "corpus per JVM is the contract.")
       currentDir = dir
     }
 
-  /** The derived (post-env-override) knob tuple a given corpus dir
+  /** The derived (post-env-override, where one exists) knob tuple a given corpus dir
     * yields — the flip-safety comparison key. */
   private def derivedKnobs(dir: String): (Int, Int, Int, Int, Long) = {
     def emb = rowCount(dir, "embeddings")
@@ -69,9 +66,8 @@ object Knobs {
       envInt("GRAFT_LSH_PLANES").getOrElse(lshPlanesFor(emb)),
       envInt("GRAFT_LSH_TABLES").getOrElse(lshTablesFor(
         envInt("GRAFT_LSH_PLANES").getOrElse(lshPlanesFor(emb)))),
-      envInt("GRAFT_SIMHASH_BUCKET_BITS").getOrElse(simhashBucketBitsFor(doc)),
-      envInt("GRAFT_COMPACT_TARGET").map(_.toLong)
-        .getOrElse(compactTargetCharsFor(doc)))
+      simhashBucketBitsFor(doc),
+      compactTargetCharsFor(doc))
   }
 
   private val counts = scala.collection.concurrent.TrieMap.empty[String, Long]
@@ -130,9 +126,8 @@ object Knobs {
     * at large N: 8 buckets meant 12.5M-row single-task sorts at the
     * 100M-event point, 254 s vs 99 s. The derived value cannot change
     * results: file ids come from the exact GLOBAL rank, bucket-count
-    * invariant. Override via GRAFT_LAYOUT_RANK_BUCKETS. */
-  def layoutRankBuckets: Int = envInt("GRAFT_LAYOUT_RANK_BUCKETS")
-    .getOrElse(layoutRankBucketsFor(evCount))
+    * invariant. */
+  def layoutRankBuckets: Int = layoutRankBucketsFor(evCount)
 
   private def layoutRankBucketsFor(n: Long): Int =
     math.max(8L, math.min(32L, (n + 2999999L) / 3000000L)).toInt
@@ -144,9 +139,9 @@ object Knobs {
     math.ceil(math.log(math.max(x, 1.0)) / math.log(2.0)).toInt
 
   /** IVF coarse-quantizer cell count. Derived operating point: a TARGET
-    * CELL POPULATION (GRAFT_IVF_CELL_POP, default 256) — cells =
-    * ⌈N/pop⌉ — which keeps the within-cell pair space of the
-    * cell-scoped family (dedup_semantic / label_noise / embed_prune,
+    * CELL POPULATION pop = 256 — cells = ⌈N/pop⌉ — which keeps the
+    * within-cell pair space of the cell-scoped family (dedup_semantic /
+    * label_noise / embed_prune,
     * SemDeDup's NumCells ∝ N/k operating point) LINEAR in N: Σ|cell|²
     * ≈ N·pop. The ⌈4√N⌉ cap bounds the OTHER cost axis — exact
     * nearest-centroid assignment is N·cells rows, quadratic if cells
@@ -161,8 +156,7 @@ object Knobs {
   def ivfCells: Int = envInt("GRAFT_IVF_CELLS").getOrElse(ivfCellsFor(embCount))
 
   private def ivfCellsFor(n: Long): Int = {
-    val pop = envInt("GRAFT_IVF_CELL_POP").getOrElse(256).max(1)
-    val linear = math.ceil(n.toDouble / pop).toLong
+    val linear = math.ceil(n.toDouble / 256).toLong
     val sqrtCap = math.ceil(4.0 * math.sqrt(n.toDouble)).toLong
     math.max(8L, math.min(linear, sqrtCap)).toInt
   }
@@ -213,8 +207,7 @@ object Knobs {
     * bits). Cap 40: the bucket must stay well inside the 63-bit
     * fingerprint so the recall heuristic retains a meaningful low-bit
     * "don't care" region. */
-  def simhashBucketBits: Int =
-    envInt("GRAFT_SIMHASH_BUCKET_BITS").getOrElse(simhashBucketBitsFor(docCount))
+  def simhashBucketBits: Int = simhashBucketBitsFor(docCount)
 
   private def simhashBucketBitsFor(n: Long): Int =
     if (n <= 0) 16 else math.max(16, math.min(40, ceilLog2(n / 8.0)))
@@ -229,9 +222,7 @@ object Knobs {
     * the floor (2048 chars ⇒ ~4 bins per fixture source). At the 1000×
     * point (5M docs) the derived target is ~20M chars ≈ a real 64-128 MB
     * parquet shard — the small-file-compaction operating point. */
-  def compactTargetChars: Long =
-    envInt("GRAFT_COMPACT_TARGET").map(_.toLong)
-      .getOrElse(compactTargetCharsFor(docCount))
+  def compactTargetChars: Long = compactTargetCharsFor(docCount)
 
   private def compactTargetCharsFor(n: Long): Long =
     2048L * math.max(1L, n / 500L)

@@ -460,7 +460,7 @@ object Ngrams {
       .join(uni.withColumnRenamed("tok", "a"), "a")
       .withColumn("s", expr("CAST(floor(1.0e6 * n_a / n_ab) AS BIGINT)"))
       .select("a", "b", "s")
-    val tg = Dedup.textGroups(spark, dir)
+    val tg = Dedup.textGroups(spark, dir).withColumnRenamed("rep", "trep")
     val repBg = Tables.documents(spark, dir)
       .join(tg.where(col("doc_id") === col("trep")).select("doc_id"), "doc_id")
       .select(col("doc_id").as("trep"), split(lower(trim(col("text"))), " ").as("tk"))

@@ -63,103 +63,20 @@ object SetJoin {
   /** doc_id → representative (the group's min doc_id) for groups of
     * IDENTICAL shingle sets, memoized: the exact-duplicate collapse that
     * bounds the prefix join's duplicate-multiplicity blow-up. The group
-    * key is the sorted set itself (no fingerprint — a hash collision here
-    * would silently merge distinct sets and break the exactness
-    * contract); one shuffle of (doc_id, sorted set) rows. */
+    * key is the sorted set itself — a hash collision would silently merge
+    * distinct sets and break the exactness contract. */
   private[graft] def repMembers(spark: SparkSession, dir: String): DataFrame =
     Tables.memoPersist(spark, s"setjoin.members:$dir") {
-      triSets(spark, dir)
-        .select(col("doc_id"), array_sort(col("sh")).as("key"))
-        .withColumn("rep", min("doc_id").over(Window.partitionBy("key")))
-        .select(col("doc_id"), col("rep"))
+      Dedup.repOf(triSets(spark, dir), array_sort(col("sh")))
     }
 
-  /** Prefix-filter τ-join over a set frame (doc_id, sh): the published
-    * machinery, unchanged — df-ascending global order, prefix length
-    * p = s − ⌈τ·s⌉ + 1, candidates only from shared prefix shingles,
-    * exact-Jaccard verification by id-rejoin. */
-  private def prefixJoin(sets: DataFrame): DataFrame = {
-    val sized = sets.select(col("doc_id"), col("sh"), size(col("sh")).cast("long").as("sz"))
-    val ex = sized.select(col("doc_id"), col("sz"), explode(col("sh")).as("s"))
-    val dfreq = ex.groupBy("s").agg(count(lit(1)).as("df"))
-
-    // prefix length p = s − ⌈τ·s⌉ + 1 under the global (df, shingle) order
-    val pref = ex.join(dfreq, "s")
-      .withColumn("pos", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("df"), col("s"))))
-      .where(col("pos") <=
-        col("sz") - ceil(col("sz") * lit(TauE4 / 10000.0)).cast("long") + 1)
-      .select(col("doc_id"), col("s"))
-
-    val cand = pref.as("a")
-      .join(pref.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-
-    cand
-      .join(sized.select(col("doc_id"), col("sh").as("sh_a"), col("sz").as("sz_a")),
-        col("doc_a") === col("doc_id"))
-      .drop("doc_id")
-      .join(sized.select(col("doc_id"), col("sh").as("sh_b"), col("sz").as("sz_b")),
-        col("doc_b") === col("doc_id"))
-      .withColumn("isz", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("jaccard_e4",
-        floor(lit(10000.0) * col("isz") / (col("sz_a") + col("sz_b") - col("isz")))
-          .cast("long"))
-      .where(col("jaccard_e4") >= TauE4)
-      .select("doc_a", "doc_b", "jaccard_e4")
-  }
-
-  /** All pairs with trigram Jaccard ≥ τ, exactly.
-    *
-    * Exact-duplicate collapse (the round-7 VERDICT's scale fix): docs
-    * with IDENTICAL shingle sets collapse to one representative, the
-    * expensive prefix join runs over representatives only, and the full
-    * pair set is re-expanded arithmetically —
-    *   - within a group every pair has J = 1 (jaccard_e4 = 10000);
-    *   - across groups J(a, b) = J(rep(a), rep(b)) because Jaccard is a
-    *     set function and group members ARE the same set.
-    * The output is byte-identical to the naive join (SetJoinSpec pins it
-    * against in-engine brute force; the oracle IS brute force), but the
-    * quadratic-in-multiplicity cost moves from the candidate join +
-    * per-pair array intersections to plain id-pair emission: on a corpus
-    * where the hottest doc has M copies, the join side shrinks by M×
-    * and only the contractually-quadratic OUTPUT remains quadratic.
-    * Completeness note: the df order is now computed over representatives
-    * — the prefix theorem holds for ANY consistent global order, and
-    * rep-df is the better order anyway (copy counts no longer inflate a
-    * shingle's frequency rank). */
-  /** Default contract is REP level since round 10 (the dedup_minhash
-    * round-9 precedent, forced by the 1000× stress point: at 1000
-    * copies per document the expanded report is ~2.5e9 rows — exponent
-    * 1.1 per 10× data BY CONTRACT while the search underneath is
-    * rep-collapsed and flat). One row per DISTINCT-content pair:
-    * cross-group rows carry the verified Jaccard plus both group sizes
-    * and n_pairs = size_a·size_b; duplicate-group rows (rep_a = rep_b,
-    * J = 1) carry C(size, 2). Σ n_pairs ≡ the expanded report's row
-    * count exactly (SetJoinSpec pins it). Consumers that need every
-    * (copy_a, copy_b) row read [[jaccardPrefixPairsFull]]. */
-  def jaccardPrefix(spark: SparkSession, dir: String): DataFrame = {
-    val sizes = repMembers(spark, dir).groupBy("rep").agg(count(lit(1)).as("grp"))
-    val cross = repCrossPairs(spark, dir)
-      .join(sizes.select(col("rep").as("ra"), col("grp").as("size_a")), "ra")
-      .join(sizes.select(col("rep").as("rb"), col("grp").as("size_b")), "rb")
-      .select(col("ra").as("rep_a"), col("rb").as("rep_b"), col("jaccard_e4"),
-        col("size_a"), col("size_b"),
-        (col("size_a") * col("size_b")).as("n_pairs"))
-    val within = sizes.where(col("grp") > 1)
-      .select(col("rep").as("rep_a"), col("rep").as("rep_b"),
-        lit(10000L).as("jaccard_e4"), col("grp").as("size_a"),
-        col("grp").as("size_b"),
-        expr("grp * (grp - 1) div 2").as("n_pairs"))
-    within.unionByName(cross).orderBy("rep_a", "rep_b")
-  }
+  private def repSizes(spark: SparkSession, dir: String): DataFrame =
+    Dedup.groupSizes(repMembers(spark, dir))
 
   /** Representative shingle-set frame (one row per DISTINCT set),
-    * memoized: the 1000× point showed the sets×members collapse join —
-    * a shuffle of the full array-carrying corpus frame — re-running per
-    * consumer query; every rep-level search below starts here. */
+    * memoized: the sets×members collapse join shuffles the full
+    * array-carrying corpus frame, so it runs once for every rep-level
+    * search below rather than once per consumer query. */
   private[graft] def repSetsFrame(spark: SparkSession, dir: String): DataFrame =
     Tables.memoPersist(spark, s"setjoin.repsets:$dir") {
       triSets(spark, dir).join(repMembers(spark, dir), "doc_id")
@@ -167,37 +84,85 @@ object SetJoin {
         .select("doc_id", "sh")
     }
 
-  /** Verified rep-level cross-group pairs (ra < rb), shared by the
-    * default rep contract and the expanded variant — memoized (round 17,
-    * guide §2.4): both registered keys re-ran the whole prefix-filter
-    * chain (df groupBy, prefix window, candidate self-join + distinct,
-    * two verification joins) before; the verified pair set is tiny
-    * (distinct-content near-dup pairs), so it is the natural frame to
-    * build once, exactly the Dedup.repVerifiedPairs precedent. */
-  private def repCrossPairs(spark: SparkSession, dir: String): DataFrame =
-    Tables.memoPersist(spark, s"setjoin.crossPairs:$TauE4:$dir") {
-      prefixJoin(repSetsFrame(spark, dir))
-        .select(col("doc_a").as("ra"), col("doc_b").as("rb"), col("jaccard_e4"))
-    }
-
-  /** Expanded per-copy pair report — the pre-round-10 contract, opt-in:
-    * output is quadratic in duplicate multiplicity by construction;
-    * built by rep-collapse + arithmetic re-expansion so only the RESULT
-    * rows are quadratic, never the candidate search. */
-  def jaccardPrefixPairsFull(spark: SparkSession, dir: String): DataFrame = {
-    val members = repMembers(spark, dir)
-    val within = members.as("a")
-      .join(members.as("b"),
-        col("a.rep") === col("b.rep") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        lit(10000L).as("jaccard_e4"))
-    val cross = repCrossPairs(spark, dir)
-      .join(members.select(col("rep").as("ra"), col("doc_id").as("da")), "ra")
-      .join(members.select(col("rep").as("rb"), col("doc_id").as("db")), "rb")
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"), col("jaccard_e4"))
-    within.union(cross).orderBy("doc_a", "doc_b")
+  /** The df-ordered prefix of every set in `ex` (doc_id, sz, s): its
+    * first p = s − ⌈τ·s⌉ + 1 shingles under the global (df, shingle)
+    * order. Any pair with overlap ≥ ⌈τ·s⌉ shares a shingle of this
+    * prefix, and df ascending makes the join keys the corpus's RAREST
+    * shingles. */
+  private def dfPrefix(ex: DataFrame, tauE4: Long): DataFrame = {
+    val dfreq = ex.groupBy("s").agg(count(lit(1)).as("df"))
+    ex.join(dfreq, "s")
+      .withColumn("pos", row_number().over(
+        Window.partitionBy("doc_id").orderBy(col("df"), col("s"))))
+      .where(col("pos") <=
+        col("sz") - ceil(col("sz") * lit(tauE4 / 10000.0)).cast("long") + 1)
+      .select(col("doc_id"), col("s"))
   }
+
+  /** The prefix-filter candidate generator over the rep sets, verified
+    * exactly by id-rejoin: (rep_a, rep_b, jaccard_e4 ≥ τ) with rep_a <
+    * rep_b, both sides probing their prefix — or, `ordered`, (rep_a,
+    * rep_b, containment_e4 ≥ τc) in every direction, where only the probe
+    * side is cut to its prefix and the index side explodes every shingle.
+    * The df order is computed over representatives: the prefix theorem
+    * holds for ANY consistent global order, and copy counts then no
+    * longer inflate a shingle's rank. Memoized: the verified pair set is
+    * tiny (distinct-content near-dup pairs) and both registered keys of
+    * each join read it. */
+  private def prefixJoin(spark: SparkSession, dir: String, ordered: Boolean): DataFrame = {
+    val (tau, score) = if (ordered) (TauCE4, "containment_e4") else (TauE4, "jaccard_e4")
+    Tables.memoPersist(spark, s"setjoin.$score:$tau:$dir") {
+      val sized = repSetsFrame(spark, dir)
+        .select(col("doc_id"), col("sh"), size(col("sh")).cast("long").as("sz"))
+      val ex = sized.select(col("doc_id"), col("sz"), explode(col("sh")).as("s"))
+      val pref = dfPrefix(ex, tau)
+      val (index, distinctSets, value) =
+        if (ordered) (ex.select("doc_id", "s"), col("a.doc_id") =!= col("b.doc_id"),
+          floor(lit(10000.0) * col("isz") / col("sz_a")).cast("long"))
+        else (pref, col("a.doc_id") < col("b.doc_id"),
+          Dedup.jaccardE4(col("isz"), col("sz_a"), col("sz_b")))
+      def side(s: String) =
+        sized.select(col("doc_id").as(s"rep_$s"), col("sh").as(s"sh_$s"), col("sz").as(s"sz_$s"))
+      pref.as("a").join(index.as("b"), col("a.s") === col("b.s") && distinctSets)
+        .select(col("a.doc_id").as("rep_a"), col("b.doc_id").as("rep_b"))
+        .distinct()
+        .join(side("a"), "rep_a").join(side("b"), "rep_b")
+        .withColumn("isz", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
+        .withColumn(score, value)
+        .where(col(score) >= tau)
+        .select("rep_a", "rep_b", score)
+    }
+  }
+
+  /** Within groups of one join: identical sets score 1, both ways. */
+  private def within(spark: SparkSession, dir: String, ordered: Boolean): DataFrame =
+    repSizes(spark, dir)
+      .withColumn(if (ordered) "containment_e4" else "jaccard_e4", lit(10000L))
+
+  private def report(spark: SparkSession, dir: String, ordered: Boolean): DataFrame =
+    Dedup.repReport(prefixJoin(spark, dir, ordered), within(spark, dir, ordered),
+      repSizes(spark, dir), ordered)
+
+  private def expanded(spark: SparkSession, dir: String, ordered: Boolean): DataFrame =
+    Dedup.expandPairs(Dedup.repRows(prefixJoin(spark, dir, ordered), within(spark, dir, ordered)),
+      repMembers(spark, dir), ordered)
+      .orderBy("doc_a", "doc_b")
+
+  /** All pairs with trigram Jaccard ≥ τ, exactly, at REP level: one row
+    * per DISTINCT-content pair with the verified Jaccard, both group
+    * sizes and n_pairs; duplicate groups (rep_a = rep_b, J = 1) carry
+    * C(size, 2). At 1000 copies per document the expanded report is
+    * ~2.5e9 rows while the search underneath stays flat, so consumers
+    * that need every (copy_a, copy_b) row opt into
+    * [[jaccardPrefixPairsFull]]. */
+  def jaccardPrefix(spark: SparkSession, dir: String): DataFrame =
+    report(spark, dir, ordered = false)
+
+  /** The expanded per-copy pair report, opt-in: across groups J(a, b) =
+    * J(rep(a), rep(b)) because Jaccard is a set function and group
+    * members ARE the same set; within a group every pair has J = 1. */
+  def jaccardPrefixPairsFull(spark: SparkSession, dir: String): DataFrame =
+    expanded(spark, dir, ordered = false)
 
   // ---- containment_join: asymmetric set-containment (quote detection) -----
 
@@ -219,229 +184,83 @@ object SetJoin {
     * that prefix while the INDEX side explodes every shingle — lossless
     * for the one-directional predicate (each direction is generated
     * from its own probe prefix; ContainmentJoinSpec pins completeness
-    * against brute force).
+    * against brute force). Probe join keys are again the globally
+    * RAREST shingles of each probe set, so candidates = Σ_a Σ_{s∈pref(a)}
+    * df(s), not all-pairs.
     *
-    * Scale shape: probe join keys are again the globally RAREST shingles
-    * of each probe set, so per-key index fan-out is df(s) of a rare s —
-    * small and near-uniform; candidates = Σ_a Σ_{s∈pref(a)} df(s), not
-    * all-pairs. Identical shingle sets collapse to representatives
-    * before the join (containment is a set function), and the member
-    * expansion at the end is arithmetic re-labeling, direction
-    * preserved. One df groupBy + one prefix window + one equi-join —
-    * the jaccard_prefix cost template with a ~2.5× shorter probe
-    * prefix at τc = 0.8. */
-  /** Default contract is REP level since round 10 (see jaccardPrefix):
-    * one row per DISTINCT-content ORDERED pair with group sizes and the
-    * implied expanded count — cross rows n_pairs = size_a·size_b,
-    * mutual-containment duplicate groups (rep_a = rep_b, C = 1) carry
-    * size·(size−1) ordered pairs. Σ n_pairs ≡ the expanded report's
-    * row count (ContainmentJoinSpec pins it). */
-  def containmentJoin(spark: SparkSession, dir: String): DataFrame = {
-    val sizes = repMembers(spark, dir).groupBy("rep").agg(count(lit(1)).as("grp"))
-    val cross = containmentRepCrossPairs(spark, dir)
-      .join(sizes.select(col("rep").as("ra"), col("grp").as("size_a")), "ra")
-      .join(sizes.select(col("rep").as("rb"), col("grp").as("size_b")), "rb")
-      .select(col("ra").as("rep_a"), col("rb").as("rep_b"),
-        col("containment_e4"), col("size_a"), col("size_b"),
-        (col("size_a") * col("size_b")).as("n_pairs"))
-    val within = sizes.where(col("grp") > 1)
-      .select(col("rep").as("rep_a"), col("rep").as("rep_b"),
-        lit(10000L).as("containment_e4"), col("grp").as("size_a"),
-        col("grp").as("size_b"),
-        expr("grp * (grp - 1)").as("n_pairs"))
-    within.unionByName(cross).orderBy("rep_a", "rep_b")
-  }
+    * Rep-level like [[jaccardPrefix]]: one row per DISTINCT-content
+    * ORDERED pair; mutual-containment duplicate groups (rep_a = rep_b,
+    * C = 1) carry size·(size−1) ordered pairs. */
+  def containmentJoin(spark: SparkSession, dir: String): DataFrame =
+    report(spark, dir, ordered = true)
 
-  /** Verified rep-level ordered cross pairs (probe rep → index rep),
-    * shared by the default rep contract and the expanded variant —
-    * memoized (round 17): same rationale as [[repCrossPairs]]. */
-  private def containmentRepCrossPairs(spark: SparkSession, dir: String): DataFrame =
-    Tables.memoPersist(spark, s"setjoin.containCross:$TauCE4:$dir") {
-      containmentRepCrossPairsBuild(spark, dir)
-    }
+  /** Expanded per-copy ordered pair report, opt-in; the expansion keeps
+    * the direction (doc_a is the probe side). */
+  def containmentJoinPairsFull(spark: SparkSession, dir: String): DataFrame =
+    expanded(spark, dir, ordered = true)
 
-  private def containmentRepCrossPairsBuild(spark: SparkSession, dir: String): DataFrame = {
-    val sized = repSetsFrame(spark, dir).select(col("doc_id"), col("sh"),
-      size(col("sh")).cast("long").as("sz"))
-    val ex = sized.select(col("doc_id"), col("sz"), explode(col("sh")).as("s"))
-    val dfreq = ex.groupBy("s").agg(count(lit(1)).as("df"))
+  // ---- oracles: brute force over member or rep sets -----------------------
 
-    // probe prefix p = s − ⌈τc·s⌉ + 1 under the (df, shingle) order
-    val pref = ex.join(dfreq, "s")
-      .withColumn("pos", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("df"), col("s"))))
-      .where(col("pos") <=
-        col("sz") - ceil(col("sz") * lit(TauCE4 / 10000.0)).cast("long") + 1)
-      .select(col("doc_id"), col("s"))
-
-    val cand = pref.as("a")
-      .join(ex.select(col("doc_id"), col("s")).as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.doc_id").as("ra"), col("b.doc_id").as("rb"))
-      .distinct()
-
-    cand
-      .join(sized.select(col("doc_id"), col("sh").as("sh_a"), col("sz").as("sz_a")),
-        col("ra") === col("doc_id"))
-      .drop("doc_id")
-      .join(sized.select(col("doc_id"), col("sh").as("sh_b")),
-        col("rb") === col("doc_id"))
-      .withColumn("isz", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("containment_e4",
-        floor(lit(10000.0) * col("isz") / col("sz_a")).cast("long"))
-      .where(col("containment_e4") >= TauCE4)
-      .select("ra", "rb", "containment_e4")
-  }
-
-  /** Expanded per-copy ordered pair report — opt-in, output-quadratic
-    * in duplicate multiplicity by contract; rep-collapsed search,
-    * direction-preserving arithmetic expansion. */
-  def containmentJoinPairsFull(spark: SparkSession, dir: String): DataFrame = {
-    val members = repMembers(spark, dir)
-    // identical sets contain each other both ways: ordered within-group pairs
-    val within = members.as("a")
-      .join(members.as("b"),
-        col("a.rep") === col("b.rep") && col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        lit(10000L).as("containment_e4"))
-    // cross-group expansion preserves direction (doc_a side = probe side)
-    val cross = containmentRepCrossPairs(spark, dir)
-      .join(members.select(col("rep").as("ra"), col("doc_id").as("da")), "ra")
-      .join(members.select(col("rep").as("rb"), col("doc_id").as("db")), "rb")
-      .select(col("da").as("doc_a"), col("db").as("doc_b"), col("containment_e4"))
-    within.union(cross).orderBy("doc_a", "doc_b")
-  }
-
-  /** Oracle: brute-force ordered containment — every ordered pair sharing
-    * ≥1 trigram, exact |A∩B|/|A|, threshold. Lossless-prefix claim, same
-    * as the Jaccard oracle. */
-  val containmentJoinPairsFullSql: String = {
-    val triExpr = "tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]"
-    s"""WITH tk AS (
+  /** Oracle trigram sets `tri` (doc_id, sh) and their groups of identical
+    * sets `reps` (sh, rep, gsz). */
+  private val TriCtes: String =
+    s"""tk AS (
        |  SELECT doc_id, string_split(lower(trim(text)), ' ') AS tk FROM documents),
        |tri AS (
        |  SELECT doc_id,
        |    list_distinct(list_transform(
-       |      list_transform(range(1, len(tk) - 1), i -> $triExpr),
+       |      list_transform(range(1, len(tk) - 1),
+       |        i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]),
        |      g -> ${TextStats.fpSql("g")})) AS sh
        |  FROM tk WHERE len(tk) >= $NgramN),
-       |ex AS (SELECT doc_id, unnest(sh) AS s FROM tri),
-       |sz AS (SELECT doc_id, CAST(len(sh) AS BIGINT) AS sz FROM tri),
+       |reps AS (
+       |  SELECT list_sort(t.sh) AS sh, min(t.doc_id) AS rep,
+       |         CAST(count(*) AS BIGINT) AS gsz
+       |  FROM tri t GROUP BY list_sort(t.sh))""".stripMargin
+
+  private val JaccardSql = Dedup.jaccardE4Sql("isz", "sa.n", "sb.n")
+  private val ContainmentSql = "CAST(floor(10000.0 * isz / sa.n) AS BIGINT)"
+
+  /** Oracle brute force over the `id`-keyed sets of `sets`: every pair
+    * (`cmp` on ids) sharing ≥1 trigram, `score`d from its overlap isz and
+    * the set sizes sa.n / sb.n, kept at ≥ `tau` — `scored` (ida, idb,
+    * score). */
+  private def bruteSql(sets: String, id: String, cmp: String, score: String,
+      tau: Long): String =
+    s"""$TriCtes,
+       |ex AS (SELECT $id AS id, unnest(sh) AS s FROM $sets),
+       |sz AS (SELECT $id AS id, CAST(len(sh) AS BIGINT) AS n FROM $sets),
        |cand AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS isz
-       |  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id <> b.doc_id
-       |  GROUP BY 1, 2)
-       |SELECT doc_a, doc_b,
-       |       CAST(floor(10000.0 * isz / sa.sz) AS BIGINT) AS containment_e4
-       |FROM cand
-       |JOIN sz sa ON sa.doc_id = doc_a
-       |WHERE CAST(floor(10000.0 * isz / sa.sz) AS BIGINT) >= $TauCE4
-       |ORDER BY doc_a, doc_b""".stripMargin
-  }
+       |  SELECT a.id AS ida, b.id AS idb, CAST(count(*) AS BIGINT) AS isz
+       |  FROM ex a JOIN ex b ON a.s = b.s AND a.id $cmp b.id
+       |  GROUP BY 1, 2),
+       |scored AS (
+       |  SELECT ida, idb, $score AS score
+       |  FROM cand JOIN sz sa ON sa.id = ida JOIN sz sb ON sb.id = idb
+       |  WHERE $score >= $tau)""".stripMargin
 
   /** Oracle: brute-force ground truth — every pair sharing ≥1 trigram,
     * exact Jaccard, threshold. The Spark side must reproduce this EXACTLY
     * (the prefix filter is lossless); a hash mismatch here means a recall
     * hole, which is the whole claim under test. */
-  val jaccardPrefixPairsFullSql: String = {
-    val triExpr = "tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]"
-    s"""WITH tk AS (
-       |  SELECT doc_id, string_split(lower(trim(text)), ' ') AS tk FROM documents),
-       |tri AS (
-       |  SELECT doc_id,
-       |    list_distinct(list_transform(
-       |      list_transform(range(1, len(tk) - 1), i -> $triExpr),
-       |      g -> ${TextStats.fpSql("g")})) AS sh
-       |  FROM tk WHERE len(tk) >= $NgramN),
-       |ex AS (SELECT doc_id, unnest(sh) AS s FROM tri),
-       |sz AS (SELECT doc_id, CAST(len(sh) AS BIGINT) AS sz FROM tri),
-       |cand AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS isz
-       |  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2)
-       |SELECT doc_a, doc_b,
-       |       CAST(floor(10000.0 * isz / (sa.sz + sb.sz - isz)) AS BIGINT) AS jaccard_e4
-       |FROM cand
-       |JOIN sz sa ON sa.doc_id = doc_a
-       |JOIN sz sb ON sb.doc_id = doc_b
-       |WHERE CAST(floor(10000.0 * isz / (sa.sz + sb.sz - isz)) AS BIGINT) >= $TauE4
-       |ORDER BY doc_a, doc_b""".stripMargin
-  }
-  /** Oracle for the REP-level default: brute force over DISTINCT shingle
-    * sets (rep = min doc_id per identical sorted set), plus the
-    * arithmetic within-group rows — the r9 dedup_minhash oracle shape. */
-  val jaccardPrefixSql: String = {
-    val triExpr = "tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]"
-    s"""WITH tk AS (
-       |  SELECT doc_id, string_split(lower(trim(text)), ' ') AS tk FROM documents),
-       |tri AS (
-       |  SELECT doc_id,
-       |    list_distinct(list_transform(
-       |      list_transform(range(1, len(tk) - 1), i -> $triExpr),
-       |      g -> ${TextStats.fpSql("g")})) AS sh
-       |  FROM tk WHERE len(tk) >= $NgramN),
-       |reps AS (
-       |  SELECT list_sort(sh) AS key, min(doc_id) AS rep,
-       |         CAST(count(*) AS BIGINT) AS sz
-       |  FROM tri GROUP BY list_sort(sh)),
-       |rex AS (SELECT rep, unnest(key) AS s FROM reps),
-       |rsz AS (SELECT rep, CAST(len(key) AS BIGINT) AS nsh, sz FROM reps),
-       |cand AS (
-       |  SELECT a.rep AS ra, b.rep AS rb, CAST(count(*) AS BIGINT) AS isz
-       |  FROM rex a JOIN rex b ON a.s = b.s AND a.rep < b.rep
-       |  GROUP BY 1, 2),
-       |jc AS (
-       |  SELECT ra, rb,
-       |         CAST(floor(10000.0 * isz / (sa.nsh + sb.nsh - isz)) AS BIGINT) AS jaccard_e4,
-       |         sa.sz AS size_a, sb.sz AS size_b
-       |  FROM cand
-       |  JOIN rsz sa ON sa.rep = ra
-       |  JOIN rsz sb ON sb.rep = rb
-       |  WHERE CAST(floor(10000.0 * isz / (sa.nsh + sb.nsh - isz)) AS BIGINT) >= $TauE4)
-       |SELECT ra AS rep_a, rb AS rep_b, jaccard_e4, size_a, size_b,
-       |       size_a * size_b AS n_pairs
-       |FROM jc
-       |UNION ALL
-       |SELECT rep, rep, CAST(10000 AS BIGINT), sz, sz, sz * (sz - 1) // 2
-       |FROM reps WHERE sz > 1
-       |ORDER BY rep_a, rep_b""".stripMargin
-  }
+  val jaccardPrefixPairsFullSql: String =
+    s"""WITH ${bruteSql("tri", "doc_id", "<", JaccardSql, TauE4)}
+       |SELECT ida AS doc_a, idb AS doc_b, score AS jaccard_e4
+       |FROM scored ORDER BY doc_a, doc_b""".stripMargin
 
-  /** Oracle for the REP-level ordered containment default. */
-  val containmentJoinSql: String = {
-    val triExpr = "tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]"
-    s"""WITH tk AS (
-       |  SELECT doc_id, string_split(lower(trim(text)), ' ') AS tk FROM documents),
-       |tri AS (
-       |  SELECT doc_id,
-       |    list_distinct(list_transform(
-       |      list_transform(range(1, len(tk) - 1), i -> $triExpr),
-       |      g -> ${TextStats.fpSql("g")})) AS sh
-       |  FROM tk WHERE len(tk) >= $NgramN),
-       |reps AS (
-       |  SELECT list_sort(sh) AS key, min(doc_id) AS rep,
-       |         CAST(count(*) AS BIGINT) AS sz
-       |  FROM tri GROUP BY list_sort(sh)),
-       |rex AS (SELECT rep, unnest(key) AS s FROM reps),
-       |rsz AS (SELECT rep, CAST(len(key) AS BIGINT) AS nsh, sz FROM reps),
-       |cand AS (
-       |  SELECT a.rep AS ra, b.rep AS rb, CAST(count(*) AS BIGINT) AS isz
-       |  FROM rex a JOIN rex b ON a.s = b.s AND a.rep <> b.rep
-       |  GROUP BY 1, 2),
-       |cc AS (
-       |  SELECT ra, rb,
-       |         CAST(floor(10000.0 * isz / sa.nsh) AS BIGINT) AS containment_e4,
-       |         sa.sz AS size_a, sb.sz AS size_b
-       |  FROM cand
-       |  JOIN rsz sa ON sa.rep = ra
-       |  JOIN rsz sb ON sb.rep = rb
-       |  WHERE CAST(floor(10000.0 * isz / sa.nsh) AS BIGINT) >= $TauCE4)
-       |SELECT ra AS rep_a, rb AS rep_b, containment_e4, size_a, size_b,
-       |       size_a * size_b AS n_pairs
-       |FROM cc
-       |UNION ALL
-       |SELECT rep, rep, CAST(10000 AS BIGINT), sz, sz, sz * (sz - 1)
-       |FROM reps WHERE sz > 1
-       |ORDER BY rep_a, rep_b""".stripMargin
-  }
+  /** Oracle: brute-force ordered containment, same lossless-prefix claim. */
+  val containmentJoinPairsFullSql: String =
+    s"""WITH ${bruteSql("tri", "doc_id", "<>", ContainmentSql, TauCE4)}
+       |SELECT ida AS doc_a, idb AS doc_b, score AS containment_e4
+       |FROM scored ORDER BY doc_a, doc_b""".stripMargin
+
+  /** Oracles for the REP-level defaults: brute force over DISTINCT sets
+    * (rep = min doc_id per identical sorted set) plus the within rows. */
+  val jaccardPrefixSql: String = Dedup.repReportSql(
+    bruteSql("reps", "rep", "<", JaccardSql, TauE4),
+    "scored", "reps", Seq("jaccard_e4" -> "CAST(10000 AS BIGINT)"))
+
+  val containmentJoinSql: String = Dedup.repReportSql(
+    bruteSql("reps", "rep", "<>", ContainmentSql, TauCE4),
+    "scored", "reps", Seq("containment_e4" -> "CAST(10000 AS BIGINT)"), ordered = true)
 }

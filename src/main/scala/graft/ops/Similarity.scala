@@ -491,31 +491,23 @@ object Similarity {
 
   val DupThresholdE6 = 300000L // cos >= 0.30
 
-  /** REP-level default (round 11 — the dedup_minhash contract split
-    * applied to the embedding near-dup report): one row per
-    * DISTINCT-vector qualifying pair with group sizes and the implied
-    * member-pair count; within-group rows carry the self-cosine and
-    * C(cnt, 2). The expanded per-copy report is the opt-in
-    * [[embedCosineDupPairsFull]] — quadratic in duplicate multiplicity
-    * BY CONSTRUCTION (every copy pair of a near-dup group qualifies). */
+  /** Rep-level report through the near-dup family's shared contract
+    * (see Dedup.repReport): one row per DISTINCT-vector qualifying pair
+    * with group sizes and the implied member-pair count; within-group
+    * rows carry the self-cosine and C(cnt, 2). The expanded per-copy
+    * report is the opt-in [[embedCosineDupPairsFull]] — quadratic in
+    * duplicate multiplicity BY CONSTRUCTION (every copy pair of a
+    * near-dup group qualifies). */
   def embedCosineDup(spark: SparkSession, dir: String): DataFrame = {
-    val g = vecGroups(spark, dir)
-    val cross = repScoredPairs(spark, dir)
-      .withColumn("cos_e6", cosE6(col("cos")))
-      .where(col("cos_e6") >= DupThresholdE6)
-      .join(g.select(col("gid").as("ga"), col("cnt").as("size_a")), "ga")
-      .join(g.select(col("gid").as("gb"), col("cnt").as("size_b")), "gb")
+    val g = vecGroups(spark, dir).select(col("gid").as("rep"), col("cnt").as("size"), col("n2"))
+    val pairs = repScoredPairs(spark, dir)
       .select(col("ga").as("rep_a"), col("gb").as("rep_b"), col("n_tbl"),
-        col("cos_e6"), col("size_a"), col("size_b"),
-        (col("size_a") * col("size_b")).as("n_pairs"))
-    val within = g.where(col("cnt") >= 2)
+        cosE6(col("cos")).as("cos_e6"))
+      .where(col("cos_e6") >= DupThresholdE6)
+    val within = g.withColumn("n_tbl", lit(NumTables.toLong))
       .withColumn("cos_e6", cosE6(selfCos(col("n2"))))
       .where(col("cos_e6") >= DupThresholdE6)
-      .select(col("gid").as("rep_a"), col("gid").as("rep_b"),
-        lit(NumTables.toLong).as("n_tbl"), col("cos_e6"),
-        col("cnt").as("size_a"), col("cnt").as("size_b"),
-        expr("cnt * (cnt - 1) div 2").as("n_pairs"))
-    cross.unionByName(within).orderBy("rep_a", "rep_b")
+    Dedup.repReport(pairs, within, g)
   }
 
   /** Expanded per-copy near-dup pair report — the pre-round-11
@@ -586,14 +578,11 @@ object Similarity {
     s"""WITH $VecCte,
        |$ScoredPairsCte,
        |dsev AS (SELECT vec_id FROM vecs WHERE label = $EvalLabel),
+       |$DirectedScoredCte,
        |dshit AS (
-       |  SELECT t, max(cos) AS best FROM (
-       |    SELECT s.aid AS t, s.cos FROM spaired s
-       |    JOIN dsev e ON s.bid = e.vec_id
-       |    UNION ALL
-       |    SELECT s.bid AS t, s.cos FROM spaired s
-       |    JOIN dsev e ON s.aid = e.vec_id) u
-       |  GROUP BY t),
+       |  SELECT d.qid AS t, max(d.cos) AS best
+       |  FROM dscored d JOIN dsev e ON d.cid = e.vec_id
+       |  GROUP BY d.qid),
        |dsfl AS (
        |  SELECT t, best FROM dshit
        |  WHERE CAST(floor(best * 1000000.0) AS BIGINT) >= $DupThresholdE6)
@@ -1083,17 +1072,31 @@ object Similarity {
   private def cosTruthSql(name: String, k: Int): String =
     rankSql(name, "qid, cid, cos", "bscored", "cos DESC, cid", k)
 
+  /** Both directions of every scored pair, `dscored` (qid, cid, n_tbl,
+    * cos), from ONE read of `spaired`: DuckDB inlines a CTE per
+    * reference, so a two-arm union would score every candidate's
+    * list-lambda cosine twice. */
+  private def DirectedScoredCte: String =
+    """dscored AS (
+      |  SELECT unnest([aid, bid]) AS qid, unnest([bid, aid]) AS cid, n_tbl, cos
+      |  FROM spaired)""".stripMargin
+
   /** The directed LSH list `lsh` (qid, cid, n_tbl, cos, rnk): both
     * directions of each scored pair, cut at LshK — for every vector, or
-    * for the query set alone when `queries` (the filter then also prunes
-    * the pair scoring). */
+    * for the query set alone when `queries`. The query-set form keeps
+    * the two-arm union: its qid filter pushes into each arm and prunes
+    * the pair scoring itself, which a single unnested read would not. */
   private def lshListSql(queries: Boolean): String =
-    s"""lscored AS (
-       |  SELECT aid AS qid, bid AS cid, n_tbl, cos FROM spaired
-       |  UNION ALL
-       |  SELECT bid AS qid, aid AS cid, n_tbl, cos FROM spaired),
-       |${rankSql("lsh", "qid, cid, n_tbl, cos",
-           if (queries) s"lscored WHERE qid < $NumQueries" else "lscored", "cos DESC, cid", LshK)}""".stripMargin
+    if (queries)
+      s"""lscored AS (
+         |  SELECT aid AS qid, bid AS cid, n_tbl, cos FROM spaired
+         |  UNION ALL
+         |  SELECT bid AS qid, aid AS cid, n_tbl, cos FROM spaired),
+         |${rankSql("lsh", "qid, cid, n_tbl, cos", s"lscored WHERE qid < $NumQueries",
+             "cos DESC, cid", LshK)}""".stripMargin
+    else
+      s"""$DirectedScoredCte,
+         |${rankSql("lsh", "qid, cid, n_tbl, cos", "dscored", "cos DESC, cid", LshK)}""".stripMargin
 
   def annTopkSql: String =
     s"""WITH $VecCte,
@@ -1110,13 +1113,16 @@ object Similarity {
        |       ${e6Sql("cos")} AS cos_e6
        |FROM lsh ORDER BY aid, rnk""".stripMargin
 
+  /** The reciprocity self-join reads one MATERIALIZED copy of the list:
+    * an inlined `lsh` would score every candidate pair once per side. */
   def mutualKnnSql: String =
     s"""WITH $VecCte,
        |$ScoredPairsCte,
        |${lshListSql(queries = false)},
+       |lshm AS MATERIALIZED (SELECT qid, cid FROM lsh),
        |m AS (
-       |  SELECT x.qid AS aid, x.cid AS bid FROM lsh x
-       |  JOIN lsh y ON x.qid = y.cid AND x.cid = y.qid
+       |  SELECT x.qid AS aid, x.cid AS bid FROM lshm x
+       |  JOIN lshm y ON x.qid = y.cid AND x.cid = y.qid
        |  WHERE x.qid < x.cid),
        |d AS (
        |  SELECT vid, CAST(count(*) AS BIGINT) AS deg FROM (
@@ -1417,29 +1423,19 @@ object Similarity {
     * carry the SAME IEEE self-cosine expression the member pair would
     * produce (n2/(sqrt(n2)·sqrt(n2)) — not a 1.0 literal). */
   def embedCosineDupSql: String = {
-    val selfCosSql = cosSql("n2", "n2", "n2")
-    s"""WITH $VecCte,
-       |$ScoredPairsCte,
-       |egroups AS (
-       |  SELECT min(vec_id) AS gid, count(*) AS cnt, min(n2) AS n2
-       |  FROM vecs GROUP BY qv),
-       |ecx AS (
-       |  SELECT s.aid AS rep_a, s.bid AS rep_b, CAST(s.n_tbl AS BIGINT) AS n_tbl,
-       |         CAST(floor(s.cos * 1000000.0) AS BIGINT) AS cos_e6,
-       |         ga.cnt AS size_a, gb.cnt AS size_b, ga.cnt * gb.cnt AS n_pairs
-       |  FROM spaired s
-       |  JOIN egroups ga ON s.aid = ga.gid
-       |  JOIN egroups gb ON s.bid = gb.gid
-       |  WHERE CAST(floor(s.cos * 1000000.0) AS BIGINT) >= $DupThresholdE6),
-       |ewi AS (
-       |  SELECT gid AS rep_a, gid AS rep_b, CAST($NumTables AS BIGINT) AS n_tbl,
-       |         CAST(floor(($selfCosSql) * 1000000.0) AS BIGINT) AS cos_e6,
-       |         cnt AS size_a, cnt AS size_b, cnt * (cnt - 1) // 2 AS n_pairs
-       |  FROM egroups
-       |  WHERE cnt >= 2
-       |    AND CAST(floor(($selfCosSql) * 1000000.0) AS BIGINT) >= $DupThresholdE6)
-       |SELECT * FROM ecx UNION ALL SELECT * FROM ewi
-       |ORDER BY rep_a, rep_b""".stripMargin
+    val selfCosE6 = e6Sql(s"(${cosSql("n2", "n2", "n2")})")
+    Dedup.repReportSql(
+      s"""$VecCte,
+         |$ScoredPairsCte,
+         |egroups AS (
+         |  SELECT min(vec_id) AS rep, count(*) AS gsz, min(n2) AS n2
+         |  FROM vecs GROUP BY qv),
+         |ecx AS (
+         |  SELECT aid, bid, CAST(n_tbl AS BIGINT), ${e6Sql("cos")}
+         |  FROM spaired WHERE ${e6Sql("cos")} >= $DupThresholdE6)""".stripMargin,
+      "ecx", "egroups",
+      Seq("n_tbl" -> s"CAST($NumTables AS BIGINT)", "cos_e6" -> selfCosE6),
+      where = s"$selfCosE6 >= $DupThresholdE6")
   }
 
   /** Oracle for the expanded opt-in report — the pre-round-11 SQL. */

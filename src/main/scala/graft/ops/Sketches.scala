@@ -398,7 +398,7 @@ object Sketches {
     * the exact audit read — one corpus scan, memoized. */
   private def kmvSrcSh(spark: SparkSession, dir: String): DataFrame =
     Tables.memoPersist(spark, s"sketches.srcsh:$dir") {
-      Dedup.shingleSetsProbe(spark, dir)
+      Dedup.shingleSets(spark, dir)
         .join(Tables.documents(spark, dir).select("doc_id", "source"), "doc_id")
         .select(col("source"), explode(col("sh")).as("h"))
         .distinct()

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Similarity
-import org.apache.spark.sql.functions._
 
 /** Identical-vector collapse equivalence (round 11).
   *
@@ -23,37 +22,7 @@ import org.apache.spark.sql.functions._
   */
 class DupCollapseSpec extends SparkSpec {
 
-  @volatile private var dupDirCreated: Option[String] = None
-
-  override def afterAll(): Unit = {
-    // the generated copy-heavy corpus is per-run scratch — delete it so
-    // repeated test runs don't accumulate parquet under the temp root
-    dupDirCreated.foreach { d =>
-      def rm(p: java.io.File): Unit = {
-        val kids = p.listFiles()
-        if (kids != null) kids.foreach(rm)
-        p.delete(): Unit
-      }
-      rm(new java.io.File(d))
-    }
-    super.afterAll()
-  }
-
-  lazy val dupDir: String = {
-    val out = java.nio.file.Files.createTempDirectory("graft-dupcorpus-").toString
-    dupDirCreated = Some(out)
-    val e = spark.read.parquet(s"$Sf0001/embeddings.parquet")
-    (0 until 3).map { k =>
-      e.select((col("vec_id") + lit(k * 5000000L)).as("vec_id"),
-        col("embedding"),
-        ((col("label") + lit(k)) % lit(4)).cast("int").as("label"))
-    }.reduce(_ unionByName _)
-      .coalesce(1).write.parquet(s"$out/embeddings.parquet")
-    // documents ride along so derived doc-knobs match Sf0001's floors
-    spark.read.parquet(s"$Sf0001/documents.parquet")
-      .coalesce(1).write.parquet(s"$out/documents.parquet")
-    out
-  }
+  lazy val dupDir: String = stripeCorpus(docs = false, vecs = true)
 
   test("the member-pair expansion equals the ORIGINAL member-level bucket join") {
     // annLshNaiveProbe rides the expansion itself, so this is the link

@@ -14,7 +14,7 @@ import graft.ops.Sketches
   */
 class KmvSpec extends SparkSpec {
 
-  private def srcSh = ops.Dedup.shingleSetsProbe(spark, Sf0001)
+  private def srcSh = ops.Dedup.shingleSets(spark, Sf0001)
     .join(Tables.documents(spark, Sf0001).select("doc_id", "source"), "doc_id")
     .select(col("source"), explode(col("sh")).as("h"))
     .distinct()

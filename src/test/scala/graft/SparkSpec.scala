@@ -27,7 +27,48 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     work
   }
 
+  @volatile private var scratchDirs: List[String] = Nil
+
+  /** A copy-heavy corpus: three byte-identical stripes of the sf0.001
+    * documents and/or embeddings with shifted ids (+5M per stripe), in a
+    * temp dir deleted after the suite. Every text or vector group becomes
+    * a 3-clique, so the within-group and bipartite arithmetic of the
+    * rep-collapsed operators fires; striped vectors also shift their
+    * label per stripe, so identical vectors carry DIFFERENT labels. A
+    * table not striped is copied as is. Never pass the result to
+    * Knobs.noteDir (or through SparkEntry.queries): the tripled corpus
+    * derives other knob values and would trip the one-corpus-per-JVM
+    * flip guard. */
+  def stripeCorpus(docs: Boolean, vecs: Boolean): String = {
+    import org.apache.spark.sql.functions._
+    val out = java.nio.file.Files.createTempDirectory("graft-stripes-").toString
+    scratchDirs = out :: scratchDirs
+    def stripes(df: org.apache.spark.sql.DataFrame, id: String,
+        extra: Int => Seq[org.apache.spark.sql.Column]) =
+      (0 until 3).map { k =>
+        df.select((col(id) + lit(k * 5000000L)).as(id) +: extra(k): _*)
+      }.reduce(_ unionByName _)
+    val d = spark.read.parquet(s"$Sf0001/documents.parquet")
+    (if (docs) stripes(d, "doc_id",
+      _ => Seq(col("text"), col("lang"), col("source"), col("n_chars"))) else d)
+      .coalesce(1).write.parquet(s"$out/documents.parquet")
+    val e = spark.read.parquet(s"$Sf0001/embeddings.parquet")
+    (if (vecs) stripes(e, "vec_id",
+      k => Seq(col("embedding"), ((col("label") + lit(k)) % lit(4)).cast("int").as("label")))
+     else e)
+      .coalesce(1).write.parquet(s"$out/embeddings.parquet")
+    out
+  }
+
   override def afterAll(): Unit = {
-    // keep the session for the other suites in the same JVM
+    // keep the session for the other suites in the same JVM; drop only
+    // this suite's generated corpora
+    def rm(p: java.io.File): Unit = {
+      val kids = p.listFiles()
+      if (kids != null) kids.foreach(rm)
+      p.delete(): Unit
+    }
+    scratchDirs.foreach(d => rm(new java.io.File(d)))
+    scratchDirs = Nil
   }
 }

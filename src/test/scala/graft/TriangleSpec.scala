@@ -9,19 +9,6 @@ import graft.ops.Dedup
   * terms actually fire. */
 class TriangleSpec extends SparkSpec {
 
-  @volatile private var dupDirCreated: Option[String] = None
-
-  override def afterAll(): Unit = {
-    dupDirCreated.foreach { d =>
-      def rm(p: java.io.File): Unit = {
-        val kids = p.listFiles(); if (kids != null) kids.foreach(rm)
-        p.delete(): Unit
-      }
-      rm(new java.io.File(d))
-    }
-    super.afterAll()
-  }
-
   // No Knobs.noteDir on the generated corpus: the MinHash census chain is
   // knob-free (fixed bands/permutations; only the SimHash family reads a
   // derived knob), and the tripled corpus would otherwise trip the
@@ -56,20 +43,10 @@ class TriangleSpec extends SparkSpec {
   }
 
   test("rep-arithmetic census equals the expanded census on a copy-heavy corpus") {
-    val out = java.nio.file.Files.createTempDirectory("graft-tricorpus-").toString
-    dupDirCreated = Some(out)
-    // three byte-identical stripes of the documents (shifted ids): every
-    // text group becomes a 3-clique, so ALL arithmetic terms (within,
-    // bipartite, rep-triangle) contribute
-    import org.apache.spark.sql.functions._
-    val d = spark.read.parquet(s"$Sf0001/documents.parquet")
-    (0 until 3).map { k =>
-      d.select((col("doc_id") + lit(k * 5000000L)).as("doc_id"),
-        col("text"), col("lang"), col("source"), col("n_chars"))
-    }.reduce(_ unionByName _)
-      .coalesce(1).write.parquet(s"$out/documents.parquet")
-    spark.read.parquet(s"$Sf0001/embeddings.parquet")
-      .coalesce(1).write.parquet(s"$out/embeddings.parquet")
+    // three byte-identical stripes of the documents: every text group
+    // becomes a 3-clique, so ALL arithmetic terms (within, bipartite,
+    // rep-triangle) contribute
+    val out = stripeCorpus(docs = true, vecs = false)
     assert(engine(out) == naive(out))
   }
 }
