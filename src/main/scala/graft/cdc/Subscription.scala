@@ -92,16 +92,16 @@ object Subscription {
           |    WHEN 'update' THEN 2 WHEN 'delete' THEN 4 ELSE 0 END)""".stripMargin))
       .withColumn("valid", expr("flag > 0"))
 
-  /** Parsed subs × catalog validation; routable = parse-valid AND known. */
-  def validated(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val cat = Catalog.toDF("cat_tbl")
+  /** Parsed subs validated against the catalog; routable = parse-valid
+    * AND known. Catalog membership is an `isin` column, so the whole frame
+    * optimizes to a local relation: the fan-out broadcasts it without a
+    * Spark job. `tbl` comes from split_part and is never NULL, but its
+    * type is nullable: the coalesce keeps `table_known` non-nullable in
+    * the written schema. */
+  def validated(spark: SparkSession): DataFrame =
     parsed(spark)
-      .join(broadcast(cat), col("tbl") === col("cat_tbl"), "left")
-      .withColumn("table_known", col("cat_tbl").isNotNull)
+      .withColumn("table_known", coalesce(col("tbl").isin(Catalog: _*), lit(false)))
       .withColumn("routable", col("valid") && col("table_known"))
-      .drop("cat_tbl")
-  }
 
   // ---- queries ------------------------------------------------------------
 

@@ -3,45 +3,44 @@ package graft.streaming
 import java.sql.DriverManager
 import java.util.concurrent.ConcurrentSkipListMap
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
 import graft.cdc.{ChangeFeed, Forwarder}
 
-/** Sustained-rate measurement harness for the COMPOSED change-data
-  * pipeline: a generator thread commits
-  * wal2json documents into the JDBC change table at a target rate while
-  * the row-175 polling source drives
+/** Sustained-rate measurement harness for the composed change-data
+  * pipeline: writer threads commit wal2json documents into a JDBC change
+  * table at a target rate while the polling source drives
   *
   *   poll → wal2json decode (+cmap) → hypertable remap →
   *   per-subscriber fan-out (parquet sink) + incremental LWW snapshot
   *
-  * under BOUNDED admission (maxLsnPerTrigger — the row-161 backpressure
-  * contract, here measured rather than only proven), recording per-batch
-  * rows, wall, insert-to-completion latency and backlog. Every streaming
-  * row in SURVEY §2 is proven by batch-equality; this harness supplies
-  * the missing evidence class: does the pipeline KEEP UP, at what rate,
-  * with what latency, and does a backlog drain in bounded batches.
+  * under bounded admission (maxLsnPerTrigger), recording per-batch rows,
+  * wall, insert-to-completion latency and backlog.
   *
-  * The per-batch apply is [[applyFeedBatch]], the same function
-  * JdbcPipelineSpec drives through a kill/restart. */
+  * Each micro-batch runs [[applyFeedBatch]] (also driven through a
+  * kill/restart by JdbcPipelineSpec): one JDBC poll and one decode, the
+  * fan-out and the state merge as two concurrent sinks over that one
+  * read, and the batch's stats taken from an `observe` on the fan-out, so
+  * a batch costs about its slower sink rather than the sum of three
+  * actions. [[run]] stops the query only after its last micro-batch has
+  * committed, so every admitted change is delivered inside the run. */
 object StreamRateHarness {
 
   case class BatchStat(batchId: Long, rows: Long, wallMs: Long,
     e2eMs: Long, backlogRows: Long)
 
-  /** Per-batch facts recorded SYNCHRONOUSLY inside foreachBatch (the
-    * batch's own execution path), unlike [[BatchStat]] which rides the
-    * async StreamingQueryListener bus. Listener events are delivered
-    * best-effort and can still be in flight when the query stops, so
-    * correctness assertions (admission bound, batch count, drain) must
-    * read THESE; the listener stats serve latency/backlog reporting only.
+  /** Per-batch facts recorded by [[applyFeedBatch]] on the batch's own
+    * execution path, unlike [[BatchStat]], which rides the async
+    * StreamingQueryListener bus (best-effort, possibly still in flight at
+    * stop): correctness assertions read these, the listener stats serve
+    * latency/backlog reporting only.
     *
-    * `rows` counts DECODED change rows (one wal2json message can carry
-    * several changes); `lsns` counts DISTINCT admitted lsns — the
+    * `rows` counts decoded change rows (one wal2json document can carry
+    * several changes); `lsns` counts distinct admitted lsns, the
     * exactly-once unit. Window tiling plus sum(lsns) == feed length pins
-    * per-lsn exactly-once delivery including loss INSIDE a window. */
+    * per-lsn exactly-once delivery including loss inside a window. */
   case class SyncBatch(batchId: Long, rows: Long, lsns: Long,
     minLsn: Long, maxLsn: Long)
 
@@ -58,6 +57,7 @@ object StreamRateHarness {
     deliveredRows: Long,
     stateRows: Long,
     distinctEntities: Long,
+    committedLsn: Long,
     batches: Seq[BatchStat],
     syncBatches: Seq[SyncBatch])
 
@@ -72,23 +72,85 @@ object StreamRateHarness {
       .filter(_.startsWith("state_")).map(_.stripPrefix("state_").toLong)
       .filter(_ < before).sorted.lastOption
 
-  /** The composed feed's exactly-once per-batch apply over a decoded+cmap
-    * micro-batch: fan-out deliveries to `work/deliveries/batch_<id>`, then
-    * the cumulative LWW state `work/snapshot/state_<id>` = the newest
-    * earlier state merged with the batch's keyed changes (the batch's own
-    * fold when there is none). Every side effect is keyed by batchId in
-    * overwrite mode, so a replayed batch rewrites its own output instead
-    * of double-applying (Spark replays a batch only with identical
-    * content). One shuffle per batch for the state merge. */
+  /** End offset (the source's lsn) of the newest micro-batch whose commit
+    * the checkpoint `ckpt` recorded; 0 before the first commit. */
+  def committedLsn(ckpt: String): Long =
+    Option(new java.io.File(ckpt, "commits").list()).toSeq.flatten
+      .filter(_.forall(_.isDigit)).map(_.toLong).maxOption.map { id =>
+        val lines = java.nio.file.Files.readAllLines(
+          java.nio.file.Paths.get(ckpt, "offsets", id.toString))
+        lines.get(lines.size - 1).trim.toLong
+      }.getOrElse(0L)
+
+  /** The composed feed's exactly-once apply of one decoded+cmap micro-batch.
+    *
+    * Plan: the batch is persisted, so the JDBC poll and the JSON decode
+    * run once; two sinks then read the cached frame concurrently —
+    *  - the fan-out deliveries to `work/deliveries/batch_<id>`, on this
+    *    thread, with an `observe` on its input yielding the [[SyncBatch]]
+    *    (no separate stats action);
+    *  - the cumulative LWW state `work/snapshot/state_<id>` = the newest
+    *    earlier state (read with the state's known schema, so no schema
+    *    inference job) merged with the batch's keyed changes, or the
+    *    batch's own fold when there is none, on a fresh thread.
+    * The critical path is about the slower sink. Every side effect is keyed
+    * by batchId in overwrite mode, so a replayed batch (Spark replays only
+    * with identical content) rewrites its own output. The state thread is
+    * joined before this returns or rethrows, even when the batch thread is
+    * interrupted by a stop, so no write outlives its batch to race a replay
+    * on the same path. One shuffle per batch, in the state merge. `record`
+    * receives the batch's stats once both sinks succeeded; a batch that
+    * decodes to no changes has none. */
   def applyFeedBatch(spark: SparkSession, work: String, batch: DataFrame,
-      batchId: Long): Unit = {
-    Forwarder.fanoutFromDecoded(spark, batch)
-      .write.mode("overwrite").parquet(s"$work/deliveries/batch_$batchId")
-    val delta = Forwarder.keyed(batch)
-    latestStateId(work, batchId)
-      .map(id => spark.read.parquet(s"$work/snapshot/state_$id"))
-      .fold(Forwarder.snapshotState(delta))(Forwarder.mergeSnapshotState(_, delta))
-      .write.mode("overwrite").parquet(s"$work/snapshot/state_$batchId")
+      batchId: Long, record: SyncBatch => Unit = _ => ()): Unit = {
+    val cached = batch.persist()
+    try {
+      val joinState = forked(s"feed-state-$batchId") {
+        val delta = Forwarder.keyed(cached)
+        val fold = Forwarder.snapshotState(delta)
+        latestStateId(work, batchId)
+          .map(id => spark.read.schema(fold.schema).parquet(s"$work/snapshot/state_$id"))
+          .fold(fold)(Forwarder.mergeSnapshotState(_, delta))
+          .write.mode("overwrite").parquet(s"$work/snapshot/state_$batchId")
+      }
+      // the posexplode index numbers each document's changes from 0, so
+      // the count of idx = 0 rows is the distinct-lsn count, which observe
+      // (no distinct aggregates) cannot take directly
+      val stats = Observation()
+      try {
+        Forwarder.fanoutFromDecoded(spark, cached.observe(stats,
+            count(lit(1)).as("rows"), count_if(col("idx") === 0).as("lsns"),
+            min(col("lsn")).as("min_lsn"), max(col("lsn")).as("max_lsn")))
+          .write.mode("overwrite").parquet(s"$work/deliveries/batch_$batchId")
+      } catch {
+        case t: Throwable =>
+          try joinState() catch { case s: Throwable => t.addSuppressed(s) }
+          throw t
+      }
+      joinState()
+      val m = stats.get.view.mapValues(_.asInstanceOf[Long])
+      if (m("rows") > 0L)
+        record(SyncBatch(batchId, m("rows"), m("lsns"), m("min_lsn"), m("max_lsn")))
+    } finally cached.unpersist()
+  }
+
+  /** Start `body` on a fresh thread, which inherits this thread's Spark
+    * local properties (job group, SQL execution id) so its jobs are
+    * cancelled with the query and nest under its micro-batch. Returns a
+    * join that waits the thread out through interrupts (restoring the
+    * interrupt flag after) and rethrows its failure. */
+  private def forked(name: String)(body: => Unit): () => Unit = {
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val t = new Thread(() => try body catch { case e: Throwable => failure.set(e) }, name)
+    t.setDaemon(true)
+    t.start()
+    () => {
+      var interrupted = false
+      while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread().interrupt()
+      Option(failure.get).foreach(e => throw e)
+    }
   }
 
   /** Drive the pipeline: insert `msgs` (ordered by lsn) at `ratePerSec`
@@ -148,8 +210,8 @@ object StreamRateHarness {
     // First writer failure, captured so the harness fails FAST with the
     // actual exception: a writer dying on an uncaught SQLException (Derby
     // lock escalation between concurrent inserters + the reader's MIN
-    // scan) otherwise surfaces only minutes later as a generic
-    // drain-deadline failure with no hint a writer crashed.
+    // scan) otherwise surfaces only at the deadline with no hint a
+    // writer crashed.
     val writerError =
       new java.util.concurrent.atomic.AtomicReference[Throwable](null)
     // Writer k owns slices s with s % writers == k (round-robin stripes
@@ -162,8 +224,8 @@ object StreamRateHarness {
       // getConnection INSIDE the try: a connect-time failure (Derby
       // lock/boot contention between concurrent writers — exactly the
       // class the fail-fast targets) must set writerError and count the
-      // writer done, not skip both and die minutes later on the generic
-      // drain deadline with no exception attributed.
+      // writer done, not skip both and die at the deadline with no
+      // exception attributed.
       var c: java.sql.Connection = null
       try {
         c = DriverManager.getConnection(url)
@@ -218,7 +280,6 @@ object StreamRateHarness {
     def joinWriters(): Unit = writerThreads.foreach(_.join())
 
     val stats = new java.util.concurrent.ConcurrentLinkedQueue[BatchStat]()
-    @volatile var confirmed = -1L
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
@@ -226,7 +287,6 @@ object StreamRateHarness {
         val p = e.progress
         if (p.numInputRows > 0) {
           val end = try p.sources(0).endOffset.trim.toLong catch { case _: Throwable => -1L }
-          confirmed = math.max(confirmed, end)
           val now = System.nanoTime()
           // latency: completion now vs insert time of the batch's newest
           // row. insertTimes maps each 100 ms pacing slice's LAST lsn to
@@ -251,16 +311,6 @@ object StreamRateHarness {
     // batchId → synchronous facts; keyed so an exactly-once replay of a
     // batch overwrites its own record instead of double-counting
     val syncStats = new ConcurrentSkipListMap[Long, SyncBatch]()
-    def applyBatch(batch: DataFrame, batchId: Long): Unit = {
-      val agg = batch.agg(count(lit(1)), countDistinct(col("lsn")),
-        min(col("lsn")), max(col("lsn")))
-        .head() // bounded-collect: 1-row aggregate, N-independent
-      if (agg.getLong(0) > 0L)
-        syncStats.put(batchId,
-          SyncBatch(batchId, agg.getLong(0), agg.getLong(1),
-            agg.getLong(2), agg.getLong(3)))
-      applyFeedBatch(spark, work, batch, batchId)
-    }
 
     // preload mode: the whole backlog is in the table before the stream
     // sees its first trigger, so the stream wall prices the consumer path
@@ -278,37 +328,38 @@ object StreamRateHarness {
     val q = ChangeFeed.decodedWithMapFromRaw(raw).writeStream
       .option("checkpointLocation", s"$work/ckpt")
       .trigger(Trigger.ProcessingTime(s"$triggerMs milliseconds"))
-      .foreachBatch(applyBatch _)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        applyFeedBatch(spark, work, batch, batchId, syncStats.put(batchId, _))
+      }
       .start()
 
     if (!preload) startWriters()
-    // run until the generator finished AND the stream drained the feed.
-    // Drain is judged first on the SYNCHRONOUS per-batch records: the
-    // listener `confirmed` watermark rides an async event bus and can lag
-    // the actual execution under load. A
-    // malformed last document decodes to no rows, so the synchronous
-    // high-water never reaches it; the source's admitted end offset
-    // (`confirmed`) does, once that batch completes.
-    def confirmedSync: Long =
-      Option(syncStats.lastEntry()).map(_.getValue.maxLsn).getOrElse(-1L)
-    def drainedFeed: Boolean = confirmedSync >= maxLsn || confirmed >= maxLsn
+    // Wait for the writers (failing fast on a writer's own exception),
+    // then let the stream process everything they committed and stop it
+    // only once its last micro-batch has committed. A stalled stream is
+    // stopped at the deadline, which returns processAllAvailable.
     val deadline = System.nanoTime() +
       math.max(120L, 20L * msgs.length / math.max(1L, ratePerSec)) * 1000000000L
-    while ((generatorDoneAt == 0L || !drainedFeed) &&
-      writerError.get == null && System.nanoTime() < deadline) Thread.sleep(100)
-    // fail fast with the writer's ACTUAL exception, not a drain timeout
-    Option(writerError.get).foreach { t =>
-      try { q.stop(); spark.streams.removeListener(listener) }
-      catch { case _: Throwable => () }
-      throw new IllegalStateException(s"ingest writer crashed: $t", t)
+    val streamDoneAt = try {
+      while (generatorDoneAt == 0L && writerError.get == null &&
+        System.nanoTime() < deadline) Thread.sleep(100)
+      Option(writerError.get).foreach { t =>
+        throw new IllegalStateException(s"ingest writer crashed: $t", t)
+      }
+      val timer = new java.util.Timer("stream-bench-deadline", true)
+      timer.schedule(new java.util.TimerTask { def run(): Unit = q.stop() },
+        math.max(0L, (deadline - System.nanoTime()) / 1000000L))
+      try q.processAllAvailable() finally timer.cancel()
+      System.nanoTime()
+    } finally {
+      q.stop()
+      spark.streams.removeListener(listener)
     }
-    val drained = drainedFeed
-    val streamDoneAt = System.nanoTime()
-    q.stop(); q.awaitTermination()
-    spark.streams.removeListener(listener)
-
-    require(drained,
-      s"stream failed to drain: decoded $confirmedSync, admitted $confirmed < $maxLsn")
+    // a malformed last document decodes to no rows, but the source's
+    // committed offset still reaches the feed's last lsn
+    val committed = committedLsn(s"$work/ckpt")
+    require(committed == maxLsn,
+      s"stream failed to drain: committed lsn $committed < $maxLsn")
     val batchStats = {
       import scala.jdk.CollectionConverters._
       stats.asScala.toSeq.sortBy(_.batchId)
@@ -351,6 +402,7 @@ object StreamRateHarness {
       deliveredRows = delivered,
       stateRows = stateRows,
       distinctEntities = entities,
+      committedLsn = committed,
       batches = batchStats,
       syncBatches = syncBatchSeq)
   }

@@ -29,6 +29,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   @volatile private var scratchDirs: List[String] = Nil
 
+  /** A fresh temp dir, deleted after the suite. */
+  def scratchDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toString
+    scratchDirs = d :: scratchDirs
+    d
+  }
+
   /** A copy-heavy corpus: three byte-identical stripes of the sf0.001
     * documents and/or embeddings with shifted ids (+5M per stripe), in a
     * temp dir deleted after the suite. Every text or vector group becomes
@@ -41,8 +48,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * flip guard. */
   def stripeCorpus(docs: Boolean, vecs: Boolean): String = {
     import org.apache.spark.sql.functions._
-    val out = java.nio.file.Files.createTempDirectory("graft-stripes-").toString
-    scratchDirs = out :: scratchDirs
+    val out = scratchDir("graft-stripes-")
     def stripes(df: org.apache.spark.sql.DataFrame, id: String,
         extra: Int => Seq[org.apache.spark.sql.Column]) =
       (0 until 3).map { k =>
@@ -62,7 +68,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
     // keep the session for the other suites in the same JVM; drop only
-    // this suite's generated corpora
+    // this suite's scratch dirs
     def rm(p: java.io.File): Unit = {
       val kids = p.listFiles()
       if (kids != null) kids.foreach(rm)

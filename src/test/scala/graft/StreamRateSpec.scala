@@ -19,9 +19,10 @@ import graft.streaming.StreamRateHarness
   *      admission contract of the row-175 source), and the minimum batch
   *      count follows arithmetically: ceil(span / bound) — deterministic
   *      given (1), independent of trigger cadence or box load;
-  *   2. the stream DRAINS the feed: the harness requires the synchronous
-  *      high-water to reach max inserted before returning, and the
-  *      residual drain lag after the generator stops is bounded;
+  *   2. the stream DRAINS the feed: the harness stops its query only
+  *      after the last micro-batch committed, so the checkpoint's last
+  *      committed offset is the feed's last lsn, and the residual drain
+  *      lag after the generator stops is bounded;
   *   3. bounded state — the cumulative snapshot holds exactly one row
   *      per (base, uid) entity, equal to the batch recompute over the
   *      full table (state grows with entities, never with feed length);
@@ -64,6 +65,8 @@ class StreamRateSpec extends SparkSpec {
     // (windows tile AND the distinct-lsn total matches — no loss inside
     // a window; rows > lsns is fine, one message can carry N changes).
     assert(r.syncBatches.last.maxLsn == msgs.length.toLong)
+    assert(r.committedLsn == msgs.length.toLong,
+      s"checkpoint committed lsn ${r.committedLsn} != ${msgs.length}")
     assert(r.syncBatches.map(_.lsns).sum == msgs.length.toLong,
       s"admitted ${r.syncBatches.map(_.lsns).sum} lsns != ${msgs.length}")
     assert(r.drainLagMs <= 20000, s"drain lag ${r.drainLagMs} ms")
@@ -94,6 +97,7 @@ class StreamRateSpec extends SparkSpec {
       maxLsnPerTrigger = 500L, triggerMs = 250L, numPartitions = 2)
     val n = msgs.length.toLong
     assert(r.syncBatches.last.maxLsn == n - 1)
+    assert(r.committedLsn == n, s"checkpoint committed lsn ${r.committedLsn} != $n")
     assert(r.syncBatches.map(_.lsns).sum == n - 1,
       s"admitted ${r.syncBatches.map(_.lsns).sum} decodable lsns != ${n - 1}")
     assert(r.stateRows == r.distinctEntities,
@@ -131,6 +135,8 @@ class StreamRateSpec extends SparkSpec {
     // 1..N, gap-free non-overlapping windows reaching N PLUS a distinct
     // admitted-lsn total of exactly N pins per-lsn exactly-once delivery.
     assert(r.syncBatches.last.maxLsn == msgs.length.toLong)
+    assert(r.committedLsn == msgs.length.toLong,
+      s"checkpoint committed lsn ${r.committedLsn} != ${msgs.length}")
     assert(r.syncBatches.map(_.lsns).sum == msgs.length.toLong,
       s"admitted ${r.syncBatches.map(_.lsns).sum} lsns != ${msgs.length} " +
         "inserted — an lsn was lost inside an admitted window")
