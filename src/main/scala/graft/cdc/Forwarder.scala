@@ -25,8 +25,7 @@ object Forwarder {
     * feeds the memoized persisted decode through here so fan-out shares it
     * with every other CDC query instead of re-running the JSON path. */
   def fanoutFromDecoded(spark: SparkSession, withMap: DataFrame): DataFrame =
-    fanoutOver(spark, withMap,
-      Subscription.validated(spark).where(col("routable")))
+    fanoutOver(spark, withMap, Subscription.routable(spark))
 
   /** Fan-out against an explicit (already validated+routable) subscription
     * frame — the auth-restricted path passes its connect-time-gated subset
@@ -184,9 +183,14 @@ object Forwarder {
       .select(col("base"), col("uid"), col("last.lsn").as("last_lsn"),
         col("last.idx").as("last_idx"), col("last_kind"), col(name))
 
-  /** Re-enter a [[lastWrite]] state into the fold: each state row carries
-    * its last write's (lsn, idx, kind) and its accumulated `name` as
-    * weight, each delta row `deltaWeight`. The fold is associative, so
+  /** A [[lastWrite]] state as keyed rows again, its accumulated `name`
+    * as weight `w`. */
+  private def reentered(state: DataFrame, name: String): DataFrame =
+    state.select(col("base"), col("uid"), col("last_lsn").as("lsn"),
+      col("last_idx").as("idx"), col("last_kind").as("kind"), col(name).as("w"))
+
+  /** Re-enter a [[lastWrite]] state into the fold, each delta row
+    * weighing `deltaWeight`. The fold is associative, so
     * merge(state(≤L), delta(L,L']) ≡ state(≤L') exactly — the reference's
     * confirmed-LSN resume (src/cdc/replication.rs:95-282) applied to
     * STATE rather than offsets. Cost: one shuffle over |state| + |delta|
@@ -195,11 +199,8 @@ object Forwarder {
   private def mergeLastWrite(state: DataFrame, name: String,
       delta: DataFrame, deltaWeight: Column): DataFrame =
     lastWrite(
-      state.select(col("base"), col("uid"), col("last_lsn").as("lsn"),
-        col("last_idx").as("idx"), col("last_kind").as("kind"),
-        col(name).as("w"))
-        .unionByName(delta.select(col("base"), col("uid"), col("lsn"),
-          col("idx"), col("kind"), deltaWeight.as("w"))),
+      reentered(state, name).unionByName(delta.select(col("base"), col("uid"),
+        col("lsn"), col("idx"), col("kind"), deltaWeight.as("w"))),
       name, sum("w"))
 
   /** LWW state WITH tombstones over a keyed routed frame — the
@@ -216,6 +217,12 @@ object Forwarder {
     * changes in (L, L']: ≡ snapshotState(feed ≤ L'). */
   def mergeSnapshotState(state: DataFrame, deltaRouted: DataFrame): DataFrame =
     mergeLastWrite(state, "n_changes", deltaRouted, lit(1L))
+
+  /** Fold any set of [[snapshotState]] versions over disjoint parts of a
+    * feed, e.g. the live feed's per-batch deltas read as one frame:
+    * ≡ snapshotState(keyed(all parts)), by the same associativity. */
+  def foldSnapshotStates(states: DataFrame): DataFrame =
+    lastWrite(reentered(states, "n_changes"), "n_changes", sum("w"))
 
   /** Drop tombstones and order — turns a state frame into the
     * [[cdcSnapshot]] report shape. */

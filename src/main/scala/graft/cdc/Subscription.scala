@@ -103,6 +103,11 @@ object Subscription {
       .withColumn("table_known", coalesce(col("tbl").isin(Catalog: _*), lit(false)))
       .withColumn("routable", col("valid") && col("table_known"))
 
+  /** The subscriptions the fan-out routes to. A streaming query builds
+    * this frame once and hands it to every micro-batch's fan-out. */
+  def routable(spark: SparkSession): DataFrame =
+    validated(spark).where(col("routable"))
+
   // ---- queries ------------------------------------------------------------
 
   def subscriptionRoute(spark: SparkSession, dir: String): DataFrame =
@@ -125,7 +130,7 @@ object Subscription {
     val owners = Owners.toDF("o_sub_id", "o_user_id")
       .select(col("o_sub_id"), col("o_user_id").cast("string").as("o_uid"))
     val admins = Admins.toDF("a_sub_id")
-    validated(spark).where(col("routable"))
+    routable(spark)
       .join(broadcast(admins), col("sub_id") === col("a_sub_id"), "left")
       .join(broadcast(owners),
         col("sub_id") === col("o_sub_id") && col("fval") === col("o_uid"), "left")
@@ -144,19 +149,12 @@ object Subscription {
     // Connect-time gate order: the reference's auth check runs once per
     // socket, BEFORE the forwarder sees a change (src/api/auth.rs:126-224),
     // so the subscription side is restricted first and only the accepted
-    // subset fans out — unauthorized legs are never materialized.
-    val allowedSubs = validated(spark).where(col("routable"))
+    // subset fans out — unauthorized legs are never materialized, and the
+    // fan-out's broadcast join on the subscription's table drops the
+    // changes of every table no accepted subscription names.
+    val allowedSubs = routable(spark)
       .join(broadcast(authAllowed(spark)), Seq("sub_id"))
-    // The accepted subscriptions' table set is a pure function of the
-    // static seed/owner/admin config — the same per-connect derivation
-    // the reference makes; it routes the decoded frame on the remapped
-    // base before the fan-out (the filter_eq/filter_in shape).
-    // bounded-collect: ≤ |SubsSeed| rows, N-independent of the change feed
-    val bases = allowedSubs.select("tbl").distinct()
-      .collect().map(_.getString(0)).sorted
-    val routed = ChangeFeed.decodedWithMap(spark, dir)
-      .where(HyperRemap.base.isin(bases.toSeq: _*))
-    Forwarder.fanoutOver(spark, routed, allowedSubs)
+    Forwarder.fanoutOver(spark, ChangeFeed.decodedWithMap(spark, dir), allowedSubs)
       .select("sub_id", "lsn", "idx", "base", "kind")
       .orderBy("sub_id", "lsn", "idx")
   }

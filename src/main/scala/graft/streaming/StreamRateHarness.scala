@@ -7,25 +7,25 @@ import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
-import graft.cdc.{ChangeFeed, Forwarder}
+import graft.cdc.{ChangeFeed, Forwarder, Subscription}
 
 /** Sustained-rate measurement harness for the composed change-data
   * pipeline: writer threads commit wal2json documents into a JDBC change
   * table at a target rate while the polling source drives
   *
   *   poll → wal2json decode (+cmap) → hypertable remap →
-  *   per-subscriber fan-out (parquet sink) + incremental LWW snapshot
+  *   per-subscriber fan-out (parquet sink) + per-batch LWW state
   *
   * under bounded admission (maxLsnPerTrigger), recording per-batch rows,
   * wall, insert-to-completion latency and backlog.
   *
   * Each micro-batch runs [[applyFeedBatch]] (also driven through a
-  * kill/restart by JdbcPipelineSpec): one JDBC poll and one decode, the
-  * fan-out and the state merge as two concurrent sinks over that one
-  * read, and the batch's stats taken from an `observe` on the fan-out, so
-  * a batch costs about its slower sink rather than the sum of three
-  * actions. [[run]] stops the query only after its last micro-batch has
-  * committed, so every admitted change is delivered inside the run. */
+  * kill/restart by JdbcPipelineSpec): the fan-out and the batch's own
+  * state fold as two concurrent sinks, and the batch's stats taken from
+  * an `observe` on the fan-out, so a batch costs about its slower sink,
+  * and neither sink's work grows with the feed. [[run]] stops the query
+  * only after its last micro-batch has committed, so every admitted
+  * change is delivered inside the run. */
 object StreamRateHarness {
 
   case class BatchStat(batchId: Long, rows: Long, wallMs: Long,
@@ -44,6 +44,8 @@ object StreamRateHarness {
   case class SyncBatch(batchId: Long, rows: Long, lsns: Long,
     minLsn: Long, maxLsn: Long)
 
+  /** A [[run]]'s measurements. `work` is the run's directory (change
+    * table, checkpoint, outputs); the caller reads and deletes it. */
   case class RateReport(
     nMsgs: Long,
     generatorRate: Long,
@@ -59,18 +61,18 @@ object StreamRateHarness {
     distinctEntities: Long,
     committedLsn: Long,
     batches: Seq[BatchStat],
-    syncBatches: Seq[SyncBatch])
+    syncBatches: Seq[SyncBatch],
+    work: String)
 
   private def exec(url: String, sql: String): Unit = {
     val c = DriverManager.getConnection(url)
     try { c.createStatement().execute(sql) } finally c.close()
   }
 
-  /** Newest cumulative snapshot version under `work` below `before`. */
-  def latestStateId(work: String, before: Long = Long.MaxValue): Option[Long] =
-    Option(new java.io.File(s"$work/snapshot").list()).toSeq.flatten
-      .filter(_.startsWith("state_")).map(_.stripPrefix("state_").toLong)
-      .filter(_ < before).sorted.lastOption
+  /** The cumulative LWW state of the feed applied under `work`: the fold
+    * of every batch's state version (see [[applyFeedBatch]]). */
+  def state(spark: SparkSession, work: String): DataFrame =
+    Forwarder.foldSnapshotStates(spark.read.parquet(s"$work/snapshot/state_*"))
 
   /** End offset (the source's lsn) of the newest micro-batch whose commit
     * the checkpoint `ckpt` recorded; 0 before the first commit. */
@@ -84,54 +86,44 @@ object StreamRateHarness {
 
   /** The composed feed's exactly-once apply of one decoded+cmap micro-batch.
     *
-    * Plan: the batch is persisted, so the JDBC poll and the JSON decode
-    * run once; two sinks then read the cached frame concurrently —
-    *  - the fan-out deliveries to `work/deliveries/batch_<id>`, on this
-    *    thread, with an `observe` on its input yielding the [[SyncBatch]]
-    *    (no separate stats action);
-    *  - the cumulative LWW state `work/snapshot/state_<id>` = the newest
-    *    earlier state (read with the state's known schema, so no schema
-    *    inference job) merged with the batch's keyed changes, or the
-    *    batch's own fold when there is none, on a fresh thread.
-    * The critical path is about the slower sink. Every side effect is keyed
-    * by batchId in overwrite mode, so a replayed batch (Spark replays only
-    * with identical content) rewrites its own output. The state thread is
-    * joined before this returns or rethrows, even when the batch thread is
-    * interrupted by a stop, so no write outlives its batch to race a replay
-    * on the same path. One shuffle per batch, in the state merge. `record`
-    * receives the batch's stats once both sinks succeeded; a batch that
-    * decodes to no changes has none. */
+    * Two sinks run concurrently, each polling and decoding its own read of
+    * the batch's fixed LSN range (at a few hundred documents a second read
+    * is cheaper than a columnar cache): the fan-out over the query's
+    * routable `subs` to `work/deliveries/batch_<id>` on this thread, with
+    * an `observe` on its input yielding the [[SyncBatch]], and the batch's
+    * own LWW fold to `work/snapshot/state_<id>` on a fresh thread, which
+    * reads no earlier version ([[state]] folds them), so neither grows
+    * with the feed. Every side effect is keyed by batchId in overwrite
+    * mode, so a replayed batch (Spark replays only with identical
+    * content) rewrites only its own output. The state thread is joined
+    * before this returns or rethrows, even when the batch thread is
+    * interrupted by a stop, so no write outlives its batch to race a
+    * replay on the same path. `record` receives the batch's stats once
+    * both sinks succeeded; a batch that decodes to no changes has none. */
   def applyFeedBatch(spark: SparkSession, work: String, batch: DataFrame,
-      batchId: Long, record: SyncBatch => Unit = _ => ()): Unit = {
-    val cached = batch.persist()
+      batchId: Long, subs: DataFrame, record: SyncBatch => Unit = _ => ()): Unit = {
+    val joinState = forked(s"feed-state-$batchId") {
+      Forwarder.snapshotState(Forwarder.keyed(batch))
+        .write.mode("overwrite").parquet(s"$work/snapshot/state_$batchId")
+    }
+    // the posexplode index numbers each document's changes from 0, so
+    // the count of idx = 0 rows is the distinct-lsn count, which observe
+    // (no distinct aggregates) cannot take directly
+    val stats = Observation()
     try {
-      val joinState = forked(s"feed-state-$batchId") {
-        val delta = Forwarder.keyed(cached)
-        val fold = Forwarder.snapshotState(delta)
-        latestStateId(work, batchId)
-          .map(id => spark.read.schema(fold.schema).parquet(s"$work/snapshot/state_$id"))
-          .fold(fold)(Forwarder.mergeSnapshotState(_, delta))
-          .write.mode("overwrite").parquet(s"$work/snapshot/state_$batchId")
-      }
-      // the posexplode index numbers each document's changes from 0, so
-      // the count of idx = 0 rows is the distinct-lsn count, which observe
-      // (no distinct aggregates) cannot take directly
-      val stats = Observation()
-      try {
-        Forwarder.fanoutFromDecoded(spark, cached.observe(stats,
-            count(lit(1)).as("rows"), count_if(col("idx") === 0).as("lsns"),
-            min(col("lsn")).as("min_lsn"), max(col("lsn")).as("max_lsn")))
-          .write.mode("overwrite").parquet(s"$work/deliveries/batch_$batchId")
-      } catch {
-        case t: Throwable =>
-          try joinState() catch { case s: Throwable => t.addSuppressed(s) }
-          throw t
-      }
-      joinState()
-      val m = stats.get.view.mapValues(_.asInstanceOf[Long])
-      if (m("rows") > 0L)
-        record(SyncBatch(batchId, m("rows"), m("lsns"), m("min_lsn"), m("max_lsn")))
-    } finally cached.unpersist()
+      Forwarder.fanoutOver(spark, batch.observe(stats,
+          count(lit(1)).as("rows"), count_if(col("idx") === 0).as("lsns"),
+          min(col("lsn")).as("min_lsn"), max(col("lsn")).as("max_lsn")), subs)
+        .write.mode("overwrite").parquet(s"$work/deliveries/batch_$batchId")
+    } catch {
+      case t: Throwable =>
+        try joinState() catch { case s: Throwable => t.addSuppressed(s) }
+        throw t
+    }
+    joinState()
+    val m = stats.get.view.mapValues(_.asInstanceOf[Long])
+    if (m("rows") > 0L)
+      record(SyncBatch(batchId, m("rows"), m("lsns"), m("min_lsn"), m("max_lsn")))
   }
 
   /** Start `body` on a fresh thread, which inherits this thread's Spark
@@ -325,11 +317,12 @@ object StreamRateHarness {
       .option("maxLsnPerTrigger", maxLsnPerTrigger.toString)
     val raw = progressTable.fold(rawBase)(pt =>
       rawBase.option("progressTable", pt)).load()
+    val subs = Subscription.routable(spark)
     val q = ChangeFeed.decodedWithMapFromRaw(raw).writeStream
       .option("checkpointLocation", s"$work/ckpt")
       .trigger(Trigger.ProcessingTime(s"$triggerMs milliseconds"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyFeedBatch(spark, work, batch, batchId, syncStats.put(batchId, _))
+        applyFeedBatch(spark, work, batch, batchId, subs, syncStats.put(batchId, _))
       }
       .start()
 
@@ -369,9 +362,8 @@ object StreamRateHarness {
       syncStats.values().asScala.toSeq.sortBy(_.batchId)
     }
     val delivered = spark.read.parquet(s"$work/deliveries/batch_*").count()
-    val stateDf = spark.read.parquet(s"$work/snapshot/state_${latestStateId(work).get}")
-    val stateRows = stateDf.count()
-    // bounded-state proof: the cumulative snapshot is keyed (base, uid)
+    val stateRows = state(spark, work).count()
+    // bounded-state proof: the folded state is keyed (base, uid)
     // — including tombstoned entities, whose last_kind records the
     // delete — so its row count must equal the feed's distinct entity
     // count recomputed in batch over the full change table
@@ -404,6 +396,7 @@ object StreamRateHarness {
       distinctEntities = entities,
       committedLsn = committed,
       batches = batchStats,
-      syncBatches = syncBatchSeq)
+      syncBatches = syncBatchSeq,
+      work = work)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.sql.DriverManager
 
-import graft.cdc.{ChangeFeed, Forwarder}
+import graft.cdc.{ChangeFeed, Forwarder, Subscription}
 import graft.streaming.StreamRateHarness
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -24,8 +24,8 @@ import org.apache.spark.sql.streaming.Trigger
   * The per-batch apply is StreamRateHarness.applyFeedBatch, the function
   * the live feed runs: foreachBatch keys every side effect by batchId —
   * deliveries land in an overwrite-mode per-batch dir, and the snapshot
-  * state is a chain of cumulative per-batch versions (state_N = merge of
-  * state_{N-1} and batch N), so a replayed batch overwrites its own
+  * state is one version per batch (state_N = the LWW fold of batch N
+  * alone), folded on read, so a replayed batch overwrites its own
   * output instead of double-applying. */
 class JdbcPipelineSpec extends SparkSpec {
 
@@ -48,11 +48,10 @@ class JdbcPipelineSpec extends SparkSpec {
   }
 
   test("jdbc poll → decode → remap → fan-out → snapshot survives kill/restart") {
-    val work = java.nio.file.Files.createTempDirectory("graft-jdbc-pipe-").toString
+    val work = scratchDir("graft-jdbc-pipe-")
     val url = s"jdbc:derby:$work/db;create=true"
     val ckpt = s"$work/ckpt"
     val dlv = s"$work/deliveries"
-    val snap = s"$work/snapshot"
     exec(url, "CREATE TABLE changes (lsn BIGINT PRIMARY KEY, payload VARCHAR(4000))")
 
     // real wal2json documents (multi-statement transactions, _hyper_
@@ -62,6 +61,7 @@ class JdbcPipelineSpec extends SparkSpec {
     val (phase1, phase2) = msgs.splitAt(400)
     insertMsgs(url, phase1)
 
+    val subs = Subscription.routable(spark)
     def runOnce(): Unit = {
       val raw = spark.readStream
         .format("graft.sources.JdbcChangeFeed")
@@ -74,7 +74,7 @@ class JdbcPipelineSpec extends SparkSpec {
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          StreamRateHarness.applyFeedBatch(spark, work, batch, batchId)
+          StreamRateHarness.applyFeedBatch(spark, work, batch, batchId, subs)
         }
         .start()
       q.awaitTermination()
@@ -109,9 +109,7 @@ class JdbcPipelineSpec extends SparkSpec {
     def skey(r: Row) = (r.getAs[String]("base"), r.getAs[Long]("uid"),
       r.getAs[Long]("last_lsn"), r.getAs[String]("last_kind"),
       r.getAs[Long]("n_changes"))
-    val sid = StreamRateHarness.latestStateId(work)
-      .getOrElse(fail("no snapshot state written"))
-    val streamedState = spark.read.parquet(s"$snap/state_$sid")
+    val streamedState = StreamRateHarness.state(spark, work)
     val streamedSnap = streamedState
       .where(col("last_kind") =!= "delete")
       .collect().map(skey).sorted
@@ -120,8 +118,8 @@ class JdbcPipelineSpec extends SparkSpec {
     assert(streamedSnap.nonEmpty)
     assert(streamedSnap === batchSnap)
 
-    // the whole cumulative state — tombstones, last_idx and n_changes
-    // included — equals the batch fold over the full feed
+    // the fold of the per-batch versions — tombstones, last_idx and
+    // n_changes included — equals the batch fold over the full feed
     val cols = Seq("base", "uid", "last_lsn", "last_idx", "last_kind", "n_changes")
     val batchState = Forwarder.snapshotState(Forwarder.keyed(withMapAll))
       .select(cols.map(col): _*)
@@ -130,6 +128,6 @@ class JdbcPipelineSpec extends SparkSpec {
       "fixture must leave tombstones in the state")
     assert(st.exceptAll(batchState).count() == 0 &&
       batchState.exceptAll(st).count() == 0,
-      "cumulative streamed state must equal the batch LWW fold")
+      "folded streamed state must equal the batch LWW fold")
   }
 }

@@ -36,11 +36,14 @@ class LsnSpec extends SparkSpec {
   test("parse accepts lowercase and mixed case") {
     val s = spark
     import s.implicits._
-    val got = Seq("16/b374d848", "16/B374d848", "0/a")
+    val parsed = Seq("16/b374d848", "16/B374d848", "0/a")
       .toDF("h").select(Lsn.lsnFromHex(col("h")))
-      .collect().map(_.getLong(0)).toSeq
+    val got = parsed.collect().map(_.getLong(0)).toSeq
     assert(got === Seq((0x16L << 32) | 0xB374D848L,
       (0x16L << 32) | 0xB374D848L, 10L))
+    // conv reads either case; an `upper` would cost a cold ICU table build
+    assert(parsed.queryExecution.analyzed.expressions
+      .forall(_.find(_.nodeName == "Upper").isEmpty), "the parse must not upper-case")
   }
 
   test("round-trip holds across random u64 positions") {

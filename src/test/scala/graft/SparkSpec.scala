@@ -16,11 +16,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val Sf0001 = "/root/testdata/sf0.001"
 
-  /** Stage the sf0.001 events table into a fresh temp dir for streaming
-    * file-source specs (one copied file -> one AvailableNow micro-batch).
-    * One definition for every streaming spec's fixture. */
+  /** Stage the sf0.001 events table into a fresh temp dir, deleted after
+    * the suite, for streaming file-source specs (one copied file -> one
+    * AvailableNow micro-batch). One definition for every streaming spec's
+    * fixture. */
   def stageEventsDir(): String = {
-    val work = java.nio.file.Files.createTempDirectory("graft-events-").toString
+    val work = scratchDir("graft-events-")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$Sf0001/events.parquet"),
       java.nio.file.Paths.get(s"$work/events-part1.parquet"))
@@ -30,10 +31,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   @volatile private var scratchDirs: List[String] = Nil
 
   /** A fresh temp dir, deleted after the suite. */
-  def scratchDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toString
-    scratchDirs = d :: scratchDirs
-    d
+  def scratchDir(prefix: String): String =
+    deleteAfterAll(java.nio.file.Files.createTempDirectory(prefix).toString)
+
+  /** Delete `dir`, made elsewhere, after the suite; returns it. */
+  def deleteAfterAll(dir: String): String = {
+    scratchDirs = dir :: scratchDirs
+    dir
   }
 
   /** A copy-heavy corpus: three byte-identical stripes of the sf0.001

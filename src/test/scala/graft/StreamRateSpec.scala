@@ -23,19 +23,30 @@ import graft.streaming.StreamRateHarness
   *      after the last micro-batch committed, so the checkpoint's last
   *      committed offset is the feed's last lsn, and the residual drain
   *      lag after the generator stops is bounded;
-  *   3. bounded state — the cumulative snapshot holds exactly one row
-  *      per (base, uid) entity, equal to the batch recompute over the
-  *      full table (state grows with entities, never with feed length);
+  *   3. bounded state — the fold of the per-batch state versions holds
+  *      exactly one row per (base, uid) entity, equal to the batch
+  *      recompute over the full table (state grows with entities, never
+  *      with feed length);
   *   4. deliveries flow: the fan-out sink saw rows. */
 class StreamRateSpec extends SparkSpec {
+
+  private val maxPerTrigger = 500L
+
+  /** One harness run; its work dir is deleted after the suite. */
+  private def run(msgs: Array[org.apache.spark.sql.Row],
+      writers: Int = 1): StreamRateHarness.RateReport = {
+    val r = StreamRateHarness.run(spark, msgs, ratePerSec = 1000L,
+      maxLsnPerTrigger = maxPerTrigger, triggerMs = 250L, numPartitions = 2,
+      writers = writers)
+    deleteAfterAll(r.work)
+    r
+  }
 
   test("composed pipeline sustains the generator under bounded admission") {
     val msgs = graft.cdc.ChangeFeed.messages(spark, Sf0001)
       .orderBy("lsn").limit(2000).collect()
-    val maxPerTrigger = 500L
     val startLsn = 0L // harness re-keys the outbox to dense lsn 1..N
-    val r = StreamRateHarness.run(spark, msgs, ratePerSec = 1000L,
-      maxLsnPerTrigger = maxPerTrigger, triggerMs = 250L, numPartitions = 2)
+    val r = run(msgs)
 
     // 1a. admission bound, measured per batch on synchronous records:
     // each batch admits the half-open LSN window (prevHigh, high] and
@@ -93,8 +104,7 @@ class StreamRateSpec extends SparkSpec {
     val last = whole.last.getString(1)
     val msgs = whole.init :+
       org.apache.spark.sql.Row(whole.last.get(0), last.take(last.length / 2))
-    val r = StreamRateHarness.run(spark, msgs, ratePerSec = 1000L,
-      maxLsnPerTrigger = 500L, triggerMs = 250L, numPartitions = 2)
+    val r = run(msgs)
     val n = msgs.length.toLong
     assert(r.syncBatches.last.maxLsn == n - 1)
     assert(r.committedLsn == n, s"checkpoint committed lsn ${r.committedLsn} != $n")
@@ -115,10 +125,7 @@ class StreamRateSpec extends SparkSpec {
     // no re-admission, under the same admission bound as single-writer.
     val msgs = graft.cdc.ChangeFeed.messages(spark, Sf0001)
       .orderBy("lsn").limit(2000).collect()
-    val maxPerTrigger = 500L
-    val r = StreamRateHarness.run(spark, msgs, ratePerSec = 1000L,
-      maxLsnPerTrigger = maxPerTrigger, triggerMs = 250L, numPartitions = 2,
-      writers = 3)
+    val r = run(msgs, writers = 3)
     assert(r.syncBatches.nonEmpty)
     r.syncBatches.foldLeft(0L) { (prevHigh, b) =>
       assert(b.maxLsn - prevHigh <= maxPerTrigger,
