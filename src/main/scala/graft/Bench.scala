@@ -144,8 +144,7 @@ object Bench {
     // against that inflated sample can hide a ~2x real regression. The
     // per-query MIN across the list means a single noisy overwrite can
     // never RAISE the baseline; BENCH_full_pinned.json is updated only by
-    // the deliberate min-of-N rebaseline procedure (scripts/
-    // min_merge_bench.py), never by a Bench run.
+    // a deliberate min-of-N rebaseline, never by a Bench run.
     val prevPaths = sys.env.getOrElse("GRAFT_BENCH_PREV",
         "BENCH_full_last.json,BENCH_full_pinned.json")
       .split(',').map(_.trim).filter(_.nonEmpty)

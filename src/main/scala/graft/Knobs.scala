@@ -118,15 +118,18 @@ object Knobs {
   /** Event-stream size of the current directory. */
   def evCount: Long = if (currentDir.isEmpty) 0L else rowCount(currentDir, "events")
 
-  /** Rank-bucket count for the layout planners' two-phase global ranks
-    * (zorder_layout / compaction_plan): ⌈events/3M⌉ clamped to [8, 32].
+  /** Rank-bucket count of every distributed rank: [[Tables.globalRank]]
+    * (user_spend_decile, user_rfm ×3, zorder_layout ×2, vocab_build,
+    * ngram_coverage_curve, dedup_snm, curriculum_plan, epoch_order and
+    * the ccnet tercile behind ccnet_bucket / filter_ablation) and
+    * compaction_plan's running sum: ⌈events/3M⌉ clamped to [8, 32].
     * Each bucket is one rank-sort task, so the knee trades range-exchange
     * overhead — dominant at small N: 32 buckets measured ~2× slower than
     * 8 at the 10M-event point — against per-task sort volume — dominant
     * at large N: 8 buckets meant 12.5M-row single-task sorts at the
     * 100M-event point, 254 s vs 99 s. The derived value cannot change
-    * results: file ids come from the exact GLOBAL rank, bucket-count
-    * invariant. */
+    * results: every rank order is total (it ends in a unique id), so the
+    * exact GLOBAL rank is bucket-count invariant. */
   def layoutRankBuckets: Int = layoutRankBucketsFor(evCount)
 
   private def layoutRankBucketsFor(n: Long): Int =

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
 /** Parquet table readers + session tuning shared by every operator.
   *
@@ -91,30 +93,14 @@ object Tables {
     if (narrow) df.repartition(cores) else df
   }
 
-  /** Range-bucketed frame with a PINNED physical layout for the
-    * two-phase distributed global rank (user_spend_decile and friends).
-    *
-    * The rank and offset branches both read this frame; without a pin,
-    * each branch triggers its OWN materialization of the
-    * repartitionByRange exchange, and AQE may hand the two runs
-    * different upstream partition layouts — RangePartitioner samples
-    * per input partition, so the two runs can draw DIFFERENT range
-    * boundaries, and `spark_partition_id()` then tags inconsistent
-    * pids: local ranks computed against one layout joined to offsets
-    * computed against another (observed at sf0.1: curriculum_plan
-    * emitted 11 "deciles", ccnet_bucket shifted one doc across a
-    * tercile boundary; sf0.01 coalesces to one partition and hides
-    * it). An eager localCheckpoint pins ONE materialization for both
-    * branches. The frame is the RANK input, already reduced, so the
-    * pinned footprint is small relative to the corpus.
-    *
+  /** Deployment path for [[pinFrame]]'s reliable checkpoint:
+    * `GRAFT_RANK_PIN_DIR` (env or `graft.rank.pin.dir` sysprop).
     * Cluster posture: localCheckpoint stores blocks on executors, so an
-    * executor loss kills the job instead of recomputing. A deployment
-    * sets `GRAFT_RANK_PIN_DIR` (env or `graft.rank.pin.dir` sysprop) to
-    * a fault-tolerant path (HDFS/object store) and the pin becomes a
-    * RELIABLE checkpoint — same single-materialization guarantee,
-    * executor-loss tolerant. Local runs default to localCheckpoint
-    * (no dir to configure, no write amplification). */
+    * executor loss kills the job instead of recomputing; a deployment
+    * sets this to a fault-tolerant path (HDFS/object store) and the pin
+    * becomes a RELIABLE checkpoint — same single-materialization
+    * guarantee, executor-loss tolerant. Local runs default to
+    * localCheckpoint (no dir to configure, no write amplification). */
   def rankPinDir: Option[String] =
     sys.env.get("GRAFT_RANK_PIN_DIR")
       .orElse(Option(System.getProperty("graft.rank.pin.dir")))
@@ -122,11 +108,12 @@ object Tables {
 
   /** Materialize a frame once and cut its lineage, so a frame with several
     * consumers is computed once instead of once per consumer. Callers:
-    * [[pinRankBuckets]] and the SCD2 cursor in Forwarder.scd2Merged (the
-    * incremental-maintenance checkpoint split itself is not pinned: a
-    * lineage cut of the full keyed frame costs more than the per-branch
-    * cache reads it saves). Local runs localCheckpoint;
-    * GRAFT_RANK_PIN_DIR deployments get a reliable checkpoint. */
+    * [[pinRankBuckets]], dedup_snm's (doc_id, rnk) frame and the SCD2
+    * cursor in Forwarder.scd2Merged (the incremental-maintenance
+    * checkpoint split itself is not pinned: a lineage cut of the full
+    * keyed frame costs more than the per-branch cache reads it saves).
+    * Local runs localCheckpoint; GRAFT_RANK_PIN_DIR deployments get a
+    * reliable checkpoint. */
   def pinFrame(df: DataFrame): DataFrame = rankPinDir match {
     case Some(d) =>
       val sc = df.sparkSession.sparkContext
@@ -137,10 +124,59 @@ object Tables {
     case None => df.localCheckpoint(true)
   }
 
-  def pinRankBuckets(df: DataFrame, buckets: Int,
-      order: org.apache.spark.sql.Column*): DataFrame =
+  /** `df` range-partitioned on `order` into `buckets` partitions, each
+    * row tagged with its bucket `pid`, pinned so every consumer sees one
+    * set of range bounds (see [[globalRank]]). */
+  def pinRankBuckets(df: DataFrame, buckets: Int, order: Column*): DataFrame =
     pinFrame(df.repartitionByRange(buckets, order: _*)
-      .withColumn("pid", org.apache.spark.sql.functions.spark_partition_id()))
+      .withColumn("pid", spark_partition_id()))
+
+  /** The one distributed global rank: adds `rnk`, 1-based over `order`
+    * within each `within` group (global when `within` is empty), and
+    * `n_total`, the row count of that group — the semantics of
+    * `row_number() OVER (PARTITION BY within ORDER BY order)` without a
+    * single-partition sort at any width.
+    *
+    * Plan: range-partition on (within, order) into
+    * [[Knobs.layoutRankBuckets]] buckets, row_number inside each
+    * (within, bucket), and add the count of every earlier bucket of the
+    * same group from a bucket-sized offset frame joined by broadcast.
+    * `order` must end in a unique id: over a total order the rank does
+    * not depend on where the range bounds fall, so the bucket count
+    * cannot change a result.
+    *
+    * Pin invariant: the rank and offset branches both read the bucketed
+    * frame, and without a pin each branch runs its OWN
+    * repartitionByRange. RangePartitioner samples per input partition,
+    * so two runs over different upstream layouts can draw different
+    * bounds, and `spark_partition_id()` then tags inconsistent pids:
+    * local ranks from one layout joined to offsets from another
+    * (observed at sf0.1: curriculum_plan emitted 11 "deciles"; sf0.01
+    * coalesces to one partition and hides it). [[pinRankBuckets]]
+    * materializes ONE layout for both branches.
+    *
+    * `rnk` is `offset + row_number`, never a running sum, so it stays
+    * non-nullable in the caller's schema. */
+  def globalRank(df: DataFrame, within: Seq[String], order: Column*): DataFrame = {
+    val bucketed = pinRankBuckets(df, Knobs.layoutRankBuckets,
+      within.map(col) ++ order: _*)
+    val group = within.map(col)
+    val keys = within :+ "pid"
+    val ranked = bucketed.withColumn("local_rn", row_number().over(
+      Window.partitionBy(keys.map(col): _*).orderBy(order: _*)))
+    val offsets = bucketed.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n_in_bucket"))
+      .withColumn("offset", coalesce(sum("n_in_bucket").over(
+        Window.partitionBy(group: _*).orderBy("pid")
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .withColumn("n_total", sum("n_in_bucket").over(
+        Window.partitionBy(group: _*)
+          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .select((keys :+ "offset" :+ "n_total").map(col): _*)
+    ranked.join(broadcast(offsets), keys)
+      .select(df.columns.map(col) :+
+        (col("offset") + col("local_rn")).as("rnk") :+ col("n_total"): _*)
+  }
 
   /** Memoized persist: build + `persist(MEMORY_AND_DISK)` a frame at most
     * once per (session, key). Spark's CacheManager already dedupes cached
@@ -169,13 +205,21 @@ object Tables {
       m.values.foreach(df => df.unpersist(blocking = false))
   }
 
-  /** Build-time ledger: every memoized frame's materialization wall time,
-    * in build order, drained by Bench into `_build:<key>` report lines.
-    * Without this, a shared index build is billed to whichever query
-    * happens to touch it first (alphabetically in Bench's loop), which
-    * made round-over-round per-query walls unreadable — ann_agreement
-    * "cost" 15 s at 1× because it paid the whole ANN index family. */
+  /** Build-time ledger: every memoized frame's materialization SELF time
+    * (its wall minus the walls of the builds nested in it), in build
+    * order, drained by Bench into `_build:<key>` report lines. Without
+    * this, a shared index build is billed to whichever query happens to
+    * touch it first (alphabetically in Bench's loop), which made
+    * round-over-round per-query walls unreadable — ann_agreement "cost"
+    * 15 s at 1× because it paid the whole ANN index family. Self time
+    * bills a frame first built inside another frame's build once, so the
+    * entries of one outermost build sum to its wall whichever frame is
+    * built first. */
   private val buildTimes = new scala.collection.mutable.ArrayBuffer[(String, Double)]()
+
+  /** Per thread, the nested-build nanoseconds of each open build,
+    * innermost first. */
+  private val openBuilds = ThreadLocal.withInitial[List[Array[Long]]](() => Nil)
 
   /** Return and clear the build-time entries recorded since the last
     * drain (insertion order). */
@@ -205,10 +249,19 @@ object Tables {
       // bench report attribute it as its own line. The count is not
       // wasted work: the first consumer action would have materialized
       // the identical cached partitions anyway.
+      val outer = openBuilds.get
+      val nested = Array(0L)
+      openBuilds.set(nested :: outer)
       val t0 = System.nanoTime()
-      val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      buildTimes.synchronized { buildTimes += key -> (System.nanoTime() - t0) / 1e9 }
+      val df =
+        try {
+          val d = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          d.count()
+          d
+        } finally openBuilds.set(outer)
+      val wall = System.nanoTime() - t0
+      outer.headOption.foreach(_(0) += wall)
+      buildTimes.synchronized { buildTimes += key -> (wall - nested(0)) / 1e9 }
       df
     })
   }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.KnownNullable
+import org.apache.spark.sql.graftshim.GraftShim
 import graft.Tables
 
 /** Document deduplication: exact, MinHash+LSH near-dup with n-gram Jaccard
@@ -98,7 +100,15 @@ object Dedup {
       .withColumn("n_pairs",
         expr(if (ordered) "size * (size - 1)" else "size * (size - 1) div 2"))
       .drop("size")
-    cross.unionByName(wi).orderBy("rep_a", "rep_b")
+    // One nullability per column in both arms: AQE drops an empty arm at
+    // run time, and the written schema would otherwise follow whichever
+    // arm had rows (n_pairs: NOT NULL as size_a·size_b, nullable as `div`).
+    val nullable = (cross.schema ++ wi.schema).filter(_.nullable).map(_.name).toSet
+    def widened(arm: DataFrame) = arm.select(arm.schema.map { f =>
+      if (f.nullable || !nullable(f.name)) col(f.name)
+      else GraftShim.column(KnownNullable(GraftShim.expression(col(f.name)))).as(f.name)
+    }: _*)
+    widened(cross).unionByName(widened(wi)).orderBy("rep_a", "rep_b")
   }
 
   /** The one member expansion: rep rows (rep_a, rep_b, scores…; size
@@ -1591,7 +1601,6 @@ object Dedup {
     * [[SnmWindow]] neighbors in that order. */
   val SnmKeyLen = 24
   val SnmWindow = 4L
-  val SnmRankBuckets = 32
 
   /** Sorted-neighborhood near-dup pass: a third, genuinely different
     * BLOCKING method next to hash buckets (MinHash-LSH bands) and
@@ -1604,33 +1613,22 @@ object Dedup {
     * near-dups with low shingle overlap never hash together but DO sort
     * together.
     *
-    * Scale shape: the global order is the engine's two-phase rank
-    * (range partition → per-partition row_number + broadcast bucket
-    * offsets — no single-reducer sort), neighbor pairing is an
-    * equi-join on rank+gap, verification re-joins the persisted shingle
-    * frame by id; output is ≤ W·N rows by construction. */
+    * Scale shape: the global order is [[Tables.globalRank]] (no
+    * single-reducer sort), neighbor pairing is an equi-join on
+    * rank+gap, verification re-joins the persisted shingle frame by id;
+    * output is ≤ W·N rows by construction. */
   def dedupSnm(spark: SparkSession, dir: String): DataFrame = {
     val keyed = Tables.documents(spark, dir)
       .select(col("doc_id"), substring(norm, 1, SnmKeyLen).as("key"),
         split(norm, " ").as("toks"))
       .where(size(col("toks")) >= 2) // the shingle domain, exactly
       .select("doc_id", "key")
-    val bucketed = Tables.pinRankBuckets(keyed, SnmRankBuckets,
-      col("key"), col("doc_id"))
-    val local = bucketed.withColumn("local_rn", row_number().over(
-      Window.partitionBy("pid").orderBy(col("key"), col("doc_id"))))
-    val offsets = bucketed.groupBy("pid")
-      .agg(count(lit(1)).as("n_in_bucket"))
-      .withColumn("offset", coalesce(sum("n_in_bucket").over(
-        Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select("pid", "offset")
     // Pinned: the neighbor pairing consumes the ranked frame from both
     // join sides, and each side would re-run the per-bucket row_number
     // window + offset join; the (doc_id, rnk) pin is two columns per
     // document.
-    val ranked = Tables.pinFrame(local.join(broadcast(offsets), "pid")
-      .select(col("doc_id"), (col("offset") + col("local_rn")).as("rnk")))
+    val ranked = Tables.pinFrame(
+      Tables.globalRank(keyed, Nil, col("key"), col("doc_id")).select("doc_id", "rnk"))
     val pairs = ranked
       .select(col("doc_id").as("doc_a"), col("rnk"),
         explode(sequence(lit(1L), lit(SnmWindow))).as("rank_gap"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Knobs, Tables}
@@ -57,12 +57,10 @@ object Layout {
     * Delta/Iceberg OPTIMIZE ZORDER exists.
     *
     * Plan: one scan derives (x, y, z) scan-side (z inside whole-stage
-    * codegen); each layout's file id is a TWO-PHASE global rank over
-    * its cluster key (range-bucket with a pinned layout, local
-    * row_number, broadcast bucket offsets — the project's standard
-    * distributed-sort shape, exactly the shuffle a real OPTIMIZE
-    * rewrite pays); zone maps are a ≤2·ZBuckets-key partial aggregate
-    * and the rollup a second tiny one. */
+    * codegen); each layout's file id is a [[Tables.globalRank]] over
+    * its cluster key (the project's one distributed-sort shape, exactly
+    * the shuffle a real OPTIMIZE rewrite pays); zone maps are a
+    * ≤2·ZBuckets-key partial aggregate and the rollup a second tiny one. */
   def zorderLayout(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .withColumn("es", expr("(ts - pmod(ts, 1000000000)) div 1000000000"))
@@ -84,25 +82,14 @@ object Layout {
       .withColumn("z", HashExprs.zInterleave(col("x"), col("y")))
       .select("event_id", "x", "y", "z")
 
-    // two-phase equal-population file assignment along `order`
-    def files(tag: String, order: Seq[org.apache.spark.sql.Column]): DataFrame = {
-      val bucketed = Tables.pinRankBuckets(keyed, LayoutRankBuckets, order: _*)
-      val ranked = bucketed.withColumn("local_rn", row_number().over(
-        Window.partitionBy("pid").orderBy(order: _*)))
-      val offsets = bucketed.groupBy("pid")
-        .agg(count(lit(1)).as("n_in_bucket"))
-        .withColumn("offset", coalesce(sum("n_in_bucket").over(
-          Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("n_total", sum("n_in_bucket").over(
-          Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-        .select("pid", "offset", "n_total")
-      ranked.join(broadcast(offsets), "pid")
-        .withColumn("f", expr(s"(offset + local_rn - 1) * $ZBuckets div n_total"))
+    // equal-population file assignment along `order`
+    def files(tag: String, order: Column*): DataFrame =
+      Tables.globalRank(keyed, Nil, order: _*)
+        .withColumn("f", expr(s"(rnk - 1) * $ZBuckets div n_total"))
         .select(lit(tag).as("layout"), col("f"), col("x"), col("y"))
-    }
 
-    val assigned = files("zorder", Seq(col("z"), col("event_id")))
-      .unionAll(files("linear", Seq(col("y"), col("event_id"))))
+    val assigned = files("zorder", col("z"), col("event_id"))
+      .unionAll(files("linear", col("y"), col("event_id")))
     assigned.groupBy("layout", "f")
       .agg(min("x").as("fx_lo"), max("x").as("fx_hi"),
         min("y").as("fy_lo"), max("y").as("fy_hi"))
@@ -165,14 +152,6 @@ object Layout {
 
   // ---- compaction_plan: small-file compaction planner ----------------
 
-  /** Range buckets for the two-phase per-source running total. */
-  /** Derived, not fixed (see [[graft.Knobs.layoutRankBuckets]]): 8 and 32
-    * each lose a decade — 8 buckets meant 12.5M-row single-task rank
-    * sorts at the 100M-event point (254 s vs 99 s at 32), while 32 paid
-    * ~2× range-exchange overhead at the 10M point. Bucket count cannot
-    * change results: file ids derive from the exact GLOBAL rank. */
-  def LayoutRankBuckets: Int = graft.Knobs.layoutRankBuckets
-
   /** Small-file compaction plan per source: documents are laid out in
     * their natural ingest order (doc_id) and folded greedily into
     * target-size output shards — a document starts the shard its
@@ -194,11 +173,13 @@ object Layout {
     * per-(pid, source) offset frame — so no source ever serializes
     * through one task, the failure mode of the naive
     * `Window.partitionBy(source)` formulation at 100 TB (one partition
-    * per source = one task per source). Output is one row per source. */
+    * per source = one task per source). Output is one row per source.
+    * It keeps its own plan rather than [[Tables.globalRank]]: the
+    * offset is a weighted running sum of n_chars, not a row rank. */
   def compactionPlan(spark: SparkSession, dir: String): DataFrame = {
     val target = Knobs.compactTargetChars
     val d = Tables.documents(spark, dir).select("source", "doc_id", "n_chars")
-    val bucketed = Tables.pinRankBuckets(d, LayoutRankBuckets,
+    val bucketed = Tables.pinRankBuckets(d, Knobs.layoutRankBuckets,
       col("source"), col("doc_id"))
     val localW = Window.partitionBy("pid", "source").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, 0)

@@ -158,40 +158,21 @@ object Ngrams {
   /** Tokenizer vocabulary: tokens with document frequency ≥ MinVocabDf,
     * ids assigned by (occurrences desc, token) rank.
     *
-    * The rank is computed as a TWO-PHASE distributed rank rather than one
+    * The id is the distributed [[Tables.globalRank]] rather than one
     * global row_number window (whose sort input — the whole vocabulary —
-    * would funnel through a single task): range-partition the vocabulary
-    * on the sort key, row_number locally inside each range, then add the
-    * total count of all preceding ranges from a VocabRankBuckets-row
-    * offset table (broadcast). The global order (n_occ desc, tok) is
-    * total, so the resulting id is the exact global rank and is
-    * deterministic wherever the sampled range boundaries fall; no single
-    * task ever sorts more than ~|vocab|/VocabRankBuckets rows, so the
-    * plan survives a vocabulary that is itself large (open-vocab corpora,
-    * byte-level n-gram vocabularies). */
+    * would funnel through a single task), so the plan survives a
+    * vocabulary that is itself large (open-vocab corpora, byte-level
+    * n-gram vocabularies). The order (n_occ desc, tok) is total, so the
+    * id is the exact global rank. */
   val MinVocabDf = 2L
-  val VocabRankBuckets = 32
 
   def vocabBuild(spark: SparkSession, dir: String): DataFrame = {
     val v = tfFrame(spark, dir)
       .groupBy("tok")
       .agg(count(lit(1)).as("df"), sum("tf").as("n_occ"))
       .where(col("df") >= MinVocabDf)
-    val bucketed = Tables.pinRankBuckets(v, VocabRankBuckets,
-      col("n_occ").desc, col("tok"))
-    val ranked = bucketed.withColumn("local_rn", row_number().over(
-      Window.partitionBy("pid").orderBy(col("n_occ").desc, col("tok"))))
-    // tiny pid-indexed running offset (≤ VocabRankBuckets rows); its
-    // single-partition window is bounded by the bucket count, not data
-    val offsets = bucketed.groupBy("pid")
-      .agg(count(lit(1)).as("n_in_bucket"))
-      .withColumn("offset", coalesce(sum("n_in_bucket").over(
-        Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select("pid", "offset")
-    ranked.join(broadcast(offsets), "pid")
-      .withColumn("vocab_id", col("offset") + col("local_rn"))
-      .select("vocab_id", "tok", "df", "n_occ")
+    Tables.globalRank(v, Nil, col("n_occ").desc, col("tok"))
+      .select(col("rnk").as("vocab_id"), col("tok"), col("df"), col("n_occ"))
       .orderBy("vocab_id")
   }
 
@@ -207,27 +188,15 @@ object Ngrams {
     * the bucket boundaries cannot drift.
     *
     * Scale shape: per-token counts map-side combine; the global rank is
-    * the vocab_build two-phase distributed rank (no single-partition
-    * sort); bucketing and the cumulative window run on the bounded
-    * ≤41-bucket frame. */
+    * [[Tables.globalRank]] (no single-partition sort); bucketing and the
+    * cumulative window run on the bounded ≤41-bucket frame. */
   private def rankBucketCase(c: String): String =
     (0 until 40).map(b => s"WHEN $c < ${1L << (b + 1)} THEN $b")
       .mkString("CASE ", " ", " ELSE 40 END")
 
   def ngramCoverageCurve(spark: SparkSession, dir: String): DataFrame = {
     val tn = tfFrame(spark, dir).groupBy("tok").agg(sum("tf").as("n"))
-    val bucketed = Tables.pinRankBuckets(tn, VocabRankBuckets,
-      col("n").desc, col("tok"))
-    val ranked = bucketed.withColumn("local_rn", row_number().over(
-      Window.partitionBy("pid").orderBy(col("n").desc, col("tok"))))
-    val offsets = bucketed.groupBy("pid")
-      .agg(count(lit(1)).as("n_in_bucket"))
-      .withColumn("offset", coalesce(sum("n_in_bucket").over(
-        Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select("pid", "offset")
-    val perBucket = ranked.join(broadcast(offsets), "pid")
-      .withColumn("rnk", col("offset") + col("local_rn"))
+    val perBucket = Tables.globalRank(tn, Nil, col("n").desc, col("tok"))
       .withColumn("bucket", expr(rankBucketCase("rnk")).cast("long"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_types"), sum("n").as("bucket_occ"))

@@ -578,27 +578,12 @@ object Pipeline {
     * the stage boundaries can be audited against batch-size and
     * context-length constraints BEFORE training starts.
     *
-    * Scale shape: the user_spend_decile two-phase distributed rank (range
-    * partition → local row_number → bounded broadcast offsets) — global
-    * row_number semantics without a single-partition sort; the stage
-    * aggregation is a 10-key map-side-combined groupBy. */
-  val CurriculumRankBuckets = 8
-
+    * Scale shape: [[Tables.globalRank]] — global row_number semantics
+    * without a single-partition sort; the stage aggregation is a 10-key
+    * map-side-combined groupBy. */
   def curriculumPlan(spark: SparkSession, dir: String): DataFrame = {
     val docs = docTokens(spark, dir).select("doc_id", "n_tokens")
-    val bucketed = Tables.pinRankBuckets(docs, CurriculumRankBuckets,
-      col("n_tokens").asc, col("doc_id"))
-    val ranked = bucketed.withColumn("local_rn", row_number().over(
-      Window.partitionBy("pid").orderBy(col("n_tokens").asc, col("doc_id"))))
-    val offsets = bucketed.groupBy("pid")
-      .agg(count(lit(1)).as("n_in_bucket"))
-      .withColumn("offset", coalesce(sum("n_in_bucket").over(
-        Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n_total", sum("n_in_bucket").over(
-        Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .select("pid", "offset", "n_total")
-    ranked.join(broadcast(offsets), "pid")
-      .withColumn("rnk", col("offset") + col("local_rn"))
+    Tables.globalRank(docs, Nil, col("n_tokens").asc, col("doc_id"))
       .withColumn("stage", expr("(rnk - 1) * 10 div n_total + 1"))
       .groupBy("stage")
       .agg(count(lit(1)).as("n_docs"), min("n_tokens").as("min_tokens"),
@@ -796,14 +781,12 @@ object Pipeline {
   /** Deterministic per-epoch global shuffle order: every document gets an
     * exact global position in each epoch, ordered by an epoch-specific
     * multiplicative hash (epoch 0 → Mix2, epoch 1 → Mix3 — fixed
-    * constants, so runs and engines agree). The rank is the vocab_build
-    * TWO-PHASE distributed rank, not a global row_number window: range
-    * -partition on (epoch, h, doc_id), rank locally, add the broadcast
-    * per-(epoch, bucket) running offsets — no single task ever sorts the
-    * corpus. This is the "shuffle the corpus reproducibly per epoch"
-    * step a training loader needs to slice by position range. */
+    * constants, so runs and engines agree). The position is a
+    * [[Tables.globalRank]] within each epoch over (h, doc_id), not a
+    * global row_number window — no single task ever sorts the corpus.
+    * This is the "shuffle the corpus reproducibly per epoch" step a
+    * training loader needs to slice by position range. */
   val Epochs = 2
-  val OrderRankBuckets = 32
 
   def epochOrder(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.documents(spark, dir)
@@ -813,19 +796,8 @@ object Pipeline {
           col("doc_id") % HashModPrime * graft.functions.HashExprs.Mix2 % HashModPrime)
           .otherwise(
             col("doc_id") % HashModPrime * graft.functions.HashExprs.Mix3 % HashModPrime))
-    val bucketed = Tables.pinRankBuckets(base, OrderRankBuckets,
-      col("epoch"), col("h"), col("doc_id"))
-    val ranked = bucketed.withColumn("local_rn", row_number().over(
-      Window.partitionBy("epoch", "pid").orderBy(col("h"), col("doc_id"))))
-    val offsets = bucketed.groupBy("epoch", "pid")
-      .agg(count(lit(1)).as("n_in_bucket"))
-      .withColumn("offset", coalesce(sum("n_in_bucket").over(
-        Window.partitionBy("epoch").orderBy("pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("epoch", "pid", "offset")
-    ranked.join(broadcast(offsets), Seq("epoch", "pid"))
-      .withColumn("pos", col("offset") + col("local_rn"))
-      .select("epoch", "pos", "doc_id")
+    Tables.globalRank(base, Seq("epoch"), col("h"), col("doc_id"))
+      .select(col("epoch"), col("rnk").as("pos"), col("doc_id"))
       .orderBy("epoch", "pos")
   }
 
@@ -1166,11 +1138,9 @@ object Pipeline {
     *
     * Scale shape: rides the memoized [[Ngrams.tfFrame]]; token df is one
     * map-side-combined groupBy on the token, the doc score one keyed join
-    * + groupBy(doc) over (tok, tf) rows, and the global tercile uses the
-    * user_spend_decile two-phase distributed rank (range partition →
-    * local row_number → bounded broadcast offsets) — never a
-    * single-partition sort. Final rollup ≤ sources×3 keys. */
-  val CcnetRankBuckets = 8
+    * + groupBy(doc) over (tok, tf) rows, and the global tercile is a
+    * [[Tables.globalRank]] — never a single-partition sort. Final rollup
+    * ≤ sources×3 keys. */
   val CcnetDfBuckets = 32
 
   private def ccnetDfBucketCase(dfCol: String): String =
@@ -1185,7 +1155,7 @@ object Pipeline {
     * (filterAblation) read the SAME per-doc frame.
     *
     * Memoized (round 17): both consumers paid the full df-bucket scoring
-    * + two-phase global rank chain independently; the frame is three
+    * + global rank chain independently; the frame is three
     * longs per document, so one build serves both. */
   private[ops] def ccnetDocTercile(spark: SparkSession, dir: String): DataFrame =
     Tables.memoPersist(spark, s"pipeline.ccnetTercile:$dir") {
@@ -1203,20 +1173,9 @@ object Pipeline {
         when(col("tf_sum") === 0, 0L)
           .otherwise(floor(lit(10000.0) * col("wsum") / col("tf_sum")).cast("long"))
           .as("score_e4"))
-    // two-phase exact global rank: head = highest mean-df (most fluent)
-    val bucketed = Tables.pinRankBuckets(scored, CcnetRankBuckets,
-      col("score_e4").desc, col("doc_id"))
-    val ranked = bucketed.withColumn("local_rn", row_number().over(
-      Window.partitionBy("pid").orderBy(col("score_e4").desc, col("doc_id"))))
-    val offsets = bucketed.groupBy("pid")
-      .agg(count(lit(1)).as("n_in_bucket"))
-      .withColumn("offset", coalesce(sum("n_in_bucket").over(
-        Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n_total", sum("n_in_bucket").over(
-        Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .select("pid", "offset", "n_total")
-    ranked.join(broadcast(offsets), "pid")
-      .withColumn("tercile", expr("(offset + local_rn - 1) * 3 div n_total + 1"))
+    // exact global rank: head = highest mean-df (most fluent)
+    Tables.globalRank(scored, Nil, col("score_e4").desc, col("doc_id"))
+      .withColumn("tercile", expr("(rnk - 1) * 3 div n_total + 1"))
       .select("doc_id", "score_e4", "tercile")
   }
 

@@ -896,42 +896,15 @@ object Queries {
   /** Exact spend deciles over all purchasing users: rank by (spend desc,
     * user_id) and cut into tenths — the segmentation every LTV/cohort
     * report starts from. The SEMANTICS are one global row_number (the
-    * oracle's form); the PLAN is the two-phase distributed rank
-    * (epoch_order's machinery re-derived here): a rangepartitioning
-    * exchange on the DESCENDING sort key gives each task a disjoint
-    * spend slice, ranks are bucket-local row_numbers plus a broadcast
-    * ≤-bucket-count offset table, and the decile is pure integer
-    * arithmetic on (rank, N) — no single-partition sort at any width. */
-  val DecileRankBuckets = 8
-
-  /** Range-partitioned global rank without a single-partition window:
-    * repartitionByRange on `order` (checkpointed, so every downstream
-    * branch sees ONE boundary sample), per-bucket row_number, bucket
-    * offsets by prefix sum over the tiny per-bucket count frame. Adds
-    * `rnk` (1-based over `order`) and `n_total`. Shared by
-    * user_spend_decile and user_rfm's three quintile ranks. */
-  private def globalRankBy(df: DataFrame, order: Column*): DataFrame = {
-    val bucketed = Tables.pinRankBuckets(df, DecileRankBuckets, order: _*)
-    val ranked = bucketed.withColumn("local_rn", row_number().over(
-      Window.partitionBy("pid").orderBy(order: _*)))
-    val offsets = bucketed.groupBy("pid")
-      .agg(count(lit(1)).as("n_in_bucket"))
-      .withColumn("offset", coalesce(sum("n_in_bucket").over(
-        Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n_total", sum("n_in_bucket").over(
-        Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .select("pid", "offset", "n_total")
-    ranked.join(broadcast(offsets), "pid")
-      .withColumn("rnk", col("offset") + col("local_rn"))
-      .drop("pid", "local_rn", "offset")
-  }
-
+    * oracle's form); the PLAN is the distributed [[Tables.globalRank]],
+    * and the decile is pure integer arithmetic on (rank, N) — no
+    * single-partition sort at any width. */
   def userSpendDecile(spark: SparkSession, dir: String): DataFrame = {
     val spend = Tables.events(spark, dir)
       .where(col("event_type") === "purchase")
       .groupBy("user_id")
       .agg(sum(cents(col("value"))).as("spend_cents"))
-    globalRankBy(spend, col("spend_cents").desc, col("user_id"))
+    Tables.globalRank(spend, Nil, col("spend_cents").desc, col("user_id"))
       .withColumn("decile", expr("(rnk - 1) * 10 div n_total + 1"))
       .select("user_id", "spend_cents", "rnk", "decile")
       .orderBy("rnk")
@@ -1587,8 +1560,8 @@ object Queries {
     *
     * Scale shape: one map-side-combined groupBy on user_id at fact scale;
     * everything after runs on the per-user frame (orders smaller), where
-    * the three ranks reuse [[globalRankBy]]'s range-partitioned machinery
-    * (no single-partition window); the rollup key space is ≤ 125. Recency
+    * the three ranks are [[Tables.globalRank]] calls (no
+    * single-partition window); the rollup key space is ≤ 125. Recency
     * derives from pure epoch-second integer arithmetic (the events_dow_hour
     * portability contract — both subtraction operands are floors of the
     * same nanosecond values, so the day count is engine-exact). */
@@ -1603,11 +1576,11 @@ object Queries {
     // bounded-cross: 1-row corpus high-water aggregate, N-independent
     val withR = perUser.crossJoin(broadcast(now))
       .withColumn("r_days", expr("(now_es - last_es) div 86400"))
-    val r1 = globalRankBy(withR, col("last_es").desc, col("user_id"))
+    val r1 = Tables.globalRank(withR, Nil, col("last_es").desc, col("user_id"))
       .withColumnRenamed("rnk", "rnk_r").drop("n_total")
-    val r2 = globalRankBy(r1, col("f_n").desc, col("user_id"))
+    val r2 = Tables.globalRank(r1, Nil, col("f_n").desc, col("user_id"))
       .withColumnRenamed("rnk", "rnk_f").drop("n_total")
-    val r3 = globalRankBy(r2, col("m_cents").desc, col("user_id"))
+    val r3 = Tables.globalRank(r2, Nil, col("m_cents").desc, col("user_id"))
       .withColumnRenamed("rnk", "rnk_m")
     r3
       .withColumn("segment", expr(

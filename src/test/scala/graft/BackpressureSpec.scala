@@ -21,7 +21,7 @@ class BackpressureSpec extends SparkSpec {
   /** Stage the sf0.001 events into NumFiles id-ranged parquet files —
     * the "backlog" fixture. Returns (dir, max rows in any one file). */
   private def stageBacklog(): (String, Long) = {
-    val out = java.nio.file.Files.createTempDirectory("graft-backlog-").toString
+    val out = scratchDir("graft-backlog-")
     val ev = Tables.events(spark, Sf0001)
     val n = ev.count()
     val per = (n + NumFiles - 1) / NumFiles
@@ -29,7 +29,7 @@ class BackpressureSpec extends SparkSpec {
       "part", (col("event_id") % lit(NumFiles)).cast("int"))
     (0 until NumFiles).foreach { p =>
       val work =
-        java.nio.file.Files.createTempDirectory(s"graft-bp-$p-").toString + "/out"
+        scratchDir(s"graft-bp-$p-") + "/out"
       withPart.where(col("part") === p).drop("part")
         .coalesce(1).write.parquet(work)
       val part = new java.io.File(work).listFiles()

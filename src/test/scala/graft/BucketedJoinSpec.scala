@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class BucketedJoinSpec extends SparkSpec {
 
   test("bucketed+sorted tables join with zero shuffle exchanges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bucket-").toString
+    val dir = scratchDir("graft-bucket-")
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     try {
       // force the shuffle-join code path: a broadcast would hide whether

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class ChangeFeedStreamSpec extends SparkSpec {
 
   test("windowed stream counts match batch, restart resumes from offsets") {
-    val work = Files.createTempDirectory("graft-stream-").toString
+    val work = scratchDir("graft-stream-")
     val srcDir = s"$work/events"
     val ckpt = s"$work/ckpt"
     Files.createDirectories(Paths.get(srcDir))

@@ -21,7 +21,7 @@ class EventsTsContractSpec extends SparkSpec {
   }
 
   test("a long-typed ts generation passes through unchanged") {
-    val work = java.nio.file.Files.createTempDirectory("graft-tslong-").toString
+    val work = scratchDir("graft-tslong-")
     val src = Tables.events(spark, Sf0001).select("event_id", "ts")
     src.write.mode("overwrite").parquet(s"$work/events.parquet")
     val back = Tables.events(spark, work)
@@ -36,7 +36,7 @@ class EventsTsContractSpec extends SparkSpec {
   test("a timestamp-typed ts generation normalizes to the same instants") {
     val s = spark
     import s.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft-tsntz-").toString
+    val work = scratchDir("graft-tsntz-")
     val src = Tables.events(spark, Sf0001).select("event_id", "ts")
     // rebuild the TIMESTAMP(MICROS) physical shape from the ns longs
     src.select(col("event_id"),

@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.Trigger
 class ExactlyOnceSpec extends SparkSpec {
 
   test("redelivered LSNs are dropped across a checkpointed restart") {
-    val work = Files.createTempDirectory("graft-eo-").toString
+    val work = scratchDir("graft-eo-")
     val srcDir = s"$work/events"
     val ckpt = s"$work/ckpt"
     Files.createDirectories(Paths.get(srcDir))

@@ -13,7 +13,7 @@ import graft.cdc.{Forwarder, Subscription}
 class FilterPruningSpec extends SparkSpec {
 
   private def tempCorpus(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-corpus-").toString
+    val d = scratchDir("graft-corpus-")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$Sf0001/events.parquet"),
       java.nio.file.Paths.get(s"$d/events.parquet"))

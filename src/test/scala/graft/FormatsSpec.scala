@@ -36,7 +36,7 @@ class FormatsSpec extends SparkSpec {
     (r.getLong(0), r.getString(1), r.getString(2), r.getString(3))
 
   test("documents round-trip through ORC and filters push to the scan") {
-    val out = java.nio.file.Files.createTempDirectory("graft-orc-").toString
+    val out = scratchDir("graft-orc-")
     docs.write.mode("overwrite").orc(out)
     val back = spark.read.schema(schema).orc(out)
       .select("doc_id", "lang", "source", "text")
@@ -51,7 +51,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("documents round-trip through JSONL with explicit schema") {
-    val out = java.nio.file.Files.createTempDirectory("graft-jsonl-").toString
+    val out = scratchDir("graft-jsonl-")
     docs.write.mode("overwrite").json(out)
     val back = spark.read.schema(schema).json(out)
       .select("doc_id", "lang", "source", "text")
@@ -61,7 +61,7 @@ class FormatsSpec extends SparkSpec {
 
   test("parquet schema evolution: mergeSchema unions columns across files") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft-evolve-").toString
+    val out = scratchDir("graft-evolve-")
     // generation 1: (doc_id, lang); generation 2 adds quality_e4 — the
     // additive-column evolution a long-lived corpus directory accretes
     Seq((1L, "en"), (2L, "de")).toDF("doc_id", "lang")
@@ -77,7 +77,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("documents round-trip through quoted CSV with explicit schema") {
-    val out = java.nio.file.Files.createTempDirectory("graft-csv-").toString
+    val out = scratchDir("graft-csv-")
     docs.write.mode("overwrite")
       .option("header", "true").option("escape", "\"")
       .csv(out)

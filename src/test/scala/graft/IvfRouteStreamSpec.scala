@@ -19,14 +19,14 @@ class IvfRouteStreamSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   private def stageEmbeddings(split: Boolean): String = {
-    val out = java.nio.file.Files.createTempDirectory("graft-emb-").toString
+    val out = scratchDir("graft-emb-")
     if (!split) {
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$Sf0001/embeddings.parquet"),
         java.nio.file.Paths.get(s"$out/emb-part1.parquet"))
       out
     } else {
-      val work = java.nio.file.Files.createTempDirectory("graft-emb-w-").toString
+      val work = scratchDir("graft-emb-w-")
       val emb = Tables.embeddings(spark, Sf0001)
       emb.where(col("vec_id") % 2 === 0).coalesce(1).write.parquet(s"$work/a")
       emb.where(col("vec_id") % 2 === 1).coalesce(1).write.parquet(s"$work/b")

@@ -20,7 +20,7 @@ class JdbcChangeFeedSpec extends SparkSpec {
   }
 
   test("polls by LSN, restart resumes from checkpointed confirmed LSN") {
-    val work = java.nio.file.Files.createTempDirectory("graft-jdbc-cdc-").toString
+    val work = scratchDir("graft-jdbc-cdc-")
     val url = s"jdbc:derby:$work/db;create=true"
     val ckpt = s"$work/ckpt"
     val out = s"$work/out"

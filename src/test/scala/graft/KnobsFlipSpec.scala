@@ -16,14 +16,14 @@ class KnobsFlipSpec extends SparkSpec {
 
     // a second below-knee dir (no tables at all -> counts 0 -> floors):
     // knob-equal, so the flip is allowed and takes effect
-    val empty = java.nio.file.Files.createTempDirectory("graft-knobs-eq-").toString
+    val empty = scratchDir("graft-knobs-eq-")
     Knobs.noteDir(empty)
     Knobs.noteDir(Sf0001) // flip back for the other suites
 
     // a corpus ABOVE the ivfCells knee (4096 embeddings -> linear = 16
     // beats the floor 8): derived knobs differ, the flip must throw,
     // and the current dir must stay untouched
-    val big = java.nio.file.Files.createTempDirectory("graft-knobs-big-").toString
+    val big = scratchDir("graft-knobs-big-")
     spark.range(4096).select(col("id").as("vec_id"))
       .coalesce(1).write.parquet(s"$big/embeddings.parquet")
     val e = intercept[IllegalStateException](Knobs.noteDir(big))

@@ -22,7 +22,7 @@ class LateDataSpec extends SparkSpec {
   private def writeEventsFile(srcDir: String, name: String,
     rows: Seq[(Long, Long)]): Unit = {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-late-w-").toString
+    val tmp = scratchDir("graft-late-w-")
     rows.toDF("event_id", "ts_min")
       .select(col("event_id"), (col("ts_min") * 60L * 1000000000L).as("ts"),
         lit(7L).as("user_id"), lit("click").as("event_type"),
@@ -34,7 +34,7 @@ class LateDataSpec extends SparkSpec {
   }
 
   test("append mode: late event is dropped and counted, final window stays on-time-only") {
-    val work = Files.createTempDirectory("graft-late-").toString
+    val work = scratchDir("graft-late-")
     val srcDir = s"$work/events"
     val ckpt = s"$work/ckpt"
     Files.createDirectories(Paths.get(srcDir))

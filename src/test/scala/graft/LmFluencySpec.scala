@@ -28,7 +28,7 @@ class LmFluencySpec extends SparkSpec {
     * doc pairs the SAME tokens in orders the rest of the corpus never
     * produces (each adjacent pair occurs exactly once corpus-wide). */
   lazy val fluDir: String = {
-    val out = java.nio.file.Files.createTempDirectory("graft-flucorpus-").toString
+    val out = scratchDir("graft-flucorpus-")
     fluDirCreated = Some(out)
     import spark.implicits._
     val fluent = (0L until 40L).map { i =>

@@ -7,9 +7,10 @@ import graft.ops.{Dedup, SetJoin, Similarity}
   * report and its expanded twin: Σ n_pairs of the rep report equals the
   * expanded report's row count, and — wherever the expansion is the
   * shared one (Dedup.expandPairs) — expanding the rep report's own rows
-  * reproduces the expanded report row for row. sf0.001 has no duplicate
-  * texts or embeddings, so the table also runs on a copy-heavy stripe
-  * corpus, where every report must emit within rows (rep_a = rep_b). */
+  * reproduces the expanded report row for row. sf0.001 has at most two
+  * within rows (rep_a = rep_b) per report and none for most, so the
+  * table also runs on a copy-heavy stripe corpus, where every report
+  * must emit within rows. */
 class NearDupContractSpec extends SparkSpec {
 
   private type Key = (SparkSession, String) => DataFrame
@@ -56,7 +57,39 @@ class NearDupContractSpec extends SparkSpec {
     check(Sf0001, copyHeavy = false)
   }
 
+  private lazy val striped = stripeCorpus(docs = true, vecs = true)
+
   test("rep reports on a copy-heavy corpus: within rows, n_pairs, expansion") {
-    check(stripeCorpus(docs = true, vecs = true), copyHeavy = true)
+    check(striped, copyHeavy = true)
+  }
+
+  /** The parquet schema (with each column's required/optional) a report
+    * writes. Spark reads every parquet column back as nullable, so the
+    * footer is read directly. */
+  private def writtenSchema(df: DataFrame): String = {
+    val out = scratchDir("graft-repschema-")
+    df.coalesce(1).write.mode("overwrite").parquet(out)
+    val part = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(part.toString), new org.apache.hadoop.conf.Configuration()))
+    try r.getFooter.getFileMetaData.getSchema.toString finally r.close()
+  }
+
+  test("every rep report writes one schema with and without within rows") {
+    val reports = cases.map(c => c.name -> c.rep) :+
+      ("winnow_overlap" -> (Dedup.winnowOverlap _: Key))
+    // the stripe corpus has within rows for every report; sf0.01 has none
+    // for all but the two SimHash reports, whose fingerprint groups
+    // repeat in each of these corpora
+    val sf001 = s"${new java.io.File(Sf0001).getParent}/sf0.01"
+    val corpora = Seq(Sf0001, sf001, striped)
+    reports.foreach { case (name, rep) =>
+      val frames = corpora.map(rep(spark, _))
+      if (!name.startsWith("dedup_simhash"))
+        assert(frames.exists(_.where("rep_a = rep_b").isEmpty), s"$name: within rows everywhere")
+      val schemas = frames.map(writtenSchema).distinct
+      assert(schemas.size == 1, s"$name writes ${schemas.mkString(" / ")}")
+    }
   }
 }

@@ -24,7 +24,7 @@ class NearDupStreamSpec extends SparkSpec {
   }
 
   private def stageDocs(split: Boolean): String = {
-    val work = java.nio.file.Files.createTempDirectory("graft-docs-").toString
+    val work = scratchDir("graft-docs-")
     if (!split) {
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$Sf0001/documents.parquet"),
@@ -39,7 +39,7 @@ class NearDupStreamSpec extends SparkSpec {
         .write.parquet(s"$work/a-first")
       docs.where(col("doc_id") > mid).coalesce(1)
         .write.parquet(s"$work/b-second")
-      val out = java.nio.file.Files.createTempDirectory("graft-docs2-").toString
+      val out = scratchDir("graft-docs2-")
       def onePart(sub: String, name: String): Unit = {
         val part = new java.io.File(s"$work/$sub").listFiles()
           .filter(_.getName.endsWith(".parquet")).head

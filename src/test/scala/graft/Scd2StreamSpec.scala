@@ -20,7 +20,7 @@ class Scd2StreamSpec extends SparkSpec {
       r.getAs[Long]("is_current"), r.getAs[String]("kind"))
 
   test("two-batch incremental SCD2 merge equals batch history") {
-    val work = Files.createTempDirectory("graft-scd2-").toString
+    val work = scratchDir("graft-scd2-")
     val srcDir = s"$work/events"
     Files.createDirectories(Paths.get(srcDir))
 

@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.Trigger
 class SessionizeStreamSpec extends SparkSpec {
 
   test("streaming closed sessions equal batch sessions minus the open tail") {
-    val work = java.nio.file.Files.createTempDirectory("graft-sess-").toString
+    val work = scratchDir("graft-sess-")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$Sf0001/events.parquet"),
       java.nio.file.Paths.get(s"$work/part1.parquet"))

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class ShardWriteSpec extends SparkSpec {
 
   test("partitioned shard write: layout, round-trip, pruned readback") {
-    val out = java.nio.file.Files.createTempDirectory("graft-shards-").toString
+    val out = scratchDir("graft-shards-")
     val routed = ShardSink.writeShards(spark, Sf0001, out)
 
     // layout: every present shard is a shard=N directory with ONE file

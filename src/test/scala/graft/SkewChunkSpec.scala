@@ -51,7 +51,7 @@ class SkewChunkSpec extends SparkSpec {
     import spark.implicits._
     val a = (1 to 400).map(i => s"w${i % 37}").mkString(" ")
     val b = "inserted tokens at front " + a
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdcchunk-").toString
+    val dir = scratchDir("graft-cdcchunk-")
     Seq((0L, a, "en", "src0", a.length.toLong), (1L, b, "en", "src0", b.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -16,7 +16,7 @@ class TransitionStreamSpec extends SparkSpec {
   test("streaming transitions equal batch transitions across a batch boundary") {
     // stage two time-ordered halves with increasing mtimes so the file
     // source replays them in event-time order
-    val work = java.nio.file.Files.createTempDirectory("graft-trans-").toString
+    val work = scratchDir("graft-trans-")
     val ev = spark.read.parquet(s"$Sf0001/events.parquet")
     val half = ev.count() / 2
     val ranked = ev.withColumn("rn", row_number().over(
