@@ -31,7 +31,7 @@ object Tables {
     // The ts contract must be self-contained: normalizeEventsTs casts a
     // TIMESTAMP_NTZ column through the SESSION zone, so an embedder on a
     // non-UTC machine would shift every event instant unless UTC is
-    // pinned here too (round-10 advice), not only in Bench/Verify.
+    // pinned here too, not only in Bench/Verify.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark
   }
@@ -192,18 +192,10 @@ object Tables {
     * Instead every call purges entries whose underlying SparkContext has
     * stopped (their cached blocks died with the executors). Sessions
     * cycled over one long-lived context share that context's CacheManager
-    * anyway; a driver embedding this library can release one session's
-    * entries early with [[clearPersistCache]]. */
+    * anyway. */
   private val persistCache: java.util.Map[SparkSession, scala.collection.concurrent.TrieMap[String, DataFrame]] =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, scala.collection.concurrent.TrieMap[String, DataFrame]]())
-
-  /** Drop (and unpersist) every memoized frame of one session. */
-  def clearPersistCache(spark: SparkSession): Unit = persistCache.synchronized {
-    val m = persistCache.remove(spark)
-    if (m != null && !spark.sparkContext.isStopped)
-      m.values.foreach(df => df.unpersist(blocking = false))
-  }
 
   /** Build-time ledger: every memoized frame's materialization SELF time
     * (its wall minus the walls of the builds nested in it), in build

@@ -409,7 +409,7 @@ object Ngrams {
     * occurrence frame, and both ride the memoized doc-level builds the
     * PMI/BPE family shares: the corpus totals are identical whether
     * counted over copies or over distinct texts). The SCORING side is
-    * rep-level (round 13, the doc_rarity contraction): a document's
+    * rep-level (the doc_rarity contraction): a document's
     * (n_pairs, sum_s) is a pure function of its normalized text given
     * the pair table, so the bigram-occurrence explode + (a,b) join run
     * only over [[Dedup.textGroups]] distinct-text reps — cost tracks
@@ -485,12 +485,10 @@ object Ngrams {
 
   // ---- bpe_merges: byte-pair-encoding merge-rule induction ----------------
 
-  /** Number of merge rounds induced (each round = one vocabulary pass) —
-    * env-dialed by GRAFT_BPE_ROUNDS; the oracle CTE chain
-    * is generated from the same value, so Spark and DuckDB always train
-    * the same number of rounds. A def (not an init-time val) so a
-    * re-configured JVM cannot pin a stale count. */
-  def BpeRounds: Int = sys.env.getOrElse("GRAFT_BPE_ROUNDS", "5").toInt
+  /** Number of merge rounds induced (each round = one vocabulary pass);
+    * the oracle CTE chain is generated from the same value, so Spark and
+    * DuckDB always train the same number of rounds. */
+  final val BpeRounds = 5
 
   /** BPE tokenizer training (Sennrich, Haddow & Birch, ACL 2016): induce
     * the first BpeRounds merge rules over the corpus vocabulary — each

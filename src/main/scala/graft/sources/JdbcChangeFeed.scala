@@ -37,25 +37,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Usage: `spark.readStream.format("graft.sources.JdbcChangeFeed")
   * .option("url", jdbcUrl).option("table", "changes")...`; options:
-  * `url` (required), `table` (default `changes`), `startLsn` (default 0,
-  * exclusive), `numPartitions` (default 1), `progressTable` (optional —
-  * multi-writer outbox mode, below).
+  *   - `url` (required): the JDBC url of the database holding the table;
+  *   - `table` (default `changes`): the change table;
+  *   - `startLsn` (default 0): the first confirmed position, exclusive;
+  *   - `numPartitions` (default 1): contiguous LSN ranges per batch;
+  *   - `maxLsnPerTrigger` (default unbounded): the admission bound, the
+  *     most LSNs one micro-batch's window may advance.
   *
-  * MULTI-WRITER OUTBOX (round 15): one writer connection saturates long
-  * before the consumer does (measured: the r14 knee at ~48k rows/s was
-  * the single-connection ingest path, with the consumer at 82k), so a
-  * high-rate deployment shards the outbox across N writer connections.
-  * `max(lsn)` is then UNSAFE as the high-water: writer B can commit
-  * lsn 1002 while writer A's 1001 is still in flight, and a window read
-  * up to 1002 would skip 1001 forever once the offset advances. With
-  * `progressTable` set, each writer transactionally publishes its own
-  * committed position (same transaction as its row commit) and the
-  * source's high-water is the MIN over writers — safe by construction:
-  * every uncommitted row belongs to some writer and carries an lsn
-  * above that writer's published position, so nothing at or below the
-  * min can still be in flight. A finished writer publishes Long.Max's
-  * practical stand-in (the feed's known end, or simply a value above
-  * any future lsn) so it never holds the watermark back.
+  * The high-water probe is `max(lsn)`, which is safe for one writer
+  * committing in LSN order: no LSN at or below a committed one can still
+  * be in flight.
   */
 class JdbcChangeFeed extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -89,8 +80,7 @@ private[sources] class JdbcChangeFeedTable(options: CaseInsensitiveStringMap)
             table = Option(opts.get("table")).getOrElse("changes"),
             startLsn = Option(opts.get("startLsn")).map(_.toLong).getOrElse(0L),
             numPartitions = Option(opts.get("numPartitions")).map(_.toInt).getOrElse(1),
-            maxLsnPerTrigger = Option(opts.get("maxLsnPerTrigger")).map(_.toLong),
-            progressTable = Option(opts.get("progressTable")))
+            maxLsnPerTrigger = Option(opts.get("maxLsnPerTrigger")).map(_.toLong))
       }
     }
 }
@@ -107,28 +97,20 @@ private[sources] case class LsnRangePartition(
 
 private[sources] class JdbcChangeFeedStream(
     url: String, table: String, startLsn: Long, numPartitions: Int,
-    maxLsnPerTrigger: Option[Long] = None,
-    progressTable: Option[String] = None)
+    maxLsnPerTrigger: Option[Long] = None)
   extends MicroBatchStream with SupportsAdmissionControl {
 
   override def initialOffset(): Offset = LsnOffset(startLsn)
 
   override def deserializeOffset(json: String): Offset = LsnOffset(json.toLong)
 
-  /** One probe per trigger — the feed's high-water. Single-writer mode:
-    * max(lsn) over the change table. Multi-writer mode (`progressTable`
-    * set): min(committed_lsn) over the writers' published positions —
-    * max(lsn) would race in-flight commits with smaller lsns (see class
-    * doc). Either way an empty/absent table keeps the prior position
-    * (no regression of the confirmed LSN, ever). */
+  /** One probe per trigger — the feed's high-water, max(lsn) over the
+    * change table. An empty/absent table keeps the prior position (no
+    * regression of the confirmed LSN, ever). */
   private def highWater(): Long = {
     val conn = DriverManager.getConnection(url)
     try {
-      val sql = progressTable match {
-        case Some(pt) => s"SELECT MIN(committed_lsn) FROM $pt"
-        case None => s"SELECT MAX(lsn) FROM $table"
-      }
-      val rs = conn.createStatement().executeQuery(sql)
+      val rs = conn.createStatement().executeQuery(s"SELECT MAX(lsn) FROM $table")
       val hi = if (rs.next()) { val v = rs.getLong(1); if (rs.wasNull()) startLsn else v }
         else startLsn
       math.max(hi, startLsn)
