@@ -4,8 +4,8 @@ package graft
   * count, LSH plane/table counts, SimHash bucket width) default to
   * functions of the CORPUS SIZE instead of fixed constants, so the
   * operators that bucket/cell their pair space stay scale-safe at
-  * defaults — an operator must not need a hand-set env var to survive a
-  * 10× data growth (round-8 verdict, "What's wrong" #1-2).
+  * defaults: no operator needs a hand-set env var to survive a 10× data
+  * growth.
   *
   * Resolution order per knob: explicit env override (GRAFT_IVF_CELLS,
   * GRAFT_LSH_PLANES, GRAFT_LSH_TABLES, GRAFT_IVF_ROUTE_CELLS) wins where
@@ -38,14 +38,14 @@ object Knobs {
   /** Record the corpus directory whose derived knobs subsequent plan
     * builds and oracle-SQL generation should read.
     *
-    * Flip hardening (round-10 advice): the var is process-wide, so a
-    * driver interleaving two corpora in one JVM would silently re-knob
-    * plans built for the other corpus. A flip between differing
-    * non-empty dirs is therefore ALLOWED only when every derived knob
-    * value is identical under both (the test suites' corpora all sit
-    * below the derivation knees, where floors make this true; Verify and
-    * Bench are single-directory) — otherwise fail loud instead of
-    * letting the race corrupt a plan/oracle pair. */
+    * Flip hardening: the var is process-wide, so a caller interleaving
+    * two corpora in one JVM would silently re-knob plans built for the
+    * other corpus. A flip between differing non-empty dirs is therefore
+    * ALLOWED only when every derived knob value is identical under both
+    * (the test suites' corpora all sit below the derivation knees, where
+    * floors make this true; Verify and Bench are single-directory) —
+    * otherwise fail loud instead of letting the race corrupt a
+    * plan/oracle pair. */
   def noteDir(dir: String): Unit =
     if (dir != null && dir.nonEmpty && dir != currentDir) {
       val prev = currentDir
@@ -76,9 +76,9 @@ object Knobs {
     * of part files); 0 when absent/unreadable. Only SUCCESSFUL reads are
     * memoized: a transient IO failure (or a corpus directory populated
     * after first touch) must not pin floor-sized knobs for the JVM's
-    * lifetime — the failure path re-probes on the next access (round-9
-    * advice). A genuinely missing table re-probes too; that is one cheap
-    * fs.exists per knob read, not a scan. */
+    * lifetime — the failure path re-probes on the next access. A
+    * genuinely missing table re-probes too; that is one cheap fs.exists
+    * per knob read, not a scan. */
   def rowCount(dir: String, table: String): Long = {
     val key = s"$dir/$table"
     counts.get(key) match {
@@ -114,26 +114,6 @@ object Knobs {
 
   /** Document-corpus size of the current directory. */
   def docCount: Long = if (currentDir.isEmpty) 0L else rowCount(currentDir, "documents")
-
-  /** Event-stream size of the current directory. */
-  def evCount: Long = if (currentDir.isEmpty) 0L else rowCount(currentDir, "events")
-
-  /** Rank-bucket count of every distributed rank: [[Tables.globalRank]]
-    * (user_spend_decile, user_rfm ×3, zorder_layout ×2, vocab_build,
-    * ngram_coverage_curve, dedup_snm, curriculum_plan, epoch_order and
-    * the ccnet tercile behind ccnet_bucket / filter_ablation) and
-    * compaction_plan's running sum: ⌈events/3M⌉ clamped to [8, 32].
-    * Each bucket is one rank-sort task, so the knee trades range-exchange
-    * overhead — dominant at small N: 32 buckets measured ~2× slower than
-    * 8 at the 10M-event point — against per-task sort volume — dominant
-    * at large N: 8 buckets meant 12.5M-row single-task sorts at the
-    * 100M-event point, 254 s vs 99 s. The derived value cannot change
-    * results: every rank order is total (it ends in a unique id), so the
-    * exact GLOBAL rank is bucket-count invariant. */
-  def layoutRankBuckets: Int = layoutRankBucketsFor(evCount)
-
-  private def layoutRankBucketsFor(n: Long): Int =
-    math.max(8L, math.min(32L, (n + 2999999L) / 3000000L)).toInt
 
   private def envInt(name: String): Option[Int] =
     sys.env.get(name).map(_.trim.toInt)
@@ -191,7 +171,7 @@ object Knobs {
     * with the centroid table as a codegen reference object); at or above
     * it the two-level router (row 162: super-route + within-super argmax)
     * takes over — the flat table would be ~cells×64×8 B per executor
-    * (unguarded broadcast growth, round-10 verdict) and the flat
+    * (unguarded broadcast growth) and the flat
     * assignment cost N×cells dots, vs the router's ~2N√cells. Default
     * 4096 ⇒ table ≤ 2 MB and the switch engages exactly where the
     * derived ivfCells curve leaves the flat-affordable regime (the 1000×
@@ -235,7 +215,7 @@ object Knobs {
     * and the generated oracle SQL (same JVM, after noteDir) interpolates
     * the SAME values as literals — so every CORRECTNESS artifact records
     * the sizing the run actually used, and any Spark/oracle knob split
-    * (the failure class the round-9 derived-knob work guards against)
+    * (a plan and its oracle built from different knob values)
     * becomes a visible hash mismatch instead of a silent plan
     * divergence. */
   private def knobRows: Seq[(String, Long)] = Seq(
@@ -246,8 +226,7 @@ object Knobs {
     "lsh_planes" -> lshPlanes.toLong,
     "lsh_tables" -> lshTables.toLong,
     "simhash_bucket_bits" -> simhashBucketBits.toLong,
-    "compact_target_chars" -> compactTargetChars,
-    "layout_rank_buckets" -> layoutRankBuckets.toLong)
+    "compact_target_chars" -> compactTargetChars)
 
   def knobReport(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
 
 /** Parquet table readers + session tuning shared by every operator.
   *
@@ -101,15 +102,17 @@ object Tables {
     * becomes a RELIABLE checkpoint — same single-materialization
     * guarantee, executor-loss tolerant. Local runs default to
     * localCheckpoint (no dir to configure, no write amplification). */
-  def rankPinDir: Option[String] =
+  private def rankPinDir: Option[String] =
     sys.env.get("GRAFT_RANK_PIN_DIR")
       .orElse(Option(System.getProperty("graft.rank.pin.dir")))
       .map(_.trim).filter(_.nonEmpty)
 
   /** Materialize a frame once and cut its lineage, so a frame with several
-    * consumers is computed once instead of once per consumer. Callers:
-    * [[pinRankBuckets]], dedup_snm's (doc_id, rnk) frame and the SCD2
-    * cursor in Forwarder.scd2Merged (the incremental-maintenance
+    * consumers is computed once instead of once per consumer. The pin
+    * runs a Spark job while the DataFrame is being built, and the plan
+    * then shows only a checkpoint scan. Callers: dedup_snm's
+    * (doc_id, rnk) frame, winnow's group and retained frames, and the
+    * SCD2 cursor in Forwarder.scd2Merged (the incremental-maintenance
     * checkpoint split itself is not pinned: a lineage cut of the full
     * keyed frame costs more than the per-branch cache reads it saves).
     * Local runs localCheckpoint; GRAFT_RANK_PIN_DIR deployments get a
@@ -124,58 +127,39 @@ object Tables {
     case None => df.localCheckpoint(true)
   }
 
-  /** `df` range-partitioned on `order` into `buckets` partitions, each
-    * row tagged with its bucket `pid`, pinned so every consumer sees one
-    * set of range bounds (see [[globalRank]]). */
-  def pinRankBuckets(df: DataFrame, buckets: Int, order: Column*): DataFrame =
-    pinFrame(df.repartitionByRange(buckets, order: _*)
-      .withColumn("pid", spark_partition_id()))
-
   /** The one distributed global rank: adds `rnk`, 1-based over `order`
     * within each `within` group (global when `within` is empty), and
     * `n_total`, the row count of that group — the semantics of
     * `row_number() OVER (PARTITION BY within ORDER BY order)` without a
     * single-partition sort at any width.
     *
-    * Plan: range-partition on (within, order) into
-    * [[Knobs.layoutRankBuckets]] buckets, row_number inside each
-    * (within, bucket), and add the count of every earlier bucket of the
-    * same group from a bucket-sized offset frame joined by broadcast.
-    * `order` must end in a unique id: over a total order the rank does
-    * not depend on where the range bounds fall, so the bucket count
-    * cannot change a result.
+    * Plan: one global sort on (within, order) — a range exchange, then a
+    * sort per range — numbered by Spark's distributed sequence, so `seq`
+    * is each row's 0-based global position. A group-scale frame (one row
+    * per `within` group: its size and the rows of every earlier group)
+    * joins by broadcast, and `rnk = seq + 1 - before`. `order` must end
+    * in a unique id: over a total order `seq` does not depend on where
+    * the range bounds fall, so the rank needs no pinned layout and
+    * building the frame runs no job. The global rank joins on a
+    * constant key, so it adds no cross join. The group count reads `df`
+    * a second time (its columns pruned), so a rank over another rank's
+    * output repeats that rank's plan in its count branch.
     *
-    * Pin invariant: the rank and offset branches both read the bucketed
-    * frame, and without a pin each branch runs its OWN
-    * repartitionByRange. RangePartitioner samples per input partition,
-    * so two runs over different upstream layouts can draw different
-    * bounds, and `spark_partition_id()` then tags inconsistent pids:
-    * local ranks from one layout joined to offsets from another
-    * (observed at sf0.1: curriculum_plan emitted 11 "deciles"; sf0.01
-    * coalesces to one partition and hides it). [[pinRankBuckets]]
-    * materializes ONE layout for both branches.
-    *
-    * `rnk` is `offset + row_number`, never a running sum, so it stays
-    * non-nullable in the caller's schema. */
+    * `rnk` is a position minus an offset, never a running sum, so it
+    * stays non-nullable in the caller's schema. */
   def globalRank(df: DataFrame, within: Seq[String], order: Column*): DataFrame = {
-    val bucketed = pinRankBuckets(df, Knobs.layoutRankBuckets,
-      within.map(col) ++ order: _*)
-    val group = within.map(col)
-    val keys = within :+ "pid"
-    val ranked = bucketed.withColumn("local_rn", row_number().over(
-      Window.partitionBy(keys.map(col): _*).orderBy(order: _*)))
-    val offsets = bucketed.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n_in_bucket"))
-      .withColumn("offset", coalesce(sum("n_in_bucket").over(
-        Window.partitionBy(group: _*).orderBy("pid")
+    val (keyed, keys) =
+      if (within.isEmpty) (df.withColumn("rank_all", lit(0)), Seq("rank_all"))
+      else (df, within)
+    val groups = keyed.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n_total"))
+      .withColumn("before", coalesce(sum("n_total").over(
+        Window.orderBy(keys.map(col): _*)
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n_total", sum("n_in_bucket").over(
-        Window.partitionBy(group: _*)
-          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .select((keys :+ "offset" :+ "n_total").map(col): _*)
-    ranked.join(broadcast(offsets), keys)
+    GraftShim.withSequenceColumn(keyed.orderBy(within.map(col) ++ order: _*), "seq")
+      .join(broadcast(groups), keys)
       .select(df.columns.map(col) :+
-        (col("offset") + col("local_rn")).as("rnk") :+ col("n_total"): _*)
+        (col("seq") + 1 - col("before")).as("rnk") :+ col("n_total"): _*)
   }
 
   /** Memoized persist: build + `persist(MEMORY_AND_DISK)` a frame at most

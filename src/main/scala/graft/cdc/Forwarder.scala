@@ -161,9 +161,7 @@ object Forwarder {
     * query (checkpoint aggregate, pre branch, delta branch); the 5 scalar
     * columns are ~10× narrower than the decode (cmap map + column arrays
     * per row), so each re-consumption is a cached-columnar scan rather
-    * than a full-width re-read. Public: IncMaintBench measures
-    * checkpoint/merge walls over the exact frame the registered query
-    * uses. */
+    * than a full-width re-read. */
   def routedKeyed(spark: SparkSession, dir: String): DataFrame =
     graft.Tables.memoPersist(spark, s"cdc.routedKeyed:$dir") {
       keyed(ChangeFeed.decodedWithMap(spark, dir))

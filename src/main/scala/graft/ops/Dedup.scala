@@ -1624,8 +1624,8 @@ object Dedup {
       .where(size(col("toks")) >= 2) // the shingle domain, exactly
       .select("doc_id", "key")
     // Pinned: the neighbor pairing consumes the ranked frame from both
-    // join sides, and each side would re-run the per-bucket row_number
-    // window + offset join; the (doc_id, rnk) pin is two columns per
+    // join sides, and each side would re-run the global sort, sequence
+    // and group-count join; the (doc_id, rnk) pin is two columns per
     // document.
     val ranked = Tables.pinFrame(
       Tables.globalRank(keyed, Nil, col("key"), col("doc_id")).select("doc_id", "rnk"))

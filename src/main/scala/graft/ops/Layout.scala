@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Knobs, Tables}
 import graft.functions.HashExprs
+import org.apache.spark.sql.graftshim.GraftShim
 
 /** Physical-layout planning operators: the two decisions a 100 TB table
   * owner actually makes — HOW rows are clustered into files (Z-order vs
@@ -18,8 +19,8 @@ import graft.functions.HashExprs
   *
   * Scale shape: both reduce fact-scale input to bucket-scale output
   * (≤2·Buckets rows / ≤1 row per source) through single map-side-
-  * combined aggregations; the only window function runs inside
-  * range-bucketed partitions (the project's two-phase global-order
+  * combined aggregations; the global orders are one distributed sort
+  * numbered by Spark's sequence operator (the project's global-order
   * discipline — no single-reducer sort anywhere).
   */
 object Layout {
@@ -167,10 +168,8 @@ object Layout {
     * row, boundaries); fill_e4 reports the resulting overflow/
     * underflow honestly.
     *
-    * Plan: the running total is TWO-PHASE — range-bucket by
-    * (source, doc_id) with a pinned layout (Tables.pinRankBuckets),
-    * local window cumsum inside each (pid, source), plus a broadcast
-    * per-(pid, source) offset frame — so no source ever serializes
+    * Plan: the running total is TWO-PHASE over [[runningStart]]'s
+    * chunks of the (source, doc_id) order, so no source ever serializes
     * through one task, the failure mode of the naive
     * `Window.partitionBy(source)` formulation at 100 TB (one partition
     * per source = one task per source). Output is one row per source.
@@ -179,19 +178,7 @@ object Layout {
   def compactionPlan(spark: SparkSession, dir: String): DataFrame = {
     val target = Knobs.compactTargetChars
     val d = Tables.documents(spark, dir).select("source", "doc_id", "n_chars")
-    val bucketed = Tables.pinRankBuckets(d, Knobs.layoutRankBuckets,
-      col("source"), col("doc_id"))
-    val localW = Window.partitionBy("pid", "source").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val local = bucketed.withColumn("cum_local", sum("n_chars").over(localW))
-    val offsets = bucketed.groupBy("pid", "source")
-      .agg(sum("n_chars").as("part_sum"))
-      .withColumn("offset", coalesce(sum("part_sum").over(
-        Window.partitionBy("source").orderBy("pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("pid", "source", "offset")
-    val binned = local.join(broadcast(offsets), Seq("pid", "source"))
-      .withColumn("start", col("offset") + col("cum_local") - col("n_chars"))
+    val binned = runningStart(d, RunChunk)
       .withColumn("bin", expr(s"start div ${target}L"))
     binned.groupBy("source", "bin")
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("chars"))
@@ -204,6 +191,38 @@ object Layout {
         max("chars").as("max_bin_chars"),
         expr(s"(10000 * sum(chars)) div (count(1) * ${target}L)").as("fill_e4"))
       .orderBy("source")
+  }
+
+  /** Rows per chunk of [[runningStart]]: one chunk's slice of a source
+    * is one local running-sum task, and the offset frame holds about
+    * one row per chunk and source. */
+  private val RunChunk = 1L << 20
+
+  /** `d` (source, doc_id, n_chars) plus `start`: the n_chars of every
+    * earlier doc_id of the same source, the semantics of
+    * `sum(n_chars) OVER (PARTITION BY source ORDER BY doc_id) - n_chars`.
+    * Two phases: one global sort numbered by Spark's distributed
+    * sequence cuts the order into chunks of `chunk` rows (`seq div
+    * chunk`); a window sums inside each (chunk, source), and a
+    * chunk-scale offset frame (the chars of the source's earlier chunks)
+    * joins by broadcast. doc_id is unique, so over this total order
+    * `seq` does not depend on where the range bounds fall, and the two
+    * branches, each running its own sort, cut the same chunks. */
+  private[graft] def runningStart(d: DataFrame, chunk: Long): DataFrame = {
+    val chunked = GraftShim.withSequenceColumn(d.orderBy("source", "doc_id"), "seq")
+      .withColumn("chunk", expr(s"seq div ${chunk}L"))
+    val local = chunked.withColumn("cum_local", sum("n_chars").over(
+      Window.partitionBy("chunk", "source").orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, 0)))
+    val offsets = chunked.groupBy("chunk", "source")
+      .agg(sum("n_chars").as("part_sum"))
+      .withColumn("offset", coalesce(sum("part_sum").over(
+        Window.partitionBy("source").orderBy("chunk")
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .select("chunk", "source", "offset")
+    local.join(broadcast(offsets), Seq("chunk", "source"))
+      .select(d.columns.map(col) :+
+        (col("offset") + col("cum_local") - col("n_chars")).as("start"): _*)
   }
 
   def compactionPlanSql: String = {

@@ -1,11 +1,12 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Access shim: `ExpressionUtils` and `AbstractDataType` are
-  * `private[sql]`, so the (tiny) bridge lives under the sql package —
+/** Access shim: `ExpressionUtils`, `AbstractDataType` and
+  * `Dataset.withSequenceColumn` are `private[sql]`, so the (tiny) bridge
+  * lives under the sql package —
   * the conventional extension point for libraries adding native Catalyst
   * expressions. Everything else in this project stays in `graft.*`. */
 object GraftShim {
@@ -29,5 +30,17 @@ object GraftShim {
       s"runtime function registration needs a classic SparkSession " +
         s"(got ${other.getClass.getName}); for Spark Connect, set " +
         "spark.sql.extensions=graft.functions.GraftExtensions on the server")
+  }
+
+  /** `df` plus a non-null 0-based long column `name` numbering its rows
+    * in partition order (Spark's AttachDistributedSequence: one pass
+    * counts each partition, a second adds the partition's offset). Over
+    * a sorted frame that is each row's global position, computed in
+    * parallel at any width. Nothing runs until an action. Classic
+    * sessions only. */
+  def withSequenceColumn(df: DataFrame, name: String): DataFrame = df match {
+    case d: org.apache.spark.sql.classic.Dataset[_] => d.withSequenceColumn(name)
+    case other => throw new UnsupportedOperationException(
+      s"a sequence column needs a classic Dataset (got ${other.getClass.getName})")
   }
 }

@@ -5,12 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** Tables.globalRank against the single-window rank it distributes. The
   * input is spread over 16 partitions, so the range exchange samples its
-  * bounds per input partition — the case the bucket pin exists for, and
-  * one the one-partition sf0.001/sf0.01 corpora never reach. The whole
-  * output is compared, every input column kept as real callers keep
-  * them: a projection down to the rank columns lets column pruning make
-  * the rank and offset branches' range exchanges identical, Spark then
-  * reuses one exchange for both, and a missing pin goes unseen. */
+  * bounds per input partition and the sequence numbers rows across
+  * several sorted ranges — a case the one-partition sf0.001/sf0.01
+  * corpora never reach. The whole output is compared, every input
+  * column kept as real callers keep them. Building the ranked frame must
+  * run no Spark job: the rank is a plan, so its sort and count show in
+  * `explain`, and nothing is materialized before the caller's action. */
 class GlobalRankSpec extends SparkSpec {
 
   test("globalRank equals row_number over one window on a multi-partition frame") {
@@ -24,7 +24,12 @@ class GlobalRankSpec extends SparkSpec {
           row_number().over(w.orderBy(order: _*)).cast("long").as("rnk") :+
           count(lit(1)).over(w).as("n_total"): _*)
         .orderBy("id").collect().toSeq
-      val ranked = Tables.globalRank(df, within, order: _*)
+      val build = s"globalRank-build-${within.mkString}"
+      spark.sparkContext.setJobGroup(build, "build the ranked frame")
+      val ranked = try Tables.globalRank(df, within, order: _*)
+        finally spark.sparkContext.clearJobGroup()
+      assert(spark.sparkContext.statusTracker.getJobIdsForGroup(build).isEmpty,
+        s"within = $within: building the rank ran a Spark job")
       assert(!ranked.schema("rnk").nullable)
       assert(ranked.columns.toSeq == df.columns.toSeq :+ "rnk" :+ "n_total")
       val got = ranked.orderBy("id").collect().toSeq

@@ -5,8 +5,8 @@ import graft.ops.Layout
 import org.apache.spark.sql.functions._
 
 /** Layout-planning operators: the Morton interleave expression, the
-  * zone-map audit's layout contrast, and the compaction plan's packing
-  * invariants. */
+  * zone-map audit's layout contrast, and the compaction plan's running
+  * sum and packing invariants. */
 class LayoutSpec extends SparkSpec {
 
   test("z_interleave places bit i of x at 2i and bit i of y at 2i+1") {
@@ -80,5 +80,24 @@ class LayoutSpec extends SparkSpec {
       // bins must be no more numerous than one per started target-span
       assert(r.getAs[Long]("n_bins") <= ch / target + 1, src)
     }
+  }
+
+  test("compaction's two-phase running start equals one window across chunks") {
+    import org.apache.spark.sql.expressions.Window
+    // 16 input partitions, 20 chunks of 1000 rows: sources b and c cross
+    // every chunk boundary, source a sits inside the first chunk
+    val d = spark.range(20000).repartition(16)
+      .select(
+        when(col("id") < 500, "a").when(col("id") % 2 === 0, "b")
+          .otherwise("c").as("source"),
+        col("id").as("doc_id"),
+        (col("id") * 7919 % 1000 + 1).as("n_chars"))
+    val want = d.withColumn("start", sum("n_chars").over(
+        Window.partitionBy("source").orderBy("doc_id")) - col("n_chars"))
+      .orderBy("doc_id").collect().toSeq
+    val got = Layout.runningStart(d, 1000).orderBy("doc_id").collect().toSeq
+    assert(got.size == want.size)
+    val wrong = got.zip(want).count { case (a, b) => a != b }
+    assert(wrong == 0, s"$wrong of ${want.size} start offsets differ")
   }
 }
