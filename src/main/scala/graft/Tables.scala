@@ -135,32 +135,53 @@ object Tables {
     *
     * Plan: one global sort on (within, order) — a range exchange, then a
     * sort per range — numbered by Spark's distributed sequence, so `seq`
-    * is each row's 0-based global position. A group-scale frame (one row
-    * per `within` group: its size and the rows of every earlier group)
-    * joins by broadcast, and `rnk = seq + 1 - before`. `order` must end
-    * in a unique id: over a total order `seq` does not depend on where
-    * the range bounds fall, so the rank needs no pinned layout and
-    * building the frame runs no job. The global rank joins on a
-    * constant key, so it adds no cross join. The group count reads `df`
-    * a second time (its columns pruned), so a rank over another rank's
-    * output repeats that rank's plan in its count branch.
+    * is each row's 0-based global position. The group frame
+    * ([[rankGroups]]: one row per `within` group, its size and the rows
+    * of every earlier group) joins by broadcast, and `rnk = seq + 1 -
+    * before`. `order` must end in a unique id: over a total order `seq`
+    * does not depend on where the range bounds fall, so the rank needs
+    * no pinned layout and building the frame runs no job. The global
+    * rank joins on a constant key, so it adds no cross join.
     *
     * `rnk` is a position minus an offset, never a running sum, so it
     * stays non-nullable in the caller's schema. */
-  def globalRank(df: DataFrame, within: Seq[String], order: Column*): DataFrame = {
-    val (keyed, keys) =
-      if (within.isEmpty) (df.withColumn("rank_all", lit(0)), Seq("rank_all"))
-      else (df, within)
-    val groups = keyed.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n_total"))
-      .withColumn("before", coalesce(sum("n_total").over(
-        Window.orderBy(keys.map(col): _*)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    GraftShim.withSequenceColumn(keyed.orderBy(within.map(col) ++ order: _*), "seq")
-      .join(broadcast(groups), keys)
+  def globalRank(df: DataFrame, within: Seq[String], order: Column*): DataFrame =
+    globalRank(df, rankGroups(df, within), within, order: _*)
+
+  /** [[globalRank]] over a group frame the caller already holds.
+    * `groups` must be [[rankGroups]] of a frame whose `within` groups
+    * have the sizes of `df`'s, such as the input of a rank whose output
+    * `df` is. The group count reads its frame a second time, and the
+    * optimizer keeps each rank's join to its group frame, so counting a
+    * rank's output would repeat that rank's sort and count: a chain of
+    * ranks over one row set passes the count of the chain's input
+    * instead. */
+  def globalRank(df: DataFrame, groups: DataFrame, within: Seq[String],
+      order: Column*): DataFrame =
+    GraftShim.withSequenceColumn(
+        rankKeyed(df, within).orderBy(within.map(col) ++ order: _*), "seq")
+      .join(broadcast(groups), rankKeys(within))
       .select(df.columns.map(col) :+
         (col("seq") + 1 - col("before")).as("rnk") :+ col("n_total"): _*)
+
+  /** The group frame of a rank over `df`: one row per `within` group (a
+    * single row keyed by the constant `rank_all` when `within` is empty)
+    * with its row count `n_total` and `before`, the rows of every
+    * earlier group. */
+  def rankGroups(df: DataFrame, within: Seq[String]): DataFrame = {
+    val keys = rankKeys(within).map(col)
+    rankKeyed(df, within).groupBy(keys: _*)
+      .agg(count(lit(1)).as("n_total"))
+      .withColumn("before", coalesce(sum("n_total").over(
+        Window.orderBy(keys: _*).rowsBetween(Window.unboundedPreceding, -1)),
+        lit(0L)))
   }
+
+  private def rankKeys(within: Seq[String]): Seq[String] =
+    if (within.isEmpty) Seq("rank_all") else within
+
+  private def rankKeyed(df: DataFrame, within: Seq[String]): DataFrame =
+    if (within.isEmpty) df.withColumn("rank_all", lit(0)) else df
 
   /** Memoized persist: build + `persist(MEMORY_AND_DISK)` a frame at most
     * once per (session, key). Spark's CacheManager already dedupes cached

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Knobs, Tables}
 import graft.functions.HashExprs
-import org.apache.spark.sql.graftshim.GraftShim
 
 /** Physical-layout planning operators: the two decisions a 100 TB table
   * owner actually makes — HOW rows are clustered into files (Z-order vs
@@ -19,8 +18,9 @@ import org.apache.spark.sql.graftshim.GraftShim
   *
   * Scale shape: both reduce fact-scale input to bucket-scale output
   * (≤2·Buckets rows / ≤1 row per source) through single map-side-
-  * combined aggregations; the global orders are one distributed sort
-  * numbered by Spark's sequence operator (the project's global-order
+  * combined aggregations; zorder's file ids are one distributed sort
+  * numbered by Spark's sequence operator and compaction's running sum
+  * is two-phase over doc_id chunks (the project's global-order
   * discipline — no single-reducer sort anywhere).
   */
 object Layout {
@@ -169,7 +169,7 @@ object Layout {
     * underflow honestly.
     *
     * Plan: the running total is TWO-PHASE over [[runningStart]]'s
-    * chunks of the (source, doc_id) order, so no source ever serializes
+    * doc_id chunks, so no source ever serializes
     * through one task, the failure mode of the naive
     * `Window.partitionBy(source)` formulation at 100 TB (one partition
     * per source = one task per source). Output is one row per source.
@@ -193,24 +193,23 @@ object Layout {
       .orderBy("source")
   }
 
-  /** Rows per chunk of [[runningStart]]: one chunk's slice of a source
-    * is one local running-sum task, and the offset frame holds about
-    * one row per chunk and source. */
+  /** doc_id values per chunk of [[runningStart]]: doc_id is unique, so
+    * one chunk's slice of a source — one local running-sum task — holds
+    * at most this many rows, and over dense ingest-order ids the offset
+    * frame holds about one row per 2^20 documents and source. */
   private val RunChunk = 1L << 20
 
   /** `d` (source, doc_id, n_chars) plus `start`: the n_chars of every
     * earlier doc_id of the same source, the semantics of
     * `sum(n_chars) OVER (PARTITION BY source ORDER BY doc_id) - n_chars`.
-    * Two phases: one global sort numbered by Spark's distributed
-    * sequence cuts the order into chunks of `chunk` rows (`seq div
-    * chunk`); a window sums inside each (chunk, source), and a
-    * chunk-scale offset frame (the chars of the source's earlier chunks)
-    * joins by broadcast. doc_id is unique, so over this total order
-    * `seq` does not depend on where the range bounds fall, and the two
-    * branches, each running its own sort, cut the same chunks. */
+    * Two phases over chunks of `chunk` consecutive doc_id values
+    * (`doc_id div chunk`): a window sums inside each (chunk, source),
+    * and a chunk-scale offset frame (the chars of the source's earlier
+    * chunks) joins by broadcast. The chunk is a function of the row, so
+    * both branches read `d` directly: no global sort, no sequence and no
+    * pinned layout. */
   private[graft] def runningStart(d: DataFrame, chunk: Long): DataFrame = {
-    val chunked = GraftShim.withSequenceColumn(d.orderBy("source", "doc_id"), "seq")
-      .withColumn("chunk", expr(s"seq div ${chunk}L"))
+    val chunked = d.withColumn("chunk", expr(s"doc_id div ${chunk}L"))
     val local = chunked.withColumn("cum_local", sum("n_chars").over(
       Window.partitionBy("chunk", "source").orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, 0)))

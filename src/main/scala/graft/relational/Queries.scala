@@ -1561,7 +1561,9 @@ object Queries {
     * Scale shape: one map-side-combined groupBy on user_id at fact scale;
     * everything after runs on the per-user frame (orders smaller), where
     * the three ranks are [[Tables.globalRank]] calls (no
-    * single-partition window); the rollup key space is ≤ 125. Recency
+    * single-partition window) chained over one shared user count, so
+    * no rank counts another rank's output; the rollup key space is
+    * ≤ 125. Recency
     * derives from pure epoch-second integer arithmetic (the events_dow_hour
     * portability contract — both subtraction operands are floors of the
     * same nanosecond values, so the day count is engine-exact). */
@@ -1576,11 +1578,14 @@ object Queries {
     // bounded-cross: 1-row corpus high-water aggregate, N-independent
     val withR = perUser.crossJoin(broadcast(now))
       .withColumn("r_days", expr("(now_es - last_es) div 86400"))
-    val r1 = Tables.globalRank(withR, Nil, col("last_es").desc, col("user_id"))
+    // the three ranks chain over one row set, so one user count serves
+    // all three; withR is perUser plus a 1-row column, so count perUser
+    val users = Tables.rankGroups(perUser, Nil)
+    val r1 = Tables.globalRank(withR, users, Nil, col("last_es").desc, col("user_id"))
       .withColumnRenamed("rnk", "rnk_r").drop("n_total")
-    val r2 = Tables.globalRank(r1, Nil, col("f_n").desc, col("user_id"))
+    val r2 = Tables.globalRank(r1, users, Nil, col("f_n").desc, col("user_id"))
       .withColumnRenamed("rnk", "rnk_f").drop("n_total")
-    val r3 = Tables.globalRank(r2, Nil, col("m_cents").desc, col("user_id"))
+    val r3 = Tables.globalRank(r2, users, Nil, col("m_cents").desc, col("user_id"))
       .withColumnRenamed("rnk", "rnk_m")
     r3
       .withColumn("segment", expr(

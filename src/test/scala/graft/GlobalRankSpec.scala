@@ -38,4 +38,30 @@ class GlobalRankSpec extends SparkSpec {
       assert(wrong == 0, s"within = $within: $wrong of ${want.size} rows differ")
     }
   }
+
+  test("a chain of ranks over one shared group frame counts its input once") {
+    val df = spark.range(20000).repartition(16)
+      .select(col("id"), (col("id") % 3).as("g"), (col("id") * 7919 % 5).as("k"),
+        (col("id") * 104729 % 11).as("m"))
+    for (within <- Seq(Nil, Seq("g"))) {
+      val w = Window.partitionBy(within.map(col): _*)
+      val want = df
+        .withColumn("r1", row_number().over(w.orderBy(col("k").desc, col("id"))).cast("long"))
+        .withColumn("r2", row_number().over(w.orderBy(col("m"), col("id"))).cast("long"))
+        .withColumn("n_total", count(lit(1)).over(w))
+        .orderBy("id").collect().toSeq
+      val groups = Tables.rankGroups(df, within)
+      val r1 = Tables.globalRank(df, groups, within, col("k").desc, col("id"))
+        .withColumnRenamed("rnk", "r1").drop("n_total")
+      val chained = Tables.globalRank(r1, groups, within, col("m"), col("id"))
+        .withColumnRenamed("rnk", "r2")
+      // one join per rank: the second rank does not count the first's output
+      val joins = chained.queryExecution.optimizedPlan.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+      }
+      assert(joins.size == 2, s"within = $within: ${joins.size} joins")
+      val got = chained.orderBy("id").collect().toSeq
+      assert(got == want, s"within = $within: the chained ranks differ")
+    }
+  }
 }

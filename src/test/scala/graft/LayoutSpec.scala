@@ -84,7 +84,7 @@ class LayoutSpec extends SparkSpec {
 
   test("compaction's two-phase running start equals one window across chunks") {
     import org.apache.spark.sql.expressions.Window
-    // 16 input partitions, 20 chunks of 1000 rows: sources b and c cross
+    // 16 input partitions, 20 chunks of 1000 ids: sources b and c cross
     // every chunk boundary, source a sits inside the first chunk
     val d = spark.range(20000).repartition(16)
       .select(
