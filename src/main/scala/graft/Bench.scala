@@ -29,9 +29,9 @@ object Bench {
       // can only ever kill the whole run, never recover anything. A 146 s
       // full-JVM freeze (GC wall / host stall at the 1000x point) tripped
       // the default 120 s timeout, Spark "removed" the in-process
-      // executor, and the scheduler endpoint died — the r15 g_cdc chunk
-      // death class. On a real cluster these defaults stay; here the
-      // probe is pure downside, so give it stall-era headroom.
+      // executor, and the scheduler endpoint died, killing the run. On a
+      // real cluster these defaults stay; here the probe is pure
+      // downside, so give it stall-era headroom.
       .config("spark.network.timeout", "1800s")
       .config("spark.executor.heartbeatInterval", "300s")
       .getOrCreate()
@@ -46,9 +46,9 @@ object Bench {
 
     var errors = ListMap.empty[String, String]
     Tables.drainBuildTimes() // warmup-triggered builds are not billed to queries
-    // Stall canary (round-15 verdict ask #7): a fixed CPU-bound probe with
-    // zero corpus/IO dependence, run at chunk start and end. Its wall is a
-    // pure box-speed sample; a stress chunk whose canary is >2x the run
+    // Stall canary: a fixed CPU-bound probe with zero corpus/IO
+    // dependence, run at chunk start and end. Its wall is a pure
+    // box-speed sample; a stress chunk whose canary is >2x the run
     // set's minimum canary was measured during a host stall, and
     // stress_compose marks walls sourced only from stalled chunks. The
     // probe is whole-stage-codegen xxhash over a fixed range — ~2 s on a
@@ -59,10 +59,9 @@ object Bench {
         .selectExpr("max(xxhash64(id, id*31+7, id+13))").head()
       (System.nanoTime() - t) / 1e9
     }
-    // The CPU probe alone misses the era class actually observed on this
-    // host (round 16): raw CPU quiet while every EXCHANGE-heavy wall sat
-    // at 2-3x its pinned level (VM host IO/memory-bandwidth contention).
-    // So a second probe pays one real 50M-row shuffle — if cpu canary is
+    // The CPU probe alone misses host IO/memory-bandwidth contention: raw
+    // CPU can be quiet while every EXCHANGE-heavy wall sits at 2-3x its
+    // quiet level. So a second probe pays one real 50M-row shuffle — if cpu canary is
     // ~1x but shuffle canary is >2x its own quiet floor, the era is
     // host-side bandwidth, and shuffle-heavy walls must be read with it.
     def canaryShuffle(): Double = {
@@ -79,14 +78,13 @@ object Bench {
     // Per-query walls are reported NET of shared memoized-frame builds
     // that happened to fire during that query, and each build is its own
     // `_build:<memo key>` line (insertion-ordered) — so per-query numbers
-    // are comparable across rounds regardless of which query
+    // are comparable across runs and registries regardless of which query
     // alphabetically pays a shared index first. Total still includes
     // builds: it is the end-to-end registry wall.
     // A query whose first wall is swallowed almost entirely by shared
-    // builds that fired inside it would report a ~0 s net — six such
-    // "0.0 s walls" in the round-11 1000× artifact read as measurements
-    // when they were accounting residue. Rule: never emit a near-zero
-    // net wall for a query that ran without error; re-run it once (its
+    // builds that fired inside it would report a ~0 s net, which reads
+    // as a measurement but is accounting residue. Rule: never emit a
+    // near-zero net wall for a query that ran without error; re-run it once (its
     // builds are warm now, so the second wall IS the query) and report
     // that direct measurement with n_runs = 2.
     var nRuns = ListMap.empty[String, Int]
@@ -113,23 +111,23 @@ object Bench {
       name -> net
     }
     def f(v: Double): String = "%.4f".formatLocal(java.util.Locale.ROOT, v)
-    // Regression self-accounting (round-10 verdict #8): diff this run's
-    // per-query walls against the PRIOR full-registry artifact (read
-    // before it is overwritten below; override via GRAFT_BENCH_PREV) and
-    // carry the top deltas in the artifact itself, so a slower round is
-    // flagged in-artifact instead of needing a separate bench_diff pass.
-    // sf0.1 walls swing ±2-5 s run-to-run on this box (measured A/B/C,
-    // round 11), so only deltas ≥ 1 s on queries ≥ 0.25 s are listed.
+    // Regression self-accounting: diff this run's per-query walls
+    // against the PRIOR full-registry artifact (read before it is
+    // overwritten below; override via GRAFT_BENCH_PREV) and carry the top
+    // deltas in the artifact itself, so a slower run is flagged
+    // in-artifact instead of needing a separate bench_diff pass.
+    // sf0.1 walls swing ±2-5 s run-to-run on a 4-vCPU VM, so only deltas
+    // ≥ 1 s on queries ≥ 0.25 s are listed.
     // GRAFT_BENCH_PREV accepts a comma-separated artifact list; the
     // baseline is the per-query MIN across all of them, so a regression
-    // masked by comparing only against a slow round n-1 (round-11
-    // verdict: ngram_pmi vs round 9) is still flagged.
-    // Round-13 verdict ask #2: a single-sample run compared against
-    // pinned minima manufactured 8 false flags at a UNIFORM 1.52× —
-    // external box load, the third consecutive round of the same class.
-    // So the rule is noise-aware by construction: (a) compute this run's
-    // median per-query inflation vs the baseline (uniform load shows up
-    // here, a plan regression does not move the median of 190 queries),
+    // masked by comparing only against one slow prior run is still
+    // flagged.
+    // Uniform external load inflates every wall alike, and a single
+    // sample compared against minima would flag many queries at the same
+    // ratio. So the rule is noise-aware by construction: (a) compute this
+    // run's median per-query inflation vs the baseline (uniform load
+    // shows up here, a plan regression does not move the median of 190
+    // queries),
     // (b) deflate each wall by that median, (c) flag only if the
     // DEFLATED wall still regresses by ≥ 1 s AND ≥ 1.5× — i.e. the query
     // is slower than the rest of its own run says the box was.
@@ -137,14 +135,13 @@ object Bench {
     // on the record; >= 3 interleaved samples (scripts/bench_diff.py)
     // remain the settle-it-for-good path.
     // Default baseline is BOTH the last full artifact AND the pinned
-    // multi-run record (round-15 verdict ask #4): the driver's close-run
-    // Bench overwrites BENCH_full_last.json with an n=1 sample taken under
-    // whatever load the box is carrying at round close (r15: a 299 s run
-    // against the 153.8 s pinned floor) — comparing the next round only
-    // against that inflated sample can hide a ~2x real regression. The
-    // per-query MIN across the list means a single noisy overwrite can
-    // never RAISE the baseline; BENCH_full_pinned.json is updated only by
-    // a deliberate min-of-N rebaseline, never by a Bench run.
+    // multi-run record: every full run overwrites BENCH_full_last.json
+    // with an n=1 sample taken under whatever load the box carries, and
+    // comparing the next run only against an inflated sample can hide a
+    // ~2x real regression. The per-query MIN across the list means a
+    // single noisy overwrite can never RAISE the baseline;
+    // BENCH_full_pinned.json is updated only by a deliberate min-of-N
+    // rebaseline, never by a Bench run.
     val prevPaths = sys.env.getOrElse("GRAFT_BENCH_PREV",
         "BENCH_full_last.json,BENCH_full_pinned.json")
       .split(',').map(_.trim).filter(_.nonEmpty)
@@ -197,15 +194,12 @@ object Bench {
       .map { case (k, v) => s"${JsonUtil.q(k)}:$v" }.mkString("{", ",", "}")
     val canaryEnd = canary()
     val canaryShuffleEnd = canaryShuffle()
-    // Machine-readable stall flag (round-17 verdict ask #3): the r17
-    // 32-core artifact carried 8 fake 15-64x "regressions" because the
-    // host stalled MID-run — its own shuffle canary went 3.06->8.53 s —
-    // yet nothing in the artifact said "discard me". If the era moved
-    // by >2x between the start and end shuffle probes (either
-    // direction: a run can also start stalled and settle, as the r17
-    // rj1000_uts run did at 8.93->1.20), per-query walls from this run
-    // must not be read as code changes. Like the regression rule, the
-    // ratio alone is not enough: a sub-second canary pair can double on
+    // Machine-readable stall flag: a host that stalls MID-run inflates
+    // some walls many-fold and moves the shuffle canary with them. If the
+    // era moved by >2x between the start and end shuffle probes (either
+    // direction: a run can also start stalled and settle), per-query
+    // walls from this run must not be read as code changes. Like the
+    // regression rule, the ratio alone is not enough: a sub-second canary pair can double on
     // scheduler jitter, so the move must also be >= 1 s absolute.
     val stallSuspected = {
       val hi = math.max(canaryShuffleStart, canaryShuffleEnd)
@@ -215,21 +209,21 @@ object Bench {
     val line =
       s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"builds":$bs,"errors":$errs,"regressions":$regs,"median_inflation":${f(medianInflation)},"regression_rule":"deflate by median inflation vs baseline, then delta>=1s AND ratio>=1.5x","n_runs":$nr,"canary_sec":{"start":${f(canaryStart)},"end":${f(canaryEnd)},"start_shuffle":${f(canaryShuffleStart)},"end_shuffle":${f(canaryShuffleEnd)}},"stall_suspected":$stallSuspected,"sf":"$sfDir"}"""
     println(line)
-    // Persist the full line too: the driver's artifact has repeatedly
-    // truncated the stdout tail (BENCH_r7/r8 carried `parsed: null`), so
-    // the well-formed per-query map must survive somewhere durable.
-    // Subset (--only) runs write to a suffixed name so they never clobber
-    // the last FULL-registry artifact under the default output (round-9
-    // advice).
-    val outDefault =
-      if (only.isEmpty) "BENCH_full_last.json" else "BENCH_subset_last.json"
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sys.env.getOrElse("GRAFT_BENCH_OUT", outDefault)), line + "\n")
-    catch { case _: Throwable => () }
-    // Final line is a COMPACT summary sized to survive the driver's
-    // ~2 KB stdout tail buffer (the full 147-query line is ~6 KB, which
-    // is why BENCH_r7..r9 carried `parsed: null` — the opening brace fell
-    // off the captured tail). Top-cost queries only; the complete map
+    // Persist the full line too: a caller that keeps only the stdout tail
+    // loses its opening brace, so the well-formed per-query map must
+    // survive somewhere durable. A full run writes BENCH_full_last.json
+    // (the next run's baseline); a subset run writes only where
+    // GRAFT_BENCH_OUT points, so it never clobbers the full-registry
+    // artifact or leaves a file in the checkout.
+    val out = sys.env.get("GRAFT_BENCH_OUT")
+      .orElse(if (only.isEmpty) Some("BENCH_full_last.json") else None)
+    out.foreach { p =>
+      try java.nio.file.Files.writeString(java.nio.file.Paths.get(p), line + "\n")
+      catch { case _: Throwable => () }
+    }
+    // Final line is a COMPACT summary sized to survive a ~2 KB stdout
+    // tail buffer (the full line is ~6 KB, so a tail-captured parse
+    // loses its opening brace). Top-cost queries only; the complete map
     // lives in the durable artifact above and in the full line printed
     // before this one.
     val top = results.sortBy(-_._2).take(20)

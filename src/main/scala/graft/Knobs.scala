@@ -7,9 +7,9 @@ package graft
   * defaults: no operator needs a hand-set env var to survive a 10× data
   * growth.
   *
-  * Resolution order per knob: explicit env override (GRAFT_IVF_CELLS,
-  * GRAFT_LSH_PLANES, GRAFT_LSH_TABLES, GRAFT_IVF_ROUTE_CELLS) wins where
-  * one exists; otherwise the value is derived from the row count of the governing
+  * Resolution order per knob: explicit env override (GRAFT_LSH_PLANES,
+  * GRAFT_LSH_TABLES, GRAFT_IVF_ROUTE_CELLS) wins where one exists;
+  * otherwise the value is derived from the row count of the governing
   * table in the CURRENT corpus directory; if no directory is known yet
   * (no query has run) the derivation falls back to the small-corpus
   * floor, which equals the historical fixed default.
@@ -62,7 +62,7 @@ object Knobs {
   private def derivedKnobs(dir: String): (Int, Int, Int, Int, Long) = {
     def emb = rowCount(dir, "embeddings")
     def doc = rowCount(dir, "documents")
-    (envInt("GRAFT_IVF_CELLS").getOrElse(ivfCellsFor(emb)),
+    (ivfCellsFor(emb),
       envInt("GRAFT_LSH_PLANES").getOrElse(lshPlanesFor(emb)),
       envInt("GRAFT_LSH_TABLES").getOrElse(lshTablesFor(
         envInt("GRAFT_LSH_PLANES").getOrElse(lshPlanesFor(emb)))),
@@ -136,7 +136,7 @@ object Knobs {
     * is the honest single-level answer. Floor 8 = the historical
     * default (binds for every corpus below 2048 vectors, so the
     * sf0.001/sf0.01/sf0.1 gates are byte-stable vs fixed-knob rounds). */
-  def ivfCells: Int = envInt("GRAFT_IVF_CELLS").getOrElse(ivfCellsFor(embCount))
+  def ivfCells: Int = ivfCellsFor(embCount)
 
   private def ivfCellsFor(n: Long): Int = {
     val linear = math.ceil(n.toDouble / 256).toLong
@@ -151,6 +151,7 @@ object Knobs {
     * p = 25; the documented 100 TB operating point (p ≈ 18) trades more
     * per-bucket work for recall — certify with ann_recall, override via
     * GRAFT_LSH_PLANES. */
+  // Override kept: the 100 TB point (p ≈ 18) is not what the derivation yields.
   def lshPlanes: Int = envInt("GRAFT_LSH_PLANES").getOrElse(lshPlanesFor(embCount))
 
   private def lshPlanesFor(n: Long): Int =
@@ -161,6 +162,7 @@ object Knobs {
     * it — one extra table per extra plane past the floor, capped at 16
     * (the documented 100 TB setting). Fixed 8 below the p-knee, so
     * small corpora are byte-stable. */
+  // Override kept: the 100 TB point (L ≈ 16) pairs with the p ≈ 18 override.
   def lshTables: Int = envInt("GRAFT_LSH_TABLES").getOrElse(lshTablesFor(lshPlanes))
 
   private def lshTablesFor(planes: Int): Int =
@@ -178,6 +180,8 @@ object Knobs {
     * stress point's 5657 cells routes hierarchically; every gate corpus
     * and the 100× point stay flat and byte-stable). The knob_report row
     * `ivf_route_hier` records the mode both engines resolved. */
+  // Override kept: the only way to run the hierarchical route's oracle
+  // check on a gate corpus, whose cell count sits far below the default.
   def ivfRouteHierCells: Int = envInt("GRAFT_IVF_ROUTE_CELLS").getOrElse(4096)
 
   def ivfRouteHier: Boolean = ivfCells >= ivfRouteHierCells

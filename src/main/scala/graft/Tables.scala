@@ -94,39 +94,6 @@ object Tables {
     if (narrow) df.repartition(cores) else df
   }
 
-  /** Deployment path for [[pinFrame]]'s reliable checkpoint:
-    * `GRAFT_RANK_PIN_DIR` (env or `graft.rank.pin.dir` sysprop).
-    * Cluster posture: localCheckpoint stores blocks on executors, so an
-    * executor loss kills the job instead of recomputing; a deployment
-    * sets this to a fault-tolerant path (HDFS/object store) and the pin
-    * becomes a RELIABLE checkpoint — same single-materialization
-    * guarantee, executor-loss tolerant. Local runs default to
-    * localCheckpoint (no dir to configure, no write amplification). */
-  private def rankPinDir: Option[String] =
-    sys.env.get("GRAFT_RANK_PIN_DIR")
-      .orElse(Option(System.getProperty("graft.rank.pin.dir")))
-      .map(_.trim).filter(_.nonEmpty)
-
-  /** Materialize a frame once and cut its lineage, so a frame with several
-    * consumers is computed once instead of once per consumer. The pin
-    * runs a Spark job while the DataFrame is being built, and the plan
-    * then shows only a checkpoint scan. Callers: dedup_snm's
-    * (doc_id, rnk) frame, winnow's group and retained frames, and the
-    * SCD2 cursor in Forwarder.scd2Merged (the incremental-maintenance
-    * checkpoint split itself is not pinned: a lineage cut of the full
-    * keyed frame costs more than the per-branch cache reads it saves).
-    * Local runs localCheckpoint; GRAFT_RANK_PIN_DIR deployments get a
-    * reliable checkpoint. */
-  def pinFrame(df: DataFrame): DataFrame = rankPinDir match {
-    case Some(d) =>
-      val sc = df.sparkSession.sparkContext
-      // setCheckpointDir creates a fresh UUID subdir per call — set it
-      // once; an already-configured context dir is respected as-is
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d)
-      df.checkpoint(eager = true)
-    case None => df.localCheckpoint(true)
-  }
-
   /** The one distributed global rank: adds `rnk`, 1-based over `order`
     * within each `within` group (global when `within` is empty), and
     * `n_total`, the row count of that group — the semantics of
@@ -139,9 +106,10 @@ object Tables {
     * ([[rankGroups]]: one row per `within` group, its size and the rows
     * of every earlier group) joins by broadcast, and `rnk = seq + 1 -
     * before`. `order` must end in a unique id: over a total order `seq`
-    * does not depend on where the range bounds fall, so the rank needs
-    * no pinned layout and building the frame runs no job. The global
-    * rank joins on a constant key, so it adds no cross join.
+    * does not depend on where the range bounds fall, so every evaluation
+    * of the plan, and both sides of a self-join, see the same ranks, and
+    * building the frame runs no job. The global rank joins on a constant
+    * key, so it adds no cross join.
     *
     * `rnk` is a position minus an offset, never a running sum, so it
     * stays non-nullable in the caller's schema. */

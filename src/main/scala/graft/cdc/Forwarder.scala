@@ -450,16 +450,14 @@ object Forwarder {
     * [[keyed]] shape, uid non-null) — shared by the registered query and
     * IncrementalSnapshotSpec's multi-split proof.
     *
-    * Each heavy pass runs once: closed is the only pre-side WINDOW; the
-    * cursor is a map-side-combined AGGREGATE (per-entity partials cross
-    * the exchange, not rows), pinned once ([[graft.Tables.pinFrame]]) —
-    * it is entity-scale and has two join consumers in [[scd2New]], which
-    * a shared DataFrame would otherwise re-derive per consumer; the
+    * Closed is the only pre-side WINDOW; the cursor is a
+    * map-side-combined AGGREGATE (per-entity partials cross the exchange,
+    * not rows), read by both join consumers in [[scd2New]]; the
     * first-delta row is likewise an aggregate; only the delta versions
     * pay a delta-side window sort. */
   def scd2Merged(pre: DataFrame, delta: DataFrame): DataFrame = {
     val closed = scd2Closed(pre)
-    val cursor = graft.Tables.pinFrame(scd2Cursor(pre))
+    val cursor = scd2Cursor(pre)
     scd2New(cursor, delta)
       .unionByName(closed, allowMissingColumns = false)
       .select("base", "uid", "version", "valid_from", "valid_to",

@@ -1623,12 +1623,11 @@ object Dedup {
         split(norm, " ").as("toks"))
       .where(size(col("toks")) >= 2) // the shingle domain, exactly
       .select("doc_id", "key")
-    // Pinned: the neighbor pairing consumes the ranked frame from both
-    // join sides, and each side would re-run the global sort, sequence
-    // and group-count join; the (doc_id, rnk) pin is two columns per
-    // document.
-    val ranked = Tables.pinFrame(
-      Tables.globalRank(keyed, Nil, col("key"), col("doc_id")).select("doc_id", "rnk"))
+    // Both join sides of the neighbor pairing read this frame; the rank
+    // orders by (key, doc_id), a total order, so each side computes the
+    // same ranks.
+    val ranked =
+      Tables.globalRank(keyed, Nil, col("key"), col("doc_id")).select("doc_id", "rnk")
     val pairs = ranked
       .select(col("doc_id").as("doc_a"), col("rnk"),
         explode(sequence(lit(1L), lit(SnmWindow))).as("rank_gap"))
@@ -1695,12 +1694,15 @@ object Dedup {
     * linear either way, this bounds the output contract. */
   val WinnowMinCovE4 = 5000L
 
-  /** Per-document winnowed fingerprint sets (sorted distinct array),
-    * memoized: one codegen'd pass over the text column (rolling gram
+  /** Winnow groups: documents grouped by identical winnowed fingerprint
+    * set (sorted distinct array), one row per group with its `fps`, its
+    * representative `rep` (least doc_id) and its `size`. Memoized: the
+    * retained prints and the report's group sizes both read it. The sets
+    * come from one codegen'd pass over the text column (rolling gram
     * hash + ring-buffer window minima — see
     * [[graft.functions.WinnowHashExpr]]). Documents shorter than K chars
     * have no gram and drop out. */
-  private def winnowSets(spark: SparkSession, dir: String): DataFrame =
+  private def winnowGroups(spark: SparkSession, dir: String): DataFrame =
     Tables.memoPersist(spark, s"dedup.winnow:$dir") {
       // gate on the cheap length probe, not size(fps) > 0: the latter
       // pushes below the projection and runs the O(n) winnow expression
@@ -1711,6 +1713,20 @@ object Dedup {
         .select(col("doc_id"),
           graft.functions.HashExprs.winnowFingerprints(
             col("text"), WinnowK, WinnowW, TextStats.FpPrime, P).as("fps"))
+        .groupBy("fps").agg(min("doc_id").as("rep"), count(lit(1)).as("size"))
+    }
+
+  /** The (rep, fp) pairs of every retained fingerprint: each group's
+    * prints whose document frequency over the groups is at most
+    * [[WinnowMaxDf]]. Memoized: the report reads it from four branches
+    * (both self-join sides, n_sel, the coverage joins). Rep-scale, like
+    * the groups. */
+  private def winnowRetained(spark: SparkSession, dir: String): DataFrame =
+    Tables.memoPersist(spark, s"dedup.winnowRetained:$dir") {
+      val repFps = winnowGroups(spark, dir)
+        .select(col("rep"), explode(col("fps")).as("fp"))
+      repFps.join(repFps.groupBy("fp").agg(count(lit(1)).as("df"))
+        .where(col("df") <= WinnowMaxDf).select("fp"), "fp")
     }
 
   /** MOSS-style near-dup pair report over winnowed fingerprints: pairs of
@@ -1729,20 +1745,9 @@ object Dedup {
     * fingerprints are df-capped, so the candidate search is never
     * quadratic in duplicate multiplicity. */
   def winnowOverlap(spark: SparkSession, dir: String): DataFrame = {
-    // Pin the two shared intermediates: the report consumes `grp` from
-    // five branches and `retained` from four (self-join both sides,
-    // n_sel, coverage joins), and a DataFrame with several consumers
-    // re-derives its whole subtree per consumer in the physical plan.
-    // Both frames are rep-scale (distinct content only), so the pins are
-    // small; every branch starts from materialized blocks.
-    val grp = graft.Tables.pinFrame(winnowSets(spark, dir)
-      .groupBy("fps").agg(min("doc_id").as("rep"), count(lit(1)).as("size")))
-    val repFps = grp.select(col("rep"), explode(col("fps")).as("fp"))
-    val retained = graft.Tables.pinFrame(repFps
-      .join(repFps.groupBy("fp").agg(count(lit(1)).as("df"))
-        .where(col("df") <= WinnowMaxDf).select("fp"), "fp"))
+    val retained = winnowRetained(spark, dir)
     val nSel = retained.groupBy("rep").agg(count(lit(1)).as("n_sel"))
-    val sizes = grp.select("rep", "size")
+    val sizes = winnowGroups(spark, dir).select("rep", "size")
     val pairs = retained.as("a")
       .join(retained.as("b"),
         col("a.fp") === col("b.fp") && col("a.rep") < col("b.rep"))

@@ -609,9 +609,9 @@ object Similarity {
     * cells = ⌈N/256⌉ capped at ⌈4√N⌉, floor 8) so the cell-scoped pair
     * family (dedup_semantic / label_noise / embed_prune) stays linear in
     * N at DEFAULTS; the Lloyd update is one map-side-combined groupBy
-    * over cells×Dim rows per partition however big N gets. Override via
-    * GRAFT_IVF_CELLS — the derived-or-overridden value is read by both
-    * the Spark plan and the oracle SQL, so the mirror never splits. */
+    * over cells×Dim rows per partition however big N gets. The derived
+    * value is read by both the Spark plan and the oracle SQL, so the
+    * mirror never splits. */
   def NumCells: Int = graft.Knobs.ivfCells
   val NProbe = 2
 

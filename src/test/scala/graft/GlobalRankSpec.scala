@@ -24,12 +24,10 @@ class GlobalRankSpec extends SparkSpec {
           row_number().over(w.orderBy(order: _*)).cast("long").as("rnk") :+
           count(lit(1)).over(w).as("n_total"): _*)
         .orderBy("id").collect().toSeq
-      val build = s"globalRank-build-${within.mkString}"
-      spark.sparkContext.setJobGroup(build, "build the ranked frame")
-      val ranked = try Tables.globalRank(df, within, order: _*)
-        finally spark.sparkContext.clearJobGroup()
-      assert(spark.sparkContext.statusTracker.getJobIdsForGroup(build).isEmpty,
-        s"within = $within: building the rank ran a Spark job")
+      val (ranked, jobs) = jobsRunBy("build the ranked frame") {
+        Tables.globalRank(df, within, order: _*)
+      }
+      assert(jobs.isEmpty, s"within = $within: building the rank ran a Spark job")
       assert(!ranked.schema("rnk").nullable)
       assert(ranked.columns.toSeq == df.columns.toSeq :+ "rnk" :+ "n_total")
       val got = ranked.orderBy("id").collect().toSeq

@@ -28,6 +28,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     work
   }
 
+  /** Run `body` under a fresh job group; return its result and the call
+    * site of every Spark job it ran (empty when `body` only plans). */
+  def jobsRunBy[T](label: String)(body: => T): (T, Seq[String]) = {
+    val group = s"$label-${java.util.UUID.randomUUID()}"
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, label)
+    val out = try body finally sc.clearJobGroup()
+    val tracker = sc.statusTracker
+    (out, tracker.getJobIdsForGroup(group).toSeq.sorted.map { id =>
+      tracker.getJobInfo(id).flatMap(j => j.stageIds.headOption)
+        .flatMap(tracker.getStageInfo).map(_.name).getOrElse(s"job $id")
+    })
+  }
+
   @volatile private var scratchDirs: List[String] = Nil
 
   /** A fresh temp dir, deleted after the suite. */
