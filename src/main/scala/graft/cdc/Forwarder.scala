@@ -418,33 +418,25 @@ object Forwarder {
 
   /** The rows the merge PRODUCES: pre-L open versions resolved against
     * the delta (closed at their entity's first delta change, or kept
-    * open), plus the delta's own versions numbered from the cursor.
-    * Cost tracks |cursor| + |delta| only. */
-  def scd2New(cursor: DataFrame, delta: DataFrame): DataFrame = {
-    val firstDelta = delta.groupBy("base", "uid")
-      .agg(min(struct(col("lsn"), col("idx"))).as("first"))
-      .select(col("base"), col("uid"), col("first.lsn").as("first_lsn"))
-    val openResolved = cursor.where(col("last_kind") =!= "delete")
-      .join(firstDelta, Seq("base", "uid"), "left")
-      .select(col("base"), col("uid"), col("n_versions").as("version"),
-        col("last_lsn").as("valid_from"),
-        coalesce(col("first_lsn"), lit(-1L)).as("valid_to"),
-        when(col("first_lsn").isNull, 1L).otherwise(0L).as("is_current"),
-        col("last_kind").as("kind"))
-    val deltaV = delta
+    * open), plus the delta's own versions numbered from the cursor. The
+    * cursor re-enters as each entity's first row (every delta change
+    * follows it in (lsn, idx)), weighing its version count; one window
+    * over those rows and the delta's closes the open version (lead) and
+    * numbers the delta versions (running weight), so the cursor is read
+    * once. Cost tracks |cursor| + |delta| only. */
+  def scd2New(cursor: DataFrame, delta: DataFrame): DataFrame =
+    reentered(cursor, "n_versions")
+      .unionByName(delta.select(col("base"), col("uid"), col("lsn"), col("idx"),
+        col("kind"), nonDelete.as("w")))
       .withColumn("nxt", lead(col("lsn"), 1).over(perEntW))
+      .withColumn("version",
+        sum(col("w")).over(perEntW.rowsBetween(Long.MinValue, 0L)))
       .where(col("kind") =!= "delete")
-      .withColumn("dver", row_number().over(perEntW).cast("long"))
-      .join(cursor.select(col("base"), col("uid"),
-        col("n_versions").as("base_ver")), Seq("base", "uid"), "left")
-      .select(col("base"), col("uid"),
-        (col("dver") + coalesce(col("base_ver"), lit(0L))).as("version"),
+      .select(col("base"), col("uid"), col("version"),
         col("lsn").as("valid_from"),
         coalesce(col("nxt"), lit(-1L)).as("valid_to"),
         when(col("nxt").isNull, 1L).otherwise(0L).as("is_current"),
         col("kind"))
-    openResolved.unionByName(deltaV)
-  }
 
   /** The checkpoint+merge plan over explicit pre/delta frames (both in
     * [[keyed]] shape, uid non-null) — shared by the registered query and
@@ -452,9 +444,8 @@ object Forwarder {
     *
     * Closed is the only pre-side WINDOW; the cursor is a
     * map-side-combined AGGREGATE (per-entity partials cross the exchange,
-    * not rows), read by both join consumers in [[scd2New]]; the
-    * first-delta row is likewise an aggregate; only the delta versions
-    * pay a delta-side window sort. */
+    * not rows) with one consumer, the |cursor| + |delta| window of
+    * [[scd2New]]. */
   def scd2Merged(pre: DataFrame, delta: DataFrame): DataFrame = {
     val closed = scd2Closed(pre)
     val cursor = scd2Cursor(pre)

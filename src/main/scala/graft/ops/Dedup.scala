@@ -1694,15 +1694,18 @@ object Dedup {
     * linear either way, this bounds the output contract. */
   val WinnowMinCovE4 = 5000L
 
-  /** Winnow groups: documents grouped by identical winnowed fingerprint
-    * set (sorted distinct array), one row per group with its `fps`, its
-    * representative `rep` (least doc_id) and its `size`. Memoized: the
-    * retained prints and the report's group sizes both read it. The sets
-    * come from one codegen'd pass over the text column (rolling gram
-    * hash + ring-buffer window minima — see
+  /** The retained winnow prints: documents grouped by identical winnowed
+    * fingerprint set, each group's representative `rep` (least doc_id)
+    * and `size`, and one row per print of the group whose document
+    * frequency over the groups is at most [[WinnowMaxDf]]. Memoized: the
+    * report reads it from both self-join sides and from the per-group
+    * print count behind the coverage joins, the within rows and the
+    * group sizes. Rep-scale: one row per distinct content's print. The
+    * sets come from one codegen'd pass over the text column (rolling
+    * gram hash + ring-buffer window minima — see
     * [[graft.functions.WinnowHashExpr]]). Documents shorter than K chars
     * have no gram and drop out. */
-  private def winnowGroups(spark: SparkSession, dir: String): DataFrame =
+  private def winnowRetained(spark: SparkSession, dir: String): DataFrame =
     Tables.memoPersist(spark, s"dedup.winnow:$dir") {
       // gate on the cheap length probe, not size(fps) > 0: the latter
       // pushes below the projection and runs the O(n) winnow expression
@@ -1714,19 +1717,16 @@ object Dedup {
           graft.functions.HashExprs.winnowFingerprints(
             col("text"), WinnowK, WinnowW, TextStats.FpPrime, P).as("fps"))
         .groupBy("fps").agg(min("doc_id").as("rep"), count(lit(1)).as("size"))
-    }
-
-  /** The (rep, fp) pairs of every retained fingerprint: each group's
-    * prints whose document frequency over the groups is at most
-    * [[WinnowMaxDf]]. Memoized: the report reads it from four branches
-    * (both self-join sides, n_sel, the coverage joins). Rep-scale, like
-    * the groups. */
-  private def winnowRetained(spark: SparkSession, dir: String): DataFrame =
-    Tables.memoPersist(spark, s"dedup.winnowRetained:$dir") {
-      val repFps = winnowGroups(spark, dir)
-        .select(col("rep"), explode(col("fps")).as("fp"))
-      repFps.join(repFps.groupBy("fp").agg(count(lit(1)).as("df"))
-        .where(col("df") <= WinnowMaxDf).select("fp"), "fp")
+        // The pass must run once per document. So explode_outer: a plain
+        // explode infers size(fps) > 0, which the optimizer pushes through
+        // the group-by into a filter that runs the pass twice more (every
+        // set here is non-empty, so both forms emit the same rows). And df
+        // is a window over fp, not a join to a group-by of the same rows,
+        // whose pruned copy would run the pass again.
+        .select(col("rep"), col("size"), explode_outer(col("fps")).as("fp"))
+        .withColumn("df", count(lit(1)).over(Window.partitionBy("fp")))
+        .where(col("df") <= WinnowMaxDf)
+        .drop("df")
     }
 
   /** MOSS-style near-dup pair report over winnowed fingerprints: pairs of
@@ -1745,9 +1745,11 @@ object Dedup {
     * fingerprints are df-capped, so the candidate search is never
     * quadratic in duplicate multiplicity. */
   def winnowOverlap(spark: SparkSession, dir: String): DataFrame = {
+    // every rep of a pair or within row has a retained print, so the
+    // sizes of the groups with one are all the report reads
     val retained = winnowRetained(spark, dir)
-    val nSel = retained.groupBy("rep").agg(count(lit(1)).as("n_sel"))
-    val sizes = winnowGroups(spark, dir).select("rep", "size")
+    val nSel = retained.groupBy("rep", "size").agg(count(lit(1)).as("n_sel"))
+    val sizes = nSel.select("rep", "size")
     val pairs = retained.as("a")
       .join(retained.as("b"),
         col("a.fp") === col("b.fp") && col("a.rep") < col("b.rep"))
@@ -1760,7 +1762,7 @@ object Dedup {
         floor(lit(10000.0) * col("shared") / least(col("na"), col("nb")))
           .cast("long").as("cov_e4"))
       .where(col("cov_e4") >= WinnowMinCovE4)
-    val within = sizes.join(nSel, "rep")
+    val within = nSel
       .where(col("n_sel") >= WinnowMinShared)
       .select(col("rep"), col("size"), col("n_sel").as("shared"),
         lit(10000L).as("cov_e4"))
