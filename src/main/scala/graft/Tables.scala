@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftShim
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table readers + session tuning shared by every operator.
   *
@@ -37,9 +38,6 @@ object Tables {
     spark
   }
 
-  private def rd(spark: SparkSession, dir: String, name: String): DataFrame =
-    tune(spark).read.parquet(s"$dir/$name.parquet")
-
   /** Engine-internal events.ts contract: long NANOSECONDS since epoch.
     *
     * The testdata generator has shipped `ts` both as parquet
@@ -59,38 +57,53 @@ object Tables {
           "unix_micros(cast(ts as timestamp)) * 1000"))
     }
 
-  /** Source-parallelism guard for tables that feed heavy per-row compute
-    * (decode, shingle hashing, vector math): the local testdata is one
-    * single-row-group parquet file per table, so the scan yields ONE
-    * partition and everything upstream of the first shuffle runs on one
-    * core. When (and only when) the scan has fewer partitions than cores,
-    * rebalance first — on a production 100 TB table the scan has thousands
-    * of row groups and this is a no-op, so no shuffle is added at scale. */
-  /** The scan-width probe (`df.rdd`) plans the query twice, so its verdict
-    * is memoized for the session's lifetime — every registered query
-    * re-reads its tables through here, and 30+ queries × a replan each
-    * would cost more than the rebalance saves. Weak session keys: a
-    * stopped session's entries (and the session itself) stay collectable,
-    * so a driver cycling sessions does not leak. The verdict is
-    * intentionally session-stable; files added mid-session keep the first
-    * probe's answer. */
-  private val spreadDecisions: java.util.Map[SparkSession, scala.collection.mutable.Map[String, Boolean]] =
+  /** Per session, each table read so far: its schema and its scan-width
+    * decision, both kept for the session's lifetime because every
+    * registered query re-reads its tables through [[rd]]. Without the
+    * schema, `spark.read.parquet` infers it with a footer job on every
+    * read. The decision is a source-parallelism guard for tables that feed
+    * heavy per-row compute (decode, shingle hashing, vector math): the
+    * local testdata is one single-row-group parquet file per table, so the
+    * scan yields ONE partition and everything upstream of the first
+    * shuffle runs on one core. When (and only when) the scan has fewer
+    * partitions than cores, rebalance first — on a production 100 TB table
+    * the scan has thousands of row groups and this is a no-op. Its probe
+    * (`df.rdd`) plans the query twice. Weak session keys: a stopped
+    * session's entries (and the session itself) stay collectable, so a
+    * driver cycling sessions does not leak. Files added mid-session keep
+    * the first read's schema and decision. */
+  private type TableRead = (StructType, Boolean)
+  private val spreadDecisions: java.util.Map[SparkSession, scala.collection.mutable.Map[String, TableRead]] =
     java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Boolean]]())
+      new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, TableRead]]())
 
-  private def spread(spark: SparkSession, df: DataFrame, key: String): DataFrame = {
+  /** Table `name` under `dir`, `prep` applied to the scan; with
+    * `spreads`, rebalanced to the cores when the scan is narrower (so
+    * `prep` runs before the rebalance's exchange). */
+  private def rd(spark: SparkSession, dir: String, name: String,
+      spreads: Boolean = false, prep: DataFrame => DataFrame = identity): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val reader = tune(spark).read
     val cores = spark.sparkContext.defaultParallelism
     val perSession = spreadDecisions.synchronized {
       var m = spreadDecisions.get(spark)
       if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, Boolean]
+        m = scala.collection.concurrent.TrieMap.empty[String, TableRead]
         spreadDecisions.put(spark, m)
       }
       m
     }
-    // bounded-collect: plan-time metadata probe only (partition COUNT,
-    // no rows move); memoized per session. CollectGateSpec-audited.
-    val narrow = perSession.getOrElseUpdate(key, df.rdd.getNumPartitions < cores)
+    val (df, narrow) = perSession.get(path) match {
+      case Some((schema, narrow)) => (prep(reader.schema(schema).parquet(path)), narrow)
+      case None =>
+        val raw = reader.parquet(path)
+        val df = prep(raw)
+        // bounded-collect: plan-time metadata probe only (partition COUNT,
+        // no rows move); kept per session. CollectGateSpec-audited.
+        val narrow = spreads && df.rdd.getNumPartitions < cores
+        perSession.put(path, (raw.schema, narrow))
+        (df, narrow)
+    }
     if (narrow) df.repartition(cores) else df
   }
 
@@ -159,7 +172,7 @@ object Tables {
     * shared intermediate (decoded CDC feed, shingle sets, quantized
     * vectors) genuinely build-once.
     *
-    * Lifetime: unlike [[spreadDecisions]] (whose Boolean values let the
+    * Lifetime: unlike [[spreadDecisions]] (whose values let the
     * WeakHashMap key die), a cached DataFrame strongly references its own
     * SparkSession, so weak keys alone can NEVER collect these entries.
     * Instead every call purges entries whose underlying SparkContext has
@@ -234,11 +247,11 @@ object Tables {
   /** events: event_id, ts (long, ns since epoch), user_id, event_type,
     * value, props (JSON string). */
   def events(s: SparkSession, dir: String): DataFrame =
-    spread(s, normalizeEventsTs(rd(s, dir, "events")), s"$dir/events")
+    rd(s, dir, "events", spreads = true, prep = normalizeEventsTs)
   def documents(s: SparkSession, dir: String): DataFrame =
-    spread(s, rd(s, dir, "documents"), s"$dir/documents")
+    rd(s, dir, "documents", spreads = true)
   def embeddings(s: SparkSession, dir: String): DataFrame =
-    spread(s, rd(s, dir, "embeddings"), s"$dir/embeddings")
+    rd(s, dir, "embeddings", spreads = true)
   def lineitem(s: SparkSession, dir: String): DataFrame = rd(s, dir, "lineitem")
   def orders(s: SparkSession, dir: String): DataFrame = rd(s, dir, "orders")
   def customer(s: SparkSession, dir: String): DataFrame = rd(s, dir, "customer")

@@ -1,6 +1,7 @@
 package graft.cdc
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Per-subscriber fan-out: route every change to each subscription whose
@@ -15,15 +16,11 @@ import org.apache.spark.sql.functions._
   */
 object Forwarder {
 
-  /** Routed + filtered deliveries: (sub_id, lsn, base, kind, uid_val).
-    * Pure frame transform — the same chain runs over the batch events
-    * table and a Structured Streaming source (ForwarderStreamSpec). */
-  def fanoutFrom(spark: SparkSession, ev: DataFrame): DataFrame =
-    fanoutFromDecoded(spark, ChangeFeed.decodedWithMapFrom(ev))
-
-  /** Same chain over an already-decoded (+cmap) frame — the batch entry
-    * feeds the memoized persisted decode through here so fan-out shares it
-    * with every other CDC query instead of re-running the JSON path. */
+  /** Routed + filtered deliveries: (sub_id, lsn, idx, base, kind, uid_val)
+    * over a decoded (+cmap) frame. Pure frame transform — the same chain
+    * runs over the batch entry's memoized persisted decode, which fan-out
+    * shares with every other CDC query, and over a Structured Streaming
+    * source (ForwarderStreamSpec). */
   def fanoutFromDecoded(spark: SparkSession, withMap: DataFrame): DataFrame =
     fanoutOver(spark, withMap, Subscription.routable(spark))
 
@@ -148,79 +145,95 @@ object Forwarder {
   def cdcSnapshot(spark: SparkSession, dir: String): DataFrame =
     stateToSnapshot(snapshotState(routedKeyed(spark, dir)))
 
-  /** Same LWW materialization over an already decoded+cmap frame — the
-    * batch reference the composed JDBC streaming pipeline's incremental
-    * snapshot state must converge to (JdbcPipelineSpec). */
-  def snapshotFromDecoded(spark: SparkSession, withMap: DataFrame): DataFrame =
-    stateToSnapshot(snapshotState(keyed(withMap)))
-
-  // ---- cdc_snapshot_inc: incremental state maintenance ≡ full replay ------
+  // ---- the state family: one last-write fold, one version rule -------------
 
   /** [[keyed]] over the session's decoded feed, memoized+persisted as its
-    * own build. The state/merge family consumes it several times per
-    * query (checkpoint aggregate, pre branch, delta branch); the 5 scalar
-    * columns are ~10× narrower than the decode (cmap map + column arrays
-    * per row), so each re-consumption is a cached-columnar scan rather
-    * than a full-width re-read. */
-  def routedKeyed(spark: SparkSession, dir: String): DataFrame =
+    * own build. Deriving the keys builds each change's column map from
+    * its arrays, and the incremental keys consume them several times per
+    * query (checkpoint aggregate, pre branch twice, delta branch); over
+    * the 5 cached scalar columns each consumption is a narrow scan. Timed
+    * cold as a plain plan instead, cdc_scd2_inc derives the keys six times
+    * and loses more than the build costs, at sf0.1 and at 100×. */
+  private def routedKeyed(spark: SparkSession, dir: String): DataFrame =
     graft.Tables.memoPersist(spark, s"cdc.routedKeyed:$dir") {
       keyed(ChangeFeed.decodedWithMap(spark, dir))
     }
 
-  /** The per-entity last-write fold every state shares: over keyed rows,
-    * per (base, uid) the greatest (lsn, idx) — statements of one
+  /** Keyed rows, each weighing `w`: the input shape of [[lastWrite]] and
+    * [[scd2Versions]], (base, uid, lsn, idx, kind, w). */
+  private def weighted(rows: DataFrame, w: Column): DataFrame =
+    rows.select(col("base"), col("uid"), col("lsn"), col("idx"), col("kind"),
+      w.as("w"))
+
+  /** The per-entity last-write fold every state shares: over weighted
+    * rows, per (base, uid) the greatest (lsn, idx) — statements of one
     * transaction document share the commit LSN and idx is their write
-    * order — its kind, and `weight` (an aggregate, named `name`). Output:
-    * (base, uid, last_lsn, last_idx, last_kind, name). One shuffle on
-    * (base, uid), map-side combined. */
-  private def lastWrite(rows: DataFrame, name: String, weight: Column): DataFrame =
+    * order — its kind, and the sum of `w`, named `name`. Output: (base,
+    * uid, last_lsn, last_idx, last_kind, name), `name` non-null. One
+    * shuffle on (base, uid), map-side combined.
+    *
+    * The fold is associative, so a state re-entered as weighted rows
+    * ([[reentered]]) folds with the rows that follow it:
+    * merge(state(≤L), delta(L,L']) ≡ state(≤L') exactly — the reference's
+    * confirmed-LSN resume (src/cdc/replication.rs:95-282) applied to STATE
+    * rather than offsets, at one shuffle over |state| + |delta| rows. */
+  private def lastWrite(rows: DataFrame, name: String): DataFrame =
     rows.groupBy("base", "uid")
       .agg(max(struct(col("lsn"), col("idx"))).as("last"),
         expr("max_by(kind, struct(lsn, idx))").as("last_kind"),
-        weight.as(name))
+        coalesce(sum(col("w")), lit(0L)).as(name))
       .select(col("base"), col("uid"), col("last.lsn").as("last_lsn"),
         col("last.idx").as("last_idx"), col("last_kind"), col(name))
 
-  /** A [[lastWrite]] state as keyed rows again, its accumulated `name`
-    * as weight `w`. */
-  private def reentered(state: DataFrame, name: String): DataFrame =
+  /** A [[lastWrite]] state as weighted rows again, its accumulated `name`
+    * as weight `w`: each entity's last change stands for its history. */
+  private[graft] def reentered(state: DataFrame, name: String): DataFrame =
     state.select(col("base"), col("uid"), col("last_lsn").as("lsn"),
       col("last_idx").as("idx"), col("last_kind").as("kind"), col(name).as("w"))
 
-  /** Re-enter a [[lastWrite]] state into the fold, each delta row
-    * weighing `deltaWeight`. The fold is associative, so
-    * merge(state(≤L), delta(L,L']) ≡ state(≤L') exactly — the reference's
-    * confirmed-LSN resume (src/cdc/replication.rs:95-282) applied to
-    * STATE rather than offsets. Cost: one shuffle over |state| + |delta|
-    * rows — it tracks the delta plus the entity count, never the feed
-    * length. */
-  private def mergeLastWrite(state: DataFrame, name: String,
-      delta: DataFrame, deltaWeight: Column): DataFrame =
-    lastWrite(
-      reentered(state, name).unionByName(delta.select(col("base"), col("uid"),
-        col("lsn"), col("idx"), col("kind"), deltaWeight.as("w"))),
-      name, sum("w"))
+  /** The SCD type-2 version rule, over weighted rows with `w` = 1 for each
+    * non-delete change and 0 for a delete (a re-entered [[scd2Cursor]] row
+    * weighs its version count). One window per (base, uid) in (lsn, idx)
+    * order does both jobs: `lead` closes each version at its entity's next
+    * change of any kind, and the running sum of `w` numbers it. A delete
+    * opens no version. `valid_to` = −1 and `is_current` = 1 mark a version
+    * no later row closes. */
+  private[graft] def scd2Versions(rows: DataFrame): DataFrame = {
+    val w = Window.partitionBy("base", "uid").orderBy("lsn", "idx")
+    rows.withColumn("nxt", lead(col("lsn"), 1).over(w))
+      .withColumn("version", coalesce(
+        sum(col("w")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+        lit(0L)))
+      .where(col("kind") =!= "delete")
+      .select(col("base"), col("uid"), col("version"),
+        col("lsn").as("valid_from"),
+        coalesce(col("nxt"), lit(-1L)).as("valid_to"),
+        when(col("nxt").isNull, 1L).otherwise(0L).as("is_current"),
+        col("kind"))
+  }
+
+  private val nonDelete: Column = when(col("kind") =!= "delete", 1L).otherwise(0L)
 
   /** LWW state WITH tombstones over a keyed routed frame — the
-    * checkpointable representation: unlike [[snapshotFromDecoded]]'s
-    * report (which drops deleted entities), state must REMEMBER the
-    * delete so a later merge can distinguish "deleted at LSN d" from
-    * "never existed" (wal2json oldkeys semantics survive the
-    * checkpoint). Schema: (base, uid, last_lsn, last_idx, last_kind,
-    * n_changes). */
+    * checkpointable representation: unlike the [[cdcSnapshot]] report
+    * (which drops deleted entities), state must REMEMBER the delete so a
+    * later merge can distinguish "deleted at LSN d" from "never existed"
+    * (wal2json oldkeys semantics survive the checkpoint). Schema: (base,
+    * uid, last_lsn, last_idx, last_kind, n_changes). */
   def snapshotState(routed: DataFrame): DataFrame =
-    lastWrite(routed, "n_changes", count(lit(1)))
+    lastWrite(weighted(routed, lit(1L)), "n_changes")
 
   /** Merge a checkpointed [[snapshotState]] (feed ≤ L) with the keyed
     * changes in (L, L']: ≡ snapshotState(feed ≤ L'). */
   def mergeSnapshotState(state: DataFrame, deltaRouted: DataFrame): DataFrame =
-    mergeLastWrite(state, "n_changes", deltaRouted, lit(1L))
+    lastWrite(reentered(state, "n_changes")
+      .unionByName(weighted(deltaRouted, lit(1L))), "n_changes")
 
   /** Fold any set of [[snapshotState]] versions over disjoint parts of a
     * feed, e.g. the live feed's per-batch deltas read as one frame:
     * ≡ snapshotState(keyed(all parts)), by the same associativity. */
   def foldSnapshotStates(states: DataFrame): DataFrame =
-    lastWrite(reentered(states, "n_changes"), "n_changes", sum("w"))
+    lastWrite(reentered(states, "n_changes"), "n_changes")
 
   /** Drop tombstones and order — turns a state frame into the
     * [[cdcSnapshot]] report shape. */
@@ -233,9 +246,7 @@ object Forwarder {
     * L = 3/5 of its high-water LSN (integer floor — Spark `div` ≡ DuckDB
     * `//`). A transaction's statements share one commit LSN, so an LSN
     * split never cuts a transaction in half. Both branches re-read the
-    * keyed input (the persisted [[routedKeyed]] memo) — cheaper than
-    * pinning the split, whose lineage-cut materialization of the full
-    * keyed frame costs more than the per-branch cache reads it saves. */
+    * keyed input (the persisted [[routedKeyed]] memo). */
   private def checkpointSplit(keyedRows: DataFrame): (DataFrame, DataFrame) = {
     val ckpt = keyedRows.agg(expr("max(lsn) * 3 div 5").as("ckpt_lsn"))
     // bounded-cross: 1-row aggregate broadcast, N-independent
@@ -328,31 +339,21 @@ object Forwarder {
 
   /** SCD type-2 history materialization — the OTHER standard CDC consumer
     * next to the LWW snapshot: instead of keeping only each entity's
-    * latest state, keep every version with its validity interval. Each
-    * non-delete change of (base, entity) opens a version at its LSN; the
-    * version closes at the LSN of the entity's NEXT change of ANY kind
-    * (a delete closes the open version without opening one — the
-    * tombstone semantics of cdcSnapshot, expressed as intervals).
-    * `valid_to` = −1 marks a still-open version; `is_current` = 1 only
-    * for open versions, so an entity whose history ends in a delete has
-    * none. Version numbers count non-delete changes in write order
+    * latest state, keep every version with its validity interval
+    * ([[scd2Versions]]). Each non-delete change of (base, entity) opens a
+    * version at its LSN; the version closes at the LSN of the entity's
+    * NEXT change of ANY kind (a delete closes the open version without
+    * opening one — the tombstone semantics of cdcSnapshot, expressed as
+    * intervals). An entity whose history ends in a delete has no current
+    * version. Version numbers count non-delete changes in write order
     * (LSN, then statement index within the transaction document).
     *
-    * Scale shape: one shuffle on (base, entity) of the 5 keyed columns,
-    * shared by both windows (lead over all changes, row_number over the
-    * surviving ones); history length per entity is bounded by that
+    * Scale shape: one shuffle on (base, entity) of the 5 keyed columns
+    * and one window; history length per entity is bounded by that
     * entity's change count. */
   def cdcScd2(spark: SparkSession, dir: String): DataFrame =
-    routedKeyed(spark, dir)
-      .where(col("uid").isNotNull)
-      .withColumn("nxt", lead(col("lsn"), 1).over(perEntW))
-      .where(col("kind") =!= "delete")
-      .withColumn("version", row_number().over(perEntW).cast("long"))
-      .select(col("base"), col("uid"), col("version"),
-        col("lsn").as("valid_from"),
-        coalesce(col("nxt"), lit(-1L)).as("valid_to"),
-        when(col("nxt").isNull, 1L).otherwise(0L).as("is_current"),
-        col("kind"))
+    scd2Versions(weighted(routedKeyed(spark, dir).where(col("uid").isNotNull),
+        nonDelete))
       .orderBy("base", "uid", "version")
 
   // ---- cdc_scd2_inc: incremental SCD2 maintenance ≡ full replay -----------
@@ -385,76 +386,41 @@ object Forwarder {
     scd2Merged(pre, delta)
   }
 
-  private def perEntW = {
-    import org.apache.spark.sql.expressions.Window
-    Window.partitionBy("base", "uid").orderBy("lsn", "idx")
-  }
-
-  private val nonDelete: Column = when(col("kind") =!= "delete", 1L).otherwise(0L)
-
-  /** Immutable closed versions of the pre-L history (next change exists
-    * within pre): at 100 TB these ship with the checkpoint verbatim,
-    * append-only — the merge never re-reads or re-sorts them. */
-  def scd2Closed(pre: DataFrame): DataFrame =
-    pre.withColumn("nxt", lead(col("lsn"), 1).over(perEntW))
-      .where(col("kind") =!= "delete")
-      .withColumn("version", row_number().over(perEntW).cast("long"))
-      .where(col("nxt").isNotNull)
-      .select(col("base"), col("uid"), col("version"),
-        col("lsn").as("valid_from"), col("nxt").as("valid_to"),
-        lit(0L).as("is_current"), col("kind"))
-
   /** 1 row per pre entity: its last change (the open version, if any, is
     * derivable: open iff last_kind ≠ delete) and its non-delete version
     * count. Schema: (base, uid, last_lsn, last_idx, last_kind,
     * n_versions). */
   def scd2Cursor(pre: DataFrame): DataFrame =
-    lastWrite(pre, "n_versions", sum(nonDelete))
+    lastWrite(weighted(pre, nonDelete), "n_versions")
 
   /** Advance a [[scd2Cursor]] over the keyed changes that follow it:
     * ≡ scd2Cursor(pre ∪ delta). The streaming SCD2 twin's state. */
   def mergeScd2Cursor(cursor: DataFrame, delta: DataFrame): DataFrame =
-    mergeLastWrite(cursor, "n_versions", delta, nonDelete)
+    lastWrite(reentered(cursor, "n_versions")
+      .unionByName(weighted(delta, nonDelete)), "n_versions")
 
   /** The rows the merge PRODUCES: pre-L open versions resolved against
     * the delta (closed at their entity's first delta change, or kept
     * open), plus the delta's own versions numbered from the cursor. The
     * cursor re-enters as each entity's first row (every delta change
-    * follows it in (lsn, idx)), weighing its version count; one window
-    * over those rows and the delta's closes the open version (lead) and
-    * numbers the delta versions (running weight), so the cursor is read
-    * once. Cost tracks |cursor| + |delta| only. */
+    * follows it in (lsn, idx)), weighing its version count, so
+    * [[scd2Versions]] reads it once. Cost tracks |cursor| + |delta|
+    * only. */
   def scd2New(cursor: DataFrame, delta: DataFrame): DataFrame =
-    reentered(cursor, "n_versions")
-      .unionByName(delta.select(col("base"), col("uid"), col("lsn"), col("idx"),
-        col("kind"), nonDelete.as("w")))
-      .withColumn("nxt", lead(col("lsn"), 1).over(perEntW))
-      .withColumn("version",
-        sum(col("w")).over(perEntW.rowsBetween(Long.MinValue, 0L)))
-      .where(col("kind") =!= "delete")
-      .select(col("base"), col("uid"), col("version"),
-        col("lsn").as("valid_from"),
-        coalesce(col("nxt"), lit(-1L)).as("valid_to"),
-        when(col("nxt").isNull, 1L).otherwise(0L).as("is_current"),
-        col("kind"))
+    scd2Versions(reentered(cursor, "n_versions")
+      .unionByName(weighted(delta, nonDelete)))
 
   /** The checkpoint+merge plan over explicit pre/delta frames (both in
     * [[keyed]] shape, uid non-null) — shared by the registered query and
-    * IncrementalSnapshotSpec's multi-split proof.
-    *
-    * Closed is the only pre-side WINDOW; the cursor is a
-    * map-side-combined AGGREGATE (per-entity partials cross the exchange,
-    * not rows) with one consumer, the |cursor| + |delta| window of
-    * [[scd2New]]. */
-  def scd2Merged(pre: DataFrame, delta: DataFrame): DataFrame = {
-    val closed = scd2Closed(pre)
-    val cursor = scd2Cursor(pre)
-    scd2New(cursor, delta)
-      .unionByName(closed, allowMissingColumns = false)
-      .select("base", "uid", "version", "valid_from", "valid_to",
-        "is_current", "kind")
+    * IncrementalSnapshotSpec's multi-split proof. The closed versions are
+    * [[scd2Versions]] of the pre rows that a later pre row closes; the
+    * cursor is a map-side-combined AGGREGATE (per-entity partials cross
+    * the exchange, not rows) with one consumer, [[scd2New]]. */
+  def scd2Merged(pre: DataFrame, delta: DataFrame): DataFrame =
+    scd2New(scd2Cursor(pre), delta)
+      .unionByName(scd2Versions(weighted(pre, nonDelete))
+        .where(col("is_current") === 0))
       .orderBy("base", "uid", "version")
-  }
 
   val cdcScd2Sql: String =
     s"""WITH ${ChangeFeed.FeedCte},

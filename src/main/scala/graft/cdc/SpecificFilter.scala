@@ -76,9 +76,9 @@ object SpecificFilter {
     Seq("event_id", "user_id", "event_type", "value_cents", "k", "balance_cents")
 
   def filterTyped(spark: SparkSession, dir: String): DataFrame = {
-    // One-pass form (round 11): the explode(5 probe structs) fed a
-    // 5N-row aggregation — the largest absolute wall at the 1000×
-    // point (114 s at 100M events). The probes are now 2·|ProbedCols|
+    // One-pass form: an explode(5 probe structs) feeds a 5N-row
+    // aggregation, which at the 1000× stress point (100M events) took
+    // 114 s, the largest wall there. The probes are 2·|ProbedCols|
     // conditional sums in a single map-side-combined pass, and the
     // 1-row result is pivoted to the (colname, counts) contract with
     // stack() — same output, same oracle, no 5N intermediate.

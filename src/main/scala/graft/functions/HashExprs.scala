@@ -332,7 +332,7 @@ case class LshSignaturesExpr(child: Expression, weights: Array[Long],
   // Array fields compare by reference in a case class, which would make
   // semantically identical instances never equal and defeat Catalyst
   // canonicalization / common-subexpression elimination of the signature
-  // build (round-9 advice) — compare the weight CONTENTS instead.
+  // build — compare the weight CONTENTS instead.
   override def equals(other: Any): Boolean = other match {
     case o: LshSignaturesExpr =>
       child == o.child && tables == o.tables && planes == o.planes &&
@@ -440,7 +440,7 @@ case class NearestCellExpr(left: Expression, right: Expression,
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val qv = a.asInstanceOf[ArrayData]
     val an2 = b.asInstanceOf[Long]
-    // Precondition (round-10 advice): a zero probe norm makes every cosine
+    // Precondition: a zero probe norm makes every cosine
     // 0/0 = NaN and the argmax would silently emit the Long.MaxValue
     // sentinel as a seed id. Callers filter n2 > 0 (Similarity.vectors);
     // fail loud here so unfiltered input can never fabricate an id.

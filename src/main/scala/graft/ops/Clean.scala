@@ -193,7 +193,7 @@ object Clean {
 
   // ---- curation_e2e: composed per-source curation summary -----------------
 
-  /** The round-8 curation stack composed into ONE plan — per source:
+  /** The curation stack composed into ONE plan — per source:
     * corpus mass, quality-gate pass count (Pipeline.qualityFilter's
     * envelope), and the segment mass surviving the global keep-at-most-K
     * rewrite (segment_keep_k's rule applied occurrence-by-occurrence:

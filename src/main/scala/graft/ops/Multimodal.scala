@@ -123,8 +123,8 @@ object Multimodal {
 
   // ---- mm_content_chunks ---------------------------------------------------
 
-  /** Content-defined chunking of the BINARY payload (round-12 verdict ask
-    * #8): the LBFS/rsync rolling-cut scheme — row 89's insertion-robust
+  /** Content-defined chunking of the BINARY payload: the LBFS/rsync
+    * rolling-cut scheme — row 89's insertion-robust
     * chunking applied at byte level — as one codegen'd
     * [[graft.functions.BinaryCdcChunksExpr]] call per payload, cutting on
     * the same hash family as the token chunker (gram fp % P2 · mix % P2 %

@@ -29,8 +29,8 @@ object Pipeline {
     * planning operator keys on, materialized ONCE per (session, dir).
     * Eleven registry queries need nothing but this narrow frame, and each
     * was independently re-reading and re-splitting the full text column —
-    * the two largest 1000×-stress walls (quantile_merge 8.0 s, round-10
-    * verdict #4) were exactly this re-tokenization. The persisted frame
+    * at the 1000× stress point that re-tokenization was the largest wall
+    * (quantile_merge 8.0 s). The persisted frame
     * is four int/short-string columns (no text), so it is RAM-trivial at
     * any corpus scale and every consumer below becomes a groupBy/window
     * over longs. The oracle SQL for those consumers still derives counts
@@ -1154,7 +1154,7 @@ object Pipeline {
     * source×tercile rollup (ccnetBucket) and the cross-gate ablation
     * (filterAblation) read the SAME per-doc frame.
     *
-    * Memoized (round 17): both consumers paid the full df-bucket scoring
+    * Memoized because both consumers would pay the full df-bucket scoring
     * + global rank chain independently; the frame is three
     * longs per document, so one build serves both. */
   private[ops] def ccnetDocTercile(spark: SparkSession, dir: String): DataFrame =
@@ -1244,7 +1244,7 @@ object Pipeline {
     * heaviest — ccnet — is rank-based and already range-partitioned),
     * rolled to ≤ 8 cells map-side. */
   def filterAblation(spark: SparkSession, dir: String): DataFrame = {
-    // One documents pass for three of the four gates (round 17): the
+    // One documents pass for three of the four gates: the
     // Gopher flags frame carries the raw-split token count and the
     // Flesch score off the same scan, so the former docTokens ⋈ gopher
     // ⋈ flesch three-way doc_id join collapses into one frame — only

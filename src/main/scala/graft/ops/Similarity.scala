@@ -116,13 +116,14 @@ object Similarity {
 
   import org.apache.spark.sql.expressions.Window
 
-  // ---- identical-vector collapse (round 11) --------------------------------
+  // ---- identical-vector collapse -------------------------------------------
   //
-  // The round-8 rep collapse, applied to the EMBEDDING side: every pair
-  // operator below used to join at MEMBER level, so byte-identical
-  // vectors (the 100 TB reality the stress sets model at 100-1000 copies
-  // per vector: re-crawls, mirrors, template pages embed identically)
-  // made every bucket/cell join quadratic in duplicate multiplicity —
+  // The near-dup operators' rep collapse (search over distinct
+  // fingerprints, one rep per identical group), applied to the EMBEDDING
+  // side: at MEMBER level, byte-identical vectors (the 100 TB reality
+  // the stress sets model at 100-1000 copies per vector: re-crawls,
+  // mirrors, template pages embed identically) make every pair
+  // operator's bucket/cell join quadratic in duplicate multiplicity —
   // the 1000× point spilled >45 GB of candidate shuffle and aborted.
   // All similarity statistics (dot, n2, buckets, cells) are pure
   // functions of the quantized vector, so the candidate space collapses
@@ -391,8 +392,8 @@ object Similarity {
       .orderBy("mutual_degree")
   }
 
-  /** The ORIGINAL member-level bucket join (pre-round-11 scoredPairs
-    * verbatim) — the ground-truth reference DupCollapseSpec compares
+  /** The member-level bucket join, with no identical-vector collapse —
+    * the ground-truth reference DupCollapseSpec compares
     * the rep-level expansion against, since no testdata corpus carries
     * duplicate embeddings and the oracle gate therefore never
     * exercises the within-group paths. NEVER registered as a query. */
@@ -510,8 +511,8 @@ object Similarity {
     Dedup.repReport(pairs, within, g)
   }
 
-  /** Expanded per-copy near-dup pair report — the pre-round-11
-    * embed_cosine_dup contract, opt-in (SURVEY row 180). */
+  /** Expanded per-copy near-dup pair report — one row per member pair
+    * rather than per rep pair, opt-in (SURVEY row 180). */
   def embedCosineDupPairsFull(spark: SparkSession, dir: String): DataFrame =
     scoredPairs(spark, dir)
       .withColumn("cos_e6", cosE6(col("cos")))
@@ -635,8 +636,8 @@ object Similarity {
     // data movement broadcast() did, one hop earlier; also serves the
     // Lloyd training pulls (k×Dim centroid sums). CollectGateSpec-audited.
     val rows = seeds.select("seed_id", "sv", "sn2").collect()
-    // Degenerate-input contract (round-10 advice): the replaced
-    // crossJoin(broadcast(seeds)) form lazily produced an EMPTY
+    // Degenerate-input contract: a crossJoin(broadcast(seeds)) form
+    // would lazily produce an EMPTY
     // assignment for an empty corpus/seed sample; preserve that instead
     // of throwing at plan-build time.
     if (rows.isEmpty)
@@ -716,7 +717,7 @@ object Similarity {
 
   /** The one cell-assignment frame every IVF consumer reads — flat exact
     * argmax below [[graft.Knobs.ivfRouteHierCells]] cells, the two-level
-    * router (row 162) at or above it (round-10 verdict #6: the flat
+    * router (row 162) at or above it (the flat
     * codegen centroid table and the N×cells assignment cost both grow
     * unguarded with the derived cell count; the router holds assignment
     * to ~2N√cells and its reference tables to ~√cells rows). The oracle
@@ -1438,7 +1439,7 @@ object Similarity {
       where = s"$selfCosE6 >= $DupThresholdE6")
   }
 
-  /** Oracle for the expanded opt-in report — the pre-round-11 SQL. */
+  /** Oracle for the expanded opt-in report: the member-level pair join. */
   def embedCosineDupPairsFullSql: String =
     s"""WITH $VecCte,
        |$ScoredPairsCte
@@ -2216,12 +2217,11 @@ object Similarity {
     * memoized: the cell-cohort pair scan is the shared kernel of the
     * cell-scoped family — SemDeDup (dedup_semantic), the kNN label vote
     * (label_noise) and the NN-Descent seed graph (ann_nn_graph's build)
-    * each re-derived the identical cohort join + cosine subtree per query
-    * before round 17 (guide §2.4: share the subtree, §5: recompute vs
-    * reuse). Self-pairs stay per-consumer: they are LINEAR in groups and
+    * would each re-derive the identical cohort join + cosine subtree per
+    * query. Self-pairs stay per-consumer: they are LINEAR in groups and
     * each consumer wants a different projection of them.
     *
-    * Footprint (r17 advice): rows = Σ_c g_c·(g_c−1) over cells (g_c =
+    * Footprint: rows = Σ_c g_c·(g_c−1) over cells (g_c =
     * DISTINCT-vector groups in cell c, both directions), 4 narrow columns
     * — quadratic in cell cohort size but group-level, never member-level.
     * At the SemDeDup operating point NumCells tracks N/k (fixed target
@@ -2266,7 +2266,7 @@ object Similarity {
     * scan. The keeper window partitions by the dropped id, whose candidate
     * rows are bounded by its own cell population. */
   def dedupSemantic(spark: SparkSession, dir: String): DataFrame = {
-    // Collapsed SemDeDup (round 11): the naive within-cell member join is
+    // Collapsed SemDeDup: the naive within-cell member join is
     // quadratic in duplicate multiplicity (identical vectors share a
     // cell BY CONSTRUCTION — the exact situation SemDeDup exists for).
     // Collapse: a member b's best candidate from any group G is always
@@ -2898,7 +2898,7 @@ object Similarity {
   val LnK = 5
 
   def labelNoise(spark: SparkSession, dir: String): DataFrame = {
-    // Collapsed cell-scoped kNN (round 11, the annLsh prefix argument):
+    // Collapsed cell-scoped kNN (the annLsh prefix argument):
     // cos is a function of the (group, group) pair and ties rank by
     // neighbor id, so every member of a group shares one ranked
     // neighbor list except for the exclusion of itself. Build per
@@ -3071,7 +3071,7 @@ object Similarity {
     * likely a neighbor": candidates are the 2-hop closure of the
     * SYMMETRIZED traversal graph (cell top-L ∪ ring, out-edges plus
     * reverses), re-scored exactly and cut back to top-L per node.
-    * Rep-level by the round-11 collapse — identical quantized vectors
+    * Rep-level by the identical-vector collapse — equal quantized vectors
     * share one node, so the graph is over distinct content.
     *
     * Scale shape: the seed stage is the cell-bucketed pair search every

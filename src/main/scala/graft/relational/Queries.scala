@@ -170,7 +170,7 @@ object Queries {
     * the common precision), making the gap compare pure int64 on both
     * sides. */
   /** Typed 30-minute-gap sessionized event frame (user_id, ts µs,
-    * event_id, event_type, session_id), memoized (round 17, guide §2.4):
+    * event_id, event_type, session_id), memoized as a shared subtree:
     * the lag + running-sum session assignment — an events scan plus two
     * window passes over one user_id exchange — was re-derived verbatim
     * by events_sessionize, event_transitions and session_paths. Build it
@@ -180,7 +180,7 @@ object Queries {
     * does NOT ride this frame — exercising Spark's native session_window
     * aggregation instead of this formulation is that row's point.
     *
-    * Footprint (r17 advice): PER-EVENT — |events| rows × 5 narrow
+    * Footprint: PER-EVENT — |events| rows × 5 narrow
     * columns, the largest relational memo; it scales with the fact
     * table, not with an aggregate. The eager count + cache trade one
     * extra materialization against three consumers' repeated
@@ -769,7 +769,7 @@ object Queries {
   }
 
   /** All three strict-ordered step frames as ONE memoized
-    * (step, user_id, t) frame (round 17, guide §2.4): the step-k frame
+    * (step, user_id, t) frame, a shared subtree: the step-k frame
     * embeds every frame below it, so events_funnel's counts union held
     * SIX step derivations (1+2+3) and funnel_latency's pair join four
     * more — each a filtered events aggregate chain. Build the chain once;

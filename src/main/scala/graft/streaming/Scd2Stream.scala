@@ -16,9 +16,11 @@ import graft.cdc.{ChangeFeed, Forwarder}
   * the open version is derivable. Each micro-batch runs the batch merge
   * against it — [[Forwarder.scd2New]]'s closed rows append to the
   * immutable closed-version log, and [[Forwarder.mergeScd2Cursor]]
-  * advances the cursor — so the streaming and batch histories share one
-  * definition. The feed is LSN-ordered across batches (replication
-  * streams replay in commit order), which is the merge's contract.
+  * advances the cursor — and the open versions are the one version rule
+  * ([[Forwarder.scd2Versions]]) over the re-entered cursor, so the
+  * streaming and batch histories share one definition. The feed is
+  * LSN-ordered across batches (replication streams replay in commit
+  * order), which is the merge's contract.
   *
   * Scd2StreamSpec pins the equivalence contract: after draining any
   * batch-boundary split of the feed, history(cursor, closed) equals the
@@ -43,11 +45,8 @@ object Scd2Stream {
 
   /** Assembled history in the batch cdcScd2 output shape: the closed log
     * plus the cursor's open versions (valid_to = −1, is_current = 1). */
-  def history(cursor: DataFrame, closed: DataFrame): DataFrame = {
-    val noChanges = cursor.select(col("base"), col("uid"),
-      col("last_lsn").as("lsn"), col("last_idx").as("idx"),
-      col("last_kind").as("kind")).where(lit(false))
-    closed.unionByName(Forwarder.scd2New(cursor, noChanges))
+  def history(cursor: DataFrame, closed: DataFrame): DataFrame =
+    closed.unionByName(
+        Forwarder.scd2Versions(Forwarder.reentered(cursor, "n_versions")))
       .orderBy("base", "uid", "version")
-  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.cdc.Forwarder
+import graft.cdc.{ChangeFeed, Forwarder}
 import graft.streaming.ChangeFeedStream
 import org.apache.spark.sql.streaming.Trigger
 
@@ -12,7 +12,7 @@ class ForwarderStreamSpec extends SparkSpec {
   test("streaming fan-out delivers the same rows as the batch plan") {
     val work = stageEventsDir()
     val stream = ChangeFeedStream.readEvents(spark, work)
-    val q = Forwarder.fanoutFrom(spark, stream)
+    val q = Forwarder.fanoutFromDecoded(spark, ChangeFeed.decodedWithMapFrom(stream))
       .writeStream
       .outputMode("append")
       .format("memory")

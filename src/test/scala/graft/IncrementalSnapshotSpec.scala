@@ -85,13 +85,13 @@ class IncrementalSnapshotSpec extends SparkSpec {
     val inc = Forwarder.cdcScd2Incremental(spark, Sf0001)
     val rep = Forwarder.cdcScd2(spark, Sf0001)
     assert(inc.exceptAll(rep).count() == 0 && rep.exceptAll(inc).count() == 0)
-    assert(inc.columns.toSeq == rep.columns.toSeq)
+    assert(inc.schema == rep.schema)
   }
 
   test("the registered cdc_snapshot_inc equals cdc_snapshot") {
     val inc = Forwarder.cdcSnapshotIncremental(spark, Sf0001)
     val rep = Forwarder.cdcSnapshot(spark, Sf0001)
     assert(inc.exceptAll(rep).count() == 0 && rep.exceptAll(inc).count() == 0)
-    assert(inc.columns.toSeq == rep.columns.toSeq)
+    assert(inc.schema == rep.schema)
   }
 }

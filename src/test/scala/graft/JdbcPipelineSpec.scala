@@ -19,7 +19,8 @@ import org.apache.spark.sql.streaming.Trigger
   * driven through a KILL and RESTART from the same checkpoint, with the
   * drained result asserted EQUAL to the batch chain over the full feed:
   * deliveries match Forwarder.fanoutFromDecoded, snapshot state matches
-  * Forwarder.snapshotFromDecoded (the cdc_snapshot logic).
+  * the cdc_snapshot report (Forwarder.stateToSnapshot of
+  * Forwarder.snapshotState).
   *
   * The per-batch apply is StreamRateHarness.applyFeedBatch, the function
   * the live feed runs: foreachBatch keys every side effect by batchId —
@@ -113,7 +114,8 @@ class JdbcPipelineSpec extends SparkSpec {
     val streamedSnap = streamedState
       .where(col("last_kind") =!= "delete")
       .collect().map(skey).sorted
-    val batchSnap = Forwarder.snapshotFromDecoded(spark, withMapAll)
+    val batchState = Forwarder.snapshotState(Forwarder.keyed(withMapAll))
+    val batchSnap = Forwarder.stateToSnapshot(batchState)
       .collect().map(skey).sorted
     assert(streamedSnap.nonEmpty)
     assert(streamedSnap === batchSnap)
@@ -121,13 +123,12 @@ class JdbcPipelineSpec extends SparkSpec {
     // the fold of the per-batch versions — tombstones, last_idx and
     // n_changes included — equals the batch fold over the full feed
     val cols = Seq("base", "uid", "last_lsn", "last_idx", "last_kind", "n_changes")
-    val batchState = Forwarder.snapshotState(Forwarder.keyed(withMapAll))
-      .select(cols.map(col): _*)
+    val batchCols = batchState.select(cols.map(col): _*)
     val st = streamedState.select(cols.map(col): _*)
     assert(st.where(col("last_kind") === "delete").count() > 0,
       "fixture must leave tombstones in the state")
-    assert(st.exceptAll(batchState).count() == 0 &&
-      batchState.exceptAll(st).count() == 0,
+    assert(st.exceptAll(batchCols).count() == 0 &&
+      batchCols.exceptAll(st).count() == 0,
       "folded streamed state must equal the batch LWW fold")
   }
 }
